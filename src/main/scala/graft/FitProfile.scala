@@ -33,10 +33,6 @@ object FitProfile {
     t("seedParallel k=10 (1st)")(KMeans.seedParallel(pts, 10, 42L))
     t("seedParallel k=10 (2nd)")(KMeans.seedParallel(pts, 10, 42L))
     t("seedPlusPlus k=10 (2nd)")(KMeans.seedPlusPlus(pts, 10, 42L))
-    var cs = seeds
-    (1 to 10).foreach { i =>
-      cs = t(s"lloydStepConst #$i")(KMeans.lloydStepConst(pts, cs, 64, 1e6))
-    }
     var cs2 = seeds
     (1 to 10).foreach { i =>
       cs2 = t(s"lloydStepFast(literal) #$i")(KMeans.lloydStepFast(KMeans.assign(pts, cs2), 64, 1e6))
@@ -46,20 +42,19 @@ object FitProfile {
       cs3 = t(s"lloydStepOnePass #$i")(KMeans.lloydStepOnePass(pts, cs3, 64, 1e6))
     }
     System.out.println(s"[profile] onePass == fast: ${cs3 == cs2}")
-    System.out.println(s"[profile] same centroids: ${cs == cs2}")
 
     // phase split of one literal step: analysis+optimization+physical planning
     // vs execution
     (1 to 3).foreach { i =>
       val fx = transform(col("Y"), v => round(v * 1e6).cast("long"))
-      val df = KMeans.assign(pts, cs).groupBy("j")
+      val df = KMeans.assign(pts, cs2).groupBy("j")
         .agg(count(lit(1)).as("n"), graft.plans.native.vector_sum_long(fx, 64).as("s"))
       t(s"phase plan #$i")(df.queryExecution.executedPlan)
       t(s"phase exec #$i")(df.collect())
     }
     // seed round split
     (1 to 3).foreach { i =>
-      t(s"seed round #$i")(KMeans.seedPlusPlusScalable(pts, cs, 123L + i))
+      t(s"seed round #$i")(KMeans.seedPlusPlusScalable(pts, cs2, 123L + i))
     }
     // overhead floor: a minimal 2-stage (partial+final agg) job over the same
     // cached data, no graft expressions at all
@@ -72,7 +67,7 @@ object FitProfile {
     // step cost split: assignment-only scan vs assignment+agg
     (1 to 3).foreach { i =>
       t(s"assign-only scan #$i")(
-        KMeans.assign(pts, cs).select(sum(col("j"))).collect())
+        KMeans.assign(pts, cs2).select(sum(col("j"))).collect())
     }
     // manual fit loop with per-step timing (mirrors KMeans.fit literal path)
     t("manual fit loop") {

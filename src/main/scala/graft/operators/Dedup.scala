@@ -1372,7 +1372,7 @@ object Dedup {
     * SoCC 2014) — the O(log n)-round scale path [[connectedComponents]]'s
     * scaladoc promises for extreme-diameter graphs, actually implemented.
     * Identical output contract: every doc labeled with the minimum doc_id
-    * reachable in its component (ComponentsSpec pins star ≡ label
+    * reachable in its component (DedupSpec pins star ≡ label
     * propagation on chains, planted graphs, and the real LSH pairs).
     *
     * Per round: large-star symmetrizes the edge list, takes one grouped min
@@ -1396,7 +1396,7 @@ object Dedup {
     // rounds, the (count, Σu, Σv) signature, the exact set-equality
     // confirmation, AND the under-convergence min-collapse replay exactly
     // over driver-side sets — bit-identical output by construction
-    // (ComponentsSpec pins local ≡ distributed, converged and truncated).
+    // (DedupSpec pins local ≡ distributed, converged and truncated).
     // At bench scale the distributed loop was ~50 jobs of
     // join/groupBy/checkpoint scheduling per query; past the bound the
     // O(log n)-round distributed loop below runs unchanged.

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps._
@@ -16,15 +18,17 @@ import graft.functions.VectorOps._
   *
   * Scale design (100 TB posture):
   *  - Centroid state is k·dim doubles held on the DRIVER and shipped to
-  *    executors as literals — the analog of the reference's scalar-subquery
-  *    broadcast of `(groupArray(j), groupArray(C))` (k-means.sql:36). No
-  *    join, no shuffle for assignment; O(k·dim) per row inside whole-stage
-  *    codegen.
-  *  - Each Lloyd step is ONE shuffle: partial (map-side) per-dimension sums +
-  *    counts, final merge of k·dim values. Spark's partial/final aggregation
-  *    is the property that made the reference shard-friendly (README.md:15).
-  *  - Plans are rebuilt from the cached points DF each iteration — lineage
-  *    stays O(1); nothing driver-side ever holds O(n) data.
+  *    executors inside each step's task closure — the analog of the
+  *    reference's scalar-subquery broadcast of `(groupArray(j),
+  *    groupArray(C))` (k-means.sql:36). No join, no shuffle for assignment.
+  *  - Each Lloyd step of the fit loop is ONE job: a primitive per-partition
+  *    kernel ([[LloydKernel]]) does the O(k·dim) argmin and the fixed-point
+  *    sums per row, and the ≤ P partial (Σ, n) arrays merge on the driver.
+  *    Partial per-partition sums are the property that made the reference
+  *    shard-friendly (README.md:15).
+  *  - The points plan is built once per fit and every step re-runs the
+  *    kernel over it — lineage stays O(1); nothing driver-side ever holds
+  *    O(n) data.
   *  - Per-dimension sums use fixed-point integer accumulation by default
   *    (`round(x*scale)::long`), making results independent of partition count
   *    and merge order — a deterministic distributed k-means. Disable (scale
@@ -213,10 +217,11 @@ object KMeans {
   def seedPlusPlusScalable(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid = {
     val spark = points.sparkSession
     import spark.implicits._
-    // centroids as broadcast DATA (constant plan across rounds — see
-    // lloydStepConst); the native kernel is bit-identical to the HOF form,
-    // and the broadcast join preserves row order, so rand(seed) draws the
-    // same per-row values as a plain projection would
+    // centroids as broadcast DATA, not plan literals: the plan text stays
+    // constant across rounds, so analysis does not grow with k·dim; the
+    // native kernel is bit-identical to the HOF form, and the broadcast join
+    // preserves row order, so rand(seed) draws the same per-row values as a
+    // plain projection would
     val csDf = Seq(Tuple1(coords(chosen))).toDF("ccs")
     val w = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
     val key = when(w > 0, pow(rand(seed), lit(1.0) / w)).otherwise(lit(-1.0))
@@ -273,10 +278,9 @@ object KMeans {
     var cands = seedFirstK(points, 1).map(_.c).toVector
     val l = overFactor * k
     for (r <- 1 to rounds) {
-      // candidates ride as broadcast DATA through the native kernel (the
-      // lloydStepConst trick): constant plan text across rounds even as the
-      // candidate set grows, and the distance fold stays codegen'd instead
-      // of falling back to the interpreted literal HOF.
+      // candidates ride as broadcast DATA through the native kernel (as in
+      // seedPlusPlusScalable): constant plan text across rounds even as the
+      // candidate set grows, so analysis does not grow with the literals.
       val csDf = Seq(Tuple1(cands.map(_.toSeq))).toDF("ccs")
       val d2 = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
       // fixed-point integer sum: ϕ is identical under ANY partitioning /
@@ -298,7 +302,7 @@ object KMeans {
       }
     }
     // one pass: how many points each candidate attracts (its weight) —
-    // same broadcast-data argmin as lloydStepConst
+    // the same broadcast-data argmin
     val candCs = cands.zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c) }
     val widsDf = Seq((candCs.map(_.j), candCs.map(_.c))).toDF("cids", "ccs")
     val wByJ = points.crossJoin(broadcast(widsDf))
@@ -431,98 +435,169 @@ object KMeans {
       }.toSeq.sortBy(_.j)
   }
 
-  /** One Lloyd iteration as a SINGLE STAGE: assignment + fixed-point
-    * per-partition sufficient statistics run inside one codegen'd scan, and
-    * the ≤ P·k partial rows merge on the driver — the
+  /** One Lloyd iteration as a SINGLE STAGE: each partition runs one
+    * primitive [[LloydKernel]] over its rows (argmin + fixed-point
+    * per-slot sums), and the ≤ P partial arrays merge on the driver — the
     * collect-sufficient-stats shape MLlib's KMeans uses (its `runAlgorithm`
     * folds per-partition (sum, count) pairs via `treeAggregate`; public
     * Spark source, mllib/clustering/KMeans.scala). Value-identical to
-    * [[lloydStepFast]]: the same `round(x*scale)::long` fixed-point
-    * projection feeds the per-partition accumulators, and long adds are
-    * exact in any order (pinned in KMeansSpec).
+    * [[lloydStepFast]] in any partitioning: the kernel replays
+    * `nearestIdNative`'s fold and `round(x*scale)::long` exactly, and long
+    * adds are exact in any order (pinned in KMeansSpec).
     *
     * Why it exists: [[lloydStepFast]] is the declarative form (and stays the
-    * `km_lloyd_step` oracle query), but its final-aggregate stage — however
-    * small — costs a shuffle boundary per iteration: shuffle-file write +
-    * read, a second stage submit, and one more scheduling round-trip, ~50 ms
-    * of the ~110 ms step floor at sf0.1. Here each scan task emits its k
-    * partial rows straight to the driver. At cluster scale the collect is
-    * P·k tiny rows — the same volume the final shuffle's single reducer
-    * would read, minus the extra stage. (The per-partition map is bounded by
-    * k, not partition size.)
+    * `km_lloyd_step` oracle query), but its higher-order functions run
+    * interpreted per row (Spark does not compile `zip_with`/`aggregate`/
+    * `transform`), `round` on a double builds a BigDecimal per coordinate,
+    * and its final aggregate costs a shuffle boundary per iteration. Here
+    * one scan task per partition emits one (Σ, n) array pair straight to
+    * the driver.
     */
   def lloydStepOnePass(points: DataFrame, cs: Seq[Centroid], dim: Int,
       fxScale: Double): Seq[Centroid] =
-    onePassStats(points, cs, dim, fxScale).map { case (j, (sums, n)) =>
+    centroidsOf(kernelStats(yRows(points), cs, dim, fxScale, ansi(points)), fxScale)
+
+  /** `points`' `Y` column as the raw rows the kernel scans. */
+  private def yRows(points: DataFrame): RDD[InternalRow] =
+    points.select(col("Y")).queryExecution.toRdd
+
+  private def ansi(points: DataFrame): Boolean =
+    points.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+
+  /** Per-centroid-id sufficient statistics of one step: (Σ fixed-point
+    * coordinates, row count).
+    */
+  private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
+
+  /** The distributed Lloyd step behind [[lloydStepOnePass]], the fit loop
+    * and [[fitMiniBatch]]: one job, one [[LloydKernel]] per partition.
+    */
+  private def kernelStats(rows: RDD[InternalRow], cs: Seq[Centroid], dim: Int,
+      fxScale: Double, ansi: Boolean): Stats = {
+    val k = cs.size
+    val flat = flatten(cs, dim)
+    val partials = rows.mapPartitions { it =>
+      val kern = new LloydKernel(flat, k, dim)
+      val y = new Array[Double](dim)
+      while (it.hasNext) {
+        val a = it.next().getArray(0)
+        require(a.numElements() >= dim, s"Y has ${a.numElements()} coordinates, dim is $dim")
+        var d = 0
+        while (d < dim) { y(d) = a.getDouble(d); d += 1 }
+        kern.addY(y, fxScale, ansi)
+      }
+      Iterator.single((kern.sums, kern.cnts))
+    }.collect()
+    val total = new LloydKernel(flat, k, dim)
+    partials.foreach { case (s, n) => total.merge(s, n) }
+    total.stats(ids(cs).toArray)
+  }
+
+  /** Centroid coordinates as one row-major `k·dim` array. */
+  private def flatten(cs: Seq[Centroid], dim: Int): Array[Double] = {
+    require(cs.forall(_.c.size == dim), s"every centroid must have dim = $dim coordinates")
+    cs.flatMap(_.c).toArray
+  }
+
+  /** New centroids = Σfx / scale / n per id, in j order (empty ids drop). */
+  private def centroidsOf(stats: Stats, fxScale: Double): Seq[Centroid] =
+    stats.iterator.map { case (j, (sums, n)) =>
       Centroid(j, sums.toSeq.map(s => s.toDouble / fxScale / n))
     }.toSeq.sortBy(_.j)
 
-  /** The single-stage sufficient-statistics collect behind
-    * [[lloydStepOnePass]] (and [[fitMiniBatch]]'s per-batch stats):
-    * assignment + fixed-point per-partition (Σfx, n) accumulators in one
-    * codegen'd scan, ≤ P·k partial rows merged on the driver.
+  /** `round(v)::long` as Spark evaluates it on `v = x·scale`: HALF_UP via
+    * [[roundHalfUpLong]] (≡ Spark `round`, PropertySpec); past the long
+    * range, or on NaN, the ANSI cast's CAST_OVERFLOW — or, with ANSI off,
+    * the JVM's saturating cast (NaN → 0), as Spark's legacy cast does.
     */
-  private def onePassStats(points: DataFrame, cs: Seq[Centroid], dim: Int,
-      fxScale: Double): scala.collection.mutable.LongMap[(Array[Long], Long)] = {
-    val fx = transform(col("Y"), v => round(v * fxScale).cast("long"))
-    val proj = assign(points, cs).select(col("j"), fx.as("yfx"))
-    val d = dim
-    val partials = proj.queryExecution.toRdd.mapPartitions { it =>
-      val acc = scala.collection.mutable.LongMap.empty[(Array[Long], Long)]
-      while (it.hasNext) {
-        val row = it.next()
-        val j = row.getLong(0)
-        val v = row.getArray(1)
-        val cur = acc.getOrElse(j, (new Array[Long](d), 0L))
-        val sums = cur._1
-        var x = 0
-        while (x < d) { sums(x) += v.getLong(x); x += 1 }
-        acc.update(j, (sums, cur._2 + 1))
-      }
-      acc.iterator.map { case (j, (sums, n)) => (j, sums, n) }
-    }.collect()
-    val merged = scala.collection.mutable.LongMap.empty[(Array[Long], Long)]
-    partials.foreach { case (j, sums, n) =>
-      val cur = merged.getOrElse(j, (new Array[Long](d), 0L))
-      var x = 0
-      while (x < d) { cur._1(x) += sums(x); x += 1 }
-      merged.update(j, (cur._1, cur._2 + n))
-    }
-    merged
+  private def fxEncode(v: Double, ansi: Boolean): Long =
+    if (v <= 9.223372036854775807e18 && v >= -9.223372036854775808e18) roundHalfUpLong(v)
+    else if (ansi) throw new ArithmeticException(
+      s"[CAST_OVERFLOW] The value ${v}D of the type \"DOUBLE\" cannot be cast to " +
+        "\"BIGINT\" due to an overflow.")
+    else v.toLong
+
+  /** One driver-local Lloyd step over collected rows (`fxs` = their
+    * fixed-point coordinates): the distributed step's kernel, run once.
+    */
+  private def localStep(ys: Array[Array[Double]], fxs: Array[Array[Long]],
+      cs: Seq[Centroid], dim: Int, fxScale: Double): Seq[Centroid] = {
+    val kern = new LloydKernel(flatten(cs, dim), cs.size, dim)
+    var ix = 0
+    while (ix < ys.length) { kern.add(ys(ix), fxs(ix)); ix += 1 }
+    centroidsOf(kern.stats(ids(cs).toArray), fxScale)
   }
 
-  /** One Lloyd iteration (assign + re-average) with centroids shipped as
-    * broadcast DATA instead of literals — value-identical to
-    * `lloydStepFast(assign(points, cs), dim, fxScale)`:
-    * [[graft.plans.native.nearestIdCols]] is the same argmin fold, and the
-    * fixed-point long sums are merge-order exact.
-    *
-    * Why it exists: with literal centroids every iteration is a brand-new
-    * plan (k·dim literals embedded in the expression tree), so Catalyst
-    * re-analyzes a large tree and whole-stage codegen re-compiles — several
-    * hundred ms of fixed cost per step that dominates small/medium fits.
-    * Here the plan differs across iterations only in the one-row broadcast
-    * relation's DATA, so analysis is O(1) in k·dim and the generated code is
-    * identical text → Janino cache hit. At 100 TB the same shape holds: the
-    * centroid row broadcasts to every executor once per step, exactly like
-    * the literal plan, and the aggregation is still one partial/final shuffle
-    * of k·dim longs.
+  /** [[fxEncode]] over the first `dim` coordinates of every row. */
+  private def encodeAll(ys: Array[Array[Double]], dim: Int, fxScale: Double,
+      ansi: Boolean): Array[Array[Long]] =
+    ys.map(y => Array.tabulate(dim)(d => fxEncode(y(d) * fxScale, ansi)))
+
+  /** The Lloyd step's per-row arithmetic, ONE copy shared by the
+    * distributed step ([[kernelStats]] runs one per partition) and the
+    * driver-local twins' loops. Centroids ride as one row-major `k·dim`
+    * array; slot `k` collects the rows no centroid claims (every distance
+    * NaN), reported as id −1 — the HOF fold's initial accumulator.
     */
-  def lloydStepConst(points: DataFrame, cs: Seq[Centroid], dim: Int,
-      fxScale: Double): Seq[Centroid] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val csDf = Seq((ids(cs), coords(cs))).toDF("cids", "ccs")
-    val fx = transform(col("Y"), v => round(v * fxScale).cast("long"))
-    points.crossJoin(broadcast(csDf))
-      .select(graft.plans.native.nearestIdCols(col("Y"), col("cids"), col("ccs")).as("j"),
-        fx.as("yfx"))
-      .groupBy("j")
-      .agg(count(lit(1)).as("n"), graft.plans.native.vector_sum_long(col("yfx"), dim).as("s"))
-      .collect().map { r =>
-        val n = r.getLong(1)
-        Centroid(r.getLong(0), r.getSeq[Long](2).map(s => s.toDouble / fxScale / n))
-      }.toSeq.sortBy(_.j)
+  private final class LloydKernel(cs: Array[Double], k: Int, dim: Int) {
+    val sums = new Array[Long]((k + 1) * dim)
+    val cnts = new Array[Long](k + 1)
+
+    /** `nearestIdNative`'s fold: `sq_dist`'s left-to-right Σ(c−y)² per
+      * centroid, then strict `<` from Double.MaxValue — the earlier slot
+      * wins ties and a NaN distance never wins.
+      */
+    def nearest(y: Array[Double]): Int = {
+      var best = k; var bd = Double.MaxValue; var j = 0
+      while (j < k) {
+        val o = j * dim
+        var s = 0.0; var d = 0
+        while (d < dim) { val t = cs(o + d) - y(d); s += t * t; d += 1 }
+        if (s < bd) { bd = s; best = j }
+        j += 1
+      }
+      best
+    }
+
+    /** Assign `y` and add its fixed-point coordinates `fx` to that slot. */
+    def add(y: Array[Double], fx: Array[Long]): Unit = {
+      val j = nearest(y)
+      val o = j * dim
+      var d = 0
+      while (d < dim) { sums(o + d) += fx(d); d += 1 }
+      cnts(j) += 1
+    }
+
+    private val fxBuf = new Array[Long](dim)
+    /** [[add]] with `fx` encoded from `y` here ([[fxEncode]]). */
+    def addY(y: Array[Double], fxScale: Double, ansiOn: Boolean): Unit = {
+      var d = 0
+      while (d < dim) { fxBuf(d) = fxEncode(y(d) * fxScale, ansiOn); d += 1 }
+      add(y, fxBuf)
+    }
+
+    def merge(s: Array[Long], n: Array[Long]): Unit = {
+      s.indices.foreach(x => sums(x) += s(x)); n.indices.foreach(x => cnts(x) += n(x))
+    }
+
+    /** Non-empty slots by centroid id (`ids` in slot order); slots sharing
+      * an id merge, as `GROUP BY j` would.
+      */
+    def stats(ids: Array[Long]): Stats = {
+      val out: Stats = scala.collection.mutable.LongMap.empty
+      var j = 0
+      while (j <= k) {
+        if (cnts(j) > 0) {
+          val id = if (j < k) ids(j) else -1L
+          val (s, n) = out.getOrElse(id, (new Array[Long](dim), 0L))
+          var d = 0
+          while (d < dim) { s(d) += sums(j * dim + d); d += 1 }
+          out(id) = (s, n + cnts(j))
+        }
+        j += 1
+      }
+      out
+    }
   }
 
   // ------------------------------------------------------------ convergence
@@ -740,34 +815,30 @@ object KMeans {
 
   /** Driver-local twin of [[fit]] for small inputs — produces the identical
     * `FitResult` bit-for-bit. Exactness by construction:
-    *  - the ONE collect computes the fixed-point vectors and the k-means||
-    *    sampling coins with the SAME Catalyst expressions the distributed
-    *    path uses (`round(x·scale)::long`, [[coinCol]]), so no local
-    *    re-implementation of Spark rounding/hashing exists to drift;
-    *  - local distance/argmin loops replicate the native kernels' exact
-    *    IEEE fold order (`sq_dist`'s left-to-right `acc += d²`,
-    *    `nearestIdCols`' strict-`<` earliest-wins tie break);
+    *  - the ONE collect computes the k-means|| sampling coins with the
+    *    SAME Catalyst expression the distributed path uses ([[coinCol]]),
+    *    so no local re-implementation of Spark hashing exists to drift;
+    *  - the Lloyd steps and the candidate weights run the distributed
+    *    step's own [[LloydKernel]] (argmin, [[fxEncode]]);
     *  - cluster sums are exact longs, order-independent by definition;
-    *  - `phi` is the same `sum(round(d²)::long)` integer total (the only
-    *    local rounding — `roundHalfUpLong` — is pinned against Spark's
-    *    `round()` in PropertySpec).
+    *  - `phi` is the same `sum(round(d²)::long)` integer total
+    *    (`roundHalfUpLong` is pinned against Spark's `round()` in
+    *    PropertySpec).
     */
   def fitLocal(points: DataFrame, k: Int, dim: Int, tol: Double,
       maxIter: Int, seed: Long, fxScale: Double, parallelSeed: Boolean,
       rounds: Int = 3, overFactor: Double = 2.0): FitResult = {
-    // one pass over the data: Y, fixed-point Y, and the per-round coins, in
-    // key order (the local stand-in for every orderBy("i") in the seeders)
-    val fxCol = transform(col("Y"), v => round(v * fxScale).cast("long"))
+    // one pass over the data: Y and the per-round coins, in key order (the
+    // local stand-in for every orderBy("i") in the seeders)
     val uCols = (1 to (if (parallelSeed) rounds else 0))
       .map(r => coinCol(seed, r).as(s"_u$r"))
-    val rows = points
-      .select(Seq(col("i"), col("Y").as("_y"), fxCol.as("_fx")) ++ uCols: _*)
+    val rows = points.select(Seq(col("i"), col("Y").as("_y")) ++ uCols: _*)
       .orderBy("i").collect()
     val nRows = rows.length
     val ys = Array.tabulate(nRows)(ix => rows(ix).getSeq[Double](1).toArray)
-    val fxs = Array.tabulate(nRows)(ix => rows(ix).getSeq[Long](2).toArray)
+    val fxs = encodeAll(ys, dim, fxScale, ansi(points))
     val us = Array.tabulate(nRows)(ix =>
-      Array.tabulate(uCols.size)(r => rows(ix).getDouble(3 + r)))
+      Array.tabulate(uCols.size)(r => rows(ix).getDouble(2 + r)))
 
     // sq_dist's exact fold: left-to-right acc += (c[d]-y[d])²
     def sqd(c: Array[Double], y: Array[Double]): Double = {
@@ -780,11 +851,6 @@ object KMeans {
       var m = Double.MaxValue; var j = 0
       while (j < css.length) { val v = sqd(css(j), y); if (v < m) m = v; j += 1 }
       m
-    }
-    def nearestIx(y: Array[Double], css: Array[Array[Double]]): Int = {
-      var bi = -1; var bd = Double.MaxValue; var j = 0
-      while (j < css.length) { val v = sqd(css(j), y); if (v < bd) { bd = v; bi = j }; j += 1 }
-      bi
     }
 
     // ---- seeding: local twin of seedParallel / seedFirstK
@@ -810,10 +876,12 @@ object KMeans {
           }
         }
         val candArr = cands.map(_.toArray).toArray
-        val wByIx = new Array[Long](candArr.length)
+        // the distributed weight pass's argmin; slot n (no winner) drops
+        val kern = new LloydKernel(candArr.flatten, candArr.length, dim)
+        val wByIx = new Array[Long](candArr.length + 1)
         var ix = 0
-        while (ix < nRows) { wByIx(nearestIx(ys(ix), candArr)) += 1; ix += 1 }
-        localWeightedKMeans(candArr, wByIx.map(_.toDouble), k, seed)
+        while (ix < nRows) { wByIx(kern.nearest(ys(ix))) += 1; ix += 1 }
+        localWeightedKMeans(candArr, wByIx.init.map(_.toDouble), k, seed)
           .zipWithIndex.map { case (c, i2) => Centroid(i2 + 1L, c.toSeq) }
       }
 
@@ -823,24 +891,7 @@ object KMeans {
     var move = Double.MaxValue
     while (move >= tol && step < maxIter) {
       step += 1
-      val ids0 = ids(cs).toArray
-      val css = coords(cs).map(_.toArray).toArray
-      val sums = Array.fill(css.length)(new Array[Long](dim))
-      val cnts = new Array[Long](css.length)
-      var ix = 0
-      while (ix < nRows) {
-        val a = nearestIx(ys(ix), css)
-        val f = fxs(ix)
-        val s = sums(a)
-        var d = 0
-        while (d < dim) { s(d) += f(d); d += 1 }
-        cnts(a) += 1
-        ix += 1
-      }
-      val next = ids0.indices.collect {
-        case j if cnts(j) > 0 =>
-          Centroid(ids0(j), sums(j).toSeq.map(s => s.toDouble / fxScale / cnts(j)))
-      }.toSeq.sortBy(_.j)
+      val next = localStep(ys, fxs, cs, dim, fxScale)
       if (next.size < cs.size)
         logger.warn(
           s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")
@@ -1040,8 +1091,8 @@ object KMeans {
     * ONE key-ordered collect, then the same inverse-CDF draws
     * (`roundHalfUpLong` ≡ Spark `round`, pinned in PropertySpec; the
     * cumulative pick walks i order exactly like the windowed prefix sum)
-    * and the same strict-`<` assignment / fixed-point re-average /
-    * j-ordered movement loop as [[fitFrom]].
+    * and [[fitFrom]]'s own Lloyd step ([[LloydKernel]]) and j-ordered
+    * movement loop.
     */
   private def fitBoundedLocal(points: DataFrame, k: Int, dim: Int,
       tol: Double, lloydSteps: Int, fxScale: Double,
@@ -1077,47 +1128,15 @@ object KMeans {
     var cs: Seq[Centroid] =
       chosen.zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
     var log = cs.map(c => LogEntry(0L, c.j, c.c))
-    // fixed-point coordinates hoisted OUT of the Lloyd loop (r19): the
-    // per-dim roundHalfUpLong(y·fxScale) is invariant across steps, and
-    // roundHalfUpLong allocates a BigDecimal per call — at 150k rows × 64
-    // free-running steps that was ~19M BigDecimal constructions charged to
-    // km_fit_free's timed region. Same values, computed once per cell.
-    val nRows = rows.length
+    // fixed-point coordinates hoisted OUT of the Lloyd loop: the per-dim
+    // encode of y·fxScale is invariant across steps
     val ys = rows.map(_._2)
-    val fys = Array.tabulate(nRows) { ix =>
-      val y = ys(ix)
-      val f = new Array[Long](dim)
-      var d = 0
-      while (d < dim) { f(d) = roundHalfUpLong(y(d) * fxScale); d += 1 }
-      f
-    }
+    val fys = encodeAll(ys, dim, fxScale, ansi(points))
     var step = 0L
     var move = Double.MaxValue
     while (move >= tol && step < lloydSteps) {
       step += 1
-      val js = cs.map(_.j).toArray
-      val css = cs.map(_.c.toArray).toArray
-      val sums = Array.fill(css.length)(new Array[Long](dim))
-      val cnts = new Array[Long](css.length)
-      var rix = 0
-      while (rix < nRows) {
-        val y = ys(rix)
-        var bi = -1; var bd = Double.PositiveInfinity; var cix = 0
-        while (cix < css.length) {
-          val d2 = sqd(y, css(cix))
-          if (d2 < bd) { bd = d2; bi = cix } // strict <: earliest j wins
-          cix += 1
-        }
-        val s = sums(bi)
-        val f = fys(rix)
-        var d = 0
-        while (d < dim) { s(d) += f(d); d += 1 }
-        cnts(bi) += 1
-        rix += 1
-      }
-      val next = js.indices.filter(cnts(_) > 0).map { ix =>
-        Centroid(js(ix), sums(ix).map(s => s.toDouble / fxScale / cnts(ix)).toSeq)
-      }
+      val next = localStep(ys, fys, cs, dim, fxScale)
       move = movement(cs, next)
       cs = next
       log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
@@ -1140,8 +1159,8 @@ object KMeans {
     * absorbed `cnt` batch points summing to `s`:
     * `c ← c + (s − cnt·c) / n_j_total` — one k-sized driver update per
     * step off the SAME single-stage sufficient-stats collect as
-    * [[lloydStepOnePass]] (one codegen'd scan of the batch, ≤ P·k partial
-    * rows to the driver, no shuffle).
+    * [[lloydStepOnePass]] (one kernel scan of the batch, ≤ P partial
+    * arrays to the driver, no shuffle).
     *
     * Convergence is monitored with the same [[movement]] metric and `tol`;
     * the log records each step's centroids so the WCR history stays
@@ -1162,46 +1181,26 @@ object KMeans {
     // ~2 s of fixed cost for microseconds of argmin/sum work at sample
     // sizes. Below the bound the points are collected ONCE and every step
     // replays the exact distributed arithmetic: the LCG batch draw (same
-    // int64 `(i·a + c) % m < cut`), the strict-< (d, j) argmin
-    // [[fitBoundedLocal]] already pins, the per-dim `round(v·1e6)` fixed-
-    // point sums ([[roundHalfUpLong]] ≡ Spark round, PropertySpec), and
-    // the same driver-side learning-rate fold below — so the FitResult is
-    // bit-identical (KMeansSpec pins local ≡ distributed). Past the bound
-    // the distributed loop runs unchanged.
+    // int64 `(i·a + c) % m < cut`), the distributed step's own
+    // [[LloydKernel]], and the same driver-side learning-rate fold below —
+    // so the FitResult is bit-identical (KMeansSpec pins local ≡
+    // distributed). Past the bound the distributed loop runs unchanged.
     lazy val nRows = points.count()
     val localRows: Option[Array[(Long, Array[Double])]] =
       if (localMaxCells > 0 && nRows * dim <= localMaxCells)
         Some(points.select(col("i"), col("Y")).collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
       else None
-    def localStats(rows: Array[(Long, Array[Double])], step: Long,
-        cs: Seq[Centroid]): scala.collection.mutable.LongMap[(Array[Long], Long)] = {
-      val js = cs.map(_.j).toArray
-      val css = cs.map(_.c.toArray).toArray
-      val acc = scala.collection.mutable.LongMap.empty[(Array[Long], Long)]
-      val salt = 12345L + seed + step
+    def localStats(rows: Array[(Long, Array[Double])], step: Long, cs: Seq[Centroid]): Stats = {
+      val kern = new LloydKernel(flatten(cs, dim), cs.size, dim)
+      val (salt, ansiOn) = (12345L + seed + step, ansi(points))
       var rix = 0
       while (rix < rows.length) {
         val (i, y) = rows(rix)
-        if ((i * 1103515245L + salt) % mod < cut) {
-          var bi = -1; var bd = Double.PositiveInfinity; var cix = 0
-          while (cix < css.length) {
-            var s = 0.0; var d = 0
-            val c = css(cix)
-            val n = math.min(c.length, y.length)
-            while (d < n) { val t = c(d) - y(d); s += t * t; d += 1 }
-            if (s < bd) { bd = s; bi = cix } // strict <: earliest j wins
-            cix += 1
-          }
-          val cur = acc.getOrElse(js(bi), (new Array[Long](dim), 0L))
-          val sums = cur._1
-          var d = 0
-          while (d < dim) { sums(d) += roundHalfUpLong(y(d) * 1e6); d += 1 }
-          acc.update(js(bi), (sums, cur._2 + 1))
-        }
+        if ((i * 1103515245L + salt) % mod < cut) kern.addY(y, 1e6, ansiOn)
         rix += 1
       }
-      acc
+      kern.stats(ids(cs).toArray)
     }
     var cs = localRows match {
       case Some(rows) => // seedFirstK: k smallest keys, j = 1..k in key order
@@ -1222,7 +1221,7 @@ object KMeans {
         case None =>
           val batch = points.filter(
             (col("i") * 1103515245L + lit(12345L + seed + step)) % mod < cut)
-          onePassStats(batch, cs, dim, fxScale = 1e6)
+          kernelStats(yRows(batch), cs, dim, fxScale = 1e6, ansi(points))
       }
       val next = cs.map { c =>
         stats.get(c.j) match {
@@ -1261,18 +1260,13 @@ object KMeans {
     var log = if (startStep == 0L) cs.map(c => LogEntry(0L, c.j, c.c)) else Nil
     var step = startStep
     var move = Double.MaxValue
+    // the plan is built once; each step only re-runs the kernel over it
+    lazy val rows = yRows(points)
     while (move >= tol && step < startStep + maxIter) {
       step += 1
-      // Plan-shape choice, measured: with small centroid sets, literals are
-      // cheapest (planning is ~10 ms; the broadcast exchange of the const
-      // plan costs more than it saves). Past ~4k embedded literals the
-      // analysis/codegen of the literal tree takes over — ship centroids as
-      // broadcast data instead. Both paths are value-identical.
       val next =
-        if (fxScale > 0) {
-          if (cs.size.toLong * dim > 4096) lloydStepConst(points, cs, dim, fxScale)
-          else lloydStepOnePass(points, cs, dim, fxScale)
-        } else lloydStep(assign(points, cs), dim, fxScale)
+        if (fxScale > 0) centroidsOf(kernelStats(rows, cs, dim, fxScale, ansi(points)), fxScale)
+        else lloydStep(assign(points, cs), dim, fxScale)
       if (next.size < cs.size)
         logger.warn(
           s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")

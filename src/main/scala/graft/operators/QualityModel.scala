@@ -97,7 +97,7 @@ object QualityModel {
         // zero), gradient sums in int64 (bounded by n·1e9 ≤ 2e15 under the
         // 2M-row bound, far inside int64 — the DECIMAL(38,0) distributed
         // accumulator exists for UNBOUNDED n), and the exact BigInt weight
-        // update. Weights are bit-identical by construction (QualitySpec
+        // update. Weights are bit-identical by construction (TextEventsSpec
         // pins local ≡ distributed on the fixture corpus); the final
         // scoring projection below is the same distributed plan either
         // way. Past the bound — real scale — the distributed loop runs

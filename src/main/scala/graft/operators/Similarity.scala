@@ -1963,7 +1963,7 @@ object Similarity {
     *
     * Shape: ONE scan accumulates the exact sufficient statistics (n, Σx,
     * Σxxᵀ) via per-partition d + d² accumulators merged on the driver —
-    * the [[graft.operators.KMeans.lloydStepOnePass]] discipline, ≤ P·d²
+    * the [[graft.operators.KMeans.LloydKernel]] discipline, ≤ P·d²
     * doubles collected, points never leave their partition. The 64×64
     * covariance then power-iterates ON THE DRIVER (deterministic fixed
     * start e₁, fixed 100 iterations — d²-sized state by contract, like

@@ -344,9 +344,10 @@ object native {
   /** [[nearestIdNative]] with the centroid set supplied as COLUMNS
     * (`ids: array<long>`, `cs: array<array<double>>`) instead of literals —
     * same fold order and tie-breaking, so assignments are identical. Lets
-    * iterative callers ship centroids as broadcast DATA: the plan (and the
-    * generated whole-stage code) stays constant across Lloyd iterations
-    * instead of being re-analyzed/re-compiled for every new literal set.
+    * iterative callers ship centroids as broadcast DATA: the plan text stays
+    * constant across rounds instead of being re-analyzed for every new
+    * literal set. The `zip_with`/`aggregate` fold itself is not compiled —
+    * Spark evaluates these higher-order functions interpreted, per row.
     */
   def nearestIdCols(y: Column, ids: Column, cs: Column): Column = {
     val pairs = zip_with(ids, cs,

@@ -165,19 +165,63 @@ class KMeansSpec extends SparkSpec {
     assert(draw(dedup = true) == 4L)
   }
 
-  test("lloydStepConst (broadcast-data plan) is bit-identical to lloydStepFast") {
-    // pins the plan-shape switch fit() makes past 4096 embedded literals,
-    // which no small-k spec reaches organically
-    val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val cs = KMeans.seedFirstK(data, 7)
-    val fast = KMeans.lloydStepFast(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
-    val const = KMeans.lloydStepConst(data, cs, dim = 64, fxScale = 1e6)
-    assert(fast.map(_.j) == const.map(_.j))
-    fast.zip(const).foreach { case (a, b) =>
-      a.c.zip(b.c).foreach { case (x, y) =>
-        assert(java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y))
-      }
+  private def bits(cs: Seq[Centroid]): Seq[(Long, Seq[Long])] =
+    cs.map(c => (c.j, c.c.map(java.lang.Double.doubleToLongBits)))
+
+  test("fitFrom with k*dim > 4096 is bit-identical to looping lloydStepFast(assign(..))") {
+    // the fit loop once switched plan shape past 4096 centroid coordinates;
+    // the kernel step has no such switch, and this pins it at that size
+    val dim = 64
+    val rnd = new scala.util.Random(11)
+    val data = (1L to 600L).map(i => i -> Seq.fill(dim)(rnd.nextGaussian() * 10.0))
+      .toDF("i", "Y").repartition(3).cache()
+    val cs = KMeans.seedFirstK(data, 70) // 70·64 = 4480 coordinates
+    val fit = KMeans.fitFrom(data, cs, dim, tol = 0.0, maxIter = 3)
+    var ref = cs
+    val refLog = (1L to 3L).flatMap { step =>
+      ref = KMeans.lloydStepFast(KMeans.assign(data, ref), dim, fxScale = 1e6)
+      bits(ref).map(step -> _)
     }
+    assert(fit.steps == 3L)
+    assert(fit.log.filter(_.step > 0)
+      .map(e => e.step -> (e.j, e.c.map(java.lang.Double.doubleToLongBits))) == refLog)
+    data.unpersist()
+  }
+
+  test("Lloyd kernel: any partitioning gives the same bits; an exact tie goes " +
+      "to the earlier centroid slot") {
+    val data = Tables.yhEmbeddings(spark, sf("0.001"))
+    val cs = KMeans.seedFirstK(data, 7)
+    assert(bits(KMeans.lloydStepOnePass(data.repartition(1), cs, dim = 64, fxScale = 1e6)) ==
+      bits(KMeans.lloydStepOnePass(data.repartition(7), cs, dim = 64, fxScale = 1e6)))
+    // (5,0) is exactly 25 from both centroids: slot order, not id order,
+    // decides, as in the HOF fold `assign` runs
+    val tie = Seq(Centroid(9, Seq(0.0, 0.0)), Centroid(3, Seq(10.0, 0.0)))
+    val p = pts(1L -> Seq(5.0, 0.0), 2L -> Seq(5.0, 0.0))
+    assert(KMeans.assign(p, tie).select("j").as[Long].collect().toSeq == Seq(9L, 9L))
+    assert(KMeans.lloydStepOnePass(p, tie, dim = 2, fxScale = 1e6) ==
+      Seq(Centroid(9, Seq(5.0, 0.0))))
+  }
+
+  test("Lloyd kernel keeps the ANSI cast's overflow and the HOF fold's id −1 row") {
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val cs = Seq(Centroid(1, Seq(0.0, 0.0)), Centroid(2, Seq(10.0, 10.0)))
+    val huge = pts(1L -> Seq(1.0, 2.0), 2L -> Seq(1e200, 0.0))
+    // round(1e200·1e6)::long is out of the long range: both forms fail
+    val fastErr = intercept[Exception](
+      KMeans.lloydStepFast(KMeans.assign(huge, cs), dim = 2, fxScale = 1e6))
+    val kernelErr = intercept[Exception](
+      KMeans.lloydStepOnePass(huge, cs, dim = 2, fxScale = 1e6))
+    assert(messages(fastErr).contains("CAST_OVERFLOW"), messages(fastErr))
+    assert(messages(kernelErr).contains("CAST_OVERFLOW"), messages(kernelErr))
+    // a NaN centroid: every distance is NaN, no centroid wins, and every row
+    // lands on the fold's initial id −1 in both forms
+    val nan = Seq(Centroid(1, Seq(Double.NaN, 0.0)))
+    val fast = KMeans.lloydStepFast(KMeans.assign(squareCorners, nan), dim = 2, fxScale = 1e6)
+    val one = KMeans.lloydStepOnePass(squareCorners, nan, dim = 2, fxScale = 1e6)
+    assert(fast == Seq(Centroid(-1, Seq(5.0, 5.0))))
+    assert(bits(one) == bits(fast))
   }
 
   test("movementRefLimit2ByStep replays the reference's limit-2-by-step bug (Q2)") {
