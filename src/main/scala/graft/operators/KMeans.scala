@@ -234,9 +234,13 @@ object KMeans {
   }
 
   /** Full k-means++ seeding: first centroid = deterministic min-key point,
-    * then k−1 scalable weighted rounds (reference k-means.sh:9-13).
+    * then k−1 scalable weighted rounds (reference k-means.sh:9-13). Round r
+    * reads only the first r seeds and `seed + r`, so on one partitioning
+    * `seedPlusPlus(p, k, s).take(k2) == seedPlusPlus(p, k2, s)` for k2 ≤ k
+    * (pinned in KMeansSpec; Quality.optimalKSweep seeds once on it).
     */
   def seedPlusPlus(points: DataFrame, k: Int, seed: Long): Seq[Centroid] = {
+    require(k >= 1, s"k-means++ needs k >= 1, got $k")
     var cs = seedFirstK(points, 1)
     while (cs.size < k)
       cs = cs :+ seedPlusPlusScalable(points, cs, seed + cs.size)
@@ -461,7 +465,7 @@ object KMeans {
   private def yRows(points: DataFrame): RDD[InternalRow] =
     points.select(col("Y")).queryExecution.toRdd
 
-  private def ansi(points: DataFrame): Boolean =
+  private[operators] def ansi(points: DataFrame): Boolean =
     points.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
 
   /** Per-centroid-id sufficient statistics of one step: (Σ fixed-point
@@ -992,7 +996,7 @@ object KMeans {
     */
   private val iterConfDepth =
     new java.util.IdentityHashMap[SparkSession, (Int, String, String)]()
-  private def withIterConf[A](spark: SparkSession)(body: => A): A = {
+  private[operators] def withIterConf[A](spark: SparkSession)(body: => A): A = {
     val conf = spark.conf
     iterConfDepth.synchronized {
       iterConfDepth.get(spark) match {
@@ -1087,19 +1091,29 @@ object KMeans {
   }
 
   /** Driver-local twin of [[fitBounded]]'s distributed chain — identical
-    * FitResult bit-for-bit (the gapStatisticFitted localW discipline):
-    * ONE key-ordered collect, then the same inverse-CDF draws
-    * (`roundHalfUpLong` ≡ Spark `round`, pinned in PropertySpec; the
-    * cumulative pick walks i order exactly like the windowed prefix sum)
-    * and [[fitFrom]]'s own Lloyd step ([[LloydKernel]]) and j-ordered
-    * movement loop.
+    * FitResult bit-for-bit (pinned in KMeansSpec): ONE key-ordered collect,
+    * then [[fitBoundedRows]].
     */
   private def fitBoundedLocal(points: DataFrame, k: Int, dim: Int,
       tol: Double, lloydSteps: Int, fxScale: Double,
       weightScale: Double): FitResult = {
-    val rows = points.select(col("i"), col("Y")).orderBy("i").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    require(rows.nonEmpty, "fitBounded on an empty relation")
+    val ys = points.select(col("i"), col("Y")).orderBy("i").collect()
+      .map(_.getSeq[Double](1).toArray)
+    fitBoundedRows(ys, Seq(k), dim, tol, lloydSteps, fxScale, weightScale, ansi(points)).head
+  }
+
+  /** [[fitBounded]]'s chain over key-ordered rows `ys` held on the driver,
+    * one fit per k: the same inverse-CDF draws (`roundHalfUpLong` ≡ Spark
+    * `round`, pinned in PropertySpec; the cumulative pick walks key order
+    * exactly like the windowed prefix sum), run ONCE to `ks.max` — round r
+    * reads only the first r − 1 seeds, so k's seeds are the k-prefix — then
+    * per k [[fitFrom]]'s own Lloyd step ([[LloydKernel]]) and j-ordered
+    * movement loop. Also Quality.gapStatisticFitted's local twin.
+    */
+  private[operators] def fitBoundedRows(ys: Array[Array[Double]], ks: Seq[Int],
+      dim: Int, tol: Double, lloydSteps: Int, fxScale: Double,
+      weightScale: Double, ansiOn: Boolean): Seq[FitResult] = {
+    require(ys.nonEmpty, "fitBounded on an empty relation")
     def sqd(a: Array[Double], b: Array[Double]): Double = {
       var s = 0.0; var d = 0
       while (d < dim) { val t = a(d) - b(d); s += t * t; d += 1 }
@@ -1109,12 +1123,11 @@ object KMeans {
       cs.map(c => sqd(y, c)).min
     def sameY(a: Array[Double], b: Array[Double]): Boolean =
       (0 until dim).forall(d => a(d) == b(d)) // SQL value equality
-    var chosen = Vector(rows.head._2)
-    (2 to k).foreach { r =>
+    var chosen = Vector(ys.head)
+    (2 to ks.max).foreach { r =>
       val (uN, uD) = fixedU(r)
-      val surv = rows.filter { case (_, y) => !chosen.exists(c => sameY(c, y)) }
-      val ws = surv.map { case (_, y) =>
-        roundHalfUpLong(minSq(y, chosen) * weightScale) }
+      val surv = ys.filter(y => !chosen.exists(c => sameY(c, y)))
+      val ws = surv.map(y => roundHalfUpLong(minSq(y, chosen) * weightScale))
       val total = ws.sum
       var cw = 0L; var pick = -1; var ix = 0
       while (ix < surv.length && pick < 0) {
@@ -1123,25 +1136,26 @@ object KMeans {
         ix += 1
       }
       require(pick >= 0, s"k-means++ draw $r returned no row")
-      chosen = chosen :+ surv(pick)._2
+      chosen = chosen :+ surv(pick)
     }
-    var cs: Seq[Centroid] =
-      chosen.zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
-    var log = cs.map(c => LogEntry(0L, c.j, c.c))
-    // fixed-point coordinates hoisted OUT of the Lloyd loop: the per-dim
-    // encode of y·fxScale is invariant across steps
-    val ys = rows.map(_._2)
-    val fys = encodeAll(ys, dim, fxScale, ansi(points))
-    var step = 0L
-    var move = Double.MaxValue
-    while (move >= tol && step < lloydSteps) {
-      step += 1
-      val next = localStep(ys, fys, cs, dim, fxScale)
-      move = movement(cs, next)
-      cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
+    // fixed-point coordinates hoisted OUT of the Lloyd loops: the per-dim
+    // encode of y·fxScale is invariant across steps and fits
+    val fys = encodeAll(ys, dim, fxScale, ansiOn)
+    ks.map { k =>
+      var cs: Seq[Centroid] =
+        chosen.take(k).zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
+      var log = cs.map(c => LogEntry(0L, c.j, c.c))
+      var step = 0L
+      var move = Double.MaxValue
+      while (move >= tol && step < lloydSteps) {
+        step += 1
+        val next = localStep(ys, fys, cs, dim, fxScale)
+        move = movement(cs, next)
+        cs = next
+        log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
+      }
+      FitResult(cs, log, step, move)
     }
-    FitResult(cs, log, step, move)
   }
 
   /** Mini-batch k-means (Sculley 2010, "Web-scale k-means clustering"):

@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps._
 import graft.operators.KMeans.Centroid
+import graft.plans.PairDistStats
 
 /** Cluster-quality metrics — the reference's `OptimalK.sql`. */
 object Quality {
@@ -97,99 +100,116 @@ object Quality {
   }
 
   /** The reference's second entry point — the OptimalK sweep (reference
-    * OptimalK.sql:3-21, README.md:39-43): run a full fit for each candidate
-    * k and emit one row (k, elbow_d1, elbow_d2, silhouette) so the user can
-    * eyeball the knee / silhouette peak. The reference drives this from the
-    * shell around OptimalK.sql; here the loop is the driver, like
-    * [[KMeans.fit]].
-    *
-    * `sample` is the silhouette pre-sample (the pair stage is O(|sample|²)
-    * — see [[silhouettePairStats]]); `points` should be cached by the
-    * caller, since each k re-scans it (seeding + Lloyd loop + elbow).
+    * OptimalK.sql:3-21, README.md:39-43): one row (k, elbow_d1, elbow_d2,
+    * silhouette) per candidate k, a null silhouette read as NaN. Each row is
+    * bit-identical to the reference's per-k loop `KMeans.fit(plusPlus =
+    * true)` + [[elbow]] + [[silhouetteSimplified]] (QualitySpec), but the ++
+    * chain runs once, for `ks.max`, under the fit loop's conf: round r reads
+    * only the first r seeds and `seed + r`, so `seeds.take(k)` is k's own
+    * seeding. Then one `fitFrom` per k and one [[scoreKs]] for all of them.
+    * `points` should be cached by the caller; `sample` is the silhouette
+    * pre-sample (its pair stage is O(|sample|²)).
     */
   def optimalKSweep(points: DataFrame, sample: DataFrame, dim: Int, ks: Seq[Int],
       seed: Long = 42L, d1Scale: Double = 1e6, d2Scale: Double = 1e6,
       maxIter: Int = 50): DataFrame = {
+    require(ks.forall(_ >= 1), s"every k must be >= 1, got ${ks.mkString(", ")}")
     val spark = points.sparkSession
     import spark.implicits._
-    ks.map { k =>
-      val fit = KMeans.fit(points, k = k, dim = dim, seed = seed,
-        plusPlus = true, maxIter = maxIter)
-      val e = elbow(points, fit.centroids, d1Scale, d2Scale).head()
-      val si = silhouetteSimplified(KMeans.assign(sample, fit.centroids))
-        .select(col("si")).head()
-      (k.toLong, e.getDouble(0), e.getDouble(1),
-        if (si.isNullAt(0)) Double.NaN else si.getDouble(0))
-    }.toDF("k", "elbow_d1", "elbow_d2", "silhouette")
+    val seeds = if (ks.isEmpty) Nil
+      else KMeans.withIterConf(spark)(KMeans.seedPlusPlus(points, ks.max, seed))
+    val fits = ks.map(k => k -> KMeans.fitFrom(points, seeds.take(k), dim, maxIter = maxIter).centroids)
+    scoreKs(points, sample, fits, d1Scale, d2Scale)
+      .map { case (k, d1, d2, si) => (k, d1.get, d2.get, si.getOrElse(Double.NaN)) }
+      .toDF("k", "elbow_d1", "elbow_d2", "silhouette")
   }
 
   /** OptimalK curve over NESTED seed prefixes (centroid set for k is
-    * `seeds.take(k)`) — the fully relational, oracle-able form of the sweep:
-    * one row (k, elbow_d1, elbow_d2, si) per k.
-    *
-    * Scale shape (why this isn't a loop over [[elbow]] + [[silhouetteSimplified]]):
-    *  - ALL elbows come from ONE scan of `points`: the per-k nearest-distance
-    *    folds are just ks.size expressions in a single multi-aggregate
-    *    projection, unpivoted with `stack`. No repeated scans.
-    *  - The silhouette sample is scanned/collected ONCE; each k is then one
-    *    [[silhouettePairStats]] kernel pass over the redistributed in-memory
-    *    sample (per-k labels change which cluster a pair's distance lands in,
-    *    so the per-k stats differ, but no pass ever touches `points` again
-    *    and no |sample|² rows are materialized).
-    *  - Nesting makes both elbows provably monotone non-increasing in k (a
-    *    min over a superset of centroids can't grow) — QualitySpec asserts it.
-    *
-    * Value-identity: each per-k silhouette regroups the same `round(d·dScale)`
-    * longs that [[silhouetteSimplified]] sums, and long sums are associative,
-    * so each per-k row is bit-identical to running the single-k operators.
-    *
-    * The sample collect is GUARDED like [[silhouettePairStats]]'s: a
-    * `take(maxCollectRows + 1)` instead of a blind collect, and past the
-    * bound every per-k silhouette runs [[silhouettePairStatsJoin]]'s fully
-    * distributed kernel over the (cached) distributed sample — bit-identical
-    * results (long-sum associativity), no O(n) driver materialization ever.
+    * `seeds.take(k)`) — the oracle-able form of the sweep, scored by the same
+    * [[scoreKs]]. Nesting makes both elbows monotone non-increasing in k (a
+    * min over a superset of centroids can't grow) — QualitySpec asserts it.
     */
   def optimalKNested(points: DataFrame, sample: DataFrame, seeds: Seq[Centroid],
       ks: Seq[Int], d1Scale: Double = 1e6, d2Scale: Double = 1e6,
       dScale: Double = 1e3, maxCollectRows: Int = 1000000): DataFrame = {
     require(ks.nonEmpty && ks.max <= seeds.size, s"need ${ks.max} seeds, got ${seeds.size}")
     val spark = points.sparkSession
-    // -- elbows: one scan, 2·ks.size fixed-point sums, stack() to rows
-    val elbowAggs = ks.flatMap { k =>
-      val msq = graft.plans.native.nearest_sq_dist(col("Y"), seeds.take(k).map(_.c))
-      Seq(sumFx(sqrt(msq), d1Scale).as(s"d1_$k"), sumFx(msq, d2Scale).as(s"d2_$k"))
+    import spark.implicits._
+    scoreKs(points, sample, ks.map(k => k -> seeds.take(k)), d1Scale, d2Scale,
+      dScale, maxCollectRows).toDF("k", "elbow_d1", "elbow_d2", "si")
+  }
+
+  /** (k, elbow_d1, elbow_d2, si) per (k, centroids) set, each value
+    * bit-identical to [[elbow]] / [[silhouetteSimplified]] on that set alone
+    * (None for null). All elbows come from ONE multi-aggregate scan of
+    * `points`. The sample is collected once (a guarded take, as in
+    * [[silhouettePairStats]]) and labelled per set by [[KMeans.assign]] over
+    * the local relation; then ONE job over its index range runs each row's
+    * [[graft.plans.PairDistStats]] kernel per set and sums the set's same-
+    * and cross-cluster (Σsfx, count) longs (exact regroupings of the stats
+    * rows), which [[simplifiedSi]] finishes. Past the bound each set runs
+    * [[silhouettePairStatsJoin]] over the cached sample instead.
+    */
+  private def scoreKs(points: DataFrame, sample: DataFrame, sets: Seq[(Int, Seq[Centroid])],
+      d1Scale: Double, d2Scale: Double, dScale: Double = 1e3,
+      maxCollectRows: Int = 1000000): Seq[(Long, Option[Double], Option[Double], Option[Double])] = {
+    if (sets.isEmpty) return Nil
+    val spark = points.sparkSession
+    def opt(r: Row, ix: Int) = if (r.isNullAt(ix)) None else Some(r.getDouble(ix))
+    val elbowAggs = sets.flatMap { case (_, cs) =>
+      val msq = graft.plans.native.nearest_sq_dist(col("Y"), cs.map(_.c))
+      Seq(sumFx(sqrt(msq), d1Scale), sumFx(msq, d2Scale))
     }
-    val elbows = points.agg(elbowAggs.head, elbowAggs.tail: _*)
-      .select(expr(s"stack(${ks.size}, " +
-        ks.map(k => s"CAST($k AS BIGINT), d1_$k, d2_$k").mkString(", ") +
-        ") AS (k, elbow_d1, elbow_d2)"))
-    // -- silhouettes: collect the sample once (guarded take), one kernel pass
-    // per k over the local relation (assignment is the same argmin fold as
-    // KMeans.assign); past the bound, the distributed join kernel per k over
-    // the cached distributed sample — same integer sums, zero driver rows
-    val selSample = sample.select(col("i"), col("Y"))
-    val sampleRows = selSample.take(maxCollectRows + 1)
-    val sil =
-      if (sampleRows.length > maxCollectRows) {
-        val dist = selSample.cache()
-        ks.map { k =>
-          val stats = silhouettePairStatsJoin(
-            KMeans.assign(dist, seeds.take(k)), dScale)
-          silhouetteSimplifiedFromStats(stats, dScale)
-            .select(lit(k.toLong).as("sk"), col("si"))
-        }.reduce(_ unionAll _)
-      } else {
-        val sampleLocal = spark.createDataFrame(
-          java.util.Arrays.asList(sampleRows: _*), selSample.schema)
-        ks.map { k =>
-          val stats = silhouettePairStats(
-            KMeans.assign(sampleLocal, seeds.take(k)), dScale)
-          silhouetteSimplifiedFromStats(stats, dScale)
-            .select(lit(k.toLong).as("sk"), col("si"))
-        }.reduce(_ unionAll _)
+    // one global aggregate: adaptive execution would only split it into two jobs
+    val e = KMeans.withIterConf(spark)(points.agg(elbowAggs.head, elbowAggs.tail: _*).head())
+    val sel = sample.select(col("i"), col("Y"))
+    val rows = sel.take(maxCollectRows + 1)
+    val si = if (rows.length > maxCollectRows) {
+      val dist = sel.cache()
+      try sets.map { case (_, cs) => opt(silhouetteSimplifiedFromStats(
+        silhouettePairStatsJoin(KMeans.assign(dist, cs), dScale), dScale).select("si").head(), 0)
+      } finally dist.unpersist()
+    } else {
+      val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.schema)
+      val (ids, ys) = (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
+      val kernels = sets.map { case (_, cs) => // children unused: only `compute` runs
+        val js = KMeans.assign(local, cs).select("j").collect().map(_.getLong(0))
+        (js, PairDistStats(Literal(0L), Literal(0L), ids, js, ys, dScale))
       }
-    elbows.join(sil, col("k") === col("sk"))
-      .select(col("k"), col("elbow_d1"), col("elbow_d2"), col("si"))
+      val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.length))
+      val sums = spark.sparkContext.parallelize(rows.indices, slices).mapPartitions { ps =>
+        val acc = new Array[Long](4 * kernels.size) // per set: same Σ, n; cross Σ, n
+        ps.foreach { p =>
+          val y = UnsafeArrayData.fromPrimitiveArray(ys(p))
+          kernels.iterator.zipWithIndex.foreach { case ((js, kern), s) =>
+            val st = kern.compute(ids(p), y)
+            (0 until st.numElements()).foreach { q =>
+              val r = st.getStruct(q, 3)
+              val o = 4 * s + (if (r.getLong(0) == js(p)) 0 else 2)
+              acc(o) += r.getLong(1); acc(o + 1) += r.getLong(2)
+            }
+          }
+        }
+        Iterator.single(acc)
+      }.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x)))
+      sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, KMeans.ansi(points)))
+    }
+    sets.indices.map(ix => (sets(ix)._1.toLong, opt(e, 2 * ix), opt(e, 2 * ix + 1), si(ix)))
+  }
+
+  /** [[silhouetteSimplifiedFromStats]]' arithmetic on (same Σsfx, count,
+    * cross Σsfx, count) with Spark's nulls: a sum over no stats row (all
+    * have cnt > 0) is null, so is si then, and `x / 0` is null or, under
+    * ANSI, DIVIDE_BY_ZERO.
+    */
+  private def simplifiedSi(s: Array[Long], dScale: Double, ansi: Boolean): Option[Double] = {
+    def avg(sfx: Long, n: Long) = if (n == 0) None else Some((sfx.toDouble / dScale) / n)
+    (avg(s(0), s(1)), avg(s(2), s(3))) match {
+      case (Some(ai), Some(bi)) if math.max(ai, bi) != 0 => Some((bi - ai) / math.max(ai, bi))
+      case (Some(_), Some(_)) if ansi =>
+        throw new ArithmeticException("[DIVIDE_BY_ZERO] Division by zero.")
+      case _ => None
+    }
   }
 
   /** Gap statistic over NESTED seed prefixes — the fully relational,
@@ -227,19 +247,10 @@ object Quality {
       seeds: Seq[Centroid], refSets: Int = 3, scale: Double = 0.01): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted && ks.max <= seeds.size,
       s"need ascending ks with ${ks.max} seeds")
-    val spark = points.sparkSession
-    import spark.implicits._
     val lcgM = GapLcgM
     def lcgA(b: Int, d: Int): Long = gapLcgA(b, dim, d)
     def lcgC(b: Int, d: Int): Long = GapLcgC0 + (b * dim + d).toLong * GapLcgCStep
-    // bounding box of the data (exact: min/max are comparisons, no rounding)
-    val boxAggs = (0 until dim).flatMap { d =>
-      Seq(min(element_at(col("Y"), d + 1)).as(s"lo_$d"),
-        max(element_at(col("Y"), d + 1)).as(s"hi_$d"))
-    }
-    val box = points.agg(boxAggs.head, boxAggs.tail: _*).head()
-    val lo = (0 until dim).map(d => box.getDouble(2 * d))
-    val hi = (0 until dim).map(d => box.getDouble(2 * d + 1))
+    val (lo, hi) = boundingBox(points, dim)
     // one reference coordinate vector per existing row id (same cardinality
     // as the data, zero materialization — pure column expressions over i)
     def refY(b: Int): Column = array((0 until dim).map { d =>
@@ -265,11 +276,32 @@ object Quality {
     }
     val w = points.agg(aggs.head, aggs.tail: _*).head()
     def wOf(name: String): Double = w.getDouble(w.fieldIndex(name))
-    // driver-side scalar math, op-for-op the oracle SQL's expressions
-    val stats = ks.map { k =>
-      val ls = (0 until refSets).map(b => math.log(wOf(s"wr_${b}_$k")))
+    gapRows(points.sparkSession, ks, ks.map(k => wOf(s"wd_$k")) +:
+      (0 until refSets).map(b => ks.map(k => wOf(s"wr_${b}_$k"))))
+  }
+
+  /** Per-dimension (lo, hi) of `Y`, the gap reference box (exact: min and
+    * max only compare).
+    */
+  private def boundingBox(points: DataFrame, dim: Int): (Seq[Double], Seq[Double]) = {
+    val aggs = (0 until dim).flatMap(d =>
+      Seq(min(element_at(col("Y"), d + 1)), max(element_at(col("Y"), d + 1))))
+    val box = points.agg(aggs.head, aggs.tail: _*).head()
+    ((0 until dim).map(d => box.getDouble(2 * d)), (0 until dim).map(d => box.getDouble(2 * d + 1)))
+  }
+
+  /** The gap rows from each set's dispersion per k (`ws(0)` the data,
+    * `ws(b)` reference set b, both indexed like `ks`): driver-side scalar
+    * math, op-for-op the oracle SQL's expressions, and `chosen` compares
+    * the e6-rounded integers so the pick is engine-exact.
+    */
+  private def gapRows(spark: SparkSession, ks: Seq[Int], ws: Seq[Seq[Double]]): DataFrame = {
+    import spark.implicits._
+    val refSets = ws.size - 1
+    val stats = ks.zipWithIndex.map { case (k, ix) =>
+      val ls = (1 to refSets).map(b => math.log(ws(b)(ix)))
       val mean = ls.reduce(_ + _) / refSets.toDouble
-      val gap = mean - math.log(wOf(s"wd_$k"))
+      val gap = mean - math.log(ws(0)(ix))
       val sd = math.sqrt(ls.map(l => (l - mean) * (l - mean)).reduce(_ + _) /
         refSets.toDouble)
       val sk = sd * math.sqrt(1.0 + 1.0 / refSets.toDouble)
@@ -482,20 +514,12 @@ object Quality {
       if (localMaxRows >= 0) localMaxRows
       else 4000000L / math.max(dim, 1)
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
-    val spark = points.sparkSession
-    import spark.implicits._
     val kMax = ks.max
     // fixed rational draws for rounds 2..kMax — the shared KMeans.FixedUs
     // sequence (also fitBounded's), so every bounded-replayable fit and its
     // oracle agree on one u schedule
     def uOf(r: Int): (Long, Long) = KMeans.fixedU(r)
-    val boxAggs = (0 until dim).flatMap { d =>
-      Seq(min(element_at(col("Y"), d + 1)).as(s"lo_$d"),
-        max(element_at(col("Y"), d + 1)).as(s"hi_$d"))
-    }
-    val box = points.agg(boxAggs.head, boxAggs.tail: _*).head()
-    val lo = (0 until dim).map(d => box.getDouble(2 * d))
-    val hi = (0 until dim).map(d => box.getDouble(2 * d + 1))
+    val (lo, hi) = boundingBox(points, dim)
     def lcgC(b: Int, d: Int): Long = GapLcgC0 + (b * dim + d).toLong * GapLcgCStep
     def refDf(b: Int): DataFrame = points.select(col("i"),
       array((0 until dim).map { d =>
@@ -509,87 +533,32 @@ object Quality {
     // seed→fit→census chain runs driver-local with BIT-IDENTICAL results
     // (pinned in QualitySpec) — the distributed form's ~130 tiny jobs are
     // pure fixed cost at sample sizes, while at real scale the distributed
-    // chain below takes over unchanged. Every rounding uses BigDecimal
-    // HALF_UP (Spark's `round`), every float fold walks the same order.
+    // chain below takes over unchanged. The seeds and fits are fitBounded's
+    // own local chain; the census rounds like Spark's `round`.
     def localW(): Seq[Seq[Double]] = {
       val base = points.select(col("i"), col("Y")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-      // KMeans.roundHalfUpLong ≡ the BigDecimal HALF_UP form (PropertySpec
-      // pin) — the old per-call BigDecimal here ran millions of times per
-      // sweep (every point, every Lloyd step, every set) and dominated the
-      // local path's wall (r19)
-      def rnd(x: Double): Long = KMeans.roundHalfUpLong(x)
       def sqd(a: Array[Double], b: Array[Double]): Double = {
         var s = 0.0; var d = 0
         while (d < dim) { val t = a(d) - b(d); s += t * t; d += 1 }
         s
       }
-      def minSq(y: Array[Double], cs: Seq[Array[Double]]): Double =
-        cs.map(c => sqd(y, c)).min
-      def sameY(a: Array[Double], b: Array[Double]): Boolean =
-        (0 until dim).forall(d => a(d) == b(d)) // SQL value equality
-      def refCoords(b: Int): Array[(Long, Array[Double])] =
-        base.map { case (i, _) =>
-          (i, Array.tabulate(dim) { d =>
-            ((i * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).toDouble /
-              GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
-          })
+      def refCoords(b: Int): Array[Array[Double]] = base.map { case (i, _) =>
+        Array.tabulate(dim) { d =>
+          ((i * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).toDouble /
+            GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
         }
-      def wOfSetLocal(pts: Array[(Long, Array[Double])]): Seq[Double] = {
-        // nested ++ seeds: min-key first, then rational inverse-CDF draws
-        var chosen = Vector(pts.head._2)
-        (2 to kMax).foreach { r =>
-          val (uN, uD) = uOf(r)
-          val surv = pts.filter { case (_, y) =>
-            !chosen.exists(c => sameY(c, y)) }
-          val ws = surv.map { case (_, y) => rnd(minSq(y, chosen)) }
-          val total = ws.sum
-          var cw = 0L; var pick = -1; var ix = 0
-          while (ix < surv.length && pick < 0) {
-            cw += ws(ix)
-            if (cw * uD >= total * uN) pick = ix
-            ix += 1
-          }
-          require(pick >= 0, s"k-means++ draw $r returned no row")
-          chosen = chosen :+ surv(pick)._2
-        }
-        // per k: movement-gated Lloyd (fixed-point re-averages), then the
-        // fixed-point dispersion census
-        ks.map { k =>
-          var cs: Seq[(Long, Array[Double])] =
-            (1 to k).map(j => (j.toLong, chosen(j - 1)))
-          var move = Double.MaxValue
-          var step = 0
-          while (move >= tol && step < lloydSteps) {
-            step += 1
-            val acc = scala.collection.mutable.LongMap
-              .empty[(Array[Long], Long)]
-            pts.foreach { case (_, y) =>
-              var bj = -1L; var bd = Double.PositiveInfinity
-              cs.foreach { case (j, c) =>
-                val d2 = sqd(y, c)
-                if (d2 < bd) { bd = d2; bj = j } // strict <: earliest j wins
-              }
-              val cur = acc.getOrElse(bj, (new Array[Long](dim), 0L))
-              var d = 0
-              while (d < dim) { cur._1(d) += rnd(y(d) * fxScale); d += 1 }
-              acc.update(bj, (cur._1, cur._2 + 1))
-            }
-            val next = acc.toSeq.sortBy(_._1).map { case (j, (sums, n)) =>
-              (j, sums.map(s => s.toDouble / fxScale / n))
-            }
-            val byJ = cs.map { case (j, c) => j -> c }.toMap
-            move = next.flatMap { case (j, c) =>
-              byJ.get(j).map(p => math.sqrt(sqd(p, c)))
-            }.sum
-            cs = next
-          }
-          val cents = cs.map(_._2)
-          pts.map { case (_, y) => rnd(minSq(y, cents) * scale) }
+      }
+      // per set: the bounded chain's nested seeds and one fit per k, then
+      // the fixed-point dispersion census
+      (base.map(_._2) +: (0 until refSets).map(refCoords)).map { ys =>
+        KMeans.fitBoundedRows(ys, ks, dim, tol, lloydSteps, fxScale, 1.0,
+          KMeans.ansi(points)).map { fit =>
+          val cents = fit.centroids.map(_.c.toArray)
+          ys.map(y => KMeans.roundHalfUpLong(cents.map(c => sqd(y, c)).min * scale))
             .sum.toDouble / scale
         }
       }
-      (base +: (0 until refSets).map(refCoords)).map(wOfSetLocal)
     }
 
     // per set: nested ++ seeds, one bounded fit per k, ONE multi-agg
@@ -628,21 +597,7 @@ object Quality {
             scala.concurrent.duration.Duration.Inf))
         } finally pool.shutdown()
       }
-    // driver-side scalar math, op-for-op the oracle SQL's expressions
-    val stats = ks.zipWithIndex.map { case (k, ix) =>
-      val ls = (1 to refSets).map(b => math.log(ws(b)(ix)))
-      val mean = ls.reduce(_ + _) / refSets.toDouble
-      val gap = mean - math.log(ws(0)(ix))
-      val sd = math.sqrt(ls.map(l => (l - mean) * (l - mean)).reduce(_ + _) /
-        refSets.toDouble)
-      val sk = sd * math.sqrt(1.0 + 1.0 / refSets.toDouble)
-      (k.toLong, math.round(gap * 1e6), math.round(sk * 1e6))
-    }
-    val chosen = stats.zip(stats.drop(1)).collectFirst {
-      case ((k, g, _), (_, gN, skN)) if g >= gN - skN => k
-    }.getOrElse(kMax.toLong)
-    stats.map { case (k, g, sk) => (k, g, sk, if (k == chosen) 1L else 0L) }
-      .toDF("k", "gap_e6", "sk_e6", "chosen")
+    gapRows(points.sparkSession, ks, ws)
   }
 
   /** Gap statistic (Tibshirani, Walther & Hastie 2001), the textbook form:

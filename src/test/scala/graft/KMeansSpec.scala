@@ -363,6 +363,25 @@ class KMeansSpec extends SparkSpec {
     assert(got.c == want)
   }
 
+  test("seedPlusPlus: the k = 4 chain's prefixes are the k = 1..3 chains") {
+    // the invariant optimalKSweep's seed-once relies on: round r reads only
+    // the first r seeds and seed + r; rand() draws per partition, so the
+    // comparison holds within each partitioning
+    val cached = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    val spread = cached.repartition(3).cache()
+    Seq(cached, spread).foreach { p =>
+      val four = KMeans.seedPlusPlus(p, 4, seed = 42L)
+      assert(four.size == 4)
+      (1 to 4).foreach(k => assert(four.take(k) == KMeans.seedPlusPlus(p, k, seed = 42L), s"k=$k"))
+    }
+  }
+
+  test("k-means++ seeding rejects k < 1 instead of returning one centroid") {
+    intercept[IllegalArgumentException](KMeans.seedPlusPlus(squareCorners, 0, seed = 1L))
+    intercept[IllegalArgumentException](
+      KMeans.fit(squareCorners, k = 0, dim = 2, plusPlus = true))
+  }
+
   test("seedParallel (k-means||) is deterministic and partitioning-independent") {
     val yh = Tables.yhEmbeddings(spark, sf("0.001")).cache()
     val a = KMeans.seedParallel(yh, k = 6, seed = 7)

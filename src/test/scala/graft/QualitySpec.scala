@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{KMeans, Quality}
 import graft.operators.KMeans.Centroid
@@ -68,14 +71,104 @@ class QualitySpec extends SparkSpec {
     }
   }
 
-  test("optimalKSweep (fit-per-k): one row per k, WCSS decreasing") {
+  /** The reference's OptimalK loop, one full fit per k:
+    * `KMeans.fit(plusPlus = true)` + elbow + simplified silhouette, as raw
+    * bits (a null silhouette read as NaN, as optimalKSweep reports it).
+    */
+  private def perKSweep(points: DataFrame, sample: DataFrame, ks: Seq[Int],
+      maxIter: Int): Seq[(Long, Long, Long, Long)] = ks.map { k =>
+    val fit = KMeans.fit(points, k = k, dim = 2, plusPlus = true, maxIter = maxIter)
+    val e = Quality.elbow(points, fit.centroids, d1Scale = 1e4, d2Scale = 0.01).head()
+    val si = Quality.silhouetteSimplified(KMeans.assign(sample, fit.centroids))
+      .select("si").head()
+    bits(k.toLong, e.getDouble(0), e.getDouble(1),
+      if (si.isNullAt(0)) Double.NaN else si.getDouble(0))
+  }
+
+  private def bits(k: Long, d1: Double, d2: Double, si: Double) = {
+    import java.lang.Double.doubleToRawLongBits
+    (k, doubleToRawLongBits(d1), doubleToRawLongBits(d2), doubleToRawLongBits(si))
+  }
+
+  private def sweepBits(points: DataFrame, sample: DataFrame, ks: Seq[Int],
+      maxIter: Int): Seq[(Long, Long, Long, Long)] =
+    Quality.optimalKSweep(points, sample, dim = 2, ks = ks,
+        d1Scale = 1e4, d2Scale = 0.01, maxIter = maxIter)
+      .as[(Long, Double, Double, Double)].collect().toSeq
+      .map { case (k, d1, d2, si) => bits(k, d1, d2, si) }
+
+  /** Jobs started while `body` runs. */
+  private def countJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { val r = body; ListenerDrain(sc); (r, jobs.get) }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("optimalKSweep is bit-identical to the per-k reference loop") {
     val yh = Tables.yhOrders(spark, sf("0.001")).cache()
     val sample = yh.filter(col("i") % 29 === 0)
-    val rows = Quality.optimalKSweep(yh, sample, dim = 2, ks = Seq(2, 4),
-        d1Scale = 1e4, d2Scale = 0.01, maxIter = 5)
-      .orderBy("k").as[(Long, Double, Double, Double)].collect()
-    assert(rows.map(_._1).toSeq == Seq(2L, 4L))
-    assert(rows(1)._3 <= rows(0)._3, s"fit WCSS should not grow with k: $rows")
+    // unsorted, with k = 1: every sample pair is same-cluster there, so the
+    // silhouette is null (NaN) on both sides
+    val ks = Seq(2, 3, 4, 1)
+    val got = sweepBits(yh, sample, ks, maxIter = 5)
+    assert(got == perKSweep(yh, sample, ks, maxIter = 5))
+    import java.lang.Double.{isNaN, longBitsToDouble}
+    assert(got.map(_._1) == ks.map(_.toLong))
+    assert(isNaN(longBitsToDouble(got.last._4)) && !got.init.exists(r => isNaN(longBitsToDouble(r._4))))
+    val wcss = got.map(r => r._1 -> longBitsToDouble(r._3)).toMap
+    assert(wcss(4L) <= wcss(2L) && wcss(2L) <= wcss(1L), s"fit WCSS should not grow with k: $wcss")
+  }
+
+  test("optimalKSweep seeds once and scores every k in one scan and one job") {
+    val yh = Tables.yhOrders(spark, sf("0.001")).cache()
+    yh.count()
+    val sample = yh.filter(col("i") % 29 === 0)
+    val ks = 2 to 4
+    val steps = ks.map(k => KMeans.fit(yh, k = k, dim = 2, plusPlus = true, maxIter = 5).steps).sum
+    // ++ chain for ks.max (one first-seed job, two per round), the Lloyd
+    // steps, one elbow scan, at most two sample takes, one silhouette job
+    val bound = 1 + 2 * (ks.max - 1) + steps + 4
+    val (ref, perKJobs) = countJobs(perKSweep(yh, sample, ks, maxIter = 5))
+    val (got, jobs) = countJobs(sweepBits(yh, sample, ks, maxIter = 5))
+    assert(got == ref)
+    assert(jobs <= bound, s"sweep ran $jobs jobs, bound $bound")
+    assert(perKJobs > bound, s"the per-k loop ran $perKJobs jobs, within the bound $bound")
+  }
+
+  test("optimalKSweep rejects k < 1; no ks gives an empty frame") {
+    val yh = Tables.yhOrders(spark, sf("0.001")).cache()
+    val sample = yh.filter(col("i") % 29 === 0)
+    intercept[IllegalArgumentException](
+      Quality.optimalKSweep(yh, sample, dim = 2, ks = Seq(0, 2)))
+    val none = Quality.optimalKSweep(yh, sample, dim = 2, ks = Nil)
+    assert(none.columns.toSeq == Seq("k", "elbow_d1", "elbow_d2", "silhouette"))
+    assert(none.collect().isEmpty)
+  }
+
+  test("optimalKNested finishes a 0/0 silhouette as Spark does: DIVIDE_BY_ZERO, " +
+      "null without ANSI") {
+    // every pair distance rounds to 0 (dScale 1e3), and the two seeds split
+    // the points, so ai = bi = 0 and si = 0 / greatest(0, 0)
+    val pts = Seq(1L -> Seq(-0.0002, 0.0), 2L -> Seq(-0.0001, 0.0),
+      3L -> Seq(0.0001, 0.0)).toDF("i", "Y")
+    val seeds = Seq(Centroid(1, Seq(-1.0, 0.0)), Centroid(2, Seq(1.0, 0.0)))
+    def nested() = Quality.optimalKNested(pts, pts, seeds, Seq(2)).select("si").head()
+    def single() = Quality.silhouetteSimplified(KMeans.assign(pts, seeds)).select("si").head()
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try {
+      spark.conf.set("spark.sql.ansi.enabled", "true")
+      Seq(intercept[Exception](nested()), intercept[Exception](single())).foreach { e =>
+        assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e.getMessage)
+      }
+      spark.conf.set("spark.sql.ansi.enabled", "false")
+      assert(nested().isNullAt(0) && single().isNullAt(0))
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("validity indices match hand-computed values on a planted fixture") {
