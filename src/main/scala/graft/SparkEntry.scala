@@ -160,7 +160,7 @@ object SparkEntry {
   private def embFit(s: SparkSession, dir: String): KMeans.FitResult =
     fitCache.getOrElseUpdate(dirKey(dir), {
       // NOTE: the parquet lands as ONE input split at these sfs, so the fit
-      // jobs run single-task. Measured (FitProfile, sf0.1): hash-repartitioning
+      // jobs run single-task. Measured at sf0.1: hash-repartitioning
       // to 32 does NOT help — per-iteration fixed cost (plan + codegen +
       // scheduling) dominates at 15k rows, and the shuffle + 32-way partial
       // merges cost more than the parallelism buys. At real scale the input

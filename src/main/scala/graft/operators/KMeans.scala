@@ -27,13 +27,15 @@ import graft.functions.VectorOps._
   *    Partial per-partition sums are the property that made the reference
   *    shard-friendly (README.md:15).
   *  - The points plan is built once per fit and every step re-runs the
-  *    kernel over it — lineage stays O(1); nothing driver-side ever holds
-  *    O(n) data.
-  *  - Per-dimension sums use fixed-point integer accumulation by default
-  *    (`round(x*scale)::long`), making results independent of partition count
-  *    and merge order — a deterministic distributed k-means. Disable (scale
-  *    `<= 0`) for raw-double speed when exact reproducibility isn't needed,
-  *    or when `max|x|·scale·rowsPerCluster` could approach 2^63.
+  *    kernel over it — lineage stays O(1). The distributed loop holds
+  *    O(k·dim) on the driver; the driver-local twins ([[fitLocal]],
+  *    [[fitBounded]], [[fitMiniBatch]]) collect the points only while
+  *    `rows·dim ≤ localMaxCells` (default 4M doubles, 32 MB).
+  *  - Per-dimension sums are fixed-point integers (`round(x*scale)::long`,
+  *    `fxScale > 0`), so results do not depend on partition count or merge
+  *    order — a deterministic distributed k-means. A sum past the long
+  *    range (`max|x|·scale·rowsPerCluster` near 2^63) fails with Spark's
+  *    ARITHMETIC_OVERFLOW under ANSI and wraps without it, as `sum` does.
   */
 object KMeans {
 
@@ -404,11 +406,10 @@ object KMeans {
     * reference's semantics (SURVEY.md §2.11.4); `fit` logs when k shrinks.
     */
   def lloydStepDF(assigned: DataFrame, dim: Int, fxScale: Double = 1e6): DataFrame = {
+    requireFx(fxScale)
     val dims = (0 until dim).map(d => element_at(col("Y"), d + 1).as(s"_c$d"))
     val flat = assigned.select((col("j") +: dims): _*)
-    val means: Seq[Column] =
-      if (fxScale > 0) (0 until dim).map(d => avgFx(col(s"_c$d"), fxScale).as(s"_m$d"))
-      else (0 until dim).map(d => avg(col(s"_c$d")).as(s"_m$d"))
+    val means = (0 until dim).map(d => avgFx(col(s"_c$d"), fxScale).as(s"_m$d"))
     val agged = flat.groupBy("j").agg(count(lit(1)).as("n"), means: _*)
     agged.select(col("j"), col("n"),
       array((0 until dim).map(d => col(s"_m$d")): _*).as("C"))
@@ -419,47 +420,8 @@ object KMeans {
       Centroid(r.getLong(0), r.getSeq[Double](2))
     }.toSeq.sortBy(_.j)
 
-  /** Same values as [[lloydStep]] (fixed-point path), via ONE
-    * `vector_sum_long` aggregate instead of `dim` per-coordinate aggregates —
-    * the Catalyst analysis/optimization cost per iteration drops from
-    * O(dim) expressions to O(1), which dominates the fit loop's wall time
-    * (every iteration is a fresh plan: the centroid literals change).
-    * Rounding is applied by the same `round(x*scale)::long` expression, and
-    * long sums are exact in any merge order, so the centroid doubles are
-    * bit-identical to the per-dimension form.
-    */
-  def lloydStepFast(assigned: DataFrame, dim: Int, fxScale: Double): Seq[Centroid] = {
-    val fx = transform(col("Y"), v => round(v * fxScale).cast("long"))
-    assigned.groupBy("j")
-      .agg(count(lit(1)).as("n"), graft.plans.native.vector_sum_long(fx, dim).as("s"))
-      .collect().map { r =>
-        val n = r.getLong(1)
-        val sums = r.getSeq[Long](2)
-        Centroid(r.getLong(0), sums.map(s => s.toDouble / fxScale / n))
-      }.toSeq.sortBy(_.j)
-  }
-
-  /** One Lloyd iteration as a SINGLE STAGE: each partition runs one
-    * primitive [[LloydKernel]] over its rows (argmin + fixed-point
-    * per-slot sums), and the ≤ P partial arrays merge on the driver — the
-    * collect-sufficient-stats shape MLlib's KMeans uses (its `runAlgorithm`
-    * folds per-partition (sum, count) pairs via `treeAggregate`; public
-    * Spark source, mllib/clustering/KMeans.scala). Value-identical to
-    * [[lloydStepFast]] in any partitioning: the kernel replays
-    * `nearestIdNative`'s fold and `round(x*scale)::long` exactly, and long
-    * adds are exact in any order (pinned in KMeansSpec).
-    *
-    * Why it exists: [[lloydStepFast]] is the declarative form (and stays the
-    * `km_lloyd_step` oracle query), but its higher-order functions run
-    * interpreted per row (Spark does not compile `zip_with`/`aggregate`/
-    * `transform`), `round` on a double builds a BigDecimal per coordinate,
-    * and its final aggregate costs a shuffle boundary per iteration. Here
-    * one scan task per partition emits one (Σ, n) array pair straight to
-    * the driver.
-    */
-  def lloydStepOnePass(points: DataFrame, cs: Seq[Centroid], dim: Int,
-      fxScale: Double): Seq[Centroid] =
-    centroidsOf(kernelStats(yRows(points), cs, dim, fxScale, ansi(points)), fxScale)
+  private def requireFx(fxScale: Double): Unit =
+    require(fxScale > 0, s"fxScale must be > 0 (fixed-point sums), got $fxScale")
 
   /** `points`' `Y` column as the raw rows the kernel scans. */
   private def yRows(points: DataFrame): RDD[InternalRow] =
@@ -473,26 +435,40 @@ object KMeans {
     */
   private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
 
-  /** The distributed Lloyd step behind [[lloydStepOnePass]], the fit loop
-    * and [[fitMiniBatch]]: one job, one [[LloydKernel]] per partition.
+  /** The distributed Lloyd step of the fit loop and [[fitMiniBatch]], as a
+    * SINGLE STAGE: each partition runs one [[LloydKernel]] over its rows
+    * (argmin + fixed-point per-slot sums), and the ≤ P partial arrays merge
+    * on the driver — the collect-sufficient-stats shape MLlib's KMeans uses
+    * (its `runAlgorithm` folds per-partition (sum, count) pairs via
+    * `treeAggregate`; public Spark source, mllib/clustering/KMeans.scala).
+    * Value-identical to [[lloydStep]] in any partitioning: the kernel
+    * replays `nearestIdNative`'s fold and `round(x*scale)::long` exactly,
+    * and long adds are exact in any order (pinned in KMeansSpec).
+    *
+    * Why it exists: [[lloydStep]] is the declarative form (and stays the
+    * `km_lloyd_step` oracle query), but its higher-order functions run
+    * interpreted per row (Spark does not compile `zip_with`/`aggregate`),
+    * `round` on a double builds a BigDecimal per coordinate, and its
+    * aggregate costs a shuffle boundary per iteration. Here one scan task
+    * per partition emits one (Σ, n) array pair straight to the driver.
     */
   private def kernelStats(rows: RDD[InternalRow], cs: Seq[Centroid], dim: Int,
       fxScale: Double, ansi: Boolean): Stats = {
     val k = cs.size
     val flat = flatten(cs, dim)
     val partials = rows.mapPartitions { it =>
-      val kern = new LloydKernel(flat, k, dim)
+      val kern = new LloydKernel(flat, k, dim, ansi)
       val y = new Array[Double](dim)
       while (it.hasNext) {
         val a = it.next().getArray(0)
         require(a.numElements() >= dim, s"Y has ${a.numElements()} coordinates, dim is $dim")
         var d = 0
         while (d < dim) { y(d) = a.getDouble(d); d += 1 }
-        kern.addY(y, fxScale, ansi)
+        kern.addY(y, fxScale)
       }
       Iterator.single((kern.sums, kern.cnts))
     }.collect()
-    val total = new LloydKernel(flat, k, dim)
+    val total = new LloydKernel(flat, k, dim, ansi)
     partials.foreach { case (s, n) => total.merge(s, n) }
     total.stats(ids(cs).toArray)
   }
@@ -525,8 +501,8 @@ object KMeans {
     * fixed-point coordinates): the distributed step's kernel, run once.
     */
   private def localStep(ys: Array[Array[Double]], fxs: Array[Array[Long]],
-      cs: Seq[Centroid], dim: Int, fxScale: Double): Seq[Centroid] = {
-    val kern = new LloydKernel(flatten(cs, dim), cs.size, dim)
+      cs: Seq[Centroid], dim: Int, fxScale: Double, ansi: Boolean): Seq[Centroid] = {
+    val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansi)
     var ix = 0
     while (ix < ys.length) { kern.add(ys(ix), fxs(ix)); ix += 1 }
     centroidsOf(kern.stats(ids(cs).toArray), fxScale)
@@ -541,9 +517,11 @@ object KMeans {
     * distributed step ([[kernelStats]] runs one per partition) and the
     * driver-local twins' loops. Centroids ride as one row-major `k·dim`
     * array; slot `k` collects the rows no centroid claims (every distance
-    * NaN), reported as id −1 — the HOF fold's initial accumulator.
+    * NaN), reported as id −1 — the HOF fold's initial accumulator. Sums add
+    * as Spark's long `sum` does: ARITHMETIC_OVERFLOW under `ansi`, else the
+    * wrapping add.
     */
-  private final class LloydKernel(cs: Array[Double], k: Int, dim: Int) {
+  private final class LloydKernel(cs: Array[Double], k: Int, dim: Int, ansi: Boolean) {
     val sums = new Array[Long]((k + 1) * dim)
     val cnts = new Array[Long](k + 1)
 
@@ -563,25 +541,35 @@ object KMeans {
       best
     }
 
+    private def plus(a: Long, b: Long): Long =
+      if (!ansi) a + b
+      else try Math.addExact(a, b) catch {
+        case _: ArithmeticException => throw new ArithmeticException(
+          "[ARITHMETIC_OVERFLOW] long overflow. Use 'try_add' to tolerate overflow and " +
+            "return NULL instead. If necessary set \"spark.sql.ansi.enabled\" to \"false\" " +
+            "to bypass this error.")
+      }
+
     /** Assign `y` and add its fixed-point coordinates `fx` to that slot. */
     def add(y: Array[Double], fx: Array[Long]): Unit = {
       val j = nearest(y)
       val o = j * dim
       var d = 0
-      while (d < dim) { sums(o + d) += fx(d); d += 1 }
+      while (d < dim) { sums(o + d) = plus(sums(o + d), fx(d)); d += 1 }
       cnts(j) += 1
     }
 
     private val fxBuf = new Array[Long](dim)
     /** [[add]] with `fx` encoded from `y` here ([[fxEncode]]). */
-    def addY(y: Array[Double], fxScale: Double, ansiOn: Boolean): Unit = {
+    def addY(y: Array[Double], fxScale: Double): Unit = {
       var d = 0
-      while (d < dim) { fxBuf(d) = fxEncode(y(d) * fxScale, ansiOn); d += 1 }
+      while (d < dim) { fxBuf(d) = fxEncode(y(d) * fxScale, ansi); d += 1 }
       add(y, fxBuf)
     }
 
     def merge(s: Array[Long], n: Array[Long]): Unit = {
-      s.indices.foreach(x => sums(x) += s(x)); n.indices.foreach(x => cnts(x) += n(x))
+      s.indices.foreach(x => sums(x) = plus(sums(x), s(x)))
+      n.indices.foreach(x => cnts(x) += n(x))
     }
 
     /** Non-empty slots by centroid id (`ids` in slot order); slots sharing
@@ -595,7 +583,7 @@ object KMeans {
           val id = if (j < k) ids(j) else -1L
           val (s, n) = out.getOrElse(id, (new Array[Long](dim), 0L))
           var d = 0
-          while (d < dim) { s(d) += sums(j * dim + d); d += 1 }
+          while (d < dim) { s(d) = plus(s(d), sums(j * dim + d)); d += 1 }
           out(id) = (s, n + cnts(j))
         }
         j += 1
@@ -622,179 +610,6 @@ object KMeans {
     }.sum
   }
 
-  // ------------------------------------------------ Hamerly-bounded fit loop
-
-  /** Nearest + second-nearest squared distance over column-supplied
-    * centroids, as one fold: struct(j, d1, d2). Same strict-`<` earliest-
-    * wins tie break as [[native.nearestIdCols]], so the `j` component is
-    * identical to the plain assignment.
-    */
-  private def nearest2Cols(y: Column, idsC: Column, csC: Column): Column = {
-    val pairs = zip_with(idsC, csC,
-      (j, c) => struct(j.as("j"), graft.plans.native.sq_dist(c, y).as("d")))
-    aggregate(
-      pairs,
-      struct(lit(-1L).as("j"), lit(Double.MaxValue).as("d1"), lit(Double.MaxValue).as("d2")),
-      (acc, x) => when(x.getField("d") < acc.getField("d1"),
-          struct(x.getField("j").as("j"), x.getField("d").as("d1"),
-            acc.getField("d1").as("d2")))
-        .when(x.getField("d") < acc.getField("d2"),
-          struct(acc.getField("j").as("j"), acc.getField("d1").as("d1"),
-            x.getField("d").as("d2")))
-        .otherwise(acc))
-  }
-
-  /** Hamerly-bounded distributed fit ("Making k-means even faster", SDM
-    * 2010): carry per-point state (assignment `a`, upper bound `u` on the
-    * distance to its centroid, lower bound `l` on the second-closest) in a
-    * cached DataFrame. Each iteration the centroids move by driver-known
-    * δ_j, so `u+δ_a` / `l−δ_max` stay valid bounds, and a point whose
-    * `u ≤ max(l, s_a)` (s_a = half the distance to a's nearest other
-    * centroid) PROVABLY keeps its assignment — no O(k·dim) argmin, no
-    * fixed-point re-encode. Sufficient statistics update by exact long
-    * DELTAS of only the points that changed cluster, so late iterations
-    * shuffle next to nothing.
-    *
-    * Value-identity with [[fit]] (pinned in KMeansSpec on both fixtures):
-    * bound updates are inflated by a relative+absolute epsilon so fp
-    * rounding can only force a redundant recompute, never a wrong skip;
-    * recomputes use the same kernels/tie-break as plain assignment; and the
-    * delta-updated long sums equal the full recomputation exactly. The one
-    * measure-zero caveat: a point exactly equidistant (same double) to its
-    * centroid and a lower-id other centroid may keep `a` under a skip where
-    * the plain fold would switch — impossible to hit with continuous data.
-    *
-    * Scale posture: one job per iteration (the delta aggregate materializes
-    * the next state through the cache); state is ~3× the points footprint;
-    * `localCheckpoint` every `checkpointEvery` steps bounds the lineage
-    * chain exactly like Dedup.connectedComponents. The win grows with
-    * k·dim — at dim=64, a skipped point trades 640 flops + a 64-long
-    * re-encode for 2 compares.
-    *
-    * WHEN TO USE, measured honestly: at sf0.1 (2k rows) the per-iteration
-    * state persist costs more than the skipped flops — 11.4 s vs plain
-    * 3.6 s — so [[fitAuto]] does NOT route here. The bounds pay when
-    * n·k·dim per-row work dominates per-job overhead (millions of rows,
-    * k·dim in the thousands): there plain Lloyd pays O(n·k·dim) flops +
-    * O(n·dim) re-encode every iteration while this loop pays O(n) compares
-    * on converged points and shuffles only the movers.
-    */
-  def fitHamerly(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
-      maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
-      fxScale: Double = 1e6, parallelSeed: Boolean = false,
-      checkpointEvery: Int = 8): FitResult = withIterConf(points.sparkSession) {
-    val spark = points.sparkSession
-    import spark.implicits._
-    require(fxScale > 0, "fitHamerly requires the fixed-point path (fxScale > 0)")
-    require(maxIter >= 1, "fitHamerly's bootstrap pass is iteration 1")
-    var cs =
-      if (parallelSeed) seedParallel(points, k, seed)
-      else if (plusPlus) seedPlusPlus(points, k, seed)
-      else seedFirstK(points, k)
-    var log = cs.map(c => LogEntry(0L, c.j, c.c))
-    var step = 0L
-    var move = Double.MaxValue
-
-    def dist(a: Seq[Double], b: Seq[Double]): Double =
-      math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
-    // conservative slack: fp error can only cause a redundant recompute
-    def inflate(c: Column): Column = c + abs(c) * 1e-13 + 1e-12
-    def deflate(c: Column): Column = c - abs(c) * 1e-13 - 1e-12
-
-    val fxCol = transform(col("Y"), v => round(v * fxScale).cast("long"))
-    def csDf(cs0: Seq[Centroid]) = Seq((ids(cs0), coords(cs0))).toDF("cids", "ccs")
-
-    // ---- bootstrap: one full nearest-2 pass builds state + full stats
-    var state = points.crossJoin(broadcast(csDf(cs)))
-      .select(col("Y"), fxCol.as("fx"),
-        nearest2Cols(col("Y"), col("cids"), col("ccs")).as("n2"))
-      .select(col("Y"), col("fx"), col("n2.j").as("a"),
-        sqrt(col("n2.d1")).as("u"), sqrt(col("n2.d2")).as("l"))
-      .persist()
-    val sums = scala.collection.mutable.LongMap.empty[Array[Long]]
-    val cnts = scala.collection.mutable.LongMap.empty[Long]
-    state.groupBy("a")
-      .agg(count(lit(1)).as("n"), graft.plans.native.vector_sum_long(col("fx"), dim).as("s"))
-      .collect().foreach { r =>
-        sums(r.getLong(0)) = r.getSeq[Long](2).toArray
-        cnts(r.getLong(0)) = r.getLong(1)
-      }
-    def centroidsFromStats(): Seq[Centroid] =
-      cnts.iterator.collect { case (j, n) if n > 0 =>
-        Centroid(j, sums(j).toSeq.map(s => s.toDouble / fxScale / n))
-      }.toSeq.sortBy(_.j)
-
-    var assignCs = cs // the centroids the state's assignments refer to
-    step = 1
-    var next = centroidsFromStats()
-    if (next.size < cs.size)
-      logger.warn(s"kmeans: ${cs.size - next.size} cluster(s) emptied at step 1 (reference drop semantics)")
-    move = movement(cs, next)
-    cs = next
-    log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
-
-    while (move >= tol && step < maxIter) {
-      step += 1
-      // driver-side geometry: per-centroid movement since the state's
-      // assignment epoch, and half-distance to each centroid's nearest peer
-      val prevByJ = assignCs.map(c => c.j -> c.c).toMap
-      val deltaByJ = cs.flatMap(c => prevByJ.get(c.j).map(p => c.j -> dist(p, c.c))).toMap
-      val deltaMax = if (deltaByJ.isEmpty) Double.MaxValue else deltaByJ.values.max
-      val sHalf = cs.map(c => c.j ->
-        0.5 * cs.filter(_.j != c.j).map(o => dist(c.c, o.c)).foldLeft(Double.MaxValue)(math.min)).toMap
-      val geom = Seq((ids(cs), coords(cs), deltaByJ, sHalf))
-        .toDF("cids", "ccs", "dmap", "smap")
-      val cmap = map_from_arrays(col("cids"), col("ccs"))
-
-      val u1 = inflate(col("u") +
-        coalesce(element_at(col("dmap"), col("a")), lit(Double.MaxValue)))
-      val l1 = deflate(col("l") - lit(deltaMax))
-      val sA = coalesce(element_at(col("smap"), col("a")), lit(Double.MinValue))
-      val dA = sqrt(graft.plans.native.sq_dist(col("Y"), element_at(cmap, col("a"))))
-      val n2 = nearest2Cols(col("Y"), col("cids"), col("ccs"))
-      val skip = u1 <= greatest(l1, sA)
-      val skip2 = coalesce(dA, lit(Double.MaxValue)) <= greatest(l1, sA)
-      val newState = state.crossJoin(broadcast(geom))
-        .select(col("Y"), col("fx"), col("a").as("aPrev"),
-          when(skip, col("a")).when(skip2, col("a")).otherwise(n2.getField("j")).as("a"),
-          when(skip, u1).when(skip2, dA).otherwise(sqrt(n2.getField("d1"))).as("u"),
-          when(skip, l1).when(skip2, l1).otherwise(sqrt(n2.getField("d2"))).as("l"))
-      val materialized =
-        if (step % checkpointEvery == 0) newState.localCheckpoint(true)
-        else newState.persist()
-      // ONE action: drains the full state through the cache and aggregates
-      // only the changed points' exact long deltas
-      val deltas = materialized.filter(col("a") =!= col("aPrev"))
-        .select(explode(array(
-          struct(col("aPrev").as("j"), lit(-1L).as("w"),
-            transform(col("fx"), x => -x).as("v")),
-          struct(col("a").as("j"), lit(1L).as("w"), col("fx").as("v")))).as("e"))
-        .select(col("e.j"), col("e.w"), col("e.v"))
-        .groupBy("j")
-        .agg(sum("w").as("dn"), graft.plans.native.vector_sum_long(col("v"), dim).as("ds"))
-        .collect()
-      state.unpersist()
-      state = materialized // stale aPrev column rides along harmlessly
-      deltas.foreach { r =>
-        val j = r.getLong(0)
-        val ds = r.getSeq[Long](2)
-        val s = sums.getOrElseUpdate(j, new Array[Long](dim))
-        var d = 0
-        while (d < dim) { s(d) += ds(d); d += 1 }
-        cnts(j) = cnts.getOrElse(j, 0L) + r.getLong(1)
-      }
-      assignCs = cs
-      next = centroidsFromStats()
-      if (next.size < cs.size)
-        logger.warn(s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")
-      move = movement(cs, next)
-      cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
-    }
-    state.unpersist()
-    FitResult(cs, log, step, move)
-  }
-
   // ----------------------------------------------------- size-aware local fit
 
   /** Size-aware fit: identical results to [[fit]] (bitwise, pinned in
@@ -811,8 +626,9 @@ object KMeans {
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false,
       localMaxCells: Long = 4000000L): FitResult = {
+    requireFx(fxScale)
     lazy val n = points.count()
-    if (plusPlus || fxScale <= 0 || n * dim > localMaxCells)
+    if (plusPlus || n * dim > localMaxCells)
       fit(points, k, dim, tol, maxIter, seed, plusPlus, fxScale, parallelSeed)
     else fitLocal(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed)
   }
@@ -840,7 +656,8 @@ object KMeans {
       .orderBy("i").collect()
     val nRows = rows.length
     val ys = Array.tabulate(nRows)(ix => rows(ix).getSeq[Double](1).toArray)
-    val fxs = encodeAll(ys, dim, fxScale, ansi(points))
+    val ansiOn = ansi(points)
+    val fxs = encodeAll(ys, dim, fxScale, ansiOn)
     val us = Array.tabulate(nRows)(ix =>
       Array.tabulate(uCols.size)(r => rows(ix).getDouble(2 + r)))
 
@@ -881,7 +698,7 @@ object KMeans {
         }
         val candArr = cands.map(_.toArray).toArray
         // the distributed weight pass's argmin; slot n (no winner) drops
-        val kern = new LloydKernel(candArr.flatten, candArr.length, dim)
+        val kern = new LloydKernel(candArr.flatten, candArr.length, dim, ansiOn)
         val wByIx = new Array[Long](candArr.length + 1)
         var ix = 0
         while (ix < nRows) { wByIx(kern.nearest(ys(ix))) += 1; ix += 1 }
@@ -895,7 +712,7 @@ object KMeans {
     var move = Double.MaxValue
     while (move >= tol && step < maxIter) {
       step += 1
-      val next = localStep(ys, fxs, cs, dim, fxScale)
+      val next = localStep(ys, fxs, cs, dim, fxScale, ansiOn)
       if (next.size < cs.size)
         logger.warn(
           s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")
@@ -971,19 +788,21 @@ object KMeans {
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult =
     withIterConf(points.sparkSession) {
-      fitInner(points, k, dim, tol, maxIter, seed, plusPlus, fxScale, parallelSeed)
+      requireFx(fxScale)
+      val cs =
+        if (parallelSeed) seedParallel(points, k, seed)
+        else if (plusPlus) seedPlusPlus(points, k, seed)
+        else seedFirstK(points, k)
+      iterate(points, cs, dim, tol, maxIter, fxScale, startStep = 0L)
     }
 
   /** Per-iteration query tuning for the fit loop, restored on exit.
     *
-    * Every shuffle inside the loop carries ≤ k·P rows AFTER map-side partial
-    * aggregation (each map task emits at most k partial rows), so the right
-    * reducer count is 1 — the default 32 final-stage tasks are pure
-    * scheduling overhead at ~0.08 s per step, and AQE's per-stage
-    * re-planning adds ~50 ms to every one of the loop's tiny jobs. At
-    * cluster scale the same logic holds: the single reducer reads P·k
-    * pre-aggregated rows — the same volume the driver collects one query
-    * later. Points-scale data never crosses a shuffle in this loop.
+    * The Lloyd steps shuffle nothing; the seeding rounds' aggregates carry
+    * ≤ k·P rows after map-side partial aggregation, so the right reducer
+    * count is 1 — the default final-stage tasks are pure scheduling
+    * overhead, and AQE's per-stage re-planning adds ~50 ms to every one of
+    * the loop's tiny jobs. Points-scale data never crosses a shuffle.
     *
     * Reentrancy: concurrent fits on one session (gapStatistic runs its
     * per-k fits in parallel) must not interleave save/restore pairs — a
@@ -1033,6 +852,7 @@ object KMeans {
       tol: Double = 0.01, maxIter: Int = 50, fxScale: Double = 1e6,
       startStep: Long = 0L): FitResult =
     withIterConf(points.sparkSession) {
+      requireFx(fxScale)
       iterate(points, centroids, dim, tol, maxIter, fxScale, startStep)
     }
 
@@ -1149,7 +969,7 @@ object KMeans {
       var move = Double.MaxValue
       while (move >= tol && step < lloydSteps) {
         step += 1
-        val next = localStep(ys, fys, cs, dim, fxScale)
+        val next = localStep(ys, fys, cs, dim, fxScale, ansiOn)
         move = movement(cs, next)
         cs = next
         log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
@@ -1172,9 +992,9 @@ object KMeans {
     * AGGREGATED form of Sculley's per-point rule — for a centroid that
     * absorbed `cnt` batch points summing to `s`:
     * `c ← c + (s − cnt·c) / n_j_total` — one k-sized driver update per
-    * step off the SAME single-stage sufficient-stats collect as
-    * [[lloydStepOnePass]] (one kernel scan of the batch, ≤ P partial
-    * arrays to the driver, no shuffle).
+    * step off the SAME single-stage sufficient-stats collect as the fit
+    * loop's step (one kernel scan of the batch, ≤ P partial arrays to the
+    * driver, no shuffle).
     *
     * Convergence is monitored with the same [[movement]] metric and `tol`;
     * the log records each step's centroids so the WCR history stays
@@ -1206,12 +1026,12 @@ object KMeans {
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
       else None
     def localStats(rows: Array[(Long, Array[Double])], step: Long, cs: Seq[Centroid]): Stats = {
-      val kern = new LloydKernel(flatten(cs, dim), cs.size, dim)
-      val (salt, ansiOn) = (12345L + seed + step, ansi(points))
+      val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansi(points))
+      val salt = 12345L + seed + step
       var rix = 0
       while (rix < rows.length) {
         val (i, y) = rows(rix)
-        if ((i * 1103515245L + salt) % mod < cut) kern.addY(y, 1e6, ansiOn)
+        if ((i * 1103515245L + salt) % mod < cut) kern.addY(y, 1e6)
         rix += 1
       }
       kern.stats(ids(cs).toArray)
@@ -1256,16 +1076,6 @@ object KMeans {
     FitResult(cs, log, step, move)
   }
 
-  private def fitInner(points: DataFrame, k: Int, dim: Int, tol: Double,
-      maxIter: Int, seed: Long, plusPlus: Boolean,
-      fxScale: Double, parallelSeed: Boolean): FitResult = {
-    val cs =
-      if (parallelSeed) seedParallel(points, k, seed)
-      else if (plusPlus) seedPlusPlus(points, k, seed)
-      else seedFirstK(points, k)
-    iterate(points, cs, dim, tol, maxIter, fxScale, startStep = 0L)
-  }
-
   private def iterate(points: DataFrame, init: Seq[Centroid], dim: Int,
       tol: Double, maxIter: Int, fxScale: Double, startStep: Long): FitResult = {
     var cs = init
@@ -1278,9 +1088,7 @@ object KMeans {
     lazy val rows = yRows(points)
     while (move >= tol && step < startStep + maxIter) {
       step += 1
-      val next =
-        if (fxScale > 0) centroidsOf(kernelStats(rows, cs, dim, fxScale, ansi(points)), fxScale)
-        else lloydStep(assign(points, cs), dim, fxScale)
+      val next = centroidsOf(kernelStats(rows, cs, dim, fxScale, ansi(points)), fxScale)
       if (next.size < cs.size)
         logger.warn(
           s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")

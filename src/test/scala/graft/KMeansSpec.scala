@@ -168,7 +168,21 @@ class KMeansSpec extends SparkSpec {
   private def bits(cs: Seq[Centroid]): Seq[(Long, Seq[Long])] =
     cs.map(c => (c.j, c.c.map(java.lang.Double.doubleToLongBits)))
 
-  test("fitFrom with k*dim > 4096 is bit-identical to looping lloydStepFast(assign(..))") {
+  /** One fit-loop step: the per-partition Lloyd kernel, run once. */
+  private def kernelStep(p: DataFrame, cs: Seq[Centroid], dim: Int,
+      fxScale: Double = 1e6): Seq[Centroid] =
+    KMeans.fitFrom(p, cs, dim, maxIter = 1, fxScale = fxScale).centroids
+
+  private def withAnsi[A](on: Boolean)(body: => A): A = {
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try { spark.conf.set("spark.sql.ansi.enabled", on.toString); body }
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("fitFrom with k*dim > 4096 is bit-identical to looping lloydStep(assign(..))") {
     // the fit loop once switched plan shape past 4096 centroid coordinates;
     // the kernel step has no such switch, and this pins it at that size
     val dim = 64
@@ -179,7 +193,7 @@ class KMeansSpec extends SparkSpec {
     val fit = KMeans.fitFrom(data, cs, dim, tol = 0.0, maxIter = 3)
     var ref = cs
     val refLog = (1L to 3L).flatMap { step =>
-      ref = KMeans.lloydStepFast(KMeans.assign(data, ref), dim, fxScale = 1e6)
+      ref = KMeans.lloydStep(KMeans.assign(data, ref), dim, fxScale = 1e6)
       bits(ref).map(step -> _)
     }
     assert(fit.steps == 3L)
@@ -192,36 +206,58 @@ class KMeansSpec extends SparkSpec {
       "to the earlier centroid slot") {
     val data = Tables.yhEmbeddings(spark, sf("0.001"))
     val cs = KMeans.seedFirstK(data, 7)
-    assert(bits(KMeans.lloydStepOnePass(data.repartition(1), cs, dim = 64, fxScale = 1e6)) ==
-      bits(KMeans.lloydStepOnePass(data.repartition(7), cs, dim = 64, fxScale = 1e6)))
+    assert(bits(kernelStep(data.repartition(1), cs, dim = 64)) ==
+      bits(kernelStep(data.repartition(7), cs, dim = 64)))
     // (5,0) is exactly 25 from both centroids: slot order, not id order,
     // decides, as in the HOF fold `assign` runs
     val tie = Seq(Centroid(9, Seq(0.0, 0.0)), Centroid(3, Seq(10.0, 0.0)))
     val p = pts(1L -> Seq(5.0, 0.0), 2L -> Seq(5.0, 0.0))
     assert(KMeans.assign(p, tie).select("j").as[Long].collect().toSeq == Seq(9L, 9L))
-    assert(KMeans.lloydStepOnePass(p, tie, dim = 2, fxScale = 1e6) ==
-      Seq(Centroid(9, Seq(5.0, 0.0))))
+    assert(kernelStep(p, tie, dim = 2) == Seq(Centroid(9, Seq(5.0, 0.0))))
   }
 
   test("Lloyd kernel keeps the ANSI cast's overflow and the HOF fold's id −1 row") {
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
     val cs = Seq(Centroid(1, Seq(0.0, 0.0)), Centroid(2, Seq(10.0, 10.0)))
     val huge = pts(1L -> Seq(1.0, 2.0), 2L -> Seq(1e200, 0.0))
     // round(1e200·1e6)::long is out of the long range: both forms fail
-    val fastErr = intercept[Exception](
-      KMeans.lloydStepFast(KMeans.assign(huge, cs), dim = 2, fxScale = 1e6))
-    val kernelErr = intercept[Exception](
-      KMeans.lloydStepOnePass(huge, cs, dim = 2, fxScale = 1e6))
-    assert(messages(fastErr).contains("CAST_OVERFLOW"), messages(fastErr))
+    val refErr = intercept[Exception](
+      KMeans.lloydStep(KMeans.assign(huge, cs), dim = 2, fxScale = 1e6))
+    val kernelErr = intercept[Exception](kernelStep(huge, cs, dim = 2))
+    assert(messages(refErr).contains("CAST_OVERFLOW"), messages(refErr))
     assert(messages(kernelErr).contains("CAST_OVERFLOW"), messages(kernelErr))
     // a NaN centroid: every distance is NaN, no centroid wins, and every row
     // lands on the fold's initial id −1 in both forms
     val nan = Seq(Centroid(1, Seq(Double.NaN, 0.0)))
-    val fast = KMeans.lloydStepFast(KMeans.assign(squareCorners, nan), dim = 2, fxScale = 1e6)
-    val one = KMeans.lloydStepOnePass(squareCorners, nan, dim = 2, fxScale = 1e6)
-    assert(fast == Seq(Centroid(-1, Seq(5.0, 5.0))))
-    assert(bits(one) == bits(fast))
+    val ref = KMeans.lloydStep(KMeans.assign(squareCorners, nan), dim = 2, fxScale = 1e6)
+    assert(ref == Seq(Centroid(-1, Seq(5.0, 5.0))))
+    assert(bits(kernelStep(squareCorners, nan, dim = 2)) == bits(ref))
+  }
+
+  test("Lloyd kernel sums overflow as Spark's long sum does: ARITHMETIC_OVERFLOW " +
+      "under ANSI, the same wrapped bits without it") {
+    // 10 · round(1e12 · 1e6) = 1e19 is past Long.MaxValue
+    val far = pts((1L to 10L).map(i => i -> Seq(1e12, 0.0)): _*).cache()
+    val one = Seq(Centroid(1, Seq(0.0, 0.0)))
+    def ref() = KMeans.lloydStep(KMeans.assign(far, one), dim = 2, fxScale = 1e6)
+    withAnsi(on = true) {
+      Seq(intercept[Exception](ref()), intercept[Exception](kernelStep(far, one, dim = 2)))
+        .foreach(e => assert(messages(e).contains("ARITHMETIC_OVERFLOW"), messages(e)))
+    }
+    withAnsi(on = false) {
+      val wrapped = ref()
+      assert(wrapped.head.c.head == (1e19 - math.pow(2, 64)) / 1e6 / 10)
+      assert(bits(kernelStep(far, one, dim = 2)) == bits(wrapped))
+    }
+    far.unpersist()
+  }
+
+  test("fit, fitFrom, fitAuto and lloydStepDF reject fxScale = 0") {
+    val cs = Seq(Centroid(1, Seq(0.0, 0.0)))
+    intercept[IllegalArgumentException](KMeans.fit(squareCorners, k = 1, dim = 2, fxScale = 0))
+    intercept[IllegalArgumentException](kernelStep(squareCorners, cs, dim = 2, fxScale = 0))
+    intercept[IllegalArgumentException](
+      KMeans.lloydStepDF(KMeans.assign(squareCorners, cs), dim = 2, fxScale = 0))
+    intercept[IllegalArgumentException](KMeans.fitAuto(squareCorners, k = 1, dim = 2, fxScale = 0))
   }
 
   test("movementRefLimit2ByStep replays the reference's limit-2-by-step bug (Q2)") {
@@ -242,22 +278,6 @@ class KMeansSpec extends SparkSpec {
     // (ClickHouse out-of-bounds default) and contributes its norm
     val single = Seq(LogEntry(0, 1, Seq(3.0, 4.0)))
     assert(KMeans.movementRefLimit2ByStep(single) == 5.0)
-  }
-
-  test("lloydStepOnePass (single-stage driver merge) is bit-identical to lloydStepFast") {
-    // pins the fit loop's default step: the one-stage sufficient-stats
-    // collect must produce the same longs (and so the same doubles) as the
-    // declarative shuffle form, in any partitioning
-    val data = Tables.yhEmbeddings(spark, sf("0.001")).repartition(5).cache()
-    val cs = KMeans.seedFirstK(data, 7)
-    val fast = KMeans.lloydStepFast(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
-    val one = KMeans.lloydStepOnePass(data, cs, dim = 64, fxScale = 1e6)
-    assert(fast.map(_.j) == one.map(_.j))
-    fast.zip(one).foreach { case (a, b) =>
-      a.c.zip(b.c).foreach { case (x, y) =>
-        assert(java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y))
-      }
-    }
   }
 
   test("fitLocal is bit-identical to the distributed fit (both seeding paths)") {
@@ -319,31 +339,6 @@ class KMeansSpec extends SparkSpec {
         r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
       assert(bits(free).take(bits(bounded).length) == bits(bounded))
     } finally yh.unpersist()
-  }
-
-  test("fitHamerly (bounded acceleration) produces identical assignments and log") {
-    def logBits(r: KMeans.FitResult): Seq[(Long, Long, Seq[Long])] =
-      r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
-    // planted 4-cluster fixture (the reference's data generator shape)
-    val seeds = Seq((0.0, 0.0), (60.0, 10.0), (10.0, 70.0), (70.0, 80.0))
-    val data = seeds.zipWithIndex.map { case ((x, y), ix) => (ix.toLong, x, y) }
-      .toDF("s", "sx", "sy")
-      .crossJoin(spark.range(500).select(col("id")))
-      .select((col("s") * 500 + col("id") + 1).as("i"),
-        array(col("sx") + rand(42) * 15.0, col("sy") + rand(43) * 15.0).as("Y"))
-      .cache()
-    val plain = KMeans.fit(data, k = 4, dim = 2, plusPlus = true, seed = 7)
-    val bounded = KMeans.fitHamerly(data, k = 4, dim = 2, plusPlus = true, seed = 7)
-    assert(logBits(bounded) == logBits(plain))
-    assert(KMeans.assign(data, bounded.centroids).groupBy("j").count().collect().toSet ==
-      KMeans.assign(data, plain.centroids).groupBy("j").count().collect().toSet)
-
-    // high-dim fixture, k-means|| seeding, a checkpoint inside the run
-    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val p2 = KMeans.fit(emb, k = 6, dim = 64, parallelSeed = true, seed = 42)
-    val b2 = KMeans.fitHamerly(emb, k = 6, dim = 64, parallelSeed = true, seed = 42,
-      checkpointEvery = 3)
-    assert(logBits(b2) == logBits(p2))
   }
 
   test("seedPlusPlusScalable draws identically to the literal-centroid formulation") {
@@ -444,17 +439,15 @@ class KMeansSpec extends SparkSpec {
     assert(sizes.forall(s => s > 400 && s < 600), s"sizes: ${sizes.toSeq}")
   }
 
-  test("lloydStepFast (single vector_sum_long aggregate) is bit-identical to lloydStep") {
-    val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val assigned = KMeans.assign(data, KMeans.seedFirstK(data, 7))
-    val slow = KMeans.lloydStep(assigned, dim = 64, fxScale = 1e6)
-    val fast = KMeans.lloydStepFast(assigned, dim = 64, fxScale = 1e6)
-    assert(slow.map(_.j) == fast.map(_.j))
-    slow.zip(fast).foreach { case (a, b) =>
-      a.c.zip(b.c).foreach { case (x, y) =>
-        assert(java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y))
-      }
-    }
+  test("one kernel step is bit-identical to lloydStep") {
+    // pins the fit loop's step against the declarative GROUP BY form: the
+    // per-partition kernel must produce the same longs (and so the same
+    // doubles) in any partitioning
+    val data = Tables.yhEmbeddings(spark, sf("0.001")).repartition(5).cache()
+    val cs = KMeans.seedFirstK(data, 7)
+    val ref = KMeans.lloydStep(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
+    assert(bits(kernelStep(data, cs, dim = 64)) == bits(ref))
+    data.unpersist()
   }
 
   test("property: WCSS is non-increasing across Lloyd iterations") {

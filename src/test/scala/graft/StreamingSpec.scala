@@ -268,7 +268,7 @@ class StreamingSpec extends SparkSpec {
     try {
       in.addData(pts: _*)
       q.processAllAvailable()
-      val batchStep = graft.operators.KMeans.lloydStepFast(
+      val batchStep = graft.operators.KMeans.lloydStep(
         graft.operators.KMeans.assign(pts.toDF("i", "Y"), init), dim = 2, fxScale = 1e6)
       assert(model.centroids == batchStep) // bit-identical, not approximate
       assert(model.totalCount == 6L)
