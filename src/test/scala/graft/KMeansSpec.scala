@@ -442,7 +442,17 @@ class KMeansSpec extends SparkSpec {
   test("one kernel step is bit-identical to lloydStep") {
     // pins the fit loop's step against the declarative GROUP BY form: the
     // per-partition kernel must produce the same longs (and so the same
-    // doubles) in any partitioning
+    // doubles)
+    val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    val cs = KMeans.seedFirstK(data, 7)
+    val ref = KMeans.lloydStep(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
+    assert(bits(kernelStep(data, cs, dim = 64)) == bits(ref))
+    data.unpersist()
+  }
+
+  test("one kernel step on a repartition(5) copy is bit-identical to lloydStep") {
+    // the same pin with the rows spread over five partitions: the driver
+    // merge of the per-partition sums must not depend on the partitioning
     val data = Tables.yhEmbeddings(spark, sf("0.001")).repartition(5).cache()
     val cs = KMeans.seedFirstK(data, 7)
     val ref = KMeans.lloydStep(KMeans.assign(data, cs), dim = 64, fxScale = 1e6)
