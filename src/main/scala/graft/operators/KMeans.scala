@@ -26,6 +26,10 @@ import graft.functions.VectorOps._
   *    sums per row, and the ≤ P partial (Σ, n) arrays merge on the driver.
   *    Partial per-partition sums are the property that made the reference
   *    shard-friendly (README.md:15).
+  *  - Several fits over the same points run in LOCKSTEP ([[iterate]]): one
+  *    scan per step decodes and encodes each row once and feeds it to every
+  *    still-moving centroid set's kernel, so a choose-K sweep pays one job
+  *    per step, not one per (k, step).
   *  - The points plan is built once per fit and every step re-runs the
   *    kernel over it — lineage stays O(1). The distributed loop holds
   *    O(k·dim) on the driver; the driver-local twins ([[fitLocal]],
@@ -215,20 +219,17 @@ object KMeans {
     * key = rand()^(1/w) and the global max wins — a single map + one k-row
     * reduce, fully parallel (A-Res / Efraimidis–Spirakis weighted reservoir
     * sampling). This is what survives 1000 executors.
+    *
+    * The chosen centroids ride as plan literals of the compiled
+    * `nearest_sq_dist` ([[graft.plans.NearestSqDistLit]]), a plain
+    * projection of `points`, so `rand(seed)` draws the per-row values of
+    * that projection (pinned in KMeansSpec). A null `Y` has no distance
+    * and gets key −1: it can only win when no row has weight.
     */
   def seedPlusPlusScalable(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    // centroids as broadcast DATA, not plan literals: the plan text stays
-    // constant across rounds, so analysis does not grow with k·dim; the
-    // native kernel is bit-identical to the HOF form, and the broadcast join
-    // preserves row order, so rand(seed) draws the same per-row values as a
-    // plain projection would
-    val csDf = Seq(Tuple1(coords(chosen))).toDF("ccs")
-    val w = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
+    val w = graft.plans.native.nearest_sq_dist(col("Y"), coords(chosen))
     val key = when(w > 0, pow(rand(seed), lit(1.0) / w)).otherwise(lit(-1.0))
-    val r = points.crossJoin(broadcast(csDf))
-      .select(col("i"), col("Y"), key.as("skey"))
+    val r = points.select(col("i"), col("Y"), key.as("skey"))
       .agg(max_by(struct(col("i"), col("Y")), col("skey")).as("win"))
       .select(col("win.Y"))
       .head()
@@ -284,9 +285,9 @@ object KMeans {
     var cands = seedFirstK(points, 1).map(_.c).toVector
     val l = overFactor * k
     for (r <- 1 to rounds) {
-      // candidates ride as broadcast DATA through the native kernel (as in
-      // seedPlusPlusScalable): constant plan text across rounds even as the
-      // candidate set grows, so analysis does not grow with the literals.
+      // candidates ride as broadcast DATA through `nearestSqDistCols`:
+      // constant plan text across rounds even as the candidate set grows,
+      // so analysis does not grow with the literals
       val csDf = Seq(Tuple1(cands.map(_.toSeq))).toDF("ccs")
       val d2 = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
       // fixed-point integer sum: ϕ is identical under ANY partitioning /
@@ -394,6 +395,18 @@ object KMeans {
     points.withColumn("j",
       graft.plans.native.nearestIdNative(col("Y"), ids(cs), coords(cs)))
 
+  /** [[assign]]'s ids for rows held on the driver, from the Lloyd kernel's
+    * argmin: slot → centroid id, and the no-winner slot (every distance
+    * NaN) → −1, the fold's initial id. Each row needs the centroids' `dim`
+    * coordinates (pinned ≡ [[assign]] in KMeansSpec).
+    */
+  private[graft] def nearestIds(ys: Array[Array[Double]], cs: Seq[Centroid]): Array[Long] = {
+    val dim = cs.headOption.fold(0)(_.c.size)
+    val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansi = false)
+    val js = ids(cs).toArray :+ -1L
+    ys.map(y => js(kern.nearest(y)))
+  }
+
   // ------------------------------------------------------------- Lloyd step
 
   /** New centroids = per-cluster, per-dimension mean (reference Lloyd insert,
@@ -424,7 +437,7 @@ object KMeans {
     require(fxScale > 0, s"fxScale must be > 0 (fixed-point sums), got $fxScale")
 
   /** `points`' `Y` column as the raw rows the kernel scans. */
-  private def yRows(points: DataFrame): RDD[InternalRow] =
+  private[operators] def yRows(points: DataFrame): RDD[InternalRow] =
     points.select(col("Y")).queryExecution.toRdd
 
   private[operators] def ansi(points: DataFrame): Boolean =
@@ -435,42 +448,52 @@ object KMeans {
     */
   private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
 
-  /** The distributed Lloyd step of the fit loop and [[fitMiniBatch]], as a
-    * SINGLE STAGE: each partition runs one [[LloydKernel]] over its rows
-    * (argmin + fixed-point per-slot sums), and the ≤ P partial arrays merge
-    * on the driver — the collect-sufficient-stats shape MLlib's KMeans uses
-    * (its `runAlgorithm` folds per-partition (sum, count) pairs via
-    * `treeAggregate`; public Spark source, mllib/clustering/KMeans.scala).
-    * Value-identical to [[lloydStep]] in any partitioning: the kernel
-    * replays `nearestIdNative`'s fold and `round(x*scale)::long` exactly,
-    * and long adds are exact in any order (pinned in KMeansSpec).
+  /** The distributed Lloyd step of the fit loop and [[fitMiniBatch]], for
+    * every centroid set in `sets` at once, as a SINGLE STAGE: each partition
+    * decodes and [[fxEncode]]s each row once, adds it to one [[LloydKernel]]
+    * per set (argmin + fixed-point per-slot sums), and the ≤ P partial
+    * arrays merge on the driver — the collect-sufficient-stats shape MLlib's
+    * KMeans uses (its `runAlgorithm` folds per-partition (sum, count) pairs
+    * via `treeAggregate`; public Spark source,
+    * mllib/clustering/KMeans.scala). Each set's stats are value-identical to
+    * [[lloydStep]] on that set alone in any partitioning: the kernel replays
+    * `nearestIdNative`'s fold and `round(x*scale)::long` exactly, and long
+    * adds are exact in any order (pinned in KMeansSpec). A null `Y` is
+    * rejected: it has no cluster to join.
     *
     * Why it exists: [[lloydStep]] is the declarative form (and stays the
     * `km_lloyd_step` oracle query), but its higher-order functions run
     * interpreted per row (Spark does not compile `zip_with`/`aggregate`),
     * `round` on a double builds a BigDecimal per coordinate, and its
     * aggregate costs a shuffle boundary per iteration. Here one scan task
-    * per partition emits one (Σ, n) array pair straight to the driver.
+    * per partition emits one (Σ, n) array pair per set straight to the
+    * driver.
     */
-  private def kernelStats(rows: RDD[InternalRow], cs: Seq[Centroid], dim: Int,
-      fxScale: Double, ansi: Boolean): Stats = {
-    val k = cs.size
-    val flat = flatten(cs, dim)
+  private def kernelStats(rows: RDD[InternalRow], sets: Seq[Seq[Centroid]], dim: Int,
+      fxScale: Double, ansi: Boolean): Seq[Stats] = {
+    val flats = sets.map(cs => (flatten(cs, dim), cs.size)).toArray
     val partials = rows.mapPartitions { it =>
-      val kern = new LloydKernel(flat, k, dim, ansi)
+      val kerns = flats.map { case (f, k) => new LloydKernel(f, k, dim, ansi) }
       val y = new Array[Double](dim)
+      val fx = new Array[Long](dim)
       while (it.hasNext) {
-        val a = it.next().getArray(0)
+        val row = it.next()
+        require(!row.isNullAt(0), "Y is null: a k-means point needs coordinates")
+        val a = row.getArray(0)
         require(a.numElements() >= dim, s"Y has ${a.numElements()} coordinates, dim is $dim")
         var d = 0
         while (d < dim) { y(d) = a.getDouble(d); d += 1 }
-        kern.addY(y, fxScale)
+        encodeInto(y, fx, fxScale, ansi)
+        var s = 0
+        while (s < kerns.length) { kerns(s).add(y, fx); s += 1 }
       }
-      Iterator.single((kern.sums, kern.cnts))
+      Iterator.single(kerns.map(k => (k.sums, k.cnts)))
     }.collect()
-    val total = new LloydKernel(flat, k, dim, ansi)
-    partials.foreach { case (s, n) => total.merge(s, n) }
-    total.stats(ids(cs).toArray)
+    flats.indices.map { s =>
+      val total = new LloydKernel(flats(s)._1, flats(s)._2, dim, ansi)
+      partials.foreach { p => total.merge(p(s)._1, p(s)._2) }
+      total.stats(ids(sets(s)).toArray)
+    }
   }
 
   /** Centroid coordinates as one row-major `k·dim` array. */
@@ -490,12 +513,24 @@ object KMeans {
     * range, or on NaN, the ANSI cast's CAST_OVERFLOW — or, with ANSI off,
     * the JVM's saturating cast (NaN → 0), as Spark's legacy cast does.
     */
-  private def fxEncode(v: Double, ansi: Boolean): Long =
+  private[operators] def fxEncode(v: Double, ansi: Boolean): Long =
     if (v <= 9.223372036854775807e18 && v >= -9.223372036854775808e18) roundHalfUpLong(v)
     else if (ansi) throw new ArithmeticException(
       s"[CAST_OVERFLOW] The value ${v}D of the type \"DOUBLE\" cannot be cast to " +
         "\"BIGINT\" due to an overflow.")
     else v.toLong
+
+  /** `a + b` as Spark's long `sum` adds: ARITHMETIC_OVERFLOW under `ansi`,
+    * else the wrapping add.
+    */
+  private[operators] def plusLong(a: Long, b: Long, ansi: Boolean): Long =
+    if (!ansi) a + b
+    else try Math.addExact(a, b) catch {
+      case _: ArithmeticException => throw new ArithmeticException(
+        "[ARITHMETIC_OVERFLOW] long overflow. Use 'try_add' to tolerate overflow and " +
+          "return NULL instead. If necessary set \"spark.sql.ansi.enabled\" to \"false\" " +
+          "to bypass this error.")
+    }
 
   /** One driver-local Lloyd step over collected rows (`fxs` = their
     * fixed-point coordinates): the distributed step's kernel, run once.
@@ -508,14 +543,22 @@ object KMeans {
     centroidsOf(kern.stats(ids(cs).toArray), fxScale)
   }
 
+  /** [[fxEncode]] of `y`'s first `fx.length` coordinates, into `fx`. */
+  private def encodeInto(y: Array[Double], fx: Array[Long], fxScale: Double,
+      ansi: Boolean): Unit = {
+    var d = 0
+    while (d < fx.length) { fx(d) = fxEncode(y(d) * fxScale, ansi); d += 1 }
+  }
+
   /** [[fxEncode]] over the first `dim` coordinates of every row. */
   private def encodeAll(ys: Array[Array[Double]], dim: Int, fxScale: Double,
       ansi: Boolean): Array[Array[Long]] =
-    ys.map(y => Array.tabulate(dim)(d => fxEncode(y(d) * fxScale, ansi)))
+    ys.map { y => val fx = new Array[Long](dim); encodeInto(y, fx, fxScale, ansi); fx }
 
   /** The Lloyd step's per-row arithmetic, ONE copy shared by the
-    * distributed step ([[kernelStats]] runs one per partition) and the
-    * driver-local twins' loops. Centroids ride as one row-major `k·dim`
+    * distributed step ([[kernelStats]] runs one per set and partition), the
+    * driver-local twins' loops and the choose-K sweep's labels
+    * ([[nearestIds]]). Centroids ride as one row-major `k·dim`
     * array; slot `k` collects the rows no centroid claims (every distance
     * NaN), reported as id −1 — the HOF fold's initial accumulator. Sums add
     * as Spark's long `sum` does: ARITHMETIC_OVERFLOW under `ansi`, else the
@@ -541,14 +584,7 @@ object KMeans {
       best
     }
 
-    private def plus(a: Long, b: Long): Long =
-      if (!ansi) a + b
-      else try Math.addExact(a, b) catch {
-        case _: ArithmeticException => throw new ArithmeticException(
-          "[ARITHMETIC_OVERFLOW] long overflow. Use 'try_add' to tolerate overflow and " +
-            "return NULL instead. If necessary set \"spark.sql.ansi.enabled\" to \"false\" " +
-            "to bypass this error.")
-      }
+    private def plus(a: Long, b: Long): Long = plusLong(a, b, ansi)
 
     /** Assign `y` and add its fixed-point coordinates `fx` to that slot. */
     def add(y: Array[Double], fx: Array[Long]): Unit = {
@@ -557,14 +593,6 @@ object KMeans {
       var d = 0
       while (d < dim) { sums(o + d) = plus(sums(o + d), fx(d)); d += 1 }
       cnts(j) += 1
-    }
-
-    private val fxBuf = new Array[Long](dim)
-    /** [[add]] with `fx` encoded from `y` here ([[fxEncode]]). */
-    def addY(y: Array[Double], fxScale: Double): Unit = {
-      var d = 0
-      while (d < dim) { fxBuf(d) = fxEncode(y(d) * fxScale, ansi); d += 1 }
-      add(y, fxBuf)
     }
 
     def merge(s: Array[Long], n: Array[Long]): Unit = {
@@ -793,7 +821,7 @@ object KMeans {
         if (parallelSeed) seedParallel(points, k, seed)
         else if (plusPlus) seedPlusPlus(points, k, seed)
         else seedFirstK(points, k)
-      iterate(points, cs, dim, tol, maxIter, fxScale, startStep = 0L)
+      iterate(points, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
     }
 
   /** Per-iteration query tuning for the fit loop, restored on exit.
@@ -851,10 +879,7 @@ object KMeans {
   def fitFrom(points: DataFrame, centroids: Seq[Centroid], dim: Int,
       tol: Double = 0.01, maxIter: Int = 50, fxScale: Double = 1e6,
       startStep: Long = 0L): FitResult =
-    withIterConf(points.sparkSession) {
-      requireFx(fxScale)
-      iterate(points, centroids, dim, tol, maxIter, fxScale, startStep)
-    }
+    iterate(points, Seq(centroids), dim, tol, maxIter, fxScale, startStep).head
 
   /** Fixed rational inverse-CDF draws shared by the ORACLE-REPLAYABLE
     * bounded fits ([[fitBounded]], Quality.gapStatisticFitted): the u for
@@ -1026,12 +1051,14 @@ object KMeans {
           .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
       else None
     def localStats(rows: Array[(Long, Array[Double])], step: Long, cs: Seq[Centroid]): Stats = {
-      val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansi(points))
+      val ansiOn = ansi(points)
+      val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansiOn)
+      val fx = new Array[Long](dim)
       val salt = 12345L + seed + step
       var rix = 0
       while (rix < rows.length) {
         val (i, y) = rows(rix)
-        if ((i * 1103515245L + salt) % mod < cut) kern.addY(y, 1e6)
+        if ((i * 1103515245L + salt) % mod < cut) { encodeInto(y, fx, 1e6, ansiOn); kern.add(y, fx) }
         rix += 1
       }
       kern.stats(ids(cs).toArray)
@@ -1055,7 +1082,7 @@ object KMeans {
         case None =>
           val batch = points.filter(
             (col("i") * 1103515245L + lit(12345L + seed + step)) % mod < cut)
-          kernelStats(yRows(batch), cs, dim, fxScale = 1e6, ansi(points))
+          kernelStats(yRows(batch), Seq(cs), dim, fxScale = 1e6, ansi(points)).head
       }
       val next = cs.map { c =>
         stats.get(c.j) match {
@@ -1076,28 +1103,48 @@ object KMeans {
     FitResult(cs, log, step, move)
   }
 
-  private def iterate(points: DataFrame, init: Seq[Centroid], dim: Int,
-      tol: Double, maxIter: Int, fxScale: Double, startStep: Long): FitResult = {
-    var cs = init
-    // a resumed run's starting centroids were already logged (at startStep)
-    // by the run that produced them — only a fresh fit logs its seeds
-    var log = if (startStep == 0L) cs.map(c => LogEntry(0L, c.j, c.c)) else Nil
-    var step = startStep
-    var move = Double.MaxValue
-    // the plan is built once; each step only re-runs the kernel over it
-    lazy val rows = yRows(points)
-    while (move >= tol && step < startStep + maxIter) {
-      step += 1
-      val next = centroidsOf(kernelStats(rows, cs, dim, fxScale, ansi(points)), fxScale)
-      if (next.size < cs.size)
-        logger.warn(
-          s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")
-      move = movement(cs, next)
-      cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
+  /** The fit loop — the ONE Lloyd loop of the distributed fits ([[fit]],
+    * [[fitFrom]], the choose-K sweep and the fitted gap statistic): every
+    * centroid set in `inits` iterates in LOCKSTEP over `points`, one
+    * [[kernelStats]] job per step serving all sets still moving. Each set
+    * keeps its own stop rule (movement < `tol` or `maxIter` steps), log and
+    * emptied-cluster warning, so its [[FitResult]] is bit-identical to
+    * fitting it alone (pinned in KMeansSpec). Steps are numbered from
+    * `startStep` (see [[fitFrom]]).
+    */
+  private[graft] def iterate(points: DataFrame, inits: Seq[Seq[Centroid]], dim: Int,
+      tol: Double, maxIter: Int, fxScale: Double, startStep: Long): Seq[FitResult] =
+    withIterConf(points.sparkSession) {
+      requireFx(fxScale)
+      final class Run(var cs: Seq[Centroid]) {
+        // a resumed run's starting centroids were already logged (at
+        // startStep) by the run that produced them — only a fresh fit logs
+        // its seeds
+        var log: Seq[LogEntry] = if (startStep == 0L) cs.map(c => LogEntry(0L, c.j, c.c)) else Nil
+        var step = startStep
+        var move = Double.MaxValue
+        def moving: Boolean = move >= tol && step < startStep + maxIter
+      }
+      val runs = inits.map(new Run(_))
+      // the plan is built once; each step only re-runs the kernel over it
+      lazy val rows = yRows(points)
+      var active = runs.filter(_.moving)
+      while (active.nonEmpty) {
+        val stats = kernelStats(rows, active.map(_.cs), dim, fxScale, ansi(points))
+        active.zip(stats).foreach { case (r, st) =>
+          r.step += 1
+          val next = centroidsOf(st, fxScale)
+          if (next.size < r.cs.size)
+            logger.warn(s"kmeans: ${r.cs.size - next.size} cluster(s) emptied at step " +
+              s"${r.step} (reference drop semantics)")
+          r.move = movement(r.cs, next)
+          r.cs = next
+          r.log = r.log ++ r.cs.map(c => LogEntry(r.step, c.j, c.c))
+        }
+        active = active.filter(_.moving)
+      }
+      runs.map(r => FitResult(r.cs, r.log, r.step, r.move))
     }
-    FitResult(cs, log, step, move)
-  }
 
   // ------------------------------------------------------- model persistence
 

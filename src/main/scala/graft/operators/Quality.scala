@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps._
 import graft.operators.KMeans.Centroid
-import graft.plans.PairDistStats
+import graft.plans.{NearestSqDistLit, PairDistStats}
 
 /** Cluster-quality metrics — the reference's `OptimalK.sql`. */
 object Quality {
@@ -106,9 +106,11 @@ object Quality {
     * true)` + [[elbow]] + [[silhouetteSimplified]] (QualitySpec), but the ++
     * chain runs once, for `ks.max`, under the fit loop's conf: round r reads
     * only the first r seeds and `seed + r`, so `seeds.take(k)` is k's own
-    * seeding. Then one `fitFrom` per k and one [[scoreKs]] for all of them.
-    * `points` should be cached by the caller; `sample` is the silhouette
-    * pre-sample (its pair stage is O(|sample|²)).
+    * seeding. Then every k's fit runs in the one Lloyd loop's lockstep
+    * ([[KMeans.iterate]]: one kernel job per step for all k still moving)
+    * and one [[scoreKs]] scores all of them. `points` should be cached by
+    * the caller; `sample` is the silhouette pre-sample (its pair stage is
+    * O(|sample|²)).
     */
   def optimalKSweep(points: DataFrame, sample: DataFrame, dim: Int, ks: Seq[Int],
       seed: Long = 42L, d1Scale: Double = 1e6, d2Scale: Double = 1e6,
@@ -118,8 +120,9 @@ object Quality {
     import spark.implicits._
     val seeds = if (ks.isEmpty) Nil
       else KMeans.withIterConf(spark)(KMeans.seedPlusPlus(points, ks.max, seed))
-    val fits = ks.map(k => k -> KMeans.fitFrom(points, seeds.take(k), dim, maxIter = maxIter).centroids)
-    scoreKs(points, sample, fits, d1Scale, d2Scale)
+    val fits = KMeans.iterate(points, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
+      fxScale = 1e6, startStep = 0L)
+    scoreKs(points, sample, ks.zip(fits.map(_.centroids)), d1Scale, d2Scale)
       .map { case (k, d1, d2, si) => (k, d1.get, d2.get, si.getOrElse(Double.NaN)) }
       .toDF("k", "elbow_d1", "elbow_d2", "silhouette")
   }
@@ -141,10 +144,11 @@ object Quality {
 
   /** (k, elbow_d1, elbow_d2, si) per (k, centroids) set, each value
     * bit-identical to [[elbow]] / [[silhouetteSimplified]] on that set alone
-    * (None for null). All elbows come from ONE multi-aggregate scan of
-    * `points`. The sample is collected once (a guarded take, as in
-    * [[silhouettePairStats]]) and labelled per set by [[KMeans.assign]] over
-    * the local relation; then ONE job over its index range runs each row's
+    * (None for null). All elbows come from ONE kernel job over `points`
+    * ([[elbowSums]]). The sample is collected once (a guarded take, as in
+    * [[silhouettePairStats]]) and labelled per set on the driver by the
+    * Lloyd kernel's argmin ([[KMeans.nearestIds]], ≡ [[KMeans.assign]]);
+    * then ONE job over its index range runs each row's
     * [[graft.plans.PairDistStats]] kernel per set and sums the set's same-
     * and cross-cluster (Σsfx, count) longs (exact regroupings of the stats
     * rows), which [[simplifiedSi]] finishes. Past the bound each set runs
@@ -156,12 +160,7 @@ object Quality {
     if (sets.isEmpty) return Nil
     val spark = points.sparkSession
     def opt(r: Row, ix: Int) = if (r.isNullAt(ix)) None else Some(r.getDouble(ix))
-    val elbowAggs = sets.flatMap { case (_, cs) =>
-      val msq = graft.plans.native.nearest_sq_dist(col("Y"), cs.map(_.c))
-      Seq(sumFx(sqrt(msq), d1Scale), sumFx(msq, d2Scale))
-    }
-    // one global aggregate: adaptive execution would only split it into two jobs
-    val e = KMeans.withIterConf(spark)(points.agg(elbowAggs.head, elbowAggs.tail: _*).head())
+    val e = elbowSums(points, sets.map(_._2), Some(d1Scale), d2Scale)
     val sel = sample.select(col("i"), col("Y"))
     val rows = sel.take(maxCollectRows + 1)
     val si = if (rows.length > maxCollectRows) {
@@ -170,10 +169,9 @@ object Quality {
         silhouettePairStatsJoin(KMeans.assign(dist, cs), dScale), dScale).select("si").head(), 0)
       } finally dist.unpersist()
     } else {
-      val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.schema)
       val (ids, ys) = (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
       val kernels = sets.map { case (_, cs) => // children unused: only `compute` runs
-        val js = KMeans.assign(local, cs).select("j").collect().map(_.getLong(0))
+        val js = KMeans.nearestIds(ys, cs)
         (js, PairDistStats(Literal(0L), Literal(0L), ids, js, ys, dScale))
       }
       val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.length))
@@ -194,7 +192,50 @@ object Quality {
       }.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x)))
       sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, KMeans.ansi(points)))
     }
-    sets.indices.map(ix => (sets(ix)._1.toLong, opt(e, 2 * ix), opt(e, 2 * ix + 1), si(ix)))
+    sets.indices.map(ix => (sets(ix)._1.toLong, e(ix)._1, e(ix)._2, si(ix)))
+  }
+
+  /** [[elbow]]'s sums for every centroid set, from ONE kernel job over
+    * `points`' `Y` rows: per row and set, the squared distance `m` that
+    * `nearest_sq_dist` computes ([[NearestSqDistLit]]'s own `compute`),
+    * encoded as `round(sqrt(m)·d1Scale)::long` and `round(m·d2Scale)::long`
+    * ([[KMeans.fxEncode]], CAST_OVERFLOW under ANSI) and added as Spark's
+    * long `sum` adds ([[KMeans.plusLong]]). A null `Y` is skipped, as `sum`
+    * skips it, so with no `Y` at all both sums are None (null); `d1Scale`
+    * None leaves the d1 sum out. Bit-identical to [[elbow]] per set
+    * (QualitySpec).
+    */
+  private def elbowSums(points: DataFrame, sets: Seq[Seq[Centroid]], d1Scale: Option[Double],
+      d2Scale: Double): Seq[(Option[Double], Option[Double])] = {
+    val ansi = KMeans.ansi(points)
+    // children unused: only `compute` runs
+    val dists = sets.map(cs => NearestSqDistLit(Literal(0L), cs.map(_.c.toArray).toArray)).toArray
+    val partials = KMeans.yRows(points).mapPartitions { it =>
+      val acc = new Array[Long](2 * dists.length) // per set: Σ d1, Σ d2
+      var seen = 0L
+      it.foreach { row =>
+        if (!row.isNullAt(0)) {
+          val y = row.getArray(0)
+          seen += 1
+          var s = 0
+          while (s < dists.length) {
+            val m = dists(s).compute(y)
+            d1Scale.foreach { sc =>
+              acc(2 * s) = KMeans.plusLong(acc(2 * s), KMeans.fxEncode(math.sqrt(m) * sc, ansi), ansi)
+            }
+            acc(2 * s + 1) = KMeans.plusLong(acc(2 * s + 1), KMeans.fxEncode(m * d2Scale, ansi), ansi)
+            s += 1
+          }
+        }
+      }
+      Iterator.single((seen, acc))
+    }.collect()
+    val seen = partials.map(_._1).sum
+    val sums = partials.map(_._2).foldLeft(new Array[Long](2 * dists.length)) { (a, b) =>
+      Array.tabulate(a.length)(x => KMeans.plusLong(a(x), b(x), ansi))
+    }
+    def total(x: Int, scale: Double) = if (seen == 0) None else Some(sums(x).toDouble / scale)
+    sets.indices.map(s => (d1Scale.flatMap(total(2 * s, _)), total(2 * s + 1, d2Scale)))
   }
 
   /** [[silhouetteSimplifiedFromStats]]' arithmetic on (same Σsfx, count,
@@ -489,8 +530,10 @@ object Quality {
     * Lloyd converges within the budget the two forms coincide.
     *
     * Scale shape: per set, the ++ draws are the two-level-prefix-sum form
-    * (no single-partition window at scale) and each Lloyd step is the
-    * one-pass sufficient-stats scan; the `refSets + 1` set chains are
+    * (no single-partition window at scale), every k's Lloyd loop runs in
+    * lockstep ([[KMeans.iterate]]: one sufficient-stats scan per step for
+    * all ks) and one kernel scan gives all the dispersions
+    * ([[elbowSums]]' d2 sums at `scale`); the `refSets + 1` set chains are
     * independent and run concurrently (the [[gapStatistic]] pool rule).
     * Below `localMaxRows` the whole chain instead runs DRIVER-LOCAL with
     * bit-identical results (the fitAuto discipline, pinned in QualitySpec):
@@ -561,8 +604,8 @@ object Quality {
       }
     }
 
-    // per set: nested ++ seeds, one bounded fit per k, ONE multi-agg
-    // dispersion scan over all ks
+    // per set: nested ++ seeds, every k's bounded fit in one lockstep loop,
+    // and ONE kernel dispersion scan over all ks (the elbow's d2 sums)
     def wOfSet(df0: DataFrame): Seq[Double] = {
       val df = df0.cache()
       try {
@@ -575,14 +618,9 @@ object Quality {
           seeds = seeds :+ Centroid(drawn.head.getLong(0),
             drawn.head.getSeq[Double](2))
         }
-        val fitted = ks.map(k => KMeans.fitFrom(df, seeds.take(k), dim,
-          tol = tol, maxIter = lloydSteps, fxScale = fxScale).centroids)
-        val aggs = ks.zip(fitted).map { case (k, cs) =>
-          sumFx(graft.plans.native.nearest_sq_dist(
-            col("Y"), cs.map(_.c)), scale).as(s"w_$k")
-        }
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        ks.indices.map(ix => row.getDouble(ix))
+        val fitted = KMeans.iterate(df, ks.map(seeds.take), dim, tol = tol,
+          maxIter = lloydSteps, fxScale = fxScale, startStep = 0L)
+        elbowSums(df, fitted.map(_.centroids), None, scale).map(_._2.get)
       } finally df.unpersist()
     }
     val ws: Seq[Seq[Double]] =

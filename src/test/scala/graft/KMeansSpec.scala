@@ -371,6 +371,87 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  /** The ++ round with the centroids as broadcast DATA: a
+    * `crossJoin(broadcast(..))` and the interpreted `nearestSqDistCols`
+    * fold. The reference that [[KMeans.seedPlusPlusScalable]]'s compiled
+    * round is pinned against.
+    */
+  private def broadcastRound(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid = {
+    val csDf = Seq(Tuple1(chosen.map(_.c))).toDF("ccs")
+    val w = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
+    val key = when(w > 0, pow(rand(seed), lit(1.0) / w)).otherwise(lit(-1.0))
+    val r = points.crossJoin(broadcast(csDf))
+      .select(col("i"), col("Y"), key.as("skey"))
+      .agg(max_by(struct(col("i"), col("Y")), col("skey")).as("win"))
+      .select(col("win.Y"))
+      .head()
+    Centroid(chosen.map(_.j).max + 1, r.getSeq[Double](0))
+  }
+
+  test("seedPlusPlus draws the broadcast-data nearestSqDistCols round's seeds") {
+    val cached = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    val spread = cached.repartition(3).cache()
+    Seq(cached, spread).foreach { p =>
+      var ref = KMeans.seedFirstK(p, 1)
+      while (ref.size < 4) ref = ref :+ broadcastRound(p, ref, 42L + ref.size)
+      assert(KMeans.seedPlusPlus(p, 4, seed = 42L) == ref)
+    }
+  }
+
+  private val nullY = Seq[(Long, Seq[Double])](1L -> Seq(0.0, 0.0), 2L -> null,
+    3L -> Seq(10.0, 0.0), 4L -> Seq(0.0, 10.0)).toDF("i", "Y")
+
+  test("a k-means++ round never draws a null-Y row") {
+    // a null Y has no distance; folded to Double.MaxValue, its key
+    // rand()^(1/MaxValue) would round to 1.0 and win the draw
+    val chosen = Seq(Centroid(1, Seq(0.0, 0.0)))
+    (1L to 5L).foreach { seed =>
+      val c = KMeans.seedPlusPlusScalable(nullY, chosen, seed)
+      assert(c.j == 2L && (c.c == Seq(10.0, 0.0) || c.c == Seq(0.0, 10.0)), s"seed $seed drew $c")
+    }
+  }
+
+  test("the fit loop rejects a null Y with a named IllegalArgumentException") {
+    val e = intercept[Exception](
+      KMeans.fitFrom(nullY, Seq(Centroid(1, Seq(0.0, 0.0))), dim = 2, maxIter = 1))
+    assert(messages(e).contains("IllegalArgumentException") && messages(e).contains("Y is null"),
+      messages(e))
+  }
+
+  test("lockstep fit: each set's log, steps and movement are bit-identical to " +
+      "fitting it alone") {
+    import java.lang.Double.doubleToRawLongBits
+    def fitBits(f: KMeans.FitResult) = (f.steps, doubleToRawLongBits(f.finalMovement),
+      f.log.map(e => (e.step, e.j, e.c.map(doubleToRawLongBits))))
+    val cached = Tables.yhOrders(spark, sf("0.001")).cache()
+    val spread = cached.repartition(5).cache()
+    Seq(cached, spread).foreach { p =>
+      // the third set's far centroid attracts no row and empties at step 1
+      val far = Centroid(99, Seq(1e9, 1e9))
+      val sets = Seq(KMeans.seedFirstK(p, 3), KMeans.seedFirstK(p, 6),
+        KMeans.seedFirstK(p, 4) :+ far)
+      val lock = KMeans.iterate(p, sets, dim = 2, tol = 0.01, maxIter = 30, fxScale = 1e6,
+        startStep = 0L)
+      val alone = sets.map(cs => KMeans.fitFrom(p, cs, dim = 2, tol = 0.01, maxIter = 30))
+      assert(lock.map(fitBits) == alone.map(fitBits))
+      assert(lock.map(_.steps).distinct.size == 3, s"steps ${lock.map(_.steps)}")
+      assert(lock(2).centroids.size == 4 && !lock(2).centroids.exists(_.j == 99L))
+    }
+  }
+
+  test("nearestIds (the sweep's silhouette labels) equal assign on an exact tie " +
+      "and an all-NaN row") {
+    val tie = Seq(Centroid(9, Seq(0.0, 0.0)), Centroid(3, Seq(10.0, 0.0)))
+    val ys = Seq(Seq(5.0, 0.0), Seq(Double.NaN, 0.0), Seq(9.0, 1.0), Seq(-1.0, 0.0))
+    val p = pts(ys.zipWithIndex.map { case (y, ix) => (ix + 1L) -> y }: _*)
+    val want = KMeans.assign(p, tie).orderBy("i").select("j").as[Long].collect().toSeq
+    assert(want == Seq(9L, -1L, 3L, 9L))
+    assert(KMeans.nearestIds(ys.map(_.toArray).toArray, tie).toSeq == want)
+    val nan = Seq(Centroid(1, Seq(Double.NaN, 0.0)))
+    assert(KMeans.nearestIds(ys.map(_.toArray).toArray, nan).toSeq ==
+      KMeans.assign(p, nan).orderBy("i").select("j").as[Long].collect().toSeq)
+  }
+
   test("k-means++ seeding rejects k < 1 instead of returning one centroid") {
     intercept[IllegalArgumentException](KMeans.seedPlusPlus(squareCorners, 0, seed = 1L))
     intercept[IllegalArgumentException](

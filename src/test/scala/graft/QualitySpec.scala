@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.{KMeans, Quality}
 import graft.operators.KMeans.Centroid
@@ -130,10 +130,11 @@ class QualitySpec extends SparkSpec {
     yh.count()
     val sample = yh.filter(col("i") % 29 === 0)
     val ks = 2 to 4
-    val steps = ks.map(k => KMeans.fit(yh, k = k, dim = 2, plusPlus = true, maxIter = 5).steps).sum
-    // ++ chain for ks.max (one first-seed job, two per round), the Lloyd
-    // steps, one elbow scan, at most two sample takes, one silhouette job
-    val bound = 1 + 2 * (ks.max - 1) + steps + 4
+    val steps = ks.map(k => KMeans.fit(yh, k = k, dim = 2, plusPlus = true, maxIter = 5).steps).max
+    // ++ chain for ks.max (one first-seed job, one per round), one lockstep
+    // Lloyd job per step of the slowest k, one elbow scan, at most two
+    // sample takes, one silhouette job
+    val bound = ks.max + steps + 4
     val (ref, perKJobs) = countJobs(perKSweep(yh, sample, ks, maxIter = 5))
     val (got, jobs) = countJobs(sweepBits(yh, sample, ks, maxIter = 5))
     assert(got == ref)
@@ -170,6 +171,57 @@ class QualitySpec extends SparkSpec {
       assert(nested().isNullAt(0) && single().isNullAt(0))
     } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
+
+  test("the sweep's kernel elbow is bit-identical to elbow: ANSI overflows, " +
+      "wrapped bits without ANSI, nulls skipped, null on empty points") {
+    import java.lang.Double.doubleToRawLongBits
+    def rawBits(r: Row) = (0 to 1).map(ix =>
+      if (r.isNullAt(ix)) None else Some(doubleToRawLongBits(r.getDouble(ix))))
+    // optimalKNested's elbow columns are the kernel's sums; no sample rows
+    def kernel(p: DataFrame, cs: Seq[Centroid], s1: Double, s2: Double) =
+      Quality.optimalKNested(p, p.limit(0), cs, Seq(cs.size), s1, s2)
+        .select("elbow_d1", "elbow_d2").head()
+    def ref(p: DataFrame, cs: Seq[Centroid], s1: Double, s2: Double) =
+      Quality.elbow(p, cs, s1, s2).head()
+    def same(p: DataFrame, cs: Seq[Centroid], s1: Double = 1e6, s2: Double = 1e6) =
+      assert(rawBits(kernel(p, cs, s1, s2)) == rawBits(ref(p, cs, s1, s2)))
+    def fails(p: DataFrame, cs: Seq[Centroid], error: String) =
+      Seq(intercept[Exception](kernel(p, cs, 1e6, 1e6)), intercept[Exception](ref(p, cs, 1e6, 1e6)))
+        .foreach(e => assert(messages(e).contains(error), messages(e)))
+    def withAnsi(on: Boolean)(body: => Unit): Unit = {
+      val ansi = spark.conf.get("spark.sql.ansi.enabled")
+      try { spark.conf.set("spark.sql.ansi.enabled", on.toString); body }
+      finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    }
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).repartition(3).cache()
+    same(emb, KMeans.seedFirstK(emb, 5))
+    same(emb, KMeans.seedFirstK(emb, 5), s1 = 1e4, s2 = 0.01)
+    val one = Seq(Centroid(1, Seq(0.0, 0.0)))
+    // a null Y is skipped, as sum skips it
+    val withNull = Seq[(Long, Seq[Double])](1L -> Seq(3.0, 4.0), 2L -> null).toDF("i", "Y")
+    same(withNull, one)
+    // (1e200 − 0)² is +Infinity: its round(..)::long overflows the cast
+    val huge = Seq(1L -> Seq(1.0, 2.0), 2L -> Seq(1e200, 0.0)).toDF("i", "Y")
+    // 10 · round(1e12 · 1e6) = 1e19 is past Long.MaxValue: on one partition
+    // the per-row adds overflow, on two the merge of the partial sums does
+    val far = (1L to 10L).map(i => i -> Seq(1e6, 0.0)).toDF("i", "Y")
+    val fars = Seq(far.repartition(1), far.repartition(2))
+    withAnsi(on = true) {
+      fails(huge, one, "CAST_OVERFLOW")
+      fars.foreach(fails(_, one, "ARITHMETIC_OVERFLOW"))
+    }
+    withAnsi(on = false) {
+      same(huge, one)
+      fars.foreach(same(_, one))
+      assert(ref(far, one, 1e6, 1e6).getDouble(1) == (1e19 - math.pow(2, 64)) / 1e6)
+    }
+    val empty = Seq.empty[(Long, Seq[Double])].toDF("i", "Y")
+    same(empty, one)
+    assert(kernel(empty, one, 1e6, 1e6).isNullAt(0) && kernel(empty, one, 1e6, 1e6).isNullAt(1))
+  }
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
 
   test("validity indices match hand-computed values on a planted fixture") {
     // two clusters {(0,0),(0,2)} and {(10,0),(10,2)} with centers (0,1),(10,1):
