@@ -26,6 +26,10 @@ import graft.functions.VectorOps._
   *    sums per row, and the ≤ P partial (Σ, n) arrays merge on the driver.
   *    Partial per-partition sums are the property that made the reference
   *    shard-friendly (README.md:15).
+  *  - Each k-means++ seeding round is ONE kernel job too
+  *    ([[seedPlusPlusScalable]]): it replays the `rand(seed)`/`max_by`
+  *    draw per partition, the partitions' winners merge on the driver, and
+  *    no query is planned per round.
   *  - Several fits over the same points run in LOCKSTEP ([[iterate]]): one
   *    scan per step decodes and encodes each row once and feeds it to every
   *    still-moving centroid set's kernel, so a choose-K sweep pays one job
@@ -216,38 +220,77 @@ object KMeans {
 
   /** Scalable k-means++ round: same distribution, no global prefix sum.
     * Weighted sampling via the exponential-race trick: each point draws
-    * key = rand()^(1/w) and the global max wins — a single map + one k-row
+    * key = u^(1/w) and the global max wins — a single map + one k-row
     * reduce, fully parallel (A-Res / Efraimidis–Spirakis weighted reservoir
     * sampling). This is what survives 1000 executors.
     *
-    * The chosen centroids ride as plan literals of the compiled
-    * `nearest_sq_dist` ([[graft.plans.NearestSqDistLit]]), a plain
-    * projection of `points`, so `rand(seed)` draws the per-row values of
-    * that projection (pinned in KMeansSpec). A null `Y` has no distance
-    * and gets key −1: it can only win when no row has weight.
+    * The round is the DataFrame
+    * `points.select(i, Y, when(w > 0, pow(rand(seed), 1 / w)).otherwise(-1))`
+    * + `max_by(struct(i, Y), key)` replayed bit for bit as ONE kernel job
+    * over `points`' `Y` rows ([[plusPlusRound]]; the DataFrame form is the
+    * reference in KMeansSpec), so no query is planned per round. A null
+    * `Y`, or one whose distance to every chosen centroid is NaN, has no
+    * weight and gets key −1: it can only win when no row has weight.
     */
-  def seedPlusPlusScalable(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid = {
-    val w = graft.plans.native.nearest_sq_dist(col("Y"), coords(chosen))
-    val key = when(w > 0, pow(rand(seed), lit(1.0) / w)).otherwise(lit(-1.0))
-    val r = points.select(col("i"), col("Y"), key.as("skey"))
-      .agg(max_by(struct(col("i"), col("Y")), col("skey")).as("win"))
-      .select(col("win.Y"))
-      .head()
-    Centroid(chosen.map(_.j).max + 1, r.getSeq[Double](0))
-  }
+  def seedPlusPlusScalable(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid =
+    plusPlusRound(yRows(points), chosen, seed)
 
   /** Full k-means++ seeding: first centroid = deterministic min-key point,
-    * then k−1 scalable weighted rounds (reference k-means.sh:9-13). Round r
-    * reads only the first r seeds and `seed + r`, so on one partitioning
+    * then k−1 scalable weighted rounds (reference k-means.sh:9-13), each one
+    * kernel job over the `Y` rows planned once per chain. Round r reads
+    * only the first r seeds and `seed + r`, so on one partitioning
     * `seedPlusPlus(p, k, s).take(k2) == seedPlusPlus(p, k2, s)` for k2 ≤ k
     * (pinned in KMeansSpec; Quality.optimalKSweep seeds once on it).
     */
   def seedPlusPlus(points: DataFrame, k: Int, seed: Long): Seq[Centroid] = {
     require(k >= 1, s"k-means++ needs k >= 1, got $k")
     var cs = seedFirstK(points, 1)
+    lazy val rows = yRows(points)
     while (cs.size < k)
-      cs = cs :+ seedPlusPlusScalable(points, cs, seed + cs.size)
+      cs = cs :+ plusPlusRound(rows, cs, seed + cs.size)
     cs
+  }
+
+  /** One ++ round over `points`' `Y` rows, replaying what Spark evaluates
+    * for the DataFrame round:
+    *  - `w` is `nearest_sq_dist`'s own fold ([[graft.plans.NearestSqDistLit]]);
+    *  - `rand(seed)` is `XORShiftRandom(seed + partitionIndex).nextDouble()`,
+    *    advanced only on rows whose `w > 0` branch is taken (a null `Y`
+    *    takes `otherwise(-1)`), and `pow` is `StrictMath.pow`;
+    *  - `max_by` keeps its buffer only if it is strictly greater
+    *    (`SQLOrderingUtil.compareDoubles`), on update and on merge, and its
+    *    single reducer merges the partitions in index order — so a tied key
+    *    goes to the later row, and then to the later partition.
+    * A row whose every distance is NaN (Spark's `w` is `Double.MaxValue`,
+    * key ≈ 1.0) still draws its `u`, so every other row keeps its key, but
+    * its own key is −1.
+    */
+  private def plusPlusRound(rows: RDD[InternalRow], chosen: Seq[Centroid], seed: Long): Centroid = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    // child unused: only `computeOrNaN` runs
+    val dist = graft.plans.NearestSqDistLit(
+      org.apache.spark.sql.catalyst.expressions.Literal(0L), chosen.map(_.c.toArray).toArray)
+    val wins = rows.mapPartitionsWithIndex { (p, it) =>
+      val rng = org.apache.spark.sql.GraftRandomShim.xorShiftRandom(seed + p)
+      var seen = false
+      var bestKey = 0.0
+      var bestY: Array[Double] = null // null: a null-Y winner
+      it.foreach { row =>
+        val key = if (row.isNullAt(0)) -1.0 else {
+          val w = dist.computeOrNaN(row.getArray(0))
+          if (w > 0) StrictMath.pow(rng.nextDouble(), 1.0 / w)
+          else { if (w.isNaN) rng.nextDouble(); -1.0 }
+        }
+        if (!seen || compareDoubles(bestKey, key) <= 0) {
+          seen = true
+          bestKey = key
+          bestY = if (row.isNullAt(0)) null else row.getArray(0).toDoubleArray()
+        }
+      }
+      if (seen) Iterator.single((bestKey, bestY)) else Iterator.empty
+    }.collect()
+    val win = wins.reduceOption((l, r) => if (compareDoubles(l._1, r._1) > 0) l else r)
+    Centroid(chosen.map(_.j).max + 1, win.flatMap(w => Option(w._2)).map(_.toSeq).orNull)
   }
 
   /** k-means|| seeding (Bahmani et al., "Scalable k-means++", VLDB 2012 —
@@ -826,8 +869,9 @@ object KMeans {
 
   /** Per-iteration query tuning for the fit loop, restored on exit.
     *
-    * The Lloyd steps shuffle nothing; the seeding rounds' aggregates carry
-    * ≤ k·P rows after map-side partial aggregation, so the right reducer
+    * The Lloyd steps and the k-means++ rounds shuffle nothing; the
+    * k-means|| rounds' aggregates ([[seedParallel]]) carry ≤ k·P rows
+    * after map-side partial aggregation, so the right reducer
     * count is 1 — the default final-stage tasks are pure scheduling
     * overhead, and AQE's per-stage re-planning adds ~50 ms to every one of
     * the loop's tiny jobs. Points-scale data never crosses a shuffle.

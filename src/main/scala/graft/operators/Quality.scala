@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
@@ -119,7 +120,7 @@ object Quality {
     val spark = points.sparkSession
     import spark.implicits._
     val seeds = if (ks.isEmpty) Nil
-      else KMeans.withIterConf(spark)(KMeans.seedPlusPlus(points, ks.max, seed))
+      else KMeans.seedPlusPlus(points, ks.max, seed)
     val fits = KMeans.iterate(points, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
       fxScale = 1e6, startStep = 0L)
     scoreKs(points, sample, ks.zip(fits.map(_.centroids)), d1Scale, d2Scale)
@@ -145,8 +146,8 @@ object Quality {
   /** (k, elbow_d1, elbow_d2, si) per (k, centroids) set, each value
     * bit-identical to [[elbow]] / [[silhouetteSimplified]] on that set alone
     * (None for null). All elbows come from ONE kernel job over `points`
-    * ([[elbowSums]]). The sample is collected once (a guarded take, as in
-    * [[silhouettePairStats]]) and labelled per set on the driver by the
+    * ([[elbowSums]]). The sample is collected once (a guarded one-job take, as
+    * in [[silhouettePairStats]]) and labelled per set on the driver by the
     * Lloyd kernel's argmin ([[KMeans.nearestIds]], ≡ [[KMeans.assign]]);
     * then ONE job over its index range runs each row's
     * [[graft.plans.PairDistStats]] kernel per set and sums the set's same-
@@ -162,7 +163,7 @@ object Quality {
     def opt(r: Row, ix: Int) = if (r.isNullAt(ix)) None else Some(r.getDouble(ix))
     val e = elbowSums(points, sets.map(_._2), Some(d1Scale), d2Scale)
     val sel = sample.select(col("i"), col("Y"))
-    val rows = sel.take(maxCollectRows + 1)
+    val rows = takeInOneJob(sel, maxCollectRows + 1)
     val si = if (rows.length > maxCollectRows) {
       val dist = sel.cache()
       try sets.map { case (_, cs) => opt(silhouetteSimplifiedFromStats(
@@ -193,6 +194,18 @@ object Quality {
       sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, KMeans.ansi(points)))
     }
     sets.indices.map(ix => (sets(ix)._1.toLong, e(ix)._1, e(ix)._2, si(ix)))
+  }
+
+  /** `df.take(n)`'s rows from ONE job: each partition returns at most `n`
+    * rows (the cap `take` applies per partition), concatenated in partition
+    * order and cut to `n` — the rows, order and `Row` values `take` gives,
+    * where `take` scans partition 0 first and the rest in a second job.
+    */
+  private def takeInOneJob(df: DataFrame, n: Int): Array[Row] = {
+    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    df.queryExecution.toRdd
+      .mapPartitions(it => Iterator.single(it.take(n).map(_.copy()).toArray))
+      .collect().iterator.flatten.take(n).map(toRow).toArray
   }
 
   /** [[elbow]]'s sums for every centroid set, from ONE kernel job over
@@ -402,10 +415,11 @@ object Quality {
     * Value-identity with the join form is pinned in QualitySpec.
     *
     * The "tiny by contract" clause is ENFORCED, not assumed: the collect is
-    * a `take(maxCollectRows + 1)`, and if the sample overflows the bound the
-    * operator falls back to [[silhouettePairStatsJoin]]'s fully distributed
-    * kernel (same integer pair stats — long sums are associative, so the
-    * two forms are bit-identical; ScaleSpec pins the seam). A caller that
+    * a one-job `take(maxCollectRows + 1)` ([[takeInOneJob]]), and if the
+    * sample overflows the bound the operator falls back to
+    * [[silhouettePairStatsJoin]]'s fully distributed kernel (same integer
+    * pair stats — long sums are associative, so the two forms are
+    * bit-identical; ScaleSpec pins the seam). A caller that
     * mis-sizes its sample gets a slower distributed plan, never an O(n)
     * driver materialization — the `memoMaxRows` discipline of
     * SparkEntry.docComponents applied to the kernel itself.
@@ -414,7 +428,7 @@ object Quality {
       maxCollectRows: Int = 1000000): DataFrame = {
     val spark = assigned.sparkSession
     val sel = assigned.select(col("i"), col("j"), col("Y"))
-    val rows = sel.take(maxCollectRows + 1)
+    val rows = takeInOneJob(sel, maxCollectRows + 1)
     if (rows.length > maxCollectRows)
       return silhouettePairStatsJoin(assigned, dScale)
     val ids = rows.map(_.getLong(0))

@@ -52,10 +52,19 @@ case class NearestSqDistLit(child: Expression, cs: Array[Array[Double]])
     (f, d)
   }
 
-  def compute(yd: ArrayData): Double = {
+  def compute(yd: ArrayData): Double = fold(yd, Double.MaxValue)
+
+  /** [[compute]], but NaN when no centroid's distance is a number (each is
+    * NaN): the row has no nearest centroid, which [[compute]] reports as
+    * the fold seed `Double.MaxValue`.
+    */
+  def computeOrNaN(yd: ArrayData): Double = fold(yd, Double.NaN)
+
+  private def fold(yd: ArrayData, none: Double): Double = {
     val y = yd.toDoubleArray()
     val n = y.length
     var m = Double.MaxValue
+    var some = false
     var j = 0
     val k = cs.length
     while (j < k) {
@@ -70,9 +79,10 @@ case class NearestSqDistLit(child: Expression, cs: Array[Array[Double]])
         d += 1
       }
       if (acc < m) m = acc
+      if (acc == acc) some = true
       j += 1
     }
-    m
+    if (some) m else none
   }
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])

@@ -411,6 +411,87 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  /** The ++ round as the DataFrame `max_by` query over a projection of
+    * `points` — the form [[KMeans.seedPlusPlusScalable]]'s kernel replays.
+    */
+  private def maxByRound(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid = {
+    val w = graft.plans.native.nearest_sq_dist(col("Y"), chosen.map(_.c))
+    val key = when(w > 0, pow(rand(seed), lit(1.0) / w)).otherwise(lit(-1.0))
+    val r = points.select(col("i"), col("Y"), key.as("skey"))
+      .agg(max_by(struct(col("i"), col("Y")), col("skey")).as("win"))
+      .select(col("win.Y"))
+      .head()
+    Centroid(chosen.map(_.j).max + 1, r.getSeq[Double](0))
+  }
+
+  test("seedPlusPlus draws the DataFrame max_by round's seeds on tied keys and " +
+      "null-Y rows, on 1, 3 and 7 partitions, with the iter conf on and off") {
+    def rows(n: Int)(y: Int => Seq[Double]): DataFrame =
+      (1 to n).map(i => (i.toLong, if (i % 10 == 0) null else y(i))).toDF("i", "Y")
+    val fixtures = Seq(
+      // every distance overflows to Infinity, `w` is Double.MaxValue and every
+      // unchosen key is exactly 1.0: the tie order alone picks each seed
+      ("all keys 1.0", rows(60)(i => Seq(i * 1e200, 0.0)), 4),
+      // squared distances of 1e17 and up: many keys round to 1.0, the rest
+      // sit just below it
+      ("most keys 1.0", rows(60)(i => Seq(i * 3e8, (i % 4) * 1e8)), 4),
+      // every key is −1 (zero distance or a null Y): the last row wins, which
+      // may be a null Y, so only one round is drawn
+      ("all keys -1", rows(40)(_ => Seq(1.5, -2.0)), 2))
+    val conf = spark.conf
+    val (aqe, parts) = (conf.get("spark.sql.adaptive.enabled"), conf.get("spark.sql.shuffle.partitions"))
+    try for ((name, df, k) <- fixtures; n <- Seq(1, 3, 7); iterConf <- Seq(true, false)) {
+      conf.set("spark.sql.adaptive.enabled", (!iterConf).toString)
+      conf.set("spark.sql.shuffle.partitions", if (iterConf) "1" else parts)
+      val p = df.repartition(n).cache()
+      Seq(0L, 1L).foreach { seed =>
+        var ref = KMeans.seedFirstK(p, 1)
+        while (ref.size < k) ref = ref :+ maxByRound(p, ref, seed + ref.size)
+        assert(KMeans.seedPlusPlus(p, k, seed) == ref, s"$name, $n partitions, iter conf $iterConf, seed $seed")
+      }
+      p.unpersist()
+    } finally {
+      conf.set("spark.sql.adaptive.enabled", aqe)
+      conf.set("spark.sql.shuffle.partitions", parts)
+    }
+  }
+
+  test("a k-means++ round never draws a row whose every distance is NaN") {
+    // nearest_sq_dist folds an all-NaN row to Double.MaxValue, whose key
+    // rand()^(1/MaxValue) rounds to 1.0 and would win every round
+    val p = (1 to 5000).map { i =>
+      (i.toLong, if (i == 2500) Seq(Double.NaN, 1.0) else Seq((i * 37 % 101).toDouble, (i * 11 % 89).toDouble))
+    }.toDF("i", "Y").cache()
+    (0L to 2L).foreach { seed =>
+      val cs = KMeans.seedPlusPlus(p, 3, seed)
+      assert(!cs.exists(_.c.exists(_.isNaN)), s"seed $seed drew $cs")
+    }
+  }
+
+  test("seedPlusPlus runs one job per round and plans no query per round") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val p = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    p.count()
+    val sc = spark.sparkContext
+    val (jobs, sqls) = (new java.util.concurrent.atomic.AtomicInteger, new java.util.concurrent.atomic.AtomicInteger)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqls.incrementAndGet()
+        case _ => ()
+      }
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      assert(KMeans.seedPlusPlus(p, 4, seed = 7L).size == 4)
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(l)
+    // seedFirstK's query, then one kernel job per ++ round
+    assert(jobs.get == 4 && sqls.get == 1, s"${jobs.get} jobs, ${sqls.get} SQL executions")
+  }
+
   test("the fit loop rejects a null Y with a named IllegalArgumentException") {
     val e = intercept[Exception](
       KMeans.fitFrom(nullY, Seq(Centroid(1, Seq(0.0, 0.0))), dim = 2, maxIter = 1))

@@ -132,9 +132,9 @@ class QualitySpec extends SparkSpec {
     val ks = 2 to 4
     val steps = ks.map(k => KMeans.fit(yh, k = k, dim = 2, plusPlus = true, maxIter = 5).steps).max
     // ++ chain for ks.max (one first-seed job, one per round), one lockstep
-    // Lloyd job per step of the slowest k, one elbow scan, at most two
-    // sample takes, one silhouette job
-    val bound = ks.max + steps + 4
+    // Lloyd job per step of the slowest k, one elbow scan, one sample
+    // collect, one silhouette job
+    val bound = ks.max + steps + 3
     val (ref, perKJobs) = countJobs(perKSweep(yh, sample, ks, maxIter = 5))
     val (got, jobs) = countJobs(sweepBits(yh, sample, ks, maxIter = 5))
     assert(got == ref)
