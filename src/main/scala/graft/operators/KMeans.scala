@@ -271,7 +271,7 @@ object KMeans {
     val dist = graft.plans.NearestSqDistLit(
       org.apache.spark.sql.catalyst.expressions.Literal(0L), chosen.map(_.c.toArray).toArray)
     val wins = rows.mapPartitionsWithIndex { (p, it) =>
-      val rng = org.apache.spark.sql.GraftRandomShim.xorShiftRandom(seed + p)
+      val rng = org.apache.spark.sql.GraftPlanShim.xorShiftRandom(seed + p)
       var seen = false
       var bestKey = 0.0
       var bestY: Array[Double] = null // null: a null-Y winner

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
@@ -146,8 +147,8 @@ object Quality {
   /** (k, elbow_d1, elbow_d2, si) per (k, centroids) set, each value
     * bit-identical to [[elbow]] / [[silhouetteSimplified]] on that set alone
     * (None for null). All elbows come from ONE kernel job over `points`
-    * ([[elbowSums]]). The sample is collected once (a guarded one-job take, as
-    * in [[silhouettePairStats]]) and labelled per set on the driver by the
+    * ([[elbowSums]]). The sample is collected once (bounded, one job when
+    * its partitions are balanced: [[collectAtMost]]) and labelled per set on the driver by the
     * Lloyd kernel's argmin ([[KMeans.nearestIds]], ≡ [[KMeans.assign]]);
     * then ONE job over its index range runs each row's
     * [[graft.plans.PairDistStats]] kernel per set and sums the set's same-
@@ -163,49 +164,71 @@ object Quality {
     def opt(r: Row, ix: Int) = if (r.isNullAt(ix)) None else Some(r.getDouble(ix))
     val e = elbowSums(points, sets.map(_._2), Some(d1Scale), d2Scale)
     val sel = sample.select(col("i"), col("Y"))
-    val rows = takeInOneJob(sel, maxCollectRows + 1)
-    val si = if (rows.length > maxCollectRows) {
-      val dist = sel.cache()
-      try sets.map { case (_, cs) => opt(silhouetteSimplifiedFromStats(
-        silhouettePairStatsJoin(KMeans.assign(dist, cs), dScale), dScale).select("si").head(), 0)
-      } finally dist.unpersist()
-    } else {
-      val (ids, ys) = (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
-      val kernels = sets.map { case (_, cs) => // children unused: only `compute` runs
-        val js = KMeans.nearestIds(ys, cs)
-        (js, PairDistStats(Literal(0L), Literal(0L), ids, js, ys, dScale))
-      }
-      val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.length))
-      val sums = spark.sparkContext.parallelize(rows.indices, slices).mapPartitions { ps =>
-        val acc = new Array[Long](4 * kernels.size) // per set: same Σ, n; cross Σ, n
-        ps.foreach { p =>
-          val y = UnsafeArrayData.fromPrimitiveArray(ys(p))
-          kernels.iterator.zipWithIndex.foreach { case ((js, kern), s) =>
-            val st = kern.compute(ids(p), y)
-            (0 until st.numElements()).foreach { q =>
-              val r = st.getStruct(q, 3)
-              val o = 4 * s + (if (r.getLong(0) == js(p)) 0 else 2)
-              acc(o) += r.getLong(1); acc(o + 1) += r.getLong(2)
+    val si = collectAtMost(sel, maxCollectRows) match {
+      case None =>
+        val dist = sel.cache()
+        try sets.map { case (_, cs) => opt(silhouetteSimplifiedFromStats(
+          silhouettePairStatsJoin(KMeans.assign(dist, cs), dScale), dScale).select("si").head(), 0)
+        } finally dist.unpersist()
+      case Some(rows) =>
+        val (ids, ys) = (rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray))
+        val kernels = sets.map { case (_, cs) => // children unused: only `compute` runs
+          val js = KMeans.nearestIds(ys, cs)
+          (js, PairDistStats(Literal(0L), Literal(0L), ids, js, ys, dScale))
+        }
+        val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.length))
+        val sums = spark.sparkContext.parallelize(rows.indices, slices).mapPartitions { ps =>
+          val acc = new Array[Long](4 * kernels.size) // per set: same Σ, n; cross Σ, n
+          ps.foreach { p =>
+            val y = UnsafeArrayData.fromPrimitiveArray(ys(p))
+            kernels.iterator.zipWithIndex.foreach { case ((js, kern), s) =>
+              val st = kern.compute(ids(p), y)
+              (0 until st.numElements()).foreach { q =>
+                val r = st.getStruct(q, 3)
+                val o = 4 * s + (if (r.getLong(0) == js(p)) 0 else 2)
+                acc(o) += r.getLong(1); acc(o + 1) += r.getLong(2)
+              }
             }
           }
-        }
-        Iterator.single(acc)
-      }.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x)))
-      sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, KMeans.ansi(points)))
+          Iterator.single(acc)
+        }.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x)))
+        sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, KMeans.ansi(points)))
     }
     sets.indices.map(ix => (sets(ix)._1.toLong, e(ix)._1, e(ix)._2, si(ix)))
   }
 
-  /** `df.take(n)`'s rows from ONE job: each partition returns at most `n`
-    * rows (the cap `take` applies per partition), concatenated in partition
-    * order and cut to `n` — the rows, order and `Row` values `take` gives,
-    * where `take` scans partition 0 first and the rest in a second job.
+  /** `df`'s rows — the rows, order and `Row` values `take(max + 1)` gives —
+    * or None when `df` holds more than `max` rows; the driver receives
+    * O(max) rows either way. Each task counts its partition up to `max + 1`
+    * rows and returns them only if they fit its even share ⌈(max + 1)/P⌉,
+    * so a total count past `max` answers None from the counts alone, and a
+    * balanced partitioning answers in ONE job (`take` scans partition 0
+    * first and the rest in a second job). Only if some partition outgrows
+    * its share while the total fits does a second job fetch those
+    * partitions, which then hold at most `max` rows between them.
     */
-  private def takeInOneJob(df: DataFrame, n: Int): Array[Row] = {
+  private[graft] def collectAtMost(df: DataFrame, max: Int): Option[Array[Row]] = {
+    val rdd = df.queryExecution.toRdd
+    val sc = df.sparkSession.sparkContext
+    val share = max / math.max(1, rdd.getNumPartitions) + 1
+    val counted = sc.runJob(rdd, (it: Iterator[InternalRow]) => {
+      val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      var n = 0L
+      while (n <= max && it.hasNext) {
+        val r = it.next()
+        if (n < share) kept += r.copy()
+        n += 1
+      }
+      (n, if (n <= share) kept.toArray else null)
+    })
+    if (counted.iterator.map(_._1).sum > max) return None
+    val over = counted.indices.filter(p => counted(p)._2 == null)
+    val refetched = if (over.isEmpty) Array.empty[Array[InternalRow]]
+      else sc.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, over)
+    val byPart = (over zip refetched).toMap
     val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
-    df.queryExecution.toRdd
-      .mapPartitions(it => Iterator.single(it.take(n).map(_.copy()).toArray))
-      .collect().iterator.flatten.take(n).map(toRow).toArray
+    Some(counted.indices.iterator
+      .flatMap(p => byPart.getOrElse(p, counted(p)._2)).map(toRow).toArray)
   }
 
   /** [[elbow]]'s sums for every centroid set, from ONE kernel job over
@@ -415,8 +438,9 @@ object Quality {
     * Value-identity with the join form is pinned in QualitySpec.
     *
     * The "tiny by contract" clause is ENFORCED, not assumed: the collect is
-    * a one-job `take(maxCollectRows + 1)` ([[takeInOneJob]]), and if the
-    * sample overflows the bound the operator falls back to
+    * bounded ([[collectAtMost]]: each task sends at most its share of
+    * `maxCollectRows` rows, plus its count), and if the sample overflows
+    * the bound the operator falls back to
     * [[silhouettePairStatsJoin]]'s fully distributed kernel (same integer
     * pair stats — long sums are associative, so the two forms are
     * bit-identical; ScaleSpec pins the seam). A caller that
@@ -428,9 +452,10 @@ object Quality {
       maxCollectRows: Int = 1000000): DataFrame = {
     val spark = assigned.sparkSession
     val sel = assigned.select(col("i"), col("j"), col("Y"))
-    val rows = takeInOneJob(sel, maxCollectRows + 1)
-    if (rows.length > maxCollectRows)
-      return silhouettePairStatsJoin(assigned, dScale)
+    val rows = collectAtMost(sel, maxCollectRows) match {
+      case Some(rows) => rows
+      case None => return silhouettePairStatsJoin(assigned, dScale)
+    }
     val ids = rows.map(_.getLong(0))
     val js = rows.map(_.getLong(1))
     val ys = rows.map(_.getSeq[Double](2).toArray)

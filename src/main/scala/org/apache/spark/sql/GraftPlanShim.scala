@@ -21,4 +21,13 @@ object GraftPlanShim {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** The generator behind `rand(seed)` — `XORShiftRandom` is
+    * `private[spark]`. `rand(seed)` draws
+    * `xorShiftRandom(seed + partitionIndex).nextDouble()` per evaluated
+    * row; used by `graft.operators.KMeans`'s k-means++ round, which
+    * replays it.
+    */
+  def xorShiftRandom(seed: Long): java.util.Random =
+    new org.apache.spark.util.random.XORShiftRandom(seed)
 }

@@ -114,6 +114,46 @@ class ScaleSpec extends SparkSpec {
       "distributed optimalKNested fallback diverged from the local-sample path")
   }
 
+  test("collectAtMost: past the bound on 10 partitions the driver receives " +
+      "counts, not rows; within it, take's rows in partition order") {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val dim = 512 // 4 KiB of coordinates per row, so result bytes count rows
+    def pts(n: Long) = spark.range(0, n, 1, 10)
+      .select(col("id").as("i"), array_repeat(col("id").cast("double"), dim).as("Y"))
+    def observed[T](body: => T): (T, Int, Long) = {
+      val (jobs, bytes) = (new AtomicInteger, new AtomicLong)
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.resultSize)
+      }
+      ListenerDrain(sc)
+      sc.addSparkListener(l)
+      try { val r = body; ListenerDrain(sc); (r, jobs.get, bytes.get) }
+      finally sc.removeSparkListener(l)
+    }
+    val bound = 200
+    // 10 partitions of 100 rows: a per-partition cap of bound + 1 rows would
+    // send all 1000 rows (~4 MB) to the driver before refusing
+    val (over, overJobs, overBytes) = observed(operators.Quality.collectAtMost(pts(1000), bound))
+    assert(over.isEmpty && overJobs == 1, s"over the bound: $overJobs jobs")
+    assert(overBytes < bound * 8L * dim, s"over the bound the driver received $overBytes bytes")
+    assert(operators.Quality.collectAtMost(pts(bound + 1), bound).isEmpty)
+    // balanced (20 rows a partition, share 21): one job; skewed (partitions
+    // 0 and 1 outgrow their share, the other 8 hold one row each): a second
+    // job over the two; empty: one job. Each is take's array.
+    val skewed = pts(1000).filter(col("i") < 150 || col("i") % 100 === 7)
+    for ((df, jobs) <- Seq(pts(bound) -> 1, skewed -> 2, pts(0) -> 1)) {
+      val (got, n, _) = observed(operators.Quality.collectAtMost(df, bound))
+      val want = df.take(bound + 1).toSeq
+      assert(got.map(_.toSeq) == Some(want), s"rows differ from take (${want.size} rows)")
+      assert(n == jobs, s"${want.size} rows: $n jobs, expected $jobs")
+    }
+  }
+
   test("shared-stage memos are row-identical to their live distributed plans " +
       "(the memoMaxRows seam can never silently diverge)") {
     // the memo/live seam exists in docComponents, cleanComponents,
