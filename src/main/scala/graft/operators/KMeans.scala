@@ -5,7 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.ClassTag
 import graft.functions.VectorOps._
+import graft.plans.NearestSqDistLit
 
 /** K-means (k-means++ seeding + Lloyd iterations) as Spark dataflow.
   *
@@ -34,11 +36,16 @@ import graft.functions.VectorOps._
   *    scan per step decodes and encodes each row once and feeds it to every
   *    still-moving centroid set's kernel, so a choose-K sweep pays one job
   *    per step, not one per (k, step).
-  *  - The points plan is built once per fit and every step re-runs the
-  *    kernel over it — lineage stays O(1). The distributed loop holds
-  *    O(k·dim) on the driver; the driver-local twins ([[fitLocal]],
-  *    [[fitBounded]], [[fitMiniBatch]]) collect the points only while
-  *    `rows·dim ≤ localMaxCells` (default 4M doubles, 32 MB).
+  *  - Each fit places its points once ([[Points]]): PARTITIONED, the
+  *    points plan built once and every step re-running the kernel over it
+  *    (lineage stays O(1), the driver holds O(k·dim)), or COLLECTED, the
+  *    key-ordered rows on the driver, only while `rows·dim ≤
+  *    localMaxCells` (default 4M doubles, 32 MB; [[fitAuto]],
+  *    [[fitBounded]], [[fitMiniBatch]], Quality.gapStatisticFitted). Every
+  *    scan — the Lloyd step, the k-means|| passes, the elbow — is one
+  *    per-row body with one nearest fold ([[NearestSqDistLit.fold]]); the
+  *    placement only decides where it runs, so there is one Lloyd loop
+  *    ([[iterate]]) and one k-means|| chain for both.
   *  - Per-dimension sums are fixed-point integers (`round(x*scale)::long`,
   *    `fxScale > 0`), so results do not depend on partition count or merge
   *    order — a deterministic distributed k-means. A sum past the long
@@ -179,17 +186,10 @@ object KMeans {
     if (head.isNullAt(0)) // no surviving points — empty draw
       return weightedAt(effScale)
         .select(lit(chosen.map(_.j).max + 1).as("j"), col("i"), col("Y")).limit(0)
-    // ADAPTIVE weightScale (r17 verdict task 4): the integer-domain compare
-    // needs total·uNum and cw·uDen in-bounds (cw ≤ total). Instead of
-    // require-failing near sf1+ and asking the caller to shrink
-    // `weightScale` by hand, derive the shrink from the OBSERVED unclamped
-    // total: target total ≈ bound/4, so post-rescale sum(round(w·s')) ≤
-    // dblTotal·(s'/s) + n/2 ≤ bound/4 + n/2 — in-bounds at any sf. Scaling
-    // all weights uniformly preserves the sampling distribution up to
-    // rounding (they are only sampling weights); the branch never fires at
-    // oracle scale (sf0.01 totals sit orders of magnitude under the
-    // trigger), so published hashes are untouched. Cost: one extra scalar
-    // agg pass, only when the corpus actually approaches the bound.
+    // ADAPTIVE weightScale (the overflow NOTE above): past half the bound the
+    // unclamped total is rescaled to a quarter of it, so post-rescale
+    // sum(round(w·s')) ≤ bound/4 + n/2 — in-bounds at any sf. (The collected
+    // replay, KMeans.boundedFits, declines past a quarter.)
     if (head.getDouble(4) > bound.toDouble * 0.5) {
       effScale = weightScale * (bound.toDouble * 0.25) / head.getDouble(4)
       head = headAt(effScale)
@@ -253,7 +253,7 @@ object KMeans {
 
   /** One ++ round over `points`' `Y` rows, replaying what Spark evaluates
     * for the DataFrame round:
-    *  - `w` is `nearest_sq_dist`'s own fold ([[graft.plans.NearestSqDistLit]]);
+    *  - `w` is `nearest_sq_dist`'s own fold ([[NearestSqDistLit.fold]]);
     *  - `rand(seed)` is `XORShiftRandom(seed + partitionIndex).nextDouble()`,
     *    advanced only on rows whose `w > 0` branch is taken (a null `Y`
     *    takes `otherwise(-1)`), and `pow` is `StrictMath.pow`;
@@ -267,24 +267,25 @@ object KMeans {
     */
   private def plusPlusRound(rows: RDD[InternalRow], chosen: Seq[Centroid], seed: Long): Centroid = {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
-    // child unused: only `computeOrNaN` runs
-    val dist = graft.plans.NearestSqDistLit(
-      org.apache.spark.sql.catalyst.expressions.Literal(0L), chosen.map(_.c.toArray).toArray)
+    val (cs, k, dim) = foldOf(coords(chosen))
     val wins = rows.mapPartitionsWithIndex { (p, it) =>
       val rng = org.apache.spark.sql.GraftPlanShim.xorShiftRandom(seed + p)
+      val dist = new Array[Double](1)
       var seen = false
       var bestKey = 0.0
       var bestY: Array[Double] = null // null: a null-Y winner
       it.foreach { row =>
-        val key = if (row.isNullAt(0)) -1.0 else {
-          val w = dist.computeOrNaN(row.getArray(0))
+        val y = if (row.isNullAt(0)) null else row.getArray(0).toDoubleArray()
+        val key = if (y == null) -1.0 else {
+          NearestSqDistLit.fold(cs, k, dim, y, y.length, dist)
+          val w = dist(0)
           if (w > 0) StrictMath.pow(rng.nextDouble(), 1.0 / w)
           else { if (w.isNaN) rng.nextDouble(); -1.0 }
         }
         if (!seen || compareDoubles(bestKey, key) <= 0) {
           seen = true
           bestKey = key
-          bestY = if (row.isNullAt(0)) null else row.getArray(0).toDoubleArray()
+          bestY = y
         }
       }
       if (seen) Iterator.single((bestKey, bestY)) else Iterator.empty
@@ -292,6 +293,18 @@ object KMeans {
     val win = wins.reduceOption((l, r) => if (compareDoubles(l._1, r._1) > 0) l else r)
     Centroid(chosen.map(_.j).max + 1, win.flatMap(w => Option(w._2)).map(_.toSeq).orNull)
   }
+
+  /** The per-point, per-round sampling coin for k-means|| — a deterministic
+    * uniform in [0,1): the top 53 bits of `xxhash64(i, seed, round)`, one
+    * expression evaluated in the plan that builds either placement.
+    */
+  private def coinCol(seed: Long, r: Int): Column =
+    shiftrightunsigned(xxhash64(col("i"), lit(seed), lit(r)), 11)
+      .cast("double") / lit(9007199254740992.0) // 2^53
+
+  /** [[coinCol]] for rounds 1..`rounds`. */
+  private[graft] def coinCols(seed: Long, rounds: Int): Seq[Column] =
+    (1 to rounds).map(coinCol(seed, _))
 
   /** k-means|| seeding (Bahmani et al., "Scalable k-means++", VLDB 2012 —
     * the algorithm MLlib also uses): instead of k−1 sequential cluster-wide
@@ -301,8 +314,8 @@ object KMeans {
     * tiny weighted clustering problem on the candidates driver-side.
     *
     * Why it matters at 100 TB: sequential ++ is k−1 full scans BY DESIGN
-    * (each round depends on the last); k-means|| needs `rounds`+1 scans
-    * regardless of k. Candidate sampling is deterministic — the per-point
+    * (each round depends on the last); k-means|| needs 2·`rounds` + 1
+    * scans regardless of k. Candidate sampling is deterministic — the per-point
     * coin is `xxhash64(i, seed, round)` mapped to [0, 1), a pure function of
     * the data, so any partitioning yields the same seeds (unlike `rand`,
     * which draws per partition index).
@@ -311,57 +324,84 @@ object KMeans {
     * ≤ rounds·overFactor·k candidates (each weighted by the number of points
     * it attracts) — O(candidates²·dim) driver work, microscopic next to one
     * data scan.
+    *
+    * The scans are [[parallelPhi]], [[parallelDraw]] and [[parallelWeights]],
+    * each the arithmetic of the DataFrame step it replaces (KMeansSpec's
+    * reference), over the partitioned rows here and the collected ones in
+    * [[fitLocal]].
     */
-  /** The per-point, per-round sampling coin for k-means|| — a deterministic
-    * uniform in [0,1): the top 53 bits of `xxhash64(i, seed, round)`. One
-    * definition shared by the distributed and local paths so they draw
-    * bit-identical candidates.
-    */
-  private def coinCol(seed: Long, r: Int): Column =
-    shiftrightunsigned(xxhash64(col("i"), lit(seed), lit(r)), 11)
-      .cast("double") / lit(9007199254740992.0) // 2^53
-
   def seedParallel(points: DataFrame, k: Int, seed: Long, rounds: Int = 3,
-      overFactor: Double = 2.0): Seq[Centroid] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    var cands = seedFirstK(points, 1).map(_.c).toVector
+      overFactor: Double = 2.0): Seq[Centroid] =
+    parallelSeeds(Points.partitioned(points, coinCols(seed, rounds)), k, seed, rounds, overFactor)
+
+  /** [[seedParallel]] over points carrying the coins of rounds 1..`rounds`. */
+  private def parallelSeeds(points: Points, k: Int, seed: Long, rounds: Int,
+      overFactor: Double): Seq[Centroid] = {
+    var cands = points.firstK(1).map(_.c).toVector
     val l = overFactor * k
     for (r <- 1 to rounds) {
-      // candidates ride as broadcast DATA through `nearestSqDistCols`:
-      // constant plan text across rounds even as the candidate set grows,
-      // so analysis does not grow with the literals
-      val csDf = Seq(Tuple1(cands.map(_.toSeq))).toDF("ccs")
-      val d2 = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
-      // fixed-point integer sum: ϕ is identical under ANY partitioning /
-      // merge order (a raw double sum is not), so the sampling threshold —
-      // and therefore the drawn candidate set — is a pure function of the
-      // data. ϕ only normalizes the sampling probability; whole-unit
-      // rounding is irrelevant to seeding quality.
-      val phi = points.crossJoin(broadcast(csDf))
-        .agg(sumFx(d2, 1.0)).head().getDouble(0)
-      if (phi > 0) {
-        val u = coinCol(seed, r)
-        // sort by key: collect order is partition-dependent, candidate order
-        // must not be (it feeds the driver-side PRNG refine)
-        val drawn = points.crossJoin(broadcast(csDf))
-          .filter(u * phi < d2 * l)
-          .select(col("i"), col("Y")).collect()
-          .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toVector)
-        cands = (cands ++ drawn).distinct
-      }
+      val phi = parallelPhi(points, cands)
+      if (phi > 0) cands = (cands ++ parallelDraw(points, cands, r, phi, l)).distinct
     }
-    // one pass: how many points each candidate attracts (its weight) —
-    // the same broadcast-data argmin
-    val candCs = cands.zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c) }
-    val widsDf = Seq((candCs.map(_.j), candCs.map(_.c))).toDF("cids", "ccs")
-    val wByJ = points.crossJoin(broadcast(widsDf))
-      .select(graft.plans.native.nearestIdCols(col("Y"), col("cids"), col("ccs")).as("j"))
-      .groupBy("j").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val weights = candCs.map(c => wByJ.getOrElse(c.j, 0L).toDouble)
-    localWeightedKMeans(cands.map(_.toArray).toArray, weights.toArray, k, seed)
+    localWeightedKMeans(cands.map(_.toArray).toArray,
+      parallelWeights(points, cands).map(_.toDouble), k, seed)
       .zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
+  }
+
+  /** Centroids as [[NearestSqDistLit.fold]]'s row-major array, count, dim. */
+  private[operators] def foldOf(cands: Seq[Seq[Double]]): (Array[Double], Int, Int) =
+    (cands.flatten.toArray, cands.size, cands.headOption.fold(0)(_.size))
+
+  /** A point's d² in the k-means|| passes: [[NearestSqDistLit.sqDist]], or
+    * the DataFrame fold's seed Double.MaxValue for a null `Y`.
+    */
+  private def parallelD2(p: Point, cs: Array[Double], k: Int, dim: Int): Double =
+    if (p.y == null) Double.MaxValue else NearestSqDistLit.sqDist(cs, k, dim, p.y, p.n)
+
+  /** k-means|| ϕ = `sumFx(d², 1.0)`: each [[parallelD2]] [[fxEncode]]d and
+    * added as Spark's long `sum` adds ([[plusLong]]) — an integer total, the
+    * same under any partitioning. A null `Y` overflows the cast
+    * (CAST_OVERFLOW under ANSI, else Long.MaxValue wraps ϕ).
+    */
+  private[graft] def parallelPhi(points: Points, cands: Seq[Seq[Double]]): Double = {
+    val (cs, k, dim) = foldOf(cands)
+    val ansi = points.ansi
+    points.partials { it =>
+      var s = 0L
+      it.foreach(p => s = plusLong(s, fxEncode(parallelD2(p, cs, k, dim), ansi), ansi))
+      s
+    }.foldLeft(0L)(plusLong(_, _, ansi)).toDouble
+  }
+
+  /** k-means|| round `r`'s draw: the points with `coin_r·ϕ < d²·l`, in key
+    * order (the refine's PRNG reads it). A drawn null `Y` comes back null.
+    */
+  private[graft] def parallelDraw(points: Points, cands: Seq[Seq[Double]], r: Int,
+      phi: Double, l: Double): Seq[Vector[Double]] = {
+    val (cs, k, dim) = foldOf(cands)
+    points.partials { it =>
+      val drawn = Array.newBuilder[(Long, Vector[Double])]
+      it.foreach { p =>
+        if (p.u(r - 1) * phi < parallelD2(p, cs, k, dim) * l)
+          drawn += ((p.i, if (p.y == null) null else p.y.iterator.take(p.n).toVector))
+      }
+      drawn.result()
+    }.flatten.sortBy(_._1).map(_._2).toSeq
+  }
+
+  /** How many points each candidate attracts: the argmin counted per slot.
+    * The no-winner slot (a null `Y`, or no distance below Double.MaxValue)
+    * drops, as `nearestIdCols`' id −1 matched no candidate.
+    */
+  private[graft] def parallelWeights(points: Points, cands: Seq[Seq[Double]]): Array[Long] = {
+    val (cs, k, dim) = foldOf(cands)
+    points.partials { it =>
+      val w = new Array[Long](k + 1)
+      it.foreach { p =>
+        w(if (p.y == null) k else NearestSqDistLit.fold(cs, k, dim, p.y, p.n, null)) += 1
+      }
+      w
+    }.foldLeft(new Array[Long](k + 1))((a, b) => Array.tabulate(k + 1)(x => a(x) + b(x))).init
   }
 
   /** Driver-side weighted k-means for the k-means|| refine: weighted ++
@@ -409,10 +449,11 @@ object KMeans {
     while (it < maxIter && moved) {
       val sums = Array.fill(k, dim)(0.0)
       val cnts = Array.fill(k)(0.0)
+      val flat = cs.flatten
       var i = 0
       while (i < n) {
-        var best = 0; var bd = Double.MaxValue; var j = 0
-        while (j < k) { val d = sq(xs(i), cs(j)); if (d < bd) { bd = d; best = j }; j += 1 }
+        // the nearest center; with none below Double.MaxValue, the first
+        val best = NearestSqDistLit.fold(flat, k, dim, xs(i), dim, null) % k
         var d = 0
         while (d < dim) { sums(best)(d) += xs(i)(d) * w(i); d += 1 }
         cnts(best) += w(i)
@@ -438,16 +479,15 @@ object KMeans {
     points.withColumn("j",
       graft.plans.native.nearestIdNative(col("Y"), ids(cs), coords(cs)))
 
-  /** [[assign]]'s ids for rows held on the driver, from the Lloyd kernel's
-    * argmin: slot → centroid id, and the no-winner slot (every distance
-    * NaN) → −1, the fold's initial id. Each row needs the centroids' `dim`
-    * coordinates (pinned ≡ [[assign]] in KMeansSpec).
+  /** [[assign]]'s ids for rows held on the driver, from the one nearest
+    * fold ([[NearestSqDistLit.fold]]): slot → centroid id, and the
+    * no-winner slot (every distance NaN) → −1, the fold's initial id
+    * (pinned ≡ [[assign]] in KMeansSpec).
     */
   private[graft] def nearestIds(ys: Array[Array[Double]], cs: Seq[Centroid]): Array[Long] = {
-    val dim = cs.headOption.fold(0)(_.c.size)
-    val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansi = false)
+    val (flat, k, dim) = foldOf(coords(cs))
     val js = ids(cs).toArray :+ -1L
-    ys.map(y => js(kern.nearest(y)))
+    ys.map(y => js(NearestSqDistLit.fold(flat, k, dim, y, y.length, null)))
   }
 
   // ------------------------------------------------------------- Lloyd step
@@ -479,8 +519,8 @@ object KMeans {
   private def requireFx(fxScale: Double): Unit =
     require(fxScale > 0, s"fxScale must be > 0 (fixed-point sums), got $fxScale")
 
-  /** `points`' `Y` column as the raw rows the kernel scans. */
-  private[operators] def yRows(points: DataFrame): RDD[InternalRow] =
+  /** `points`' `Y` column as the raw rows the ++ round scans. */
+  private def yRows(points: DataFrame): RDD[InternalRow] =
     points.select(col("Y")).queryExecution.toRdd
 
   private[operators] def ansi(points: DataFrame): Boolean =
@@ -491,15 +531,16 @@ object KMeans {
     */
   private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
 
-  /** The distributed Lloyd step of the fit loop and [[fitMiniBatch]], for
-    * every centroid set in `sets` at once, as a SINGLE STAGE: each partition
-    * decodes and [[fxEncode]]s each row once, adds it to one [[LloydKernel]]
-    * per set (argmin + fixed-point per-slot sums), and the ≤ P partial
-    * arrays merge on the driver — the collect-sufficient-stats shape MLlib's
-    * KMeans uses (its `runAlgorithm` folds per-partition (sum, count) pairs
-    * via `treeAggregate`; public Spark source,
-    * mllib/clustering/KMeans.scala). Each set's stats are value-identical to
-    * [[lloydStep]] on that set alone in any partitioning: the kernel replays
+  /** The Lloyd step of the fit loop ([[iterate]]) and [[fitMiniBatch]],
+    * for every centroid set in `sets` at once, as ONE scan of the points:
+    * each point's [[fxEncode]]d coordinates (held by collected points,
+    * encoded per row otherwise) go to one [[LloydKernel]] per set (argmin +
+    * fixed-point per-slot sums), and the ≤ P partial arrays merge on the
+    * driver: the collect-sufficient-stats shape MLlib's KMeans uses (its
+    * `runAlgorithm` folds per-partition (sum, count) pairs via
+    * `treeAggregate`; public Spark source, mllib/clustering/KMeans.scala).
+    * Each set's stats are value-identical to [[lloydStep]] on that set
+    * alone in any partitioning and either placement: the kernel replays
     * `nearestIdNative`'s fold and `round(x*scale)::long` exactly, and long
     * adds are exact in any order (pinned in KMeansSpec). A null `Y` is
     * rejected: it has no cluster to join.
@@ -512,26 +553,25 @@ object KMeans {
     * per partition emits one (Σ, n) array pair per set straight to the
     * driver.
     */
-  private def kernelStats(rows: RDD[InternalRow], sets: Seq[Seq[Centroid]], dim: Int,
-      fxScale: Double, ansi: Boolean): Seq[Stats] = {
+  private def kernelStats(points: Points, sets: Seq[Seq[Centroid]], dim: Int,
+      fxScale: Double): Seq[Stats] = {
+    require(points.fxAt.forall(_ == ((dim, fxScale))),
+      s"the points hold encodes at ${points.fxAt.get}, not at ($dim, $fxScale)")
     val flats = sets.map(cs => (flatten(cs, dim), cs.size)).toArray
-    val partials = rows.mapPartitions { it =>
+    val ansi = points.ansi
+    val partials = points.partials { it =>
       val kerns = flats.map { case (f, k) => new LloydKernel(f, k, dim, ansi) }
-      val y = new Array[Double](dim)
-      val fx = new Array[Long](dim)
+      val buf = new Array[Long](dim)
       while (it.hasNext) {
-        val row = it.next()
-        require(!row.isNullAt(0), "Y is null: a k-means point needs coordinates")
-        val a = row.getArray(0)
-        require(a.numElements() >= dim, s"Y has ${a.numElements()} coordinates, dim is $dim")
-        var d = 0
-        while (d < dim) { y(d) = a.getDouble(d); d += 1 }
-        encodeInto(y, fx, fxScale, ansi)
+        val p = it.next()
+        require(p.y != null, "Y is null: a k-means point needs coordinates")
+        require(p.n >= dim, s"Y has ${p.n} coordinates, dim is $dim")
+        val fx = if (p.fx != null) p.fx else { encodeInto(p.y, buf, fxScale, ansi); buf }
         var s = 0
-        while (s < kerns.length) { kerns(s).add(y, fx); s += 1 }
+        while (s < kerns.length) { kerns(s).add(p.y, fx); s += 1 }
       }
-      Iterator.single(kerns.map(k => (k.sums, k.cnts)))
-    }.collect()
+      kerns.map(k => (k.sums, k.cnts))
+    }
     flats.indices.map { s =>
       val total = new LloydKernel(flats(s)._1, flats(s)._2, dim, ansi)
       partials.foreach { p => total.merge(p(s)._1, p(s)._2) }
@@ -575,17 +615,6 @@ object KMeans {
           "to bypass this error.")
     }
 
-  /** One driver-local Lloyd step over collected rows (`fxs` = their
-    * fixed-point coordinates): the distributed step's kernel, run once.
-    */
-  private def localStep(ys: Array[Array[Double]], fxs: Array[Array[Long]],
-      cs: Seq[Centroid], dim: Int, fxScale: Double, ansi: Boolean): Seq[Centroid] = {
-    val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansi)
-    var ix = 0
-    while (ix < ys.length) { kern.add(ys(ix), fxs(ix)); ix += 1 }
-    centroidsOf(kern.stats(ids(cs).toArray), fxScale)
-  }
-
   /** [[fxEncode]] of `y`'s first `fx.length` coordinates, into `fx`. */
   private def encodeInto(y: Array[Double], fx: Array[Long], fxScale: Double,
       ansi: Boolean): Unit = {
@@ -593,45 +622,23 @@ object KMeans {
     while (d < fx.length) { fx(d) = fxEncode(y(d) * fxScale, ansi); d += 1 }
   }
 
-  /** [[fxEncode]] over the first `dim` coordinates of every row. */
-  private def encodeAll(ys: Array[Array[Double]], dim: Int, fxScale: Double,
-      ansi: Boolean): Array[Array[Long]] =
-    ys.map { y => val fx = new Array[Long](dim); encodeInto(y, fx, fxScale, ansi); fx }
-
-  /** The Lloyd step's per-row arithmetic, ONE copy shared by the
-    * distributed step ([[kernelStats]] runs one per set and partition), the
-    * driver-local twins' loops and the choose-K sweep's labels
-    * ([[nearestIds]]). Centroids ride as one row-major `k·dim`
-    * array; slot `k` collects the rows no centroid claims (every distance
-    * NaN), reported as id −1 — the HOF fold's initial accumulator. Sums add
-    * as Spark's long `sum` does: ARITHMETIC_OVERFLOW under `ansi`, else the
-    * wrapping add.
+  /** The Lloyd step's per-row arithmetic, ONE copy: [[kernelStats]] runs
+    * one per set and partition (or per set over collected points).
+    * Centroids ride as one row-major `k·dim` array; the argmin is the one
+    * nearest fold ([[NearestSqDistLit.fold]]), and slot `k` collects the
+    * rows no centroid claims (every distance NaN), reported as id −1 — the
+    * HOF fold's initial accumulator. Sums add as Spark's long `sum` does:
+    * ARITHMETIC_OVERFLOW under `ansi`, else the wrapping add.
     */
   private final class LloydKernel(cs: Array[Double], k: Int, dim: Int, ansi: Boolean) {
     val sums = new Array[Long]((k + 1) * dim)
     val cnts = new Array[Long](k + 1)
 
-    /** `nearestIdNative`'s fold: `sq_dist`'s left-to-right Σ(c−y)² per
-      * centroid, then strict `<` from Double.MaxValue — the earlier slot
-      * wins ties and a NaN distance never wins.
-      */
-    def nearest(y: Array[Double]): Int = {
-      var best = k; var bd = Double.MaxValue; var j = 0
-      while (j < k) {
-        val o = j * dim
-        var s = 0.0; var d = 0
-        while (d < dim) { val t = cs(o + d) - y(d); s += t * t; d += 1 }
-        if (s < bd) { bd = s; best = j }
-        j += 1
-      }
-      best
-    }
-
     private def plus(a: Long, b: Long): Long = plusLong(a, b, ansi)
 
     /** Assign `y` and add its fixed-point coordinates `fx` to that slot. */
     def add(y: Array[Double], fx: Array[Long]): Unit = {
-      val j = nearest(y)
+      val j = NearestSqDistLit.fold(cs, k, dim, y, dim, null)
       val o = j * dim
       var d = 0
       while (d < dim) { sums(o + d) = plus(sums(o + d), fx(d)); d += 1 }
@@ -663,6 +670,147 @@ object KMeans {
     }
   }
 
+  // -------------------------------------------------------- point placement
+
+  /** One point as a scan's per-row body reads it — a cursor that its
+    * placement moves from row to row, so a body must not keep it: `y` (null
+    * for a null `Y`) with its first `n` coordinates this row's, the key `i`
+    * and the k-means|| coins `u` (round r's at `r − 1`) where the placement
+    * carries them, and `fx`, the [[fxEncode]]s collected rows hold.
+    */
+  private[graft] final class Point {
+    var y: Array[Double] = _
+    var n = 0
+    var i = 0L
+    var u: Array[Double] = _
+    var fx: Array[Long] = _
+  }
+
+  /** Where a fit's points live, chosen once per fit: the partitioned plan
+    * or the collected key-ordered rows. Every scan — the Lloyd step, the
+    * k-means|| passes, the elbow — is ONE per-row body over [[Point]]s, and
+    * the placement only decides where it runs.
+    */
+  private[graft] sealed abstract class Points {
+    /** `spark.sql.ansi.enabled` of the points' session. */
+    def ansi: Boolean
+
+    /** (dim, fxScale) of the encodes the points hold, if they hold any. */
+    def fxAt: Option[(Int, Double)] = None
+
+    /** `f` over the points: once per partition, in partition order, or
+      * once over every row, in key order.
+      */
+    def partials[A: ClassTag](f: Iterator[Point] => A): Array[A]
+
+    /** [[seedFirstK]]: the `k` smallest-key points, j = 1..k. */
+    def firstK(k: Int): Seq[Centroid]
+
+    /** The points whose key `keep` accepts; `keepCol` is the same
+      * predicate as a column over `i`.
+      */
+    def where(keep: Long => Boolean, keepCol: Column): Points
+  }
+
+  private[graft] object Points {
+    /** `points`' rows as a plan, scanned per partition under
+      * [[withIterConf]]; with `coins` each row also carries its key and
+      * those columns.
+      */
+    def partitioned(points: DataFrame, coins: Seq[Column] = Nil): Points =
+      new Partitioned(points, coins)
+
+    /** `points`' rows on the driver in key order, from ONE select: a
+      * placement per column of `ys`, sharing the keys and `coins`. Each
+      * row's encodes at (`dim`, `fxScale`) are made on its first scan and
+      * kept.
+      */
+    def collected(points: DataFrame, dim: Int, fxScale: Double,
+        ys: Seq[Column] = Seq(col("Y")), coins: Seq[Column] = Nil): Seq[Collected] = {
+      val rows = points.select(col("i") +: (ys ++ coins): _*).collect().sortBy(_.getLong(0))
+      val keys = rows.map(_.getLong(0))
+      val us = if (coins.isEmpty) null
+        else rows.map(r => Array.tabulate(coins.size)(c => r.getDouble(1 + ys.size + c)))
+      ys.indices.map { s =>
+        val yOf = rows.map(r => if (r.isNullAt(1 + s)) null else r.getSeq[Double](1 + s).toArray)
+        new Collected(keys, yOf, us, new Array[Array[Long]](rows.length), (dim, fxScale),
+          ansi(points), _ => true)
+      }
+    }
+  }
+
+  private final class Partitioned(df: DataFrame, coins: Seq[Column]) extends Points {
+    val ansi: Boolean = KMeans.ansi(df)
+    // planned once, on the first scan
+    private lazy val rows =
+      df.select(col("Y") +: (if (coins.isEmpty) Nil else col("i") +: coins): _*).queryExecution.toRdd
+
+    def partials[A: ClassTag](f: Iterator[Point] => A): Array[A] = withIterConf(df.sparkSession) {
+      val nu = coins.size
+      rows.mapPartitions { it =>
+        val p = new Point
+        var y = new Array[Double](0)
+        p.u = new Array[Double](nu)
+        Iterator.single(f(it.map { row =>
+          if (row.isNullAt(0)) { p.y = null; p.n = 0 }
+          else {
+            val a = row.getArray(0)
+            p.n = a.numElements()
+            if (y.length < p.n) y = new Array[Double](p.n)
+            var d = 0
+            while (d < p.n) { y(d) = a.getDouble(d); d += 1 }
+            p.y = y
+          }
+          if (nu > 0) {
+            p.i = row.getLong(1)
+            (0 until nu).foreach(c => p.u(c) = row.getDouble(2 + c))
+          }
+          p
+        }))
+      }.collect()
+    }
+
+    def firstK(k: Int): Seq[Centroid] = seedFirstK(df, k)
+
+    def where(keep: Long => Boolean, keepCol: Column): Points =
+      new Partitioned(df.filter(keepCol), coins)
+  }
+
+  /** The collected placement: the key-ordered rows `keep` accepts. `ys`
+    * and the encode cache `fxs` cover every row.
+    */
+  private[graft] final class Collected private[KMeans] (keys: Array[Long],
+      val ys: Array[Array[Double]], us: Array[Array[Double]], fxs: Array[Array[Long]],
+      dimScale: (Int, Double), val ansi: Boolean, keep: Long => Boolean) extends Points {
+    override def fxAt: Option[(Int, Double)] = Some(dimScale)
+
+    def partials[A: ClassTag](f: Iterator[Point] => A): Array[A] = {
+      val (dim, fxScale) = dimScale
+      val p = new Point
+      Array(f(kept.map { ix =>
+        p.y = ys(ix)
+        p.n = if (p.y == null) 0 else p.y.length
+        if (fxs(ix) == null && p.n >= dim) {
+          val fx = new Array[Long](dim)
+          encodeInto(p.y, fx, fxScale, ansi)
+          fxs(ix) = fx
+        }
+        p.fx = fxs(ix)
+        p.i = keys(ix)
+        if (us != null) p.u = us(ix)
+        p
+      }))
+    }
+
+    def firstK(k: Int): Seq[Centroid] =
+      kept.take(k).zipWithIndex.map { case (ix, j) => Centroid(j + 1L, ys(ix).toSeq) }.toSeq
+
+    def where(accept: Long => Boolean, keepCol: Column): Points =
+      new Collected(keys, ys, us, fxs, dimScale, ansi, i => keep(i) && accept(i))
+
+    private def kept: Iterator[Int] = keys.indices.iterator.filter(ix => keep(keys(ix)))
+  }
+
   // ------------------------------------------------------------ convergence
 
   /** Total centroid movement between two consecutive steps — the intended
@@ -684,14 +832,12 @@ object KMeans {
   // ----------------------------------------------------- size-aware local fit
 
   /** Size-aware fit: identical results to [[fit]] (bitwise, pinned in
-    * KMeansSpec), picked by input size — the optimizer move every mature
-    * engine makes. When `rows·dim` fits comfortably on the driver
-    * (`localMaxCells`, default 4M doubles = 32 MB), the 30-odd Lloyd
-    * iterations stop paying ~0.1 s of per-job scheduling each and run as a
-    * tight local loop on data collected ONCE; past the threshold — i.e. at
-    * any real scale — the distributed loop runs unchanged. The `plusPlus`
-    * seeding path stays distributed at any size: its `rand(seed)` draw is
-    * partition-seeded and has no order-independent local twin.
+    * KMeansSpec), the placement picked by input size. While `rows·dim` fits
+    * on the driver (`localMaxCells`, default 4M doubles = 32 MB) the points
+    * are collected once ([[fitLocal]]) and the 30-odd Lloyd steps stop
+    * paying ~0.1 s of per-job scheduling each; past it they stay
+    * partitioned ([[fit]]). `plusPlus` seeding stays partitioned at any
+    * size: its `rand(seed)` draw is seeded per partition.
     */
   def fitAuto(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
@@ -704,94 +850,18 @@ object KMeans {
     else fitLocal(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed)
   }
 
-  /** Driver-local twin of [[fit]] for small inputs — produces the identical
-    * `FitResult` bit-for-bit. Exactness by construction:
-    *  - the ONE collect computes the k-means|| sampling coins with the
-    *    SAME Catalyst expression the distributed path uses ([[coinCol]]),
-    *    so no local re-implementation of Spark hashing exists to drift;
-    *  - the Lloyd steps and the candidate weights run the distributed
-    *    step's own [[LloydKernel]] (argmin, [[fxEncode]]);
-    *  - cluster sums are exact longs, order-independent by definition;
-    *  - `phi` is the same `sum(round(d²)::long)` integer total
-    *    (`roundHalfUpLong` is pinned against Spark's `round()` in
-    *    PropertySpec).
+  /** [[fit]] over COLLECTED points, for small inputs — the identical
+    * `FitResult` bit for bit: ONE select brings the rows and, for k-means||,
+    * every round's coin to the driver, and the same seeding passes and
+    * [[iterate]] run over them.
     */
   def fitLocal(points: DataFrame, k: Int, dim: Int, tol: Double,
       maxIter: Int, seed: Long, fxScale: Double, parallelSeed: Boolean,
       rounds: Int = 3, overFactor: Double = 2.0): FitResult = {
-    // one pass over the data: Y and the per-round coins, in key order (the
-    // local stand-in for every orderBy("i") in the seeders)
-    val uCols = (1 to (if (parallelSeed) rounds else 0))
-      .map(r => coinCol(seed, r).as(s"_u$r"))
-    val rows = points.select(Seq(col("i"), col("Y").as("_y")) ++ uCols: _*)
-      .orderBy("i").collect()
-    val nRows = rows.length
-    val ys = Array.tabulate(nRows)(ix => rows(ix).getSeq[Double](1).toArray)
-    val ansiOn = ansi(points)
-    val fxs = encodeAll(ys, dim, fxScale, ansiOn)
-    val us = Array.tabulate(nRows)(ix =>
-      Array.tabulate(uCols.size)(r => rows(ix).getDouble(2 + r)))
-
-    // sq_dist's exact fold: left-to-right acc += (c[d]-y[d])²
-    def sqd(c: Array[Double], y: Array[Double]): Double = {
-      var s = 0.0; var d = 0
-      val lim = math.min(c.length, y.length)
-      while (d < lim) { val t = c(d) - y(d); s += t * t; d += 1 }
-      s
-    }
-    def nearestSq(y: Array[Double], css: Array[Array[Double]]): Double = {
-      var m = Double.MaxValue; var j = 0
-      while (j < css.length) { val v = sqd(css(j), y); if (v < m) m = v; j += 1 }
-      m
-    }
-
-    // ---- seeding: local twin of seedParallel / seedFirstK
-    var cs: Seq[Centroid] =
-      if (!parallelSeed) {
-        (0 until math.min(k, nRows)).map(ix => Centroid(ix + 1L, ys(ix).toSeq))
-      } else {
-        var cands = Vector[Seq[Double]](ys(0).toSeq)
-        val l = overFactor * k
-        for (r <- 1 to rounds) {
-          val candArr = cands.map(_.toArray).toArray
-          // phi: the same sum(round(d²·1.0)::long) integer total as
-          // sumFx(d2, 1.0) — order-independent by integer addition
-          var phiL = 0L
-          var ix = 0
-          while (ix < nRows) { phiL += roundHalfUpLong(nearestSq(ys(ix), candArr) * 1.0); ix += 1 }
-          val phi = phiL.toDouble / 1.0
-          if (phi > 0) {
-            val drawn = (0 until nRows).iterator
-              .filter(ix => us(ix)(r - 1) * phi < nearestSq(ys(ix), candArr) * l)
-              .map(ix => ys(ix).toVector).toVector
-            cands = (cands ++ drawn).distinct
-          }
-        }
-        val candArr = cands.map(_.toArray).toArray
-        // the distributed weight pass's argmin; slot n (no winner) drops
-        val kern = new LloydKernel(candArr.flatten, candArr.length, dim, ansiOn)
-        val wByIx = new Array[Long](candArr.length + 1)
-        var ix = 0
-        while (ix < nRows) { wByIx(kern.nearest(ys(ix))) += 1; ix += 1 }
-        localWeightedKMeans(candArr, wByIx.init.map(_.toDouble), k, seed)
-          .zipWithIndex.map { case (c, i2) => Centroid(i2 + 1L, c.toSeq) }
-      }
-
-    // ---- Lloyd loop: same stop rule, log shape, and empty-cluster drop
-    var log = cs.map(c => LogEntry(0L, c.j, c.c))
-    var step = 0L
-    var move = Double.MaxValue
-    while (move >= tol && step < maxIter) {
-      step += 1
-      val next = localStep(ys, fxs, cs, dim, fxScale, ansiOn)
-      if (next.size < cs.size)
-        logger.warn(
-          s"kmeans: ${cs.size - next.size} cluster(s) emptied at step $step (reference drop semantics)")
-      move = movement(cs, next)
-      cs = next
-      log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
-    }
-    FitResult(cs, log, step, move)
+    val held = Points.collected(points, dim, fxScale,
+      coins = if (parallelSeed) coinCols(seed, rounds) else Nil).head
+    val cs = if (parallelSeed) parallelSeeds(held, k, seed, rounds, overFactor) else held.firstK(k)
+    iterate(held, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
   }
 
   /** Spark's `round(x)` for doubles (`BigDecimal(x).setScale(0, HALF_UP)`)
@@ -864,17 +934,21 @@ object KMeans {
         if (parallelSeed) seedParallel(points, k, seed)
         else if (plusPlus) seedPlusPlus(points, k, seed)
         else seedFirstK(points, k)
-      iterate(points, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
+      iterate(Points.partitioned(points), Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
     }
 
-  /** Per-iteration query tuning for the fit loop, restored on exit.
+  /** Per-iteration query tuning, restored on exit: around every scan of
+    * the partitioned placement (planned under it on its first scan),
+    * [[fit]]'s seeding and [[fitMiniBatch]]'s size gate and batches. The
+    * collected placement's scans leave the session conf alone.
     *
-    * The Lloyd steps and the k-means++ rounds shuffle nothing; the
-    * k-means|| rounds' aggregates ([[seedParallel]]) carry ≤ k·P rows
-    * after map-side partial aggregation, so the right reducer
-    * count is 1 — the default final-stage tasks are pure scheduling
-    * overhead, and AQE's per-stage re-planning adds ~50 ms to every one of
-    * the loop's tiny jobs. Points-scale data never crosses a shuffle.
+    * The Lloyd steps, the k-means|| passes and the k-means++ rounds are
+    * kernel jobs that shuffle nothing; what still plans a query (the
+    * min-key pick, a points frame with an aggregate under it) carries few
+    * rows after map-side partial aggregation, so the right reducer count is
+    * 1 — the default final-stage tasks are pure scheduling overhead, and
+    * AQE's per-stage re-planning adds ~50 ms to every one of the loop's
+    * tiny jobs. Points-scale data never crosses a shuffle.
     *
     * Reentrancy: concurrent fits on one session (gapStatistic runs its
     * per-k fits in parallel) must not interleave save/restore pairs — a
@@ -923,7 +997,7 @@ object KMeans {
   def fitFrom(points: DataFrame, centroids: Seq[Centroid], dim: Int,
       tol: Double = 0.01, maxIter: Int = 50, fxScale: Double = 1e6,
       startStep: Long = 0L): FitResult =
-    iterate(points, Seq(centroids), dim, tol, maxIter, fxScale, startStep).head
+    iterate(Points.partitioned(points), Seq(centroids), dim, tol, maxIter, fxScale, startStep).head
 
   /** Fixed rational inverse-CDF draws shared by the ORACLE-REPLAYABLE
     * bounded fits ([[fitBounded]], Quality.gapStatisticFitted): the u for
@@ -953,70 +1027,64 @@ object KMeans {
     * the published cost of hash-exactness (the km_wcr_log contract); on
     * data where Lloyd converges within the budget the bounded and free
     * fits coincide.
+    *
+    * Placement, as in [[fitAuto]]: while `rows·dim ≤ localMaxCells` the ~k·9
+    * seeding jobs and the Lloyd jobs would be pure fixed cost, so the points
+    * are collected and [[boundedFits]] runs the chain over them,
+    * bit-identical (KMeansSpec); past the bound, or where it declines, the
+    * distributed chain runs.
     */
   def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e6,
       weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult = {
-    // the fitAuto discipline: at sample sizes the ~k·3 seeding jobs plus
-    // the Lloyd scans are pure per-job fixed cost — below the cell
-    // threshold the whole chain runs driver-local with BIT-IDENTICAL
-    // results (pinned in KMeansSpec); past it the distributed chain below
-    // runs unchanged
     lazy val n = points.count()
-    if (n * dim <= localMaxCells)
-      fitBoundedLocal(points, k, dim, tol, lloydSteps, fxScale, weightScale)
-    else {
-      var seeds = seedFirstK(points, 1)
-      (2 to k).foreach { r =>
-        val (uN, uD) = fixedU(r)
-        val drawn = seedNextInverseCdf(points, seeds, uNum = uN, uDen = uD,
-          weightScale = weightScale).collect()
-        require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
-        seeds = seeds :+ Centroid(drawn.head.getLong(0),
-          drawn.head.getSeq[Double](2))
-      }
-      fitFrom(points, seeds, dim, tol, maxIter = lloydSteps, fxScale = fxScale)
+    val local = if (n * dim > localMaxCells) None
+      else boundedFits(Points.collected(points, dim, fxScale).head, Seq(k), dim, tol,
+        lloydSteps, fxScale, weightScale)
+    local.fold(fitFrom(points, inverseCdfSeeds(points, k, weightScale), dim, tol,
+      maxIter = lloydSteps, fxScale = fxScale))(_.head)
+  }
+
+  /** [[fitBounded]]'s seeds over a frame: the min-key point, then
+    * [[seedNextInverseCdf]]'s draws 2..`kMax` at [[fixedU]].
+    */
+  private[operators] def inverseCdfSeeds(points: DataFrame, kMax: Int,
+      weightScale: Double): Seq[Centroid] =
+    (2 to kMax).foldLeft(seedFirstK(points, 1)) { (seeds, r) =>
+      val (uN, uD) = fixedU(r)
+      val drawn = seedNextInverseCdf(points, seeds, uN, uD, weightScale).collect()
+      require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
+      seeds :+ Centroid(drawn.head.getLong(0), drawn.head.getSeq[Double](2))
     }
-  }
 
-  /** Driver-local twin of [[fitBounded]]'s distributed chain — identical
-    * FitResult bit-for-bit (pinned in KMeansSpec): ONE key-ordered collect,
-    * then [[fitBoundedRows]].
+  /** [[fitBounded]]'s chain over collected points, one fit per k: the
+    * inverse-CDF draws replayed over the key-ordered rows (`roundHalfUpLong`
+    * ≡ Spark `round`, pinned in PropertySpec; the cumulative pick walks key
+    * order like the windowed prefix sum), run ONCE to `ks.max` — k's seeds
+    * are the k-prefix — then every k's Lloyd loop in lockstep ([[iterate]]).
+    * Also Quality.gapStatisticFitted's collected chain.
+    *
+    * None — the caller runs the distributed chain — when a draw's
+    * double-domain weight total passes a quarter of its overflow bound:
+    * past half of it the distributed draw rescales, from a total summed in
+    * partition order, so no replay can promise its pick; the quarter leaves
+    * room for summation-order ulps.
     */
-  private def fitBoundedLocal(points: DataFrame, k: Int, dim: Int,
-      tol: Double, lloydSteps: Int, fxScale: Double,
-      weightScale: Double): FitResult = {
-    val ys = points.select(col("i"), col("Y")).orderBy("i").collect()
-      .map(_.getSeq[Double](1).toArray)
-    fitBoundedRows(ys, Seq(k), dim, tol, lloydSteps, fxScale, weightScale, ansi(points)).head
-  }
-
-  /** [[fitBounded]]'s chain over key-ordered rows `ys` held on the driver,
-    * one fit per k: the same inverse-CDF draws (`roundHalfUpLong` ≡ Spark
-    * `round`, pinned in PropertySpec; the cumulative pick walks key order
-    * exactly like the windowed prefix sum), run ONCE to `ks.max` — round r
-    * reads only the first r − 1 seeds, so k's seeds are the k-prefix — then
-    * per k [[fitFrom]]'s own Lloyd step ([[LloydKernel]]) and j-ordered
-    * movement loop. Also Quality.gapStatisticFitted's local twin.
-    */
-  private[operators] def fitBoundedRows(ys: Array[Array[Double]], ks: Seq[Int],
-      dim: Int, tol: Double, lloydSteps: Int, fxScale: Double,
-      weightScale: Double, ansiOn: Boolean): Seq[FitResult] = {
+  private[operators] def boundedFits(points: Collected, ks: Seq[Int], dim: Int, tol: Double,
+      lloydSteps: Int, fxScale: Double, weightScale: Double): Option[Seq[FitResult]] = {
+    val ys = points.ys
     require(ys.nonEmpty, "fitBounded on an empty relation")
-    def sqd(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var d = 0
-      while (d < dim) { val t = a(d) - b(d); s += t * t; d += 1 }
-      s
-    }
-    def minSq(y: Array[Double], cs: Seq[Array[Double]]): Double =
-      cs.map(c => sqd(y, c)).min
     def sameY(a: Array[Double], b: Array[Double]): Boolean =
       (0 until dim).forall(d => a(d) == b(d)) // SQL value equality
     var chosen = Vector(ys.head)
-    (2 to ks.max).foreach { r =>
+    for (r <- 2 to ks.max) {
       val (uN, uD) = fixedU(r)
+      val bound = Long.MaxValue / math.max(uN, math.max(uD, 1L))
+      val (cs, kc, cd) = foldOf(chosen.map(_.toSeq))
       val surv = ys.filter(y => !chosen.exists(c => sameY(c, y)))
-      val ws = surv.map(y => roundHalfUpLong(minSq(y, chosen) * weightScale))
+      val ws = surv.map(y =>
+        roundHalfUpLong(NearestSqDistLit.sqDist(cs, kc, cd, y, y.length) * weightScale))
+      if (ws.map(_.toDouble).sum > bound.toDouble * 0.25) return None
       val total = ws.sum
       var cw = 0L; var pick = -1; var ix = 0
       while (ix < surv.length && pick < 0) {
@@ -1027,24 +1095,8 @@ object KMeans {
       require(pick >= 0, s"k-means++ draw $r returned no row")
       chosen = chosen :+ surv(pick)
     }
-    // fixed-point coordinates hoisted OUT of the Lloyd loops: the per-dim
-    // encode of y·fxScale is invariant across steps and fits
-    val fys = encodeAll(ys, dim, fxScale, ansiOn)
-    ks.map { k =>
-      var cs: Seq[Centroid] =
-        chosen.take(k).zipWithIndex.map { case (c, ix) => Centroid(ix + 1L, c.toSeq) }
-      var log = cs.map(c => LogEntry(0L, c.j, c.c))
-      var step = 0L
-      var move = Double.MaxValue
-      while (move >= tol && step < lloydSteps) {
-        step += 1
-        val next = localStep(ys, fys, cs, dim, fxScale, ansiOn)
-        move = movement(cs, next)
-        cs = next
-        log = log ++ cs.map(c => LogEntry(step, c.j, c.c))
-      }
-      FitResult(cs, log, step, move)
-    }
+    Some(iterate(points, ks.map(k => chosen.take(k).zipWithIndex.map { case (c, ix) =>
+      Centroid(ix + 1L, c.toSeq) }), dim, tol, lloydSteps, fxScale, startStep = 0L))
   }
 
   /** Mini-batch k-means (Sculley 2010, "Web-scale k-means clustering"):
@@ -1061,9 +1113,14 @@ object KMeans {
     * AGGREGATED form of Sculley's per-point rule — for a centroid that
     * absorbed `cnt` batch points summing to `s`:
     * `c ← c + (s − cnt·c) / n_j_total` — one k-sized driver update per
-    * step off the SAME single-stage sufficient-stats collect as the fit
-    * loop's step (one kernel scan of the batch, ≤ P partial arrays to the
-    * driver, no shuffle).
+    * step off the SAME sufficient-stats scan as the fit loop's step (one
+    * kernel scan of the batch, ≤ P partial arrays to the driver, no
+    * shuffle).
+    *
+    * One loop, either placement: while `rows·dim ≤ localMaxCells` the points
+    * are collected once (saving ~20 jobs of fixed cost) and each step scans
+    * the rows the int64 LCG predicate keeps; past it, the filtered frame's
+    * plan. The FitResult is bit-identical (pinned in KMeansSpec).
     *
     * Convergence is monitored with the same [[movement]] metric and `tol`;
     * the log records each step's centroids so the WCR history stays
@@ -1078,42 +1135,11 @@ object KMeans {
     require(batchFrac > 0 && batchFrac <= 1, s"batchFrac $batchFrac not in (0,1]")
     val mod = 2147483647L
     val cut = (batchFrac * mod).toLong
-    // DRIVER-LOCAL TWIN under `localMaxCells` (r19, the fitBounded gate
-    // verbatim): each distributed iteration is one sufficient-stats job —
-    // 20 steps × (fresh batch-filter plan + job dispatch) profiled as
-    // ~2 s of fixed cost for microseconds of argmin/sum work at sample
-    // sizes. Below the bound the points are collected ONCE and every step
-    // replays the exact distributed arithmetic: the LCG batch draw (same
-    // int64 `(i·a + c) % m < cut`), the distributed step's own
-    // [[LloydKernel]], and the same driver-side learning-rate fold below —
-    // so the FitResult is bit-identical (KMeansSpec pins local ≡
-    // distributed). Past the bound the distributed loop runs unchanged.
     lazy val nRows = points.count()
-    val localRows: Option[Array[(Long, Array[Double])]] =
-      if (localMaxCells > 0 && nRows * dim <= localMaxCells)
-        Some(points.select(col("i"), col("Y")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)))
-      else None
-    def localStats(rows: Array[(Long, Array[Double])], step: Long, cs: Seq[Centroid]): Stats = {
-      val ansiOn = ansi(points)
-      val kern = new LloydKernel(flatten(cs, dim), cs.size, dim, ansiOn)
-      val fx = new Array[Long](dim)
-      val salt = 12345L + seed + step
-      var rix = 0
-      while (rix < rows.length) {
-        val (i, y) = rows(rix)
-        if ((i * 1103515245L + salt) % mod < cut) { encodeInto(y, fx, 1e6, ansiOn); kern.add(y, fx) }
-        rix += 1
-      }
-      kern.stats(ids(cs).toArray)
-    }
-    var cs = localRows match {
-      case Some(rows) => // seedFirstK: k smallest keys, j = 1..k in key order
-        rows.sortBy(_._1).take(k).zipWithIndex.map { case ((_, y), ix) =>
-          Centroid(ix + 1L, y.toSeq)
-        }.toSeq
-      case None => seedFirstK(points, k)
-    }
+    val placed =
+      if (localMaxCells > 0 && nRows * dim <= localMaxCells) Points.collected(points, dim, 1e6).head
+      else Points.partitioned(points)
+    var cs = placed.firstK(k)
     var log = cs.map(c => LogEntry(0L, c.j, c.c))
     val absorbed = scala.collection.mutable.Map.empty[Long, Long]
       .withDefaultValue(0L)
@@ -1121,13 +1147,10 @@ object KMeans {
     var move = Double.MaxValue
     while (move >= tol && step < maxIter) {
       step += 1
-      val stats = localRows match {
-        case Some(rows) => localStats(rows, step, cs)
-        case None =>
-          val batch = points.filter(
-            (col("i") * 1103515245L + lit(12345L + seed + step)) % mod < cut)
-          kernelStats(yRows(batch), Seq(cs), dim, fxScale = 1e6, ansi(points)).head
-      }
+      val salt = 12345L + seed + step
+      val batch = placed.where(i => (i * 1103515245L + salt) % mod < cut,
+        (col("i") * 1103515245L + lit(salt)) % mod < cut)
+      val stats = kernelStats(batch, Seq(cs), dim, fxScale = 1e6).head
       val next = cs.map { c =>
         stats.get(c.j) match {
           case Some((sums, cnt)) =>
@@ -1147,48 +1170,46 @@ object KMeans {
     FitResult(cs, log, step, move)
   }
 
-  /** The fit loop — the ONE Lloyd loop of the distributed fits ([[fit]],
-    * [[fitFrom]], the choose-K sweep and the fitted gap statistic): every
-    * centroid set in `inits` iterates in LOCKSTEP over `points`, one
-    * [[kernelStats]] job per step serving all sets still moving. Each set
-    * keeps its own stop rule (movement < `tol` or `maxIter` steps), log and
-    * emptied-cluster warning, so its [[FitResult]] is bit-identical to
-    * fitting it alone (pinned in KMeansSpec). Steps are numbered from
-    * `startStep` (see [[fitFrom]]).
+  /** The fit loop — the ONE Lloyd loop of every fit ([[fit]], [[fitLocal]],
+    * [[fitFrom]], [[fitBounded]], the choose-K sweep and the fitted gap
+    * statistic), over either placement: every centroid set in `inits`
+    * iterates in LOCKSTEP over `points`, one [[kernelStats]] scan per step
+    * serving all sets still moving. Each set keeps its own stop rule
+    * (movement < `tol` or `maxIter` steps), log and emptied-cluster
+    * warning, so its [[FitResult]] is bit-identical to fitting it alone,
+    * partitioned or collected (pinned in KMeansSpec). Steps are numbered
+    * from `startStep` (see [[fitFrom]]).
     */
-  private[graft] def iterate(points: DataFrame, inits: Seq[Seq[Centroid]], dim: Int,
-      tol: Double, maxIter: Int, fxScale: Double, startStep: Long): Seq[FitResult] =
-    withIterConf(points.sparkSession) {
-      requireFx(fxScale)
-      final class Run(var cs: Seq[Centroid]) {
-        // a resumed run's starting centroids were already logged (at
-        // startStep) by the run that produced them — only a fresh fit logs
-        // its seeds
-        var log: Seq[LogEntry] = if (startStep == 0L) cs.map(c => LogEntry(0L, c.j, c.c)) else Nil
-        var step = startStep
-        var move = Double.MaxValue
-        def moving: Boolean = move >= tol && step < startStep + maxIter
-      }
-      val runs = inits.map(new Run(_))
-      // the plan is built once; each step only re-runs the kernel over it
-      lazy val rows = yRows(points)
-      var active = runs.filter(_.moving)
-      while (active.nonEmpty) {
-        val stats = kernelStats(rows, active.map(_.cs), dim, fxScale, ansi(points))
-        active.zip(stats).foreach { case (r, st) =>
-          r.step += 1
-          val next = centroidsOf(st, fxScale)
-          if (next.size < r.cs.size)
-            logger.warn(s"kmeans: ${r.cs.size - next.size} cluster(s) emptied at step " +
-              s"${r.step} (reference drop semantics)")
-          r.move = movement(r.cs, next)
-          r.cs = next
-          r.log = r.log ++ r.cs.map(c => LogEntry(r.step, c.j, c.c))
-        }
-        active = active.filter(_.moving)
-      }
-      runs.map(r => FitResult(r.cs, r.log, r.step, r.move))
+  private[graft] def iterate(points: Points, inits: Seq[Seq[Centroid]], dim: Int,
+      tol: Double, maxIter: Int, fxScale: Double, startStep: Long): Seq[FitResult] = {
+    requireFx(fxScale)
+    final class Run(var cs: Seq[Centroid]) {
+      // a resumed run's starting centroids were already logged (at
+      // startStep) by the run that produced them — only a fresh fit logs
+      // its seeds
+      var log: Seq[LogEntry] = if (startStep == 0L) cs.map(c => LogEntry(0L, c.j, c.c)) else Nil
+      var step = startStep
+      var move = Double.MaxValue
+      def moving: Boolean = move >= tol && step < startStep + maxIter
     }
+    val runs = inits.map(new Run(_))
+    var active = runs.filter(_.moving)
+    while (active.nonEmpty) {
+      val stats = kernelStats(points, active.map(_.cs), dim, fxScale)
+      active.zip(stats).foreach { case (r, st) =>
+        r.step += 1
+        val next = centroidsOf(st, fxScale)
+        if (next.size < r.cs.size)
+          logger.warn(s"kmeans: ${r.cs.size - next.size} cluster(s) emptied at step " +
+            s"${r.step} (reference drop semantics)")
+        r.move = movement(r.cs, next)
+        r.cs = next
+        r.log = r.log ++ r.cs.map(c => LogEntry(r.step, c.j, c.c))
+      }
+      active = active.filter(_.moving)
+    }
+    runs.map(r => FitResult(r.cs, r.log, r.step, r.move))
+  }
 
   // ------------------------------------------------------- model persistence
 

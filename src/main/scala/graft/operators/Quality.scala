@@ -122,9 +122,10 @@ object Quality {
     import spark.implicits._
     val seeds = if (ks.isEmpty) Nil
       else KMeans.seedPlusPlus(points, ks.max, seed)
-    val fits = KMeans.iterate(points, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
+    val placed = KMeans.Points.partitioned(points)
+    val fits = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
       fxScale = 1e6, startStep = 0L)
-    scoreKs(points, sample, ks.zip(fits.map(_.centroids)), d1Scale, d2Scale)
+    scoreKs(placed, sample, ks.zip(fits.map(_.centroids)), d1Scale, d2Scale)
       .map { case (k, d1, d2, si) => (k, d1.get, d2.get, si.getOrElse(Double.NaN)) }
       .toDF("k", "elbow_d1", "elbow_d2", "silhouette")
   }
@@ -140,13 +141,13 @@ object Quality {
     require(ks.nonEmpty && ks.max <= seeds.size, s"need ${ks.max} seeds, got ${seeds.size}")
     val spark = points.sparkSession
     import spark.implicits._
-    scoreKs(points, sample, ks.map(k => k -> seeds.take(k)), d1Scale, d2Scale,
-      dScale, maxCollectRows).toDF("k", "elbow_d1", "elbow_d2", "si")
+    scoreKs(KMeans.Points.partitioned(points), sample, ks.map(k => k -> seeds.take(k)),
+      d1Scale, d2Scale, dScale, maxCollectRows).toDF("k", "elbow_d1", "elbow_d2", "si")
   }
 
   /** (k, elbow_d1, elbow_d2, si) per (k, centroids) set, each value
     * bit-identical to [[elbow]] / [[silhouetteSimplified]] on that set alone
-    * (None for null). All elbows come from ONE kernel job over `points`
+    * (None for null). All elbows come from ONE scan of `points`
     * ([[elbowSums]]). The sample is collected once (bounded, one job when
     * its partitions are balanced: [[collectAtMost]]) and labelled per set on the driver by the
     * Lloyd kernel's argmin ([[KMeans.nearestIds]], ≡ [[KMeans.assign]]);
@@ -156,11 +157,11 @@ object Quality {
     * rows), which [[simplifiedSi]] finishes. Past the bound each set runs
     * [[silhouettePairStatsJoin]] over the cached sample instead.
     */
-  private def scoreKs(points: DataFrame, sample: DataFrame, sets: Seq[(Int, Seq[Centroid])],
+  private def scoreKs(points: KMeans.Points, sample: DataFrame, sets: Seq[(Int, Seq[Centroid])],
       d1Scale: Double, d2Scale: Double, dScale: Double = 1e3,
       maxCollectRows: Int = 1000000): Seq[(Long, Option[Double], Option[Double], Option[Double])] = {
     if (sets.isEmpty) return Nil
-    val spark = points.sparkSession
+    val spark = sample.sparkSession
     def opt(r: Row, ix: Int) = if (r.isNullAt(ix)) None else Some(r.getDouble(ix))
     val e = elbowSums(points, sets.map(_._2), Some(d1Scale), d2Scale)
     val sel = sample.select(col("i"), col("Y"))
@@ -192,7 +193,7 @@ object Quality {
           }
           Iterator.single(acc)
         }.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x)))
-        sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, KMeans.ansi(points)))
+        sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, points.ansi))
     }
     sets.indices.map(ix => (sets(ix)._1.toLong, e(ix)._1, e(ix)._2, si(ix)))
   }
@@ -231,31 +232,30 @@ object Quality {
       .flatMap(p => byPart.getOrElse(p, counted(p)._2)).map(toRow).toArray)
   }
 
-  /** [[elbow]]'s sums for every centroid set, from ONE kernel job over
-    * `points`' `Y` rows: per row and set, the squared distance `m` that
-    * `nearest_sq_dist` computes ([[NearestSqDistLit]]'s own `compute`),
-    * encoded as `round(sqrt(m)·d1Scale)::long` and `round(m·d2Scale)::long`
-    * ([[KMeans.fxEncode]], CAST_OVERFLOW under ANSI) and added as Spark's
-    * long `sum` adds ([[KMeans.plusLong]]). A null `Y` is skipped, as `sum`
-    * skips it, so with no `Y` at all both sums are None (null); `d1Scale`
-    * None leaves the d1 sum out. Bit-identical to [[elbow]] per set
-    * (QualitySpec).
+  /** [[elbow]]'s sums for every centroid set, from ONE scan of the
+    * placement: per point and set, the squared distance `m` that
+    * `nearest_sq_dist` computes ([[NearestSqDistLit.sqDist]], the one
+    * nearest fold), encoded as `round(sqrt(m)·d1Scale)::long` and
+    * `round(m·d2Scale)::long` ([[KMeans.fxEncode]], CAST_OVERFLOW under
+    * ANSI) and added as Spark's long `sum` adds ([[KMeans.plusLong]]). A
+    * null `Y` is skipped, as `sum` skips it, so with no `Y` at all both sums
+    * are None (null); `d1Scale` None leaves the d1 sum out. Bit-identical to
+    * [[elbow]] per set (QualitySpec).
     */
-  private def elbowSums(points: DataFrame, sets: Seq[Seq[Centroid]], d1Scale: Option[Double],
+  private def elbowSums(points: KMeans.Points, sets: Seq[Seq[Centroid]], d1Scale: Option[Double],
       d2Scale: Double): Seq[(Option[Double], Option[Double])] = {
-    val ansi = KMeans.ansi(points)
-    // children unused: only `compute` runs
-    val dists = sets.map(cs => NearestSqDistLit(Literal(0L), cs.map(_.c.toArray).toArray)).toArray
-    val partials = KMeans.yRows(points).mapPartitions { it =>
-      val acc = new Array[Long](2 * dists.length) // per set: Σ d1, Σ d2
+    val ansi = points.ansi
+    val folds = sets.map(cs => KMeans.foldOf(cs.map(_.c))).toArray
+    val partials = points.partials { it =>
+      val acc = new Array[Long](2 * folds.length) // per set: Σ d1, Σ d2
       var seen = 0L
-      it.foreach { row =>
-        if (!row.isNullAt(0)) {
-          val y = row.getArray(0)
+      it.foreach { p =>
+        if (p.y != null) {
           seen += 1
           var s = 0
-          while (s < dists.length) {
-            val m = dists(s).compute(y)
+          while (s < folds.length) {
+            val (cs, k, dim) = folds(s)
+            val m = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.n)
             d1Scale.foreach { sc =>
               acc(2 * s) = KMeans.plusLong(acc(2 * s), KMeans.fxEncode(math.sqrt(m) * sc, ansi), ansi)
             }
@@ -264,10 +264,10 @@ object Quality {
           }
         }
       }
-      Iterator.single((seen, acc))
-    }.collect()
+      (seen, acc)
+    }
     val seen = partials.map(_._1).sum
-    val sums = partials.map(_._2).foldLeft(new Array[Long](2 * dists.length)) { (a, b) =>
+    val sums = partials.map(_._2).foldLeft(new Array[Long](2 * folds.length)) { (a, b) =>
       Array.tabulate(a.length)(x => KMeans.plusLong(a(x), b(x), ansi))
     }
     def total(x: Int, scale: Double) = if (seen == 0) None else Some(sums(x).toDouble / scale)
@@ -574,73 +574,40 @@ object Quality {
     * all ks) and one kernel scan gives all the dispersions
     * ([[elbowSums]]' d2 sums at `scale`); the `refSets + 1` set chains are
     * independent and run concurrently (the [[gapStatistic]] pool rule).
-    * Below `localMaxRows` the whole chain instead runs DRIVER-LOCAL with
-    * bit-identical results (the fitAuto discipline, pinned in QualitySpec):
-    * at sample sizes the distributed form is ~130 tiny jobs of pure fixed
-    * cost, while past the threshold the distributed chain takes over
-    * unchanged.
+    * Below `localMaxRows` ONE select collects `Y` and every reference set
+    * (the same `refY` expression) in key order, and each set runs
+    * [[KMeans.boundedFits]] and the same elbow scan over its collected rows:
+    * bit-identical (pinned in QualitySpec), without the distributed form's
+    * ~130 tiny jobs of fixed cost. Where a set's replay declines, the
+    * distributed chain runs.
     */
   def gapStatisticFitted(points: DataFrame, dim: Int, ks: Seq[Int],
       refSets: Int = 3, scale: Double = 0.01, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e4,
       localMaxRows: Long = -1L): DataFrame = {
-    // localMaxRows = -1 (default) → derive from the fitBounded CELL budget
-    // (r19): the collected thing is rows × dim doubles, so the row bound
-    // should scale with 1/dim, not sit at a constant — the old 100k-row
-    // default left the sf0.1 2-D orders binding (150k rows, 300k cells) on
-    // the ~130-job distributed path this local twin exists to avoid, for
-    // the sake of a bound meant to protect against 64-D collects.
-    // localMaxRows = 0 still forces the distributed chain (the QualitySpec
-    // parity seam); an explicit positive bound is honored as before.
+    // localMaxRows = -1 (default) takes fitBounded's 4M-cell budget in rows
+    // of dim doubles; 0 forces the distributed chain (the QualitySpec seam)
     val localRowBound =
       if (localMaxRows >= 0) localMaxRows
       else 4000000L / math.max(dim, 1)
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
-    val kMax = ks.max
-    // fixed rational draws for rounds 2..kMax — the shared KMeans.FixedUs
-    // sequence (also fitBounded's), so every bounded-replayable fit and its
-    // oracle agree on one u schedule
-    def uOf(r: Int): (Long, Long) = KMeans.fixedU(r)
     val (lo, hi) = boundingBox(points, dim)
     def lcgC(b: Int, d: Int): Long = GapLcgC0 + (b * dim + d).toLong * GapLcgCStep
-    def refDf(b: Int): DataFrame = points.select(col("i"),
-      array((0 until dim).map { d =>
-        ((col("i") * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).cast("double") /
-          GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
-      }: _*).as("Y"))
-    val sets: Seq[DataFrame] = points +: (0 until refSets).map(refDf)
+    def refY(b: Int): Column = array((0 until dim).map { d =>
+      ((col("i") * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).cast("double") /
+        GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
+    }: _*)
+    val sets: Seq[DataFrame] =
+      points +: (0 until refSets).map(b => points.select(col("i"), refY(b).as("Y")))
 
-    // ------------------------------------------------- driver-local fast path
-    // The fitAuto discipline: below `localMaxRows` the whole
-    // seed→fit→census chain runs driver-local with BIT-IDENTICAL results
-    // (pinned in QualitySpec) — the distributed form's ~130 tiny jobs are
-    // pure fixed cost at sample sizes, while at real scale the distributed
-    // chain below takes over unchanged. The seeds and fits are fitBounded's
-    // own local chain; the census rounds like Spark's `round`.
-    def localW(): Seq[Seq[Double]] = {
-      val base = points.select(col("i"), col("Y")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-      def sqd(a: Array[Double], b: Array[Double]): Double = {
-        var s = 0.0; var d = 0
-        while (d < dim) { val t = a(d) - b(d); s += t * t; d += 1 }
-        s
-      }
-      def refCoords(b: Int): Array[Array[Double]] = base.map { case (i, _) =>
-        Array.tabulate(dim) { d =>
-          ((i * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).toDouble /
-            GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
+    // per set, over the collected rows: the bounded fits and their dispersions
+    def localW(): Option[Seq[Seq[Double]]] = {
+      val ws = KMeans.Points.collected(points, dim, fxScale, col("Y") +: (0 until refSets).map(refY))
+        .map { held =>
+          KMeans.boundedFits(held, ks, dim, tol, lloydSteps, fxScale, 1.0)
+            .map(fits => elbowSums(held, fits.map(_.centroids), None, scale).map(_._2.get))
         }
-      }
-      // per set: the bounded chain's nested seeds and one fit per k, then
-      // the fixed-point dispersion census
-      (base.map(_._2) +: (0 until refSets).map(refCoords)).map { ys =>
-        KMeans.fitBoundedRows(ys, ks, dim, tol, lloydSteps, fxScale, 1.0,
-          KMeans.ansi(points)).map { fit =>
-          val cents = fit.centroids.map(_.c.toArray)
-          ys.map(y => KMeans.roundHalfUpLong(cents.map(c => sqd(y, c)).min * scale))
-            .sum.toDouble / scale
-        }
-      }
+      if (ws.forall(_.isDefined)) Some(ws.flatten) else None
     }
 
     // per set: nested ++ seeds, every k's bounded fit in one lockstep loop,
@@ -648,23 +615,15 @@ object Quality {
     def wOfSet(df0: DataFrame): Seq[Double] = {
       val df = df0.cache()
       try {
-        var seeds = KMeans.seedFirstK(df, 1)
-        (2 to kMax).foreach { r =>
-          val (uN, uD) = uOf(r)
-          val drawn = KMeans.seedNextInverseCdf(df, seeds,
-            uNum = uN, uDen = uD).collect()
-          require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
-          seeds = seeds :+ Centroid(drawn.head.getLong(0),
-            drawn.head.getSeq[Double](2))
-        }
-        val fitted = KMeans.iterate(df, ks.map(seeds.take), dim, tol = tol,
+        val seeds = KMeans.inverseCdfSeeds(df, ks.max, weightScale = 1.0)
+        val placed = KMeans.Points.partitioned(df)
+        val fitted = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = tol,
           maxIter = lloydSteps, fxScale = fxScale, startStep = 0L)
-        elbowSums(df, fitted.map(_.centroids), None, scale).map(_._2.get)
+        elbowSums(placed, fitted.map(_.centroids), None, scale).map(_._2.get)
       } finally df.unpersist()
     }
     val ws: Seq[Seq[Double]] =
-      if (points.count() <= localRowBound) localW()
-      else {
+      (if (points.count() <= localRowBound) localW() else None).getOrElse {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(sets.size)
         try {
           implicit val ec: scala.concurrent.ExecutionContext =

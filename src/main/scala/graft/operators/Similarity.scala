@@ -2383,20 +2383,22 @@ object Similarity {
     * ties → lowest code, the [[graft.functions.VectorOps.nearestId]] fold)
     * plus the packed radix-k word. At dim=64/m=8/k=16 that is 4 bytes per
     * vector against 512 raw — the 128× scan-size cut. Codebook rides as
-    * literals: zero shuffle, zero joins, codegen-friendly per-row argmin.
+    * literals: zero shuffle, zero joins. The per-row argmin is
+    * `nearestIdNative`'s `zip_with`/`aggregate` fold, which Spark evaluates
+    * interpreted, row by row (see `nearestIdCols`).
     */
   def pqEncode(emb: DataFrame, codebook: Seq[Seq[Seq[Double]]]): DataFrame = {
     val m = codebook.length
     val k = codebook.head.length
     val sub = codebook.head.head.length
-    // codegen'd argmin kernel — bit-identical to the VectorOps.nearestId
-    // HOF fold (the km_assign_native parity), one fused loop per subspace
+    // the native sq_dist inside the interpreted HOF argmin fold —
+    // bit-identical to VectorOps.nearestId (the km_assign_native parity)
     val codes = (0 until m).map { s =>
       graft.plans.native.nearestIdNative(slice(col("v"), s * sub + 1, sub),
         (0L until k.toLong).toSeq, codebook(s)).as(s"c$s")
     }
     val factors = Seq.iterate(1L, m)(_ * k)
-    Par.widenBy(emb2v(emb), col("vec_id")) // m fused argmin kernels per row (r18)
+    Par.widenBy(emb2v(emb), col("vec_id")) // m argmin folds per row (r18)
       .select(col("vec_id") +: codes: _*)
       .withColumn("packed",
         (0 until m).map(s => col(s"c$s") * factors(s)).reduce(_ + _))

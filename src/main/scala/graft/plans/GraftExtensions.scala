@@ -358,15 +358,4 @@ object native {
       (acc, x) => when(x.getField("d") < acc.getField("d"), x).otherwise(acc),
       acc => acc.getField("j"))
   }
-
-  /** `VectorOps.nearestSqDist` with column-supplied centroids
-    * (`cs: array<array<double>>`) and the native kernel — same min fold,
-    * value-identical; the constant-plan building block for iterative
-    * seeding (see [[nearestIdCols]] for the rationale).
-    */
-  def nearestSqDistCols(y: Column, cs: Column): Column =
-    aggregate(
-      transform(cs, c => sq_dist(c, y)),
-      lit(Double.MaxValue),
-      (acc, v) => when(v < acc, v).otherwise(acc))
 }

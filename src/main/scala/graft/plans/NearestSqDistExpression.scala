@@ -10,18 +10,17 @@ import org.apache.spark.sql.types._
   * codegen'd call.
   *
   * Semantics (bit-identical to `VectorOps.nearestSqDist`, pinned in
-  * PlansSpec): a left-to-right min fold with strict `<` over the centroids
-  * in declaration order, each distance the same `((0+d0²)+d1²)+…` IEEE
-  * sequence as `sq_dist`. Ties keep the earlier centroid's value (equal
-  * doubles — indistinguishable), empty centroid set yields the fold seed
-  * `Double.MaxValue`.
+  * PlansSpec): [[NearestSqDistLit.fold]], a left-to-right min fold with
+  * strict `<` over the centroids in declaration order, each distance the
+  * same `((0+d0²)+d1²)+…` IEEE sequence as `sq_dist`. Ties keep the earlier
+  * centroid's value (equal doubles — indistinguishable), empty centroid set
+  * yields the fold seed `Double.MaxValue`.
   *
   * Why: the HOF composition `aggregate(transform(typedlit(cs), …))` is
   * CodegenFallback — interpreted per row, allocating the transformed array
-  * each time. The elbow scans evaluate it up to 2·|ks| times per row
-  * (`km_optimal_k`), and the k-means++ weight pass once per row; here the
-  * centroid matrix is flattened once per executor and the whole argmin runs
-  * in a tight primitive loop inside whole-stage codegen.
+  * each time; here the centroid matrix is flattened once per executor and
+  * the whole argmin runs in a tight primitive loop inside whole-stage
+  * codegen.
   */
 @ExpressionDescription(
   usage = "_FUNC_(y) - squared distance from y to the nearest plan-embedded centroid.")
@@ -52,37 +51,9 @@ case class NearestSqDistLit(child: Expression, cs: Array[Array[Double]])
     (f, d)
   }
 
-  def compute(yd: ArrayData): Double = fold(yd, Double.MaxValue)
-
-  /** [[compute]], but NaN when no centroid's distance is a number (each is
-    * NaN): the row has no nearest centroid, which [[compute]] reports as
-    * the fold seed `Double.MaxValue`.
-    */
-  def computeOrNaN(yd: ArrayData): Double = fold(yd, Double.NaN)
-
-  private def fold(yd: ArrayData, none: Double): Double = {
+  def compute(yd: ArrayData): Double = {
     val y = yd.toDoubleArray()
-    val n = y.length
-    var m = Double.MaxValue
-    var some = false
-    var j = 0
-    val k = cs.length
-    while (j < k) {
-      // same IEEE sequence as sq_dist's left fold: ((0+d0²)+d1²)+…
-      var acc = 0.0
-      val base = j * dim
-      var d = 0
-      val lim = math.min(n, dim)
-      while (d < lim) {
-        val t = flat(base + d) - y(d)
-        acc += t * t
-        d += 1
-      }
-      if (acc < m) m = acc
-      if (acc == acc) some = true
-      j += 1
-    }
-    if (some) m else none
+    NearestSqDistLit.sqDist(flat, cs.length, dim, y, y.length)
   }
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
@@ -94,4 +65,44 @@ case class NearestSqDistLit(child: Expression, cs: Array[Array[Double]])
 
   override protected def withNewChildInternal(newChild: Expression): NearestSqDistLit =
     copy(child = newChild)
+}
+
+object NearestSqDistLit {
+
+  /** The one nearest-centroid fold (this expression, the k-means scans):
+    * `sq_dist`'s left-to-right `((0+d0²)+d1²)+…` over the first
+    * `min(n, dim)` coordinates of `y` for each of the `k` centroids in the
+    * row-major `cs`, then strict `<` from `Double.MaxValue` — the earlier
+    * slot wins a tie, a NaN distance never wins. Returns the slot, or `k`
+    * when no distance is below `Double.MaxValue`; `dist(0)` (if given) gets
+    * its distance — `Double.MaxValue` then, or NaN if every distance is NaN.
+    */
+  def fold(cs: Array[Double], k: Int, dim: Int, y: Array[Double], n: Int,
+      dist: Array[Double]): Int = {
+    val lim = math.min(n, dim)
+    var best = k
+    var m = Double.MaxValue
+    var some = false
+    var j = 0
+    while (j < k) {
+      val o = j * dim
+      var s = 0.0
+      var d = 0
+      while (d < lim) { val t = cs(o + d) - y(d); s += t * t; d += 1 }
+      if (s < m) { m = s; best = j }
+      if (s == s) some = true
+      j += 1
+    }
+    if (dist != null) dist(0) = if (some) m else Double.NaN
+    best
+  }
+
+  /** [[fold]]'s distance as `nearest_sq_dist` returns it: `Double.MaxValue`
+    * when every distance is NaN too.
+    */
+  def sqDist(cs: Array[Double], k: Int, dim: Int, y: Array[Double], n: Int): Double = {
+    val dist = new Array[Double](1)
+    fold(cs, k, dim, y, n, dist)
+    if (dist(0).isNaN) Double.MaxValue else dist(0)
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.KMeans
 import graft.operators.KMeans.Centroid
@@ -371,6 +371,17 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  /** `VectorOps.nearestSqDist` with column-supplied centroids
+    * (`cs: array<array<double>>`) and the native `sq_dist`: the interpreted
+    * min fold the ++ and k-means|| rounds ran over centroids riding as
+    * broadcast DATA, kept as their reference.
+    */
+  private def nearestSqDistCols(y: Column, cs: Column): Column =
+    aggregate(
+      transform(cs, c => graft.plans.native.sq_dist(c, y)),
+      lit(Double.MaxValue),
+      (acc, v) => when(v < acc, v).otherwise(acc))
+
   /** The ++ round with the centroids as broadcast DATA: a
     * `crossJoin(broadcast(..))` and the interpreted `nearestSqDistCols`
     * fold. The reference that [[KMeans.seedPlusPlusScalable]]'s compiled
@@ -378,7 +389,7 @@ class KMeansSpec extends SparkSpec {
     */
   private def broadcastRound(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid = {
     val csDf = Seq(Tuple1(chosen.map(_.c))).toDF("ccs")
-    val w = graft.plans.native.nearestSqDistCols(col("Y"), col("ccs"))
+    val w = nearestSqDistCols(col("Y"), col("ccs"))
     val key = when(w > 0, pow(rand(seed), lit(1.0) / w)).otherwise(lit(-1.0))
     val r = points.crossJoin(broadcast(csDf))
       .select(col("i"), col("Y"), key.as("skey"))
@@ -511,10 +522,14 @@ class KMeansSpec extends SparkSpec {
       val far = Centroid(99, Seq(1e9, 1e9))
       val sets = Seq(KMeans.seedFirstK(p, 3), KMeans.seedFirstK(p, 6),
         KMeans.seedFirstK(p, 4) :+ far)
-      val lock = KMeans.iterate(p, sets, dim = 2, tol = 0.01, maxIter = 30, fxScale = 1e6,
-        startStep = 0L)
+      val lock = KMeans.iterate(KMeans.Points.partitioned(p), sets, dim = 2, tol = 0.01,
+        maxIter = 30, fxScale = 1e6, startStep = 0L)
       val alone = sets.map(cs => KMeans.fitFrom(p, cs, dim = 2, tol = 0.01, maxIter = 30))
       assert(lock.map(fitBits) == alone.map(fitBits))
+      // the collected placement runs the same loop over the same rows
+      val held = KMeans.iterate(KMeans.Points.collected(p, dim = 2, fxScale = 1e6).head, sets,
+        dim = 2, tol = 0.01, maxIter = 30, fxScale = 1e6, startStep = 0L)
+      assert(held.map(fitBits) == lock.map(fitBits))
       assert(lock.map(_.steps).distinct.size == 3, s"steps ${lock.map(_.steps)}")
       assert(lock(2).centroids.size == 4 && !lock(2).centroids.exists(_.j == 99L))
     }
@@ -537,6 +552,102 @@ class KMeansSpec extends SparkSpec {
     intercept[IllegalArgumentException](KMeans.seedPlusPlus(squareCorners, 0, seed = 1L))
     intercept[IllegalArgumentException](
       KMeans.fit(squareCorners, k = 0, dim = 2, plusPlus = true))
+  }
+
+  /** One k-means|| round's DataFrame steps over the candidates riding as
+    * broadcast DATA — the form [[KMeans.seedParallel]]'s passes replay:
+    * ϕ as `sumFx` of the interpreted nearest fold, the draw as a filter on
+    * the `xxhash64` coin sorted by key, and the weights as `nearestIdCols`
+    * counts per candidate.
+    */
+  private def dfPhi(points: DataFrame, cands: Seq[Seq[Double]]): Double =
+    points.crossJoin(broadcast(Seq(Tuple1(cands)).toDF("ccs")))
+      .agg(graft.functions.VectorOps.sumFx(nearestSqDistCols(col("Y"), col("ccs")), 1.0))
+      .head().getDouble(0)
+
+  private def dfDraw(points: DataFrame, cands: Seq[Seq[Double]], seed: Long, r: Int,
+      phi: Double, l: Double): Seq[Seq[Double]] = {
+    val u = shiftrightunsigned(xxhash64(col("i"), lit(seed), lit(r)), 11)
+      .cast("double") / lit(9007199254740992.0)
+    points.crossJoin(broadcast(Seq(Tuple1(cands)).toDF("ccs")))
+      .filter(u * phi < nearestSqDistCols(col("Y"), col("ccs")) * l)
+      .select(col("i"), col("Y")).collect().sortBy(_.getLong(0))
+      .map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1).toVector).toSeq
+  }
+
+  private def dfWeights(points: DataFrame, cands: Seq[Seq[Double]]): Seq[Long] = {
+    val ids = cands.indices.map(_ + 1L)
+    val wByJ = points.crossJoin(broadcast(Seq((ids, cands)).toDF("cids", "ccs")))
+      .select(graft.plans.native.nearestIdCols(col("Y"), col("cids"), col("ccs")).as("j"))
+      .groupBy("j").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ids.map(wByJ.getOrElse(_, 0L))
+  }
+
+  test("k-means|| passes: phi, the drawn candidates and the weights are the " +
+      "DataFrame round's bits, partitioned and collected, ANSI on and off") {
+    import java.lang.Double.doubleToRawLongBits
+    import scala.util.{Failure, Success, Try}
+    def vecBits(vs: Seq[Seq[Double]]) = vs.map(v => if (v == null) null else v.map(doubleToRawLongBits))
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    // a null Y mid-range: the interpreted fold gives it d² = Double.MaxValue,
+    // so its ϕ term overflows the cast and it is drawn as a null candidate;
+    // it attracts no weight
+    val withNull = emb.union(Seq((250L, null: Seq[Double])).toDF("i", "Y")).cache()
+    val (seed, rounds, k) = (7L, 3, 6)
+    val l = 2.0 * k
+    for (base <- Seq(emb, withNull); n <- Seq(0, 3, 7); ansi <- Seq(true, false)) withAnsi(ansi) {
+      val p = if (n == 0) base else base.repartition(n).cache()
+      val where = s"${if (base eq emb) "no" else "a"} null Y, ${p.rdd.getNumPartitions} partitions, ANSI $ansi"
+      val placements = Seq(
+        KMeans.Points.partitioned(p, KMeans.coinCols(seed, rounds)),
+        KMeans.Points.collected(p, dim = 64, fxScale = 1e6, coins = KMeans.coinCols(seed, rounds)).head)
+      var cands = KMeans.seedFirstK(p, 1).map(_.c).toVector
+      for (r <- 1 to rounds) {
+        val phi = Try(dfPhi(p, cands))
+        placements.foreach { pl =>
+          (phi, Try(KMeans.parallelPhi(pl, cands))) match {
+            case (Success(want), Success(got)) =>
+              assert(doubleToRawLongBits(got) == doubleToRawLongBits(want), s"$where, round $r")
+            case (Failure(want), Failure(got)) =>
+              assert(messages(want).contains("CAST_OVERFLOW") && messages(got).contains("CAST_OVERFLOW"),
+                s"$where, round $r: ${messages(got)}")
+            case other => fail(s"$where, round $r: $other")
+          }
+        }
+        phi.foreach { phi =>
+          val drawn = dfDraw(p, cands, seed, r, phi, l)
+          placements.foreach(pl => assert(
+            vecBits(KMeans.parallelDraw(pl, cands, r, phi, l)) == vecBits(drawn), s"$where, round $r"))
+          if (phi > 0) cands = (cands ++ drawn).distinct
+        }
+      }
+      if (base eq emb) assert(cands.size > 1, s"$where: no candidate drawn")
+      val w = dfWeights(p, cands)
+      assert(w.sum == 500L, where)
+      placements.foreach(pl => assert(KMeans.parallelWeights(pl, cands).toSeq == w, where))
+    }
+  }
+
+  /** 1000 points uniform in [0, 1e9]²: their squared distances near 1e18
+    * put every k-means++ inverse-CDF draw's weight total past its overflow
+    * bound, where the distributed draw rescales its weights.
+    */
+  private def wideSquare(): DataFrame = {
+    val rnd = new scala.util.Random(1)
+    (1L to 1000L).map(i => i -> Seq(rnd.nextDouble() * 1e9, rnd.nextDouble() * 1e9))
+      .toDF("i", "Y").repartition(3).cache()
+  }
+
+  test("fitBounded past the draw's overflow bound: the collected replay declines " +
+      "and the result is the distributed chain's") {
+    def logBits(r: KMeans.FitResult): Seq[(Long, Long, Seq[Long])] =
+      r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
+    val p = wideSquare()
+    val local = KMeans.fitBounded(p, k = 4, dim = 2, lloydSteps = 3)
+    val dist = KMeans.fitBounded(p, k = 4, dim = 2, lloydSteps = 3, localMaxCells = 0)
+    assert(logBits(local) == logBits(dist))
+    p.unpersist()
   }
 
   test("seedParallel (k-means||) is deterministic and partitioning-independent") {

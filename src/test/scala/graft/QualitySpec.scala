@@ -325,6 +325,21 @@ class QualitySpec extends SparkSpec {
     assert(local == dist, s"local=$local dist=$dist")
   }
 
+  test("gapStatisticFitted past the draws' overflow bound: the collected chain " +
+      "declines and the rows are the distributed chain's") {
+    // 1000 points uniform in [0, 1e9]²: squared distances near 1e18 put the
+    // inverse-CDF draws' weight totals past their overflow bound
+    val rnd = new scala.util.Random(1)
+    val p = (1L to 1000L).map(i => i -> Seq(rnd.nextDouble() * 1e9, rnd.nextDouble() * 1e9))
+      .toDF("i", "Y").repartition(3).cache()
+    val local = Quality.gapStatisticFitted(p, dim = 2, ks = 2 to 4)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    val dist = Quality.gapStatisticFitted(p, dim = 2, ks = 2 to 4, localMaxRows = 0L)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    assert(local == dist, s"local=$local dist=$dist")
+    p.unpersist()
+  }
+
   test("gapStatisticFitted reference sets are decorrelated (s_k does not collapse)") {
     // the round-14 LCG fix: with a SINGLE shared multiplier the three
     // reference sets are translations of one underlying sequence, their
