@@ -33,19 +33,23 @@ import graft.plans.NearestSqDistLit
   *    draw per partition, the partitions' winners merge on the driver, and
   *    no query is planned per round.
   *  - Several fits over the same points run in LOCKSTEP ([[iterate]]): one
-  *    scan per step decodes and encodes each row once and feeds it to every
-  *    still-moving centroid set's kernel, so a choose-K sweep pays one job
-  *    per step, not one per (k, step).
-  *  - Each fit places its points once ([[Points]]): PARTITIONED, the
-  *    points plan built once and every step re-running the kernel over it
-  *    (lineage stays O(1), the driver holds O(k·dim)), or COLLECTED, the
-  *    key-ordered rows on the driver, only while `rows·dim ≤
-  *    localMaxCells` (default 4M doubles, 32 MB; [[fitAuto]],
-  *    [[fitBounded]], [[fitMiniBatch]], Quality.gapStatisticFitted). Every
-  *    scan — the Lloyd step, the k-means|| passes, the elbow — is one
-  *    per-row body with one nearest fold ([[NearestSqDistLit.fold]]); the
-  *    placement only decides where it runs, so there is one Lloyd loop
-  *    ([[iterate]]) and one k-means|| chain for both.
+  *    scan per step feeds each row to every still-moving centroid set's
+  *    kernel, so a choose-K sweep pays one job per step, not one per
+  *    (k, step).
+  *  - Each fit places its points once ([[Points]]) and shares the
+  *    placement across its seeding, Lloyd loop and scoring: PARTITIONED,
+  *    each partition's rows decoded ONCE per fit into a resident block of
+  *    flat primitive arrays (keys, coordinates, their fixed-point encodes,
+  *    the k-means|| coins; 16 B per cell) that every later scan reads, the
+  *    blocks persisted MEMORY_ONLY and released when the fit ends (the
+  *    driver holds O(k·dim)); or COLLECTED, the key-ordered rows on the
+  *    driver, only while `rows·dim ≤ localMaxCells` (default 4M doubles,
+  *    32 MB; [[fitAuto]], [[fitBounded]], [[fitMiniBatch]],
+  *    Quality.gapStatisticFitted). Every scan — the Lloyd step, the
+  *    k-means|| passes, the ++ round, the elbow — is one per-row body with
+  *    one nearest fold ([[NearestSqDistLit.fold]]); the placement only
+  *    decides where it runs, so there is one Lloyd loop ([[iterate]]) and
+  *    one k-means|| chain for both.
   *  - Per-dimension sums are fixed-point integers (`round(x*scale)::long`,
   *    `fxScale > 0`), so results do not depend on partition count or merge
   *    order — a deterministic distributed k-means. A sum past the long
@@ -227,31 +231,35 @@ object KMeans {
     * The round is the DataFrame
     * `points.select(i, Y, when(w > 0, pow(rand(seed), 1 / w)).otherwise(-1))`
     * + `max_by(struct(i, Y), key)` replayed bit for bit as ONE kernel job
-    * over `points`' `Y` rows ([[plusPlusRound]]; the DataFrame form is the
-    * reference in KMeansSpec), so no query is planned per round. A null
+    * over `points`' resident blocks ([[plusPlusRound]]; the DataFrame form
+    * is the reference in KMeansSpec), so no query is planned per round. A null
     * `Y`, or one whose distance to every chosen centroid is NaN, has no
     * weight and gets key −1: it can only win when no row has weight.
     */
   def seedPlusPlusScalable(points: DataFrame, chosen: Seq[Centroid], seed: Long): Centroid =
-    plusPlusRound(yRows(points), chosen, seed)
+    Points.withPartitioned(points)(plusPlusRound(_, chosen, seed))
 
   /** Full k-means++ seeding: first centroid = deterministic min-key point,
     * then k−1 scalable weighted rounds (reference k-means.sh:9-13), each one
-    * kernel job over the `Y` rows planned once per chain. Round r reads
-    * only the first r seeds and `seed + r`, so on one partitioning
+    * kernel job over the points placed once per chain (the first pick is
+    * the job that builds their blocks). Round r reads only the first r
+    * seeds and `seed + r`, so on one partitioning
     * `seedPlusPlus(p, k, s).take(k2) == seedPlusPlus(p, k2, s)` for k2 ≤ k
     * (pinned in KMeansSpec; Quality.optimalKSweep seeds once on it).
     */
-  def seedPlusPlus(points: DataFrame, k: Int, seed: Long): Seq[Centroid] = {
+  def seedPlusPlus(points: DataFrame, k: Int, seed: Long): Seq[Centroid] =
+    Points.withPartitioned(points)(plusPlusSeeds(_, k, seed))
+
+  /** [[seedPlusPlus]] over placed points. */
+  private[operators] def plusPlusSeeds(points: Partitioned, k: Int, seed: Long): Seq[Centroid] = {
     require(k >= 1, s"k-means++ needs k >= 1, got $k")
-    var cs = seedFirstK(points, 1)
-    lazy val rows = yRows(points)
+    var cs = points.firstK(1)
     while (cs.size < k)
-      cs = cs :+ plusPlusRound(rows, cs, seed + cs.size)
+      cs = cs :+ plusPlusRound(points, cs, seed + cs.size)
     cs
   }
 
-  /** One ++ round over `points`' `Y` rows, replaying what Spark evaluates
+  /** One ++ round over the placed points, replaying what Spark evaluates
     * for the DataFrame round:
     *  - `w` is `nearest_sq_dist`'s own fold ([[NearestSqDistLit.fold]]);
     *  - `rand(seed)` is `XORShiftRandom(seed + partitionIndex).nextDouble()`,
@@ -265,19 +273,18 @@ object KMeans {
     * key ≈ 1.0) still draws its `u`, so every other row keeps its key, but
     * its own key is −1.
     */
-  private def plusPlusRound(rows: RDD[InternalRow], chosen: Seq[Centroid], seed: Long): Centroid = {
+  private def plusPlusRound(points: Partitioned, chosen: Seq[Centroid], seed: Long): Centroid = {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     val (cs, k, dim) = foldOf(coords(chosen))
-    val wins = rows.mapPartitionsWithIndex { (p, it) =>
-      val rng = org.apache.spark.sql.GraftPlanShim.xorShiftRandom(seed + p)
+    val wins = points.indexed("KMeans.pp.round") { (part, it) =>
+      val rng = org.apache.spark.sql.GraftPlanShim.xorShiftRandom(seed + part)
       val dist = new Array[Double](1)
       var seen = false
       var bestKey = 0.0
       var bestY: Array[Double] = null // null: a null-Y winner
-      it.foreach { row =>
-        val y = if (row.isNullAt(0)) null else row.getArray(0).toDoubleArray()
-        val key = if (y == null) -1.0 else {
-          NearestSqDistLit.fold(cs, k, dim, y, y.length, dist)
+      it.foreach { p =>
+        val key = if (p.y == null) -1.0 else {
+          NearestSqDistLit.fold(cs, k, dim, p.y, p.yOff, p.n, dist)
           val w = dist(0)
           if (w > 0) StrictMath.pow(rng.nextDouble(), 1.0 / w)
           else { if (w.isNaN) rng.nextDouble(); -1.0 }
@@ -285,12 +292,12 @@ object KMeans {
         if (!seen || compareDoubles(bestKey, key) <= 0) {
           seen = true
           bestKey = key
-          bestY = y
+          bestY = if (p.y == null) null else java.util.Arrays.copyOfRange(p.y, p.yOff, p.yOff + p.n)
         }
       }
-      if (seen) Iterator.single((bestKey, bestY)) else Iterator.empty
-    }.collect()
-    val win = wins.reduceOption((l, r) => if (compareDoubles(l._1, r._1) > 0) l else r)
+      if (seen) Some((bestKey, bestY)) else None
+    }
+    val win = wins.flatten.reduceOption((l, r) => if (compareDoubles(l._1, r._1) > 0) l else r)
     Centroid(chosen.map(_.j).max + 1, win.flatMap(w => Option(w._2)).map(_.toSeq).orNull)
   }
 
@@ -327,12 +334,13 @@ object KMeans {
     *
     * The scans are [[parallelPhi]], [[parallelDraw]] and [[parallelWeights]],
     * each the arithmetic of the DataFrame step it replaces (KMeansSpec's
-    * reference), over the partitioned rows here and the collected ones in
-    * [[fitLocal]].
+    * reference), over the resident blocks here and the collected rows in
+    * [[fitLocal]]. A null `Y` has no distance and takes no part in them.
     */
   def seedParallel(points: DataFrame, k: Int, seed: Long, rounds: Int = 3,
       overFactor: Double = 2.0): Seq[Centroid] =
-    parallelSeeds(Points.partitioned(points, coinCols(seed, rounds)), k, seed, rounds, overFactor)
+    Points.withPartitioned(points, coinCols(seed, rounds))(
+      parallelSeeds(_, k, seed, rounds, overFactor))
 
   /** [[seedParallel]] over points carrying the coins of rounds 1..`rounds`. */
   private def parallelSeeds(points: Points, k: Int, seed: Long, rounds: Int,
@@ -352,53 +360,50 @@ object KMeans {
   private[operators] def foldOf(cands: Seq[Seq[Double]]): (Array[Double], Int, Int) =
     (cands.flatten.toArray, cands.size, cands.headOption.fold(0)(_.size))
 
-  /** A point's d² in the k-means|| passes: [[NearestSqDistLit.sqDist]], or
-    * the DataFrame fold's seed Double.MaxValue for a null `Y`.
-    */
-  private def parallelD2(p: Point, cs: Array[Double], k: Int, dim: Int): Double =
-    if (p.y == null) Double.MaxValue else NearestSqDistLit.sqDist(cs, k, dim, p.y, p.n)
-
-  /** k-means|| ϕ = `sumFx(d², 1.0)`: each [[parallelD2]] [[fxEncode]]d and
-    * added as Spark's long `sum` adds ([[plusLong]]) — an integer total, the
-    * same under any partitioning. A null `Y` overflows the cast
-    * (CAST_OVERFLOW under ANSI, else Long.MaxValue wraps ϕ).
+  /** k-means|| ϕ = `sumFx(d², 1.0)` over the non-null `Y`s: each
+    * [[NearestSqDistLit.sqDist]] [[fxEncode]]d and added as Spark's long
+    * `sum` adds ([[plusLong]]) — an integer total, the same under any
+    * partitioning.
     */
   private[graft] def parallelPhi(points: Points, cands: Seq[Seq[Double]]): Double = {
     val (cs, k, dim) = foldOf(cands)
     val ansi = points.ansi
-    points.partials { it =>
+    points.partials("KMeans.parallel.phi") { it =>
       var s = 0L
-      it.foreach(p => s = plusLong(s, fxEncode(parallelD2(p, cs, k, dim), ansi), ansi))
+      it.foreach { p =>
+        if (p.y != null)
+          s = plusLong(s, fxEncode(NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n), ansi), ansi)
+      }
       s
     }.foldLeft(0L)(plusLong(_, _, ansi)).toDouble
   }
 
-  /** k-means|| round `r`'s draw: the points with `coin_r·ϕ < d²·l`, in key
-    * order (the refine's PRNG reads it). A drawn null `Y` comes back null.
+  /** k-means|| round `r`'s draw: the non-null `Y`s with `coin_r·ϕ < d²·l`,
+    * in key order (the refine's PRNG reads it).
     */
   private[graft] def parallelDraw(points: Points, cands: Seq[Seq[Double]], r: Int,
       phi: Double, l: Double): Seq[Vector[Double]] = {
     val (cs, k, dim) = foldOf(cands)
-    points.partials { it =>
+    points.partials("KMeans.parallel.draw") { it =>
       val drawn = Array.newBuilder[(Long, Vector[Double])]
       it.foreach { p =>
-        if (p.u(r - 1) * phi < parallelD2(p, cs, k, dim) * l)
-          drawn += ((p.i, if (p.y == null) null else p.y.iterator.take(p.n).toVector))
+        if (p.y != null && p.u(r - 1) * phi < NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n) * l)
+          drawn += ((p.i, p.y.slice(p.yOff, p.yOff + p.n).toVector))
       }
       drawn.result()
     }.flatten.sortBy(_._1).map(_._2).toSeq
   }
 
   /** How many points each candidate attracts: the argmin counted per slot.
-    * The no-winner slot (a null `Y`, or no distance below Double.MaxValue)
-    * drops, as `nearestIdCols`' id −1 matched no candidate.
+    * A null `Y` and the no-winner slot (no distance below Double.MaxValue)
+    * drop, as `nearestIdCols`' id −1 matched no candidate.
     */
   private[graft] def parallelWeights(points: Points, cands: Seq[Seq[Double]]): Array[Long] = {
     val (cs, k, dim) = foldOf(cands)
-    points.partials { it =>
+    points.partials("KMeans.parallel.weights") { it =>
       val w = new Array[Long](k + 1)
       it.foreach { p =>
-        w(if (p.y == null) k else NearestSqDistLit.fold(cs, k, dim, p.y, p.n, null)) += 1
+        if (p.y != null) w(NearestSqDistLit.fold(cs, k, dim, p.y, p.yOff, p.n, null)) += 1
       }
       w
     }.foldLeft(new Array[Long](k + 1))((a, b) => Array.tabulate(k + 1)(x => a(x) + b(x))).init
@@ -453,7 +458,7 @@ object KMeans {
       var i = 0
       while (i < n) {
         // the nearest center; with none below Double.MaxValue, the first
-        val best = NearestSqDistLit.fold(flat, k, dim, xs(i), dim, null) % k
+        val best = NearestSqDistLit.fold(flat, k, dim, xs(i), 0, dim, null) % k
         var d = 0
         while (d < dim) { sums(best)(d) += xs(i)(d) * w(i); d += 1 }
         cnts(best) += w(i)
@@ -487,7 +492,7 @@ object KMeans {
   private[graft] def nearestIds(ys: Array[Array[Double]], cs: Seq[Centroid]): Array[Long] = {
     val (flat, k, dim) = foldOf(coords(cs))
     val js = ids(cs).toArray :+ -1L
-    ys.map(y => js(NearestSqDistLit.fold(flat, k, dim, y, y.length, null)))
+    ys.map(y => js(NearestSqDistLit.fold(flat, k, dim, y, 0, y.length, null)))
   }
 
   // ------------------------------------------------------------- Lloyd step
@@ -519,10 +524,6 @@ object KMeans {
   private def requireFx(fxScale: Double): Unit =
     require(fxScale > 0, s"fxScale must be > 0 (fixed-point sums), got $fxScale")
 
-  /** `points`' `Y` column as the raw rows the ++ round scans. */
-  private def yRows(points: DataFrame): RDD[InternalRow] =
-    points.select(col("Y")).queryExecution.toRdd
-
   private[operators] def ansi(points: DataFrame): Boolean =
     points.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
 
@@ -532,11 +533,11 @@ object KMeans {
   private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
 
   /** The Lloyd step of the fit loop ([[iterate]]) and [[fitMiniBatch]],
-    * for every centroid set in `sets` at once, as ONE scan of the points:
-    * each point's [[fxEncode]]d coordinates (held by collected points,
-    * encoded per row otherwise) go to one [[LloydKernel]] per set (argmin +
-    * fixed-point per-slot sums), and the ≤ P partial arrays merge on the
-    * driver: the collect-sufficient-stats shape MLlib's KMeans uses (its
+    * for every centroid set in `sets` at once, as ONE scan of the points
+    * described as `name`: each point's [[fxEncode]]d coordinates (held by
+    * the placement, encoded per row where it holds none) go to one
+    * [[LloydKernel]] per set (argmin + fixed-point per-slot sums), and the
+    * ≤ P partial arrays merge on the driver: the collect-sufficient-stats shape MLlib's KMeans uses (its
     * `runAlgorithm` folds per-partition (sum, count) pairs via
     * `treeAggregate`; public Spark source, mllib/clustering/KMeans.scala).
     * Each set's stats are value-identical to [[lloydStep]] on that set
@@ -553,22 +554,24 @@ object KMeans {
     * per partition emits one (Σ, n) array pair per set straight to the
     * driver.
     */
-  private def kernelStats(points: Points, sets: Seq[Seq[Centroid]], dim: Int,
+  private def kernelStats(name: String, points: Points, sets: Seq[Seq[Centroid]], dim: Int,
       fxScale: Double): Seq[Stats] = {
     require(points.fxAt.forall(_ == ((dim, fxScale))),
       s"the points hold encodes at ${points.fxAt.get}, not at ($dim, $fxScale)")
     val flats = sets.map(cs => (flatten(cs, dim), cs.size)).toArray
     val ansi = points.ansi
-    val partials = points.partials { it =>
+    val partials = points.partials(name) { it =>
       val kerns = flats.map { case (f, k) => new LloydKernel(f, k, dim, ansi) }
       val buf = new Array[Long](dim)
       while (it.hasNext) {
         val p = it.next()
         require(p.y != null, "Y is null: a k-means point needs coordinates")
         require(p.n >= dim, s"Y has ${p.n} coordinates, dim is $dim")
-        val fx = if (p.fx != null) p.fx else { encodeInto(p.y, buf, fxScale, ansi); buf }
+        var fx = p.fx
+        var fxOff = p.fxOff
+        if (fx == null) { encodeInto(p.y, p.yOff, buf, 0, dim, fxScale, ansi); fx = buf; fxOff = 0 }
         var s = 0
-        while (s < kerns.length) { kerns(s).add(p.y, fx); s += 1 }
+        while (s < kerns.length) { kerns(s).add(p.y, p.yOff, fx, fxOff); s += 1 }
       }
       kerns.map(k => (k.sums, k.cnts))
     }
@@ -615,11 +618,13 @@ object KMeans {
           "to bypass this error.")
     }
 
-  /** [[fxEncode]] of `y`'s first `fx.length` coordinates, into `fx`. */
-  private def encodeInto(y: Array[Double], fx: Array[Long], fxScale: Double,
-      ansi: Boolean): Unit = {
+  /** [[fxEncode]] of the `dim` coordinates of `y` from `yOff` on, into `fx`
+    * from `fxOff` on.
+    */
+  private def encodeInto(y: Array[Double], yOff: Int, fx: Array[Long], fxOff: Int, dim: Int,
+      fxScale: Double, ansi: Boolean): Unit = {
     var d = 0
-    while (d < fx.length) { fx(d) = fxEncode(y(d) * fxScale, ansi); d += 1 }
+    while (d < dim) { fx(fxOff + d) = fxEncode(y(yOff + d) * fxScale, ansi); d += 1 }
   }
 
   /** The Lloyd step's per-row arithmetic, ONE copy: [[kernelStats]] runs
@@ -636,12 +641,14 @@ object KMeans {
 
     private def plus(a: Long, b: Long): Long = plusLong(a, b, ansi)
 
-    /** Assign `y` and add its fixed-point coordinates `fx` to that slot. */
-    def add(y: Array[Double], fx: Array[Long]): Unit = {
-      val j = NearestSqDistLit.fold(cs, k, dim, y, dim, null)
+    /** Assign the point at `y(yOff)` and add its fixed-point coordinates,
+      * at `fx(fxOff)`, to that slot.
+      */
+    def add(y: Array[Double], yOff: Int, fx: Array[Long], fxOff: Int): Unit = {
+      val j = NearestSqDistLit.fold(cs, k, dim, y, yOff, dim, null)
       val o = j * dim
       var d = 0
-      while (d < dim) { sums(o + d) = plus(sums(o + d), fx(d)); d += 1 }
+      while (d < dim) { sums(o + d) = plus(sums(o + d), fx(fxOff + d)); d += 1 }
       cnts(j) += 1
     }
 
@@ -673,52 +680,65 @@ object KMeans {
   // -------------------------------------------------------- point placement
 
   /** One point as a scan's per-row body reads it — a cursor that its
-    * placement moves from row to row, so a body must not keep it: `y` (null
-    * for a null `Y`) with its first `n` coordinates this row's, the key `i`
-    * and the k-means|| coins `u` (round r's at `r − 1`) where the placement
-    * carries them, and `fx`, the [[fxEncode]]s collected rows hold.
+    * placement moves from row to row, so a body must not keep it: the key
+    * `i`; `n` coordinates of `y` from `yOff` on (`y` null for a null `Y`);
+    * the k-means|| coins `u` (round r's at `r − 1`) where the placement
+    * carries them; and `fx`, with this row's [[fxEncode]]s from `fxOff` on,
+    * where the placement holds them (else null).
     */
   private[graft] final class Point {
     var y: Array[Double] = _
+    var yOff = 0
     var n = 0
     var i = 0L
     var u: Array[Double] = _
     var fx: Array[Long] = _
+    var fxOff = 0
   }
 
-  /** Where a fit's points live, chosen once per fit: the partitioned plan
-    * or the collected key-ordered rows. Every scan — the Lloyd step, the
-    * k-means|| passes, the elbow — is ONE per-row body over [[Point]]s, and
-    * the placement only decides where it runs.
+  /** Where a fit's points live, chosen once per fit: resident blocks on the
+    * executors ([[Partitioned]]) or the collected key-ordered rows
+    * ([[Collected]]). Every scan — the Lloyd step, the k-means|| passes, the
+    * ++ round, the elbow, the mini-batch batch — is ONE per-row body over
+    * [[Point]]s, and the placement only decides where it runs.
     */
   private[graft] sealed abstract class Points {
     /** `spark.sql.ansi.enabled` of the points' session. */
     def ansi: Boolean
 
     /** (dim, fxScale) of the encodes the points hold, if they hold any. */
-    def fxAt: Option[(Int, Double)] = None
+    def fxAt: Option[(Int, Double)]
 
-    /** `f` over the points: once per partition, in partition order, or
-      * once over every row, in key order.
+    /** `f` over the points: once per partition, in partition order, as ONE
+      * job described as `name`, or once over every row, in key order.
       */
-    def partials[A: ClassTag](f: Iterator[Point] => A): Array[A]
+    def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A]
 
     /** [[seedFirstK]]: the `k` smallest-key points, j = 1..k. */
     def firstK(k: Int): Seq[Centroid]
 
-    /** The points whose key `keep` accepts; `keepCol` is the same
-      * predicate as a column over `i`.
-      */
-    def where(keep: Long => Boolean, keepCol: Column): Points
+    /** The points whose key `keep` accepts (a null key never). */
+    def where(keep: Long => Boolean): Points
   }
 
   private[graft] object Points {
-    /** `points`' rows as a plan, scanned per partition under
-      * [[withIterConf]]; with `coins` each row also carries its key and
-      * those columns.
+    /** `points`' rows as resident blocks ([[Partitioned]]), holding the
+      * encodes at `fxAt` and, with `coins`, those columns; built on the
+      * first scan and held until [[Partitioned.release]].
       */
-    def partitioned(points: DataFrame, coins: Seq[Column] = Nil): Points =
-      new Partitioned(points, coins)
+    def partitioned(points: DataFrame, coins: Seq[Column] = Nil,
+        fxAt: Option[(Int, Double)] = None): Partitioned =
+      new Partitioned(new Resident(points, coins, fxAt), null)
+
+    /** `body` over [[partitioned]] points, released when it returns or
+      * throws: a fit's one placement, shared by its seeding, its Lloyd loop
+      * and its scoring.
+      */
+    def withPartitioned[A](points: DataFrame, coins: Seq[Column] = Nil,
+        fxAt: Option[(Int, Double)] = None)(body: Partitioned => A): A = {
+      val placed = partitioned(points, coins, fxAt)
+      try body(placed) finally placed.release()
+    }
 
     /** `points`' rows on the driver in key order, from ONE select: a
       * placement per column of `ys`, sharing the keys and `coins`. Each
@@ -739,41 +759,216 @@ object KMeans {
     }
   }
 
-  private final class Partitioned(df: DataFrame, coins: Seq[Column]) extends Points {
-    val ansi: Boolean = KMeans.ansi(df)
-    // planned once, on the first scan
-    private lazy val rows =
-      df.select(col("Y") +: (if (coins.isEmpty) Nil else col("i") +: coins): _*).queryExecution.toRdd
+  /** One partition's rows, decoded once into flat primitive arrays (no
+    * object per row): row r's key `keys(r)` (`nullKey(r)` for a null key),
+    * its `lens(r)` coordinates in `ys` right after the rows before it
+    * (`lens(r)` = −1 for a null `Y`), its `nu` coins from `us(r·nu)` on,
+    * and, when `fx` is not null, its `dim` [[fxEncode]]s from `fx(r·dim)`
+    * on wherever `fxSet(r)`. A `Y` shorter than `dim`, or one whose encode
+    * overflows (CAST_OVERFLOW under ANSI), is left unset: the scan that
+    * needs it encodes it again and raises at its row, after any row before
+    * it has raised its own error.
+    */
+  private final class Block(rows: Int, keys: Array[Long], nullKey: Array[Boolean],
+      lens: Array[Int], ys: Array[Double], nu: Int, us: Array[Double], dim: Int,
+      fx: Array[Long], fxSet: Array[Boolean]) {
 
-    def partials[A: ClassTag](f: Iterator[Point] => A): Array[A] = withIterConf(df.sparkSession) {
-      val nu = coins.size
-      rows.mapPartitions { it =>
-        val p = new Point
-        var y = new Array[Double](0)
-        p.u = new Array[Double](nu)
-        Iterator.single(f(it.map { row =>
-          if (row.isNullAt(0)) { p.y = null; p.n = 0 }
-          else {
-            val a = row.getArray(0)
-            p.n = a.numElements()
-            if (y.length < p.n) y = new Array[Double](p.n)
-            var d = 0
-            while (d < p.n) { y(d) = a.getDouble(d); d += 1 }
-            p.y = y
-          }
-          if (nu > 0) {
-            p.i = row.getLong(1)
-            (0 until nu).foreach(c => p.u(c) = row.getDouble(2 + c))
-          }
-          p
-        }))
-      }.collect()
+    /** The rows `keep` accepts (every row for a null `keep`, else never a
+      * null key), in row order, through one [[Point]] cursor.
+      */
+    def points(keep: Long => Boolean): Iterator[Point] = new Iterator[Point] {
+      private val p = new Point
+      p.u = new Array[Double](nu)
+      private var r = 0   // the next row
+      private var off = 0 // where its coordinates start in ys
+      def hasNext: Boolean = {
+        if (keep != null)
+          while (r < rows && (nullKey(r) || !keep(keys(r)))) { off += math.max(lens(r), 0); r += 1 }
+        r < rows
+      }
+      def next(): Point = {
+        if (!hasNext) throw new NoSuchElementException("no more points")
+        p.y = if (lens(r) < 0) null else ys
+        p.yOff = off
+        p.n = math.max(lens(r), 0)
+        p.i = keys(r)
+        var c = 0
+        while (c < nu) { p.u(c) = us(r * nu + c); c += 1 }
+        p.fx = if (fx != null && fxSet(r)) fx else null
+        p.fxOff = r * dim
+        off += p.n
+        r += 1
+        p
+      }
     }
 
-    def firstK(k: Int): Seq[Centroid] = seedFirstK(df, k)
+    /** The `k` first rows `keep` accepts in `orderBy("i")` order (a null key
+      * first, a tied key in row order), as (null key, key, Y or null).
+      */
+    def firstK(k: Int, keep: Long => Boolean): Array[(Boolean, Long, Array[Double])] = {
+      val offs = new Array[Int](rows)
+      var r = 1
+      while (r < rows) { offs(r) = offs(r - 1) + math.max(lens(r - 1), 0); r += 1 }
+      def before(a: Int, b: Int): Boolean =
+        if (nullKey(a) != nullKey(b)) nullKey(a)
+        else if (nullKey(a) || keys(a) == keys(b)) a < b
+        else keys(a) < keys(b)
+      // the k first rows so far, the last of them at the head
+      val heap = new java.util.PriorityQueue[Integer](math.max(k, 1),
+        (a: Integer, b: Integer) => if (before(a, b)) 1 else if (before(b, a)) -1 else 0)
+      r = 0
+      while (r < rows) {
+        if (keep == null || (!nullKey(r) && keep(keys(r)))) {
+          if (heap.size < k) heap.add(r)
+          else if (k > 0 && before(r, heap.peek())) { heap.poll(); heap.add(r) }
+        }
+        r += 1
+      }
+      heap.toArray(new Array[Integer](0)).map(_.intValue).sortWith(before).map { r =>
+        (nullKey(r), keys(r), if (lens(r) < 0) null else ys.slice(offs(r), offs(r) + lens(r)))
+      }
+    }
+  }
 
-    def where(keep: Long => Boolean, keepCol: Column): Points =
-      new Partitioned(df.filter(keepCol), coins)
+  /** Appends `(i, Y, coins…)` rows, one call per row, into one [[Block]],
+    * with the encodes at `fxAt`.
+    */
+  private final class BlockBuilder(nu: Int, fxAt: Option[(Int, Double)], ansi: Boolean) {
+    import java.util.Arrays.copyOf
+    private val (dim, fxScale) = fxAt.getOrElse((0, 0.0))
+    private var cap = 1024
+    private var rows = 0
+    private var cells = 0
+    private var keys = new Array[Long](cap)
+    private var nullKey = new Array[Boolean](cap)
+    private var lens = new Array[Int](cap)
+    private var us = new Array[Double](cap * nu)
+    private var ys = new Array[Double](cap * math.max(dim, 1))
+    private var fx = if (fxAt.isEmpty) null else new Array[Long](cap * dim)
+    private var fxSet = if (fxAt.isEmpty) null else new Array[Boolean](cap)
+
+    def add(row: InternalRow): Unit = {
+      if (rows == cap) {
+        cap *= 2
+        keys = copyOf(keys, cap); nullKey = copyOf(nullKey, cap); lens = copyOf(lens, cap)
+        us = copyOf(us, cap * nu)
+        if (fx != null) { fx = copyOf(fx, cap * dim); fxSet = copyOf(fxSet, cap) }
+      }
+      nullKey(rows) = row.isNullAt(0)
+      keys(rows) = if (nullKey(rows)) 0L else row.getLong(0)
+      if (row.isNullAt(1)) lens(rows) = -1
+      else {
+        val a = row.getArray(1)
+        val len = a.numElements()
+        if (cells + len > ys.length) ys = copyOf(ys, math.max(2 * ys.length, cells + len))
+        var d = 0
+        while (d < len) { ys(cells + d) = a.getDouble(d); d += 1 }
+        lens(rows) = len
+        if (fx != null && len >= dim) fxSet(rows) = encodes(cells, rows * dim)
+        cells += len
+      }
+      var c = 0
+      while (c < nu) { us(rows * nu + c) = row.getDouble(2 + c); c += 1 }
+      rows += 1
+    }
+
+    /** [[encodeInto]], or false where an encode overflows (CAST_OVERFLOW). */
+    private def encodes(yOff: Int, fxOff: Int): Boolean =
+      try { encodeInto(ys, yOff, fx, fxOff, dim, fxScale, ansi); true }
+      catch { case _: ArithmeticException => false }
+
+    def result(): Block =
+      new Block(rows, copyOf(keys, rows), copyOf(nullKey, rows), copyOf(lens, rows),
+        copyOf(ys, cells), nu, copyOf(us, rows * nu), dim,
+        if (fx == null) null else copyOf(fx, rows * dim),
+        if (fx == null) null else copyOf(fxSet, rows))
+  }
+
+  /** The blocks behind a partitioned placement: `points`' `(i, Y, coins…)`
+    * rows, planned once under [[withIterConf]], each partition decoded once
+    * into a [[Block]] and persisted MEMORY_ONLY until [[release]].
+    * Partition indices and in-partition row order are the plan's, so the
+    * ++ round's per-partition `rand` replay and `max_by`'s tie order hold.
+    * The first scan builds the blocks and runs as the plan's one SQL
+    * execution; every later scan reads them. A block the memory store
+    * refuses (or evicts, or one unpersisted) is rebuilt from the plan by the
+    * scan that needs it: one more decode of its rows, with the same bits.
+    */
+  private final class Resident(df: DataFrame, coins: Seq[Column],
+      val fxAt: Option[(Int, Double)]) {
+    val ansi: Boolean = KMeans.ansi(df)
+    private val sc = df.sparkSession.sparkContext
+    private var blocks: RDD[Block] = null
+    private var qe: org.apache.spark.sql.execution.QueryExecution = null
+
+    /** `f(partition, block)` for every block, as ONE job described as
+      * `name` (the first, which builds the blocks, as `KMeans.build+…`).
+      */
+    def scan[A: ClassTag](name: String)(f: (Int, Block) => A): Array[A] = {
+      val first = blocks == null
+      if (first) {
+        val (nu, fxAt, ansi) = (coins.size, this.fxAt, this.ansi)
+        val rows = withIterConf(df.sparkSession) {
+          qe = df.select(col("i") +: col("Y") +: coins: _*).queryExecution
+          qe.toRdd
+        }
+        blocks = rows.mapPartitions { it =>
+          val b = new BlockBuilder(nu, fxAt, ansi)
+          it.foreach(b.add)
+          Iterator.single(b.result())
+        }
+          .setName("KMeans points").persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      }
+      def job() = blocks.mapPartitionsWithIndex((p, it) => Iterator.single(f(p, it.next()))).collect()
+      if (!first) described(sc, name)(job())
+      else described(sc, "KMeans.build+" + name.stripPrefix("KMeans.")) {
+        org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(job())
+      }
+    }
+
+    /** Drop the blocks; a later scan would build them again. */
+    def release(): Unit = if (blocks != null) {
+      blocks.unpersist(blocking = false)
+      blocks = null
+    }
+  }
+
+  /** The partitioned placement: a view of one [[Resident]]'s blocks, the
+    * rows `keep` accepts (every row for null). Each scan is one kernel job
+    * over the blocks — no decode, no encode, no query planned.
+    */
+  private[graft] final class Partitioned private[KMeans] (resident: Resident,
+      keep: Long => Boolean) extends Points {
+    def ansi: Boolean = resident.ansi
+    def fxAt: Option[(Int, Double)] = resident.fxAt
+
+    def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A] =
+      indexed(name)((_, it) => f(it))
+
+    /** [[partials]], `f` also given its partition's index. */
+    def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A] = {
+      val keep = this.keep
+      resident.scan(name)((p, b) => f(p, b.points(keep)))
+    }
+
+    /** Each block's k first rows, merged on the driver in `orderBy("i")`
+      * order (a tied key goes to the earlier partition): [[seedFirstK]]'s
+      * centroids without its query.
+      */
+    def firstK(k: Int): Seq[Centroid] = {
+      val keep = this.keep
+      resident.scan("KMeans.firstK")((_, b) => b.firstK(k, keep)).toSeq.flatten
+        .sortBy(r => (!r._1, r._2)).take(k).zipWithIndex
+        .map { case (r, ix) => Centroid(ix + 1L, Option(r._3).map(_.toSeq).orNull) }
+    }
+
+    def where(accept: Long => Boolean): Points = {
+      val keep = this.keep
+      new Partitioned(resident, if (keep == null) accept else i => keep(i) && accept(i))
+    }
+
+    /** Drop the blocks (every view's). */
+    def release(): Unit = resident.release()
   }
 
   /** The collected placement: the key-ordered rows `keep` accepts. `ys`
@@ -782,9 +977,9 @@ object KMeans {
   private[graft] final class Collected private[KMeans] (keys: Array[Long],
       val ys: Array[Array[Double]], us: Array[Array[Double]], fxs: Array[Array[Long]],
       dimScale: (Int, Double), val ansi: Boolean, keep: Long => Boolean) extends Points {
-    override def fxAt: Option[(Int, Double)] = Some(dimScale)
+    def fxAt: Option[(Int, Double)] = Some(dimScale)
 
-    def partials[A: ClassTag](f: Iterator[Point] => A): Array[A] = {
+    def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A] = {
       val (dim, fxScale) = dimScale
       val p = new Point
       Array(f(kept.map { ix =>
@@ -792,7 +987,7 @@ object KMeans {
         p.n = if (p.y == null) 0 else p.y.length
         if (fxs(ix) == null && p.n >= dim) {
           val fx = new Array[Long](dim)
-          encodeInto(p.y, fx, fxScale, ansi)
+          encodeInto(p.y, 0, fx, 0, dim, fxScale, ansi)
           fxs(ix) = fx
         }
         p.fx = fxs(ix)
@@ -805,7 +1000,7 @@ object KMeans {
     def firstK(k: Int): Seq[Centroid] =
       kept.take(k).zipWithIndex.map { case (ix, j) => Centroid(j + 1L, ys(ix).toSeq) }.toSeq
 
-    def where(accept: Long => Boolean, keepCol: Column): Points =
+    def where(accept: Long => Boolean): Points =
       new Collected(keys, ys, us, fxs, dimScale, ansi, i => keep(i) && accept(i))
 
     private def kept: Iterator[Int] = keys.indices.iterator.filter(ix => keep(keys(ix)))
@@ -844,7 +1039,7 @@ object KMeans {
       fxScale: Double = 1e6, parallelSeed: Boolean = false,
       localMaxCells: Long = 4000000L): FitResult = {
     requireFx(fxScale)
-    lazy val n = points.count()
+    lazy val n = gateCount(points)
     if (plusPlus || n * dim > localMaxCells)
       fit(points, k, dim, tol, maxIter, seed, plusPlus, fxScale, parallelSeed)
     else fitLocal(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed)
@@ -927,28 +1122,48 @@ object KMeans {
     */
   def fit(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
-      fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult =
-    withIterConf(points.sparkSession) {
-      requireFx(fxScale)
+      fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult = {
+    requireFx(fxScale)
+    val coins = if (parallelSeed) coinCols(seed, 3) else Nil
+    Points.withPartitioned(points, coins, Some((dim, fxScale))) { placed =>
       val cs =
-        if (parallelSeed) seedParallel(points, k, seed)
-        else if (plusPlus) seedPlusPlus(points, k, seed)
-        else seedFirstK(points, k)
-      iterate(Points.partitioned(points), Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
+        if (parallelSeed) parallelSeeds(placed, k, seed, rounds = 3, overFactor = 2.0)
+        else if (plusPlus) plusPlusSeeds(placed, k, seed)
+        else placed.firstK(k)
+      iterate(placed, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
     }
+  }
 
-  /** Per-iteration query tuning, restored on exit: around every scan of
-    * the partitioned placement (planned under it on its first scan),
-    * [[fit]]'s seeding and [[fitMiniBatch]]'s size gate and batches. The
-    * collected placement's scans leave the session conf alone.
+  /** A size gate's `points.count()`, as ONE job described as `KMeans.gate`:
+    * under [[withIterConf]], where AQE would run the count's aggregate as
+    * two.
+    */
+  private[operators] def gateCount(points: DataFrame): Long =
+    withIterConf(points.sparkSession)(described(points.sparkSession.sparkContext, "KMeans.gate")(
+      points.count()))
+
+  /** `body` with its jobs described as `name` (the Spark UI's and event
+    * log's job description), the caller's description restored after.
+    */
+  private def described[A](sc: org.apache.spark.SparkContext, name: String)(body: => A): A = {
+    val desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try body finally sc.setLocalProperty("spark.job.description", desc)
+  }
+
+  /** Per-iteration query tuning, restored on exit: around the planning of
+    * the partitioned placement (on its first scan) and the size gates'
+    * counts ([[gateCount]]). The collected placement leaves the session
+    * conf alone.
     *
     * The Lloyd steps, the k-means|| passes and the k-means++ rounds are
-    * kernel jobs that shuffle nothing; what still plans a query (the
-    * min-key pick, a points frame with an aggregate under it) carries few
-    * rows after map-side partial aggregation, so the right reducer count is
-    * 1 — the default final-stage tasks are pure scheduling overhead, and
-    * AQE's per-stage re-planning adds ~50 ms to every one of the loop's
-    * tiny jobs. Points-scale data never crosses a shuffle.
+    * kernel jobs over resident blocks that shuffle nothing and plan
+    * nothing; what still plans a query (the points plan itself, a count, a
+    * points frame with an aggregate under it) carries few rows after
+    * map-side partial aggregation, so the right reducer count is 1 — the
+    * default final-stage tasks are pure scheduling overhead, and AQE's
+    * per-stage re-planning adds ~50 ms to every tiny job and splits a
+    * count into two. Points-scale data never crosses a shuffle.
     *
     * Reentrancy: concurrent fits on one session (gapStatistic runs its
     * per-k fits in parallel) must not interleave save/restore pairs — a
@@ -997,7 +1212,8 @@ object KMeans {
   def fitFrom(points: DataFrame, centroids: Seq[Centroid], dim: Int,
       tol: Double = 0.01, maxIter: Int = 50, fxScale: Double = 1e6,
       startStep: Long = 0L): FitResult =
-    iterate(Points.partitioned(points), Seq(centroids), dim, tol, maxIter, fxScale, startStep).head
+    Points.withPartitioned(points, fxAt = Some((dim, fxScale)))(
+      iterate(_, Seq(centroids), dim, tol, maxIter, fxScale, startStep).head)
 
   /** Fixed rational inverse-CDF draws shared by the ORACLE-REPLAYABLE
     * bounded fits ([[fitBounded]], Quality.gapStatisticFitted): the u for
@@ -1037,20 +1253,21 @@ object KMeans {
   def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e6,
       weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult = {
-    lazy val n = points.count()
-    val local = if (n * dim > localMaxCells) None
+    val local = if (gateCount(points) * dim > localMaxCells) None
       else boundedFits(Points.collected(points, dim, fxScale).head, Seq(k), dim, tol,
         lloydSteps, fxScale, weightScale)
-    local.fold(fitFrom(points, inverseCdfSeeds(points, k, weightScale), dim, tol,
-      maxIter = lloydSteps, fxScale = fxScale))(_.head)
+    local.fold(Points.withPartitioned(points, fxAt = Some((dim, fxScale))) { placed =>
+      iterate(placed, Seq(inverseCdfSeeds(points, placed.firstK(1), k, weightScale)), dim, tol,
+        lloydSteps, fxScale, startStep = 0L).head
+    })(_.head)
   }
 
-  /** [[fitBounded]]'s seeds over a frame: the min-key point, then
+  /** [[fitBounded]]'s seeds over a frame: the min-key point `first`, then
     * [[seedNextInverseCdf]]'s draws 2..`kMax` at [[fixedU]].
     */
-  private[operators] def inverseCdfSeeds(points: DataFrame, kMax: Int,
+  private[operators] def inverseCdfSeeds(points: DataFrame, first: Seq[Centroid], kMax: Int,
       weightScale: Double): Seq[Centroid] =
-    (2 to kMax).foldLeft(seedFirstK(points, 1)) { (seeds, r) =>
+    (2 to kMax).foldLeft(first) { (seeds, r) =>
       val (uN, uD) = fixedU(r)
       val drawn = seedNextInverseCdf(points, seeds, uN, uD, weightScale).collect()
       require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
@@ -1083,7 +1300,7 @@ object KMeans {
       val (cs, kc, cd) = foldOf(chosen.map(_.toSeq))
       val surv = ys.filter(y => !chosen.exists(c => sameY(c, y)))
       val ws = surv.map(y =>
-        roundHalfUpLong(NearestSqDistLit.sqDist(cs, kc, cd, y, y.length) * weightScale))
+        roundHalfUpLong(NearestSqDistLit.sqDist(cs, kc, cd, y, 0, y.length) * weightScale))
       if (ws.map(_.toDouble).sum > bound.toDouble * 0.25) return None
       val total = ws.sum
       var cw = 0L; var pick = -1; var ix = 0
@@ -1118,9 +1335,9 @@ object KMeans {
     * shuffle).
     *
     * One loop, either placement: while `rows·dim ≤ localMaxCells` the points
-    * are collected once (saving ~20 jobs of fixed cost) and each step scans
-    * the rows the int64 LCG predicate keeps; past it, the filtered frame's
-    * plan. The FitResult is bit-identical (pinned in KMeansSpec).
+    * are collected once (saving ~20 jobs of fixed cost), past it they are
+    * resident blocks, and each step scans the rows the int64 LCG predicate
+    * keeps. The FitResult is bit-identical (pinned in KMeansSpec).
     *
     * Convergence is monitored with the same [[movement]] metric and `tol`;
     * the log records each step's centroids so the WCR history stays
@@ -1130,15 +1347,19 @@ object KMeans {
     */
   def fitMiniBatch(points: DataFrame, k: Int, dim: Int,
       batchFrac: Double = 0.1, tol: Double = 0.01, maxIter: Int = 20,
-      seed: Long = 42L, localMaxCells: Long = 4000000L): FitResult =
-      withIterConf(points.sparkSession) {
+      seed: Long = 42L, localMaxCells: Long = 4000000L): FitResult = {
     require(batchFrac > 0 && batchFrac <= 1, s"batchFrac $batchFrac not in (0,1]")
+    if (localMaxCells > 0 && gateCount(points) * dim <= localMaxCells)
+      miniBatch(Points.collected(points, dim, 1e6).head, k, dim, batchFrac, tol, maxIter, seed)
+    else Points.withPartitioned(points, fxAt = Some((dim, 1e6)))(
+      miniBatch(_, k, dim, batchFrac, tol, maxIter, seed))
+  }
+
+  /** [[fitMiniBatch]]'s loop over placed points. */
+  private def miniBatch(placed: Points, k: Int, dim: Int, batchFrac: Double, tol: Double,
+      maxIter: Int, seed: Long): FitResult = {
     val mod = 2147483647L
     val cut = (batchFrac * mod).toLong
-    lazy val nRows = points.count()
-    val placed =
-      if (localMaxCells > 0 && nRows * dim <= localMaxCells) Points.collected(points, dim, 1e6).head
-      else Points.partitioned(points)
     var cs = placed.firstK(k)
     var log = cs.map(c => LogEntry(0L, c.j, c.c))
     val absorbed = scala.collection.mutable.Map.empty[Long, Long]
@@ -1148,9 +1369,8 @@ object KMeans {
     while (move >= tol && step < maxIter) {
       step += 1
       val salt = 12345L + seed + step
-      val batch = placed.where(i => (i * 1103515245L + salt) % mod < cut,
-        (col("i") * 1103515245L + lit(salt)) % mod < cut)
-      val stats = kernelStats(batch, Seq(cs), dim, fxScale = 1e6).head
+      val batch = placed.where(i => (i * 1103515245L + salt) % mod < cut)
+      val stats = kernelStats("KMeans.miniBatch", batch, Seq(cs), dim, fxScale = 1e6).head
       val next = cs.map { c =>
         stats.get(c.j) match {
           case Some((sums, cnt)) =>
@@ -1195,7 +1415,7 @@ object KMeans {
     val runs = inits.map(new Run(_))
     var active = runs.filter(_.moving)
     while (active.nonEmpty) {
-      val stats = kernelStats(points, active.map(_.cs), dim, fxScale)
+      val stats = kernelStats("KMeans.lloyd", points, active.map(_.cs), dim, fxScale)
       active.zip(stats).foreach { case (r, st) =>
         r.step += 1
         val next = centroidsOf(st, fxScale)

@@ -105,14 +105,15 @@ object Quality {
     * OptimalK.sql:3-21, README.md:39-43): one row (k, elbow_d1, elbow_d2,
     * silhouette) per candidate k, a null silhouette read as NaN. Each row is
     * bit-identical to the reference's per-k loop `KMeans.fit(plusPlus =
-    * true)` + [[elbow]] + [[silhouetteSimplified]] (QualitySpec), but the ++
-    * chain runs once, for `ks.max`, under the fit loop's conf: round r reads
-    * only the first r seeds and `seed + r`, so `seeds.take(k)` is k's own
-    * seeding. Then every k's fit runs in the one Lloyd loop's lockstep
-    * ([[KMeans.iterate]]: one kernel job per step for all k still moving)
-    * and one [[scoreKs]] scores all of them. `points` should be cached by
-    * the caller; `sample` is the silhouette pre-sample (its pair stage is
-    * O(|sample|²)).
+    * true)` + [[elbow]] + [[silhouetteSimplified]] (QualitySpec), but the
+    * points are placed once for the whole sweep (their blocks built by the
+    * first ++ pick, released at the end) and the ++ chain runs once, for
+    * `ks.max`: round r reads only the first r seeds and `seed + r`, so
+    * `seeds.take(k)` is k's own seeding. Then every k's fit runs in the one
+    * Lloyd loop's lockstep ([[KMeans.iterate]]: one kernel job per step for
+    * all k still moving) and one [[scoreKs]] scores all of them. `points`
+    * should be cached by the caller; `sample` is the silhouette pre-sample
+    * (its pair stage is O(|sample|²)).
     */
   def optimalKSweep(points: DataFrame, sample: DataFrame, dim: Int, ks: Seq[Int],
       seed: Long = 42L, d1Scale: Double = 1e6, d2Scale: Double = 1e6,
@@ -120,13 +121,12 @@ object Quality {
     require(ks.forall(_ >= 1), s"every k must be >= 1, got ${ks.mkString(", ")}")
     val spark = points.sparkSession
     import spark.implicits._
-    val seeds = if (ks.isEmpty) Nil
-      else KMeans.seedPlusPlus(points, ks.max, seed)
-    val placed = KMeans.Points.partitioned(points)
-    val fits = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
-      fxScale = 1e6, startStep = 0L)
-    scoreKs(placed, sample, ks.zip(fits.map(_.centroids)), d1Scale, d2Scale)
-      .map { case (k, d1, d2, si) => (k, d1.get, d2.get, si.getOrElse(Double.NaN)) }
+    KMeans.Points.withPartitioned(points, fxAt = Some((dim, 1e6))) { placed =>
+      val seeds = if (ks.isEmpty) Nil else KMeans.plusPlusSeeds(placed, ks.max, seed)
+      val fits = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
+        fxScale = 1e6, startStep = 0L)
+      scoreKs(placed, sample, ks.zip(fits.map(_.centroids)), d1Scale, d2Scale)
+    }.map { case (k, d1, d2, si) => (k, d1.get, d2.get, si.getOrElse(Double.NaN)) }
       .toDF("k", "elbow_d1", "elbow_d2", "silhouette")
   }
 
@@ -141,8 +141,8 @@ object Quality {
     require(ks.nonEmpty && ks.max <= seeds.size, s"need ${ks.max} seeds, got ${seeds.size}")
     val spark = points.sparkSession
     import spark.implicits._
-    scoreKs(KMeans.Points.partitioned(points), sample, ks.map(k => k -> seeds.take(k)),
-      d1Scale, d2Scale, dScale, maxCollectRows).toDF("k", "elbow_d1", "elbow_d2", "si")
+    KMeans.Points.withPartitioned(points)(scoreKs(_, sample, ks.map(k => k -> seeds.take(k)),
+      d1Scale, d2Scale, dScale, maxCollectRows)).toDF("k", "elbow_d1", "elbow_d2", "si")
   }
 
   /** (k, elbow_d1, elbow_d2, si) per (k, centroids) set, each value
@@ -246,7 +246,7 @@ object Quality {
       d2Scale: Double): Seq[(Option[Double], Option[Double])] = {
     val ansi = points.ansi
     val folds = sets.map(cs => KMeans.foldOf(cs.map(_.c))).toArray
-    val partials = points.partials { it =>
+    val partials = points.partials("Quality.elbow") { it =>
       val acc = new Array[Long](2 * folds.length) // per set: Σ d1, Σ d2
       var seen = 0L
       it.foreach { p =>
@@ -255,7 +255,7 @@ object Quality {
           var s = 0
           while (s < folds.length) {
             val (cs, k, dim) = folds(s)
-            val m = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.n)
+            val m = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n)
             d1Scale.foreach { sc =>
               acc(2 * s) = KMeans.plusLong(acc(2 * s), KMeans.fxEncode(math.sqrt(m) * sc, ansi), ansi)
             }
@@ -568,12 +568,14 @@ object Quality {
     * iterations is the published cost of hash-exactness — on data where
     * Lloyd converges within the budget the two forms coincide.
     *
-    * Scale shape: per set, the ++ draws are the two-level-prefix-sum form
-    * (no single-partition window at scale), every k's Lloyd loop runs in
-    * lockstep ([[KMeans.iterate]]: one sufficient-stats scan per step for
-    * all ks) and one kernel scan gives all the dispersions
-    * ([[elbowSums]]' d2 sums at `scale`); the `refSets + 1` set chains are
-    * independent and run concurrently (the [[gapStatistic]] pool rule).
+    * Scale shape: per set, the points are placed once (resident blocks,
+    * built by the min-key pick and released at the end), the ++ draws are
+    * the two-level-prefix-sum form (no single-partition window at scale),
+    * every k's Lloyd loop runs in lockstep ([[KMeans.iterate]]: one
+    * sufficient-stats scan per step for all ks) and one kernel scan gives
+    * all the dispersions ([[elbowSums]]' d2 sums at `scale`); the
+    * `refSets + 1` set chains are independent and run concurrently (the
+    * [[gapStatistic]] pool rule).
     * Below `localMaxRows` ONE select collects `Y` and every reference set
     * (the same `refY` expression) in key order, and each set runs
     * [[KMeans.boundedFits]] and the same elbow scan over its collected rows:
@@ -614,16 +616,15 @@ object Quality {
     // and ONE kernel dispersion scan over all ks (the elbow's d2 sums)
     def wOfSet(df0: DataFrame): Seq[Double] = {
       val df = df0.cache()
-      try {
-        val seeds = KMeans.inverseCdfSeeds(df, ks.max, weightScale = 1.0)
-        val placed = KMeans.Points.partitioned(df)
+      try KMeans.Points.withPartitioned(df, fxAt = Some((dim, fxScale))) { placed =>
+        val seeds = KMeans.inverseCdfSeeds(df, placed.firstK(1), ks.max, weightScale = 1.0)
         val fitted = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = tol,
           maxIter = lloydSteps, fxScale = fxScale, startStep = 0L)
         elbowSums(placed, fitted.map(_.centroids), None, scale).map(_._2.get)
       } finally df.unpersist()
     }
     val ws: Seq[Seq[Double]] =
-      (if (points.count() <= localRowBound) localW() else None).getOrElse {
+      (if (KMeans.gateCount(points) <= localRowBound) localW() else None).getOrElse {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(sets.size)
         try {
           implicit val ec: scala.concurrent.ExecutionContext =

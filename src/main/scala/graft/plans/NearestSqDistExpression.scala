@@ -53,7 +53,7 @@ case class NearestSqDistLit(child: Expression, cs: Array[Array[Double]])
 
   def compute(yd: ArrayData): Double = {
     val y = yd.toDoubleArray()
-    NearestSqDistLit.sqDist(flat, cs.length, dim, y, y.length)
+    NearestSqDistLit.sqDist(flat, cs.length, dim, y, 0, y.length)
   }
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
@@ -71,13 +71,14 @@ object NearestSqDistLit {
 
   /** The one nearest-centroid fold (this expression, the k-means scans):
     * `sq_dist`'s left-to-right `((0+d0²)+d1²)+…` over the first
-    * `min(n, dim)` coordinates of `y` for each of the `k` centroids in the
-    * row-major `cs`, then strict `<` from `Double.MaxValue` — the earlier
-    * slot wins a tie, a NaN distance never wins. Returns the slot, or `k`
+    * `min(n, dim)` coordinates of `y` from `yOff` on, for each of the `k`
+    * centroids in the row-major `cs`, then strict `<` from
+    * `Double.MaxValue` — the earlier slot wins a tie, a NaN distance never
+    * wins. Returns the slot, or `k`
     * when no distance is below `Double.MaxValue`; `dist(0)` (if given) gets
     * its distance — `Double.MaxValue` then, or NaN if every distance is NaN.
     */
-  def fold(cs: Array[Double], k: Int, dim: Int, y: Array[Double], n: Int,
+  def fold(cs: Array[Double], k: Int, dim: Int, y: Array[Double], yOff: Int, n: Int,
       dist: Array[Double]): Int = {
     val lim = math.min(n, dim)
     var best = k
@@ -88,7 +89,7 @@ object NearestSqDistLit {
       val o = j * dim
       var s = 0.0
       var d = 0
-      while (d < lim) { val t = cs(o + d) - y(d); s += t * t; d += 1 }
+      while (d < lim) { val t = cs(o + d) - y(yOff + d); s += t * t; d += 1 }
       if (s < m) { m = s; best = j }
       if (s == s) some = true
       j += 1
@@ -100,9 +101,9 @@ object NearestSqDistLit {
   /** [[fold]]'s distance as `nearest_sq_dist` returns it: `Double.MaxValue`
     * when every distance is NaN too.
     */
-  def sqDist(cs: Array[Double], k: Int, dim: Int, y: Array[Double], n: Int): Double = {
+  def sqDist(cs: Array[Double], k: Int, dim: Int, y: Array[Double], yOff: Int, n: Int): Double = {
     val dist = new Array[Double](1)
-    fold(cs, k, dim, y, n, dist)
+    fold(cs, k, dim, y, yOff, n, dist)
     if (dist(0).isNaN) Double.MaxValue else dist(0)
   }
 }

@@ -522,8 +522,8 @@ class KMeansSpec extends SparkSpec {
       val far = Centroid(99, Seq(1e9, 1e9))
       val sets = Seq(KMeans.seedFirstK(p, 3), KMeans.seedFirstK(p, 6),
         KMeans.seedFirstK(p, 4) :+ far)
-      val lock = KMeans.iterate(KMeans.Points.partitioned(p), sets, dim = 2, tol = 0.01,
-        maxIter = 30, fxScale = 1e6, startStep = 0L)
+      val lock = KMeans.Points.withPartitioned(p)(KMeans.iterate(_, sets, dim = 2, tol = 0.01,
+        maxIter = 30, fxScale = 1e6, startStep = 0L))
       val alone = sets.map(cs => KMeans.fitFrom(p, cs, dim = 2, tol = 0.01, maxIter = 30))
       assert(lock.map(fitBits) == alone.map(fitBits))
       // the collected placement runs the same loop over the same rows
@@ -558,10 +558,10 @@ class KMeansSpec extends SparkSpec {
     * broadcast DATA — the form [[KMeans.seedParallel]]'s passes replay:
     * ϕ as `sumFx` of the interpreted nearest fold, the draw as a filter on
     * the `xxhash64` coin sorted by key, and the weights as `nearestIdCols`
-    * counts per candidate.
+    * counts per candidate, each over the points with a `Y`.
     */
   private def dfPhi(points: DataFrame, cands: Seq[Seq[Double]]): Double =
-    points.crossJoin(broadcast(Seq(Tuple1(cands)).toDF("ccs")))
+    points.filter(col("Y").isNotNull).crossJoin(broadcast(Seq(Tuple1(cands)).toDF("ccs")))
       .agg(graft.functions.VectorOps.sumFx(nearestSqDistCols(col("Y"), col("ccs")), 1.0))
       .head().getDouble(0)
 
@@ -569,7 +569,7 @@ class KMeansSpec extends SparkSpec {
       phi: Double, l: Double): Seq[Seq[Double]] = {
     val u = shiftrightunsigned(xxhash64(col("i"), lit(seed), lit(r)), 11)
       .cast("double") / lit(9007199254740992.0)
-    points.crossJoin(broadcast(Seq(Tuple1(cands)).toDF("ccs")))
+    points.filter(col("Y").isNotNull).crossJoin(broadcast(Seq(Tuple1(cands)).toDF("ccs")))
       .filter(u * phi < nearestSqDistCols(col("Y"), col("ccs")) * l)
       .select(col("i"), col("Y")).collect().sortBy(_.getLong(0))
       .map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1).toVector).toSeq
@@ -577,7 +577,8 @@ class KMeansSpec extends SparkSpec {
 
   private def dfWeights(points: DataFrame, cands: Seq[Seq[Double]]): Seq[Long] = {
     val ids = cands.indices.map(_ + 1L)
-    val wByJ = points.crossJoin(broadcast(Seq((ids, cands)).toDF("cids", "ccs")))
+    val wByJ = points.filter(col("Y").isNotNull)
+      .crossJoin(broadcast(Seq((ids, cands)).toDF("cids", "ccs")))
       .select(graft.plans.native.nearestIdCols(col("Y"), col("cids"), col("ccs")).as("j"))
       .groupBy("j").count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -590,17 +591,16 @@ class KMeansSpec extends SparkSpec {
     import scala.util.{Failure, Success, Try}
     def vecBits(vs: Seq[Seq[Double]]) = vs.map(v => if (v == null) null else v.map(doubleToRawLongBits))
     val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    // a null Y mid-range: the interpreted fold gives it d² = Double.MaxValue,
-    // so its ϕ term overflows the cast and it is drawn as a null candidate;
-    // it attracts no weight
+    // a null Y mid-range has no distance: ϕ, the draw and the weights skip
+    // it, as `sum` skips a null
     val withNull = emb.union(Seq((250L, null: Seq[Double])).toDF("i", "Y")).cache()
     val (seed, rounds, k) = (7L, 3, 6)
     val l = 2.0 * k
     for (base <- Seq(emb, withNull); n <- Seq(0, 3, 7); ansi <- Seq(true, false)) withAnsi(ansi) {
       val p = if (n == 0) base else base.repartition(n).cache()
       val where = s"${if (base eq emb) "no" else "a"} null Y, ${p.rdd.getNumPartitions} partitions, ANSI $ansi"
-      val placements = Seq(
-        KMeans.Points.partitioned(p, KMeans.coinCols(seed, rounds)),
+      val resident = KMeans.Points.partitioned(p, KMeans.coinCols(seed, rounds))
+      val placements = Seq(resident,
         KMeans.Points.collected(p, dim = 64, fxScale = 1e6, coins = KMeans.coinCols(seed, rounds)).head)
       var cands = KMeans.seedFirstK(p, 1).map(_.c).toVector
       for (r <- 1 to rounds) {
@@ -626,6 +626,7 @@ class KMeansSpec extends SparkSpec {
       val w = dfWeights(p, cands)
       assert(w.sum == 500L, where)
       placements.foreach(pl => assert(KMeans.parallelWeights(pl, cands).toSeq == w, where))
+      resident.release()
     }
   }
 
@@ -911,5 +912,125 @@ class KMeansSpec extends SparkSpec {
       "AQE setting not restored after concurrent fits")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == partsBefore,
       "shuffle.partitions not restored after concurrent fits")
+  }
+
+  private def resultBits(f: KMeans.FitResult) = {
+    import java.lang.Double.doubleToRawLongBits
+    (f.steps, doubleToRawLongBits(f.finalMovement),
+      f.log.map(e => (e.step, e.j, e.c.map(doubleToRawLongBits))))
+  }
+
+  test("resident blocks: fit, fitFrom, the distributed fitMiniBatch and seedParallel " +
+      "give the collected placement's bits, on a repartition(3) copy too") {
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    val spread = emb.repartition(3).cache()
+    Seq(emb, spread).foreach { p =>
+      val where = s"${p.rdd.getNumPartitions} partitions"
+      for (parallel <- Seq(false, true)) {
+        val held = KMeans.fitLocal(p, k = 6, dim = 64, tol = 0.01, maxIter = 50, seed = 42,
+          fxScale = 1e6, parallelSeed = parallel)
+        assert(resultBits(KMeans.fit(p, k = 6, dim = 64, seed = 42, parallelSeed = parallel)) ==
+          resultBits(held), s"$where, k-means|| $parallel")
+      }
+      val seeds = KMeans.seedFirstK(p, 5)
+      val held = KMeans.iterate(KMeans.Points.collected(p, dim = 64, fxScale = 1e6).head,
+        Seq(seeds), dim = 64, tol = 0.0, maxIter = 4, fxScale = 1e6, startStep = 0L).head
+      assert(resultBits(KMeans.fitFrom(p, seeds, dim = 64, tol = 0.0, maxIter = 4)) ==
+        resultBits(held), where)
+      def miniBatch(cells: Long) = KMeans.fitMiniBatch(p, k = 8, dim = 64, batchFrac = 0.2,
+        maxIter = 20, seed = 42, localMaxCells = cells)
+      assert(resultBits(miniBatch(0L)) == resultBits(miniBatch(4000000L)), where)
+      // no Lloyd step: the collected chain's k-means|| seeds
+      val heldSeeds = KMeans.fitLocal(p, k = 6, dim = 64, tol = 0.01, maxIter = 0, seed = 7,
+        fxScale = 1e6, parallelSeed = true).centroids
+      assert(bits(KMeans.seedParallel(p, k = 6, seed = 7)) == bits(heldSeeds), where)
+    }
+  }
+
+  test("Partitioned.firstK is orderBy(i).limit(k): a null key first, fewer rows " +
+      "than k give fewer centroids") {
+    val df = Seq[(Option[Long], Seq[Double])](Some(5L) -> Seq(5.0, 0.0), None -> Seq(-1.0, 0.0),
+      Some(2L) -> Seq(2.0, 0.0), Some(9L) -> null, Some(7L) -> Seq(7.0, 0.0),
+      Some(1L) -> Seq(1.0, 0.0)).toDF("i", "Y")
+    for (p <- Seq(df.coalesce(1), df.repartition(3)); k <- Seq(1, 2, 4, 6, 9)) {
+      val got = KMeans.Points.withPartitioned(p)(_.firstK(k))
+      assert(got == KMeans.seedFirstK(p, k), s"k = $k, ${p.rdd.getNumPartitions} partitions")
+      assert(got.size == math.min(k, 6) && got.head.c == Seq(-1.0, 0.0))
+    }
+  }
+
+  test("no persisted RDD outlives a fit, one that throws included") {
+    val sc = spark.sparkContext
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    emb.count()
+    val huge = pts(1L -> Seq(1.0, 2.0), 2L -> Seq(1e200, 0.0))
+    val one = Seq(Centroid(1, Seq(0.0, 0.0)))
+    def unchanged(what: String)(fit: => Any): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      fit
+      assert(sc.getPersistentRDDs.keySet == before, what)
+    }
+    unchanged("fit")(KMeans.fit(emb, k = 4, dim = 64, maxIter = 3))
+    unchanged("fit, ++")(KMeans.fit(emb, k = 4, dim = 64, maxIter = 3, plusPlus = true))
+    unchanged("fit, k-means||")(KMeans.fit(emb, k = 4, dim = 64, maxIter = 3, parallelSeed = true))
+    unchanged("fitFrom")(KMeans.fitFrom(emb, KMeans.seedFirstK(emb, 4), dim = 64, maxIter = 3))
+    unchanged("fitAuto")(KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3, localMaxCells = 0))
+    unchanged("fitBounded")(KMeans.fitBounded(emb, k = 3, dim = 64, localMaxCells = 0))
+    unchanged("fitMiniBatch")(KMeans.fitMiniBatch(emb, k = 4, dim = 64, maxIter = 3, localMaxCells = 0))
+    unchanged("seedPlusPlus")(KMeans.seedPlusPlus(emb, 3, seed = 1L))
+    unchanged("seedParallel")(KMeans.seedParallel(emb, k = 3, seed = 1L))
+    unchanged("null Y") {
+      val e = intercept[Exception](KMeans.fitFrom(nullY, one, dim = 2, maxIter = 1))
+      assert(messages(e).contains("Y is null"), messages(e))
+    }
+    unchanged("CAST_OVERFLOW")(withAnsi(on = true) {
+      val e = intercept[Exception](KMeans.fit(huge, k = 1, dim = 2))
+      assert(messages(e).contains("CAST_OVERFLOW"), messages(e))
+    })
+  }
+
+  test("a fit whose blocks are unpersisted between steps gives the same bits") {
+    val sc = spark.sparkContext
+    val p = Tables.yhEmbeddings(spark, sf("0.001")).repartition(3).cache()
+    val seeds = KMeans.seedFirstK(p, 5)
+    val whole = KMeans.fitFrom(p, seeds, dim = 64, tol = 0.0, maxIter = 4)
+    def blocks = sc.getPersistentRDDs.values.filter(_.name == "KMeans points")
+    // one step at a time over one placement, its blocks dropped after each:
+    // every later step rebuilds them from the plan
+    val steps = KMeans.Points.withPartitioned(p, fxAt = Some((64, 1e6))) { placed =>
+      (1L to 4L).foldLeft(Vector.empty[KMeans.FitResult]) { (done, step) =>
+        val from = done.lastOption.fold(seeds)(_.centroids)
+        val r = KMeans.iterate(placed, Seq(from), dim = 64, tol = 0.0, maxIter = 1,
+          fxScale = 1e6, startStep = step - 1).head
+        assert(blocks.size == (if (step == 1) 1 else 0), s"step $step")
+        blocks.foreach(_.unpersist(blocking = true))
+        done :+ r
+      }
+    }
+    assert(resultBits(KMeans.FitResult(steps.last.centroids, steps.flatMap(_.log),
+      steps.last.steps, steps.last.finalMovement)) == resultBits(whole))
+    p.unpersist()
+  }
+
+  test("a null Y ahead of an overflowing row still fails with Y is null") {
+    val one = Seq(Centroid(1, Seq(0.0, 0.0)))
+    def fails(p: DataFrame, error: String): Unit = {
+      val e = intercept[Exception](KMeans.fitFrom(p.coalesce(1), one, dim = 2, maxIter = 1))
+      assert(messages(e).contains(error), messages(e))
+    }
+    withAnsi(on = true) {
+      fails(pts(1L -> Seq(1.0, 2.0), 2L -> null, 3L -> Seq(1e200, 0.0)), "Y is null")
+      fails(pts(1L -> Seq(1.0, 2.0), 2L -> Seq(1e200, 0.0), 3L -> null), "CAST_OVERFLOW")
+    }
+  }
+
+  test("k-means|| skips a null Y, ANSI on and off: the seeds of the points " +
+      "without it") {
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    val withNull = emb.union(Seq((250L, null: Seq[Double])).toDF("i", "Y")).cache()
+    for (ansi <- Seq(true, false)) withAnsi(ansi) {
+      assert(bits(KMeans.seedParallel(withNull, k = 6, seed = 7)) ==
+        bits(KMeans.seedParallel(emb, k = 6, seed = 7)), s"ANSI $ansi")
+    }
   }
 }

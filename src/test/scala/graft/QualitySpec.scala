@@ -142,6 +142,52 @@ class QualitySpec extends SparkSpec {
     assert(perKJobs > bound, s"the per-k loop ran $perKJobs jobs, within the bound $bound")
   }
 
+  test("optimalKSweep's resident placement gives the collected placement's " +
+      "Lloyd loop and elbow bits, on a repartition(3) copy too") {
+    val yh = Tables.yhOrders(spark, sf("0.001")).cache()
+    val spread = yh.repartition(3).cache()
+    Seq(yh, spread).foreach { p =>
+      val sample = p.filter(col("i") % 29 === 0)
+      val ks = Seq(2, 3, 4)
+      val seeds = KMeans.seedPlusPlus(p, ks.max, seed = 42L)
+      val held = KMeans.Points.collected(p, dim = 2, fxScale = 1e6).head
+      val fits = KMeans.iterate(held, ks.map(seeds.take), dim = 2, tol = 0.01, maxIter = 5,
+        fxScale = 1e6, startStep = 0L)
+      val want = ks.zip(fits).map { case (k, f) =>
+        val e = Quality.elbow(p, f.centroids, d1Scale = 1e4, d2Scale = 0.01).head()
+        val si = Quality.silhouetteSimplified(KMeans.assign(sample, f.centroids)).select("si").head()
+        bits(k.toLong, e.getDouble(0), e.getDouble(1), if (si.isNullAt(0)) Double.NaN else si.getDouble(0))
+      }
+      assert(sweepBits(p, sample, ks, maxIter = 5) == want, s"${p.rdd.getNumPartitions} partitions")
+    }
+  }
+
+  test("no persisted RDD outlives a sweep, a nested curve or a fitted gap, " +
+      "one that throws included") {
+    val sc = spark.sparkContext
+    val yh = Tables.yhOrders(spark, sf("0.001")).cache()
+    yh.count()
+    val sample = yh.filter(col("i") % 29 === 0)
+    def unchanged(what: String)(body: => Any): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      assert(sc.getPersistentRDDs.keySet == before, what)
+    }
+    unchanged("sweep")(sweepBits(yh, sample, Seq(2, 3), maxIter = 3))
+    unchanged("nested")(Quality.optimalKNested(yh, sample, KMeans.seedFirstK(yh, 3), Seq(2, 3),
+      d1Scale = 1e4, d2Scale = 0.01).collect())
+    // not yh's plan: the fitted gap caches and unpersists each of its sets
+    val other = Tables.yhOrders(spark, sf("0.001")).filter(col("i") > 0L)
+    unchanged("fitted gap")(Quality.gapStatisticFitted(other, dim = 2, ks = 2 to 3,
+      localMaxRows = 0L).collect())
+    val nullY = Seq[(Long, Seq[Double])](1L -> Seq(0.0, 0.0), 2L -> null,
+      3L -> Seq(10.0, 0.0), 4L -> Seq(0.0, 10.0)).toDF("i", "Y")
+    unchanged("a sweep over a null Y") {
+      val e = intercept[Exception](Quality.optimalKSweep(nullY, nullY, dim = 2, ks = Seq(2)).collect())
+      assert(messages(e).contains("Y is null"), messages(e))
+    }
+  }
+
   test("optimalKSweep rejects k < 1; no ks gives an empty frame") {
     val yh = Tables.yhOrders(spark, sf("0.001")).cache()
     val sample = yh.filter(col("i") % 29 === 0)

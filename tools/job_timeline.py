@@ -9,12 +9,14 @@ run started with
   JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=<dir> \
     -Dspark.eventLog.compress=false"
 
-Jobs are cut into passes at every job whose call site matches --split (the
-first job of a pass, e.g. the choose-K sweep's first-seed query); --pass N
-picks the N-th pass (1-based; default: the last). One line per job: its start
-relative to the pass's first job, the driver gap before it (since the
-previous job ended), its duration and its call site (the result stage's
-name), all in ms.
+A job's label is its description (`SparkContext.setJobDescription`, e.g.
+`KMeans.lloyd`) followed by its call site (the result stage's name). Jobs
+are cut into passes at every job whose label matches --split (the first job
+of a pass, e.g. a fit's size-gate count); a run of consecutive matching jobs
+starts one pass. --pass N picks the N-th pass (1-based; default: the last).
+One line per job: its start relative to the pass's first job, the driver gap
+before it (since the previous job ended), its duration and its label, all in
+ms.
 """
 import argparse
 import json
@@ -28,7 +30,9 @@ def jobs(path):
             e = json.loads(line)
             if e["Event"] == "SparkListenerJobStart":
                 result = max(e["Stage Infos"], key=lambda s: s["Stage ID"])
-                starts[e["Job ID"]] = (e["Submission Time"], result["Stage Name"])
+                desc = (e.get("Properties") or {}).get("spark.job.description")
+                label = f"{desc} ({result['Stage Name']})" if desc else result["Stage Name"]
+                starts[e["Job ID"]] = (e["Submission Time"], label)
             elif e["Event"] == "SparkListenerJobEnd":
                 ends[e["Job ID"]] = e["Completion Time"]
     return [(j, t, ends.get(j, t), site) for j, (t, site) in sorted(starts.items())]
@@ -41,16 +45,17 @@ def main():
     ap.add_argument("--pass", dest="pass_no", type=int, default=0)
     a = ap.parse_args()
     js = jobs(a.log)
-    firsts = [ix for ix, (_, _, _, site) in enumerate(js) if re.search(a.split, site)]
+    hits = [bool(re.search(a.split, site)) for _, _, _, site in js]
+    firsts = [ix for ix, hit in enumerate(hits) if hit and not (ix > 0 and hits[ix - 1])]
     if not firsts:
-        raise SystemExit(f"no job's call site matches {a.split!r}")
+        raise SystemExit(f"no job's label matches {a.split!r}")
     n = a.pass_no or len(firsts)
     lo = firsts[n - 1]
     hi = firsts[n] if n < len(firsts) else len(js)
     t0 = js[lo][1]
     print(f"pass {n} of {len(firsts)}: {hi - lo} jobs, "
           f"{max(e for _, _, e, _ in js[lo:hi]) - t0} ms from the first job's start to the last job's end")
-    print(f"{'job':>4} {'start':>6} {'gap':>5} {'dur':>5}  call site")
+    print(f"{'job':>4} {'start':>6} {'gap':>5} {'dur':>5}  label")
     for ix in range(lo, hi):
         j, t, e, site = js[ix]
         gap = t - js[ix - 1][2] if ix > 0 else 0
