@@ -44,8 +44,10 @@ import graft.plans.NearestSqDistLit
   *    blocks persisted MEMORY_ONLY and released when the fit ends (the
   *    driver holds O(k·dim)); or COLLECTED, the key-ordered rows on the
   *    driver, only while `rows·dim ≤ localMaxCells` (default 4M doubles,
-  *    32 MB; [[fitAuto]], [[fitBounded]], [[fitMiniBatch]],
-  *    Quality.gapStatisticFitted). Every scan — the Lloyd step, the
+  *    32 MB; [[fitAuto]], [[fitBounded]], [[fitMiniBatch]]). The size
+  *    gate is the job that builds the blocks ([[Points.place]]): it counts
+  *    their rows and, under the bound, brings them to the driver, so a
+  *    gated fit runs no count of its own. Every scan — the Lloyd step, the
   *    k-means|| passes, the ++ round, the elbow — is one per-row body with
   *    one nearest fold ([[NearestSqDistLit.fold]]); the placement only
   *    decides where it runs, so there is one Lloyd loop ([[iterate]]) and
@@ -379,19 +381,20 @@ object KMeans {
   }
 
   /** k-means|| round `r`'s draw: the non-null `Y`s with `coin_r·ϕ < d²·l`,
-    * in key order (the refine's PRNG reads it).
+    * in key order, a null key first and a tied key in partition order (the
+    * refine's PRNG reads it).
     */
   private[graft] def parallelDraw(points: Points, cands: Seq[Seq[Double]], r: Int,
       phi: Double, l: Double): Seq[Vector[Double]] = {
     val (cs, k, dim) = foldOf(cands)
     points.partials("KMeans.parallel.draw") { it =>
-      val drawn = Array.newBuilder[(Long, Vector[Double])]
+      val drawn = Array.newBuilder[(Boolean, Long, Vector[Double])]
       it.foreach { p =>
         if (p.y != null && p.u(r - 1) * phi < NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n) * l)
-          drawn += ((p.i, p.y.slice(p.yOff, p.yOff + p.n).toVector))
+          drawn += ((!p.nullKey, p.i, p.y.slice(p.yOff, p.yOff + p.n).toVector))
       }
       drawn.result()
-    }.flatten.sortBy(_._1).map(_._2).toSeq
+    }.flatten.sortBy(d => (d._1, d._2)).map(_._3).toSeq
   }
 
   /** How many points each candidate attracts: the argmin counted per slot.
@@ -681,7 +684,8 @@ object KMeans {
 
   /** One point as a scan's per-row body reads it — a cursor that its
     * placement moves from row to row, so a body must not keep it: the key
-    * `i`; `n` coordinates of `y` from `yOff` on (`y` null for a null `Y`);
+    * `i` (0 where `nullKey`); `n` coordinates of `y` from `yOff` on (`y`
+    * null for a null `Y`);
     * the k-means|| coins `u` (round r's at `r − 1`) where the placement
     * carries them; and `fx`, with this row's [[fxEncode]]s from `fxOff` on,
     * where the placement holds them (else null).
@@ -691,6 +695,7 @@ object KMeans {
     var yOff = 0
     var n = 0
     var i = 0L
+    var nullKey = false
     var u: Array[Double] = _
     var fx: Array[Long] = _
     var fxOff = 0
@@ -700,7 +705,9 @@ object KMeans {
     * executors ([[Partitioned]]) or the collected key-ordered rows
     * ([[Collected]]). Every scan — the Lloyd step, the k-means|| passes, the
     * ++ round, the elbow, the mini-batch batch — is ONE per-row body over
-    * [[Point]]s, and the placement only decides where it runs.
+    * [[Point]]s, and the placement only decides where it runs. A size-gated
+    * fit chooses from ONE job ([[Points.place]]): the job that builds the
+    * blocks is the size gate.
     */
   private[graft] sealed abstract class Points {
     /** `spark.sql.ansi.enabled` of the points' session. */
@@ -740,21 +747,67 @@ object KMeans {
       try body(placed) finally placed.release()
     }
 
-    /** `points`' rows on the driver in key order, from ONE select: a
-      * placement per column of `ys`, sharing the keys and `coins`. Each
-      * row's encodes at (`dim`, `fxScale`) are made on its first scan and
-      * kept.
+    /** A size-gated fit's placement of `points` (with `coins`, the encodes
+      * at `fxAt`), chosen from ONE job described as `KMeans.build+place`:
+      * the job that builds [[partitioned]]'s blocks also returns each
+      * block's row count, its `firstK` first rows ([[Partitioned.firstK]]'s
+      * answer) and, where the block fits its even share ⌈`maxCells`/P⌉
+      * cells (Quality.collectAtMost's rule), the block itself, so the
+      * driver receives O(`maxCells`) cells whatever the partitioning.
+      * COLLECTED iff `rows·dim ≤ maxCells` (never for a negative
+      * `maxCells`): the blocks merged in key order, a second job fetching
+      * the persisted blocks that outgrew their share, the blocks released.
+      * Else the resident blocks, the caller's to release.
+      */
+    def place(points: DataFrame, coins: Seq[Column], fxAt: (Int, Double), firstK: Int,
+        maxCells: Long): Either[Partitioned, Collected] = {
+      val resident = new Resident(points, coins, Some(fxAt))
+      val dim = fxAt._1
+      var resides = false
+      try {
+        val parts = math.max(1, resident.partitions)
+        val share = if (maxCells < 0) -1L else maxCells / parts + (if (maxCells % parts == 0) 0 else 1)
+        val placed = resident.scan("KMeans.place") { (_, b) =>
+          (b.rows, b.firstK(firstK, null), if (math.max(b.rows.toLong * dim, b.cells) <= share) b else null)
+        }
+        resident.placedFirst(firstK, placed.map(_._2))
+        if (placed.iterator.map(_._1.toLong).sum * dim > maxCells) {
+          resides = true
+          Left(new Partitioned(resident, null))
+        } else {
+          val over = placed.indices.filter(placed(_)._3 == null)
+          val fetched = (over zip resident.fetch("KMeans.place", over)).toMap
+          Right(Collected.of(placed.indices.map(p => fetched.getOrElse(p, placed(p)._3)), fxAt,
+            resident.ansi))
+        }
+      } finally if (!resides) resident.release()
+    }
+
+    /** `body` over [[place]]'s placement, released when it returns or throws. */
+    def withPlaced[A](points: DataFrame, coins: Seq[Column], fxAt: (Int, Double), firstK: Int,
+        maxCells: Long)(body: Points => A): A =
+      place(points, coins, fxAt, firstK, maxCells).fold(p => try body(p) finally p.release(), body)
+
+    /** [[place]] with no bound: `points`' rows on the driver in key order,
+      * as the one placement of [[collected]]'s rows form.
       */
     def collected(points: DataFrame, dim: Int, fxScale: Double,
-        ys: Seq[Column] = Seq(col("Y")), coins: Seq[Column] = Nil): Seq[Collected] = {
-      val rows = points.select(col("i") +: (ys ++ coins): _*).collect().sortBy(_.getLong(0))
-      val keys = rows.map(_.getLong(0))
-      val us = if (coins.isEmpty) null
-        else rows.map(r => Array.tabulate(coins.size)(c => r.getDouble(1 + ys.size + c)))
-      ys.indices.map { s =>
-        val yOf = rows.map(r => if (r.isNullAt(1 + s)) null else r.getSeq[Double](1 + s).toArray)
-        new Collected(keys, yOf, us, new Array[Array[Long]](rows.length), (dim, fxScale),
-          ansi(points), _ => true)
+        coins: Seq[Column] = Nil): Seq[Collected] =
+      Seq(place(points, coins, (dim, fxScale), 0, Long.MaxValue).toOption.get)
+
+    /** `rows` = `(i, Y_1, …, Y_ys)` on the driver in key order: a
+      * placement per `Y` column, sharing the keys. Each row's encodes at
+      * (`dim`, `fxScale`) are made on its first scan and kept.
+      */
+    def collected(rows: Array[org.apache.spark.sql.Row], ys: Int, dim: Int, fxScale: Double,
+        ansi: Boolean): Seq[Collected] = {
+      val nullKey = rows.map(_.isNullAt(0))
+      val keys = rows.map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
+      val order = Collected.keyOrder(keys, nullKey)
+      (1 to ys).map { c =>
+        val yOf = order.map(ix => if (rows(ix).isNullAt(c)) null else rows(ix).getSeq[Double](c).toArray)
+        new Collected(order.map(keys), order.map(nullKey), yOf, null,
+          new Array[Array[Long]](rows.length), (dim, fxScale), ansi, null)
       }
     }
   }
@@ -769,9 +822,12 @@ object KMeans {
     * needs it encodes it again and raises at its row, after any row before
     * it has raised its own error.
     */
-  private final class Block(rows: Int, keys: Array[Long], nullKey: Array[Boolean],
-      lens: Array[Int], ys: Array[Double], nu: Int, us: Array[Double], dim: Int,
-      fx: Array[Long], fxSet: Array[Boolean]) {
+  private final class Block(val rows: Int, val keys: Array[Long], val nullKey: Array[Boolean],
+      val lens: Array[Int], val ys: Array[Double], val nu: Int, val us: Array[Double], val dim: Int,
+      val fx: Array[Long], val fxSet: Array[Boolean]) extends Serializable {
+
+    /** The coordinates the block holds. */
+    def cells: Int = ys.length
 
     /** The rows `keep` accepts (every row for a null `keep`, else never a
       * null key), in row order, through one [[Point]] cursor.
@@ -792,6 +848,7 @@ object KMeans {
         p.yOff = off
         p.n = math.max(lens(r), 0)
         p.i = keys(r)
+        p.nullKey = nullKey(r)
         var c = 0
         while (c < nu) { p.u(c) = us(r * nu + c); c += 1 }
         p.fx = if (fx != null && fxSet(r)) fx else null
@@ -803,9 +860,9 @@ object KMeans {
     }
 
     /** The `k` first rows `keep` accepts in `orderBy("i")` order (a null key
-      * first, a tied key in row order), as (null key, key, Y or null).
+      * first, a tied key in row order).
       */
-    def firstK(k: Int, keep: Long => Boolean): Array[(Boolean, Long, Array[Double])] = {
+    def firstK(k: Int, keep: Long => Boolean): Array[FirstRow] = {
       val offs = new Array[Int](rows)
       var r = 1
       while (r < rows) { offs(r) = offs(r - 1) + math.max(lens(r - 1), 0); r += 1 }
@@ -829,6 +886,15 @@ object KMeans {
       }
     }
   }
+
+  /** A first row as [[Block.firstK]] gives it: (null key, key, Y or null). */
+  private type FirstRow = (Boolean, Long, Array[Double])
+
+  /** The `k` first of the blocks' first rows, in `orderBy("i")` order (a
+    * tied key goes to the earlier partition).
+    */
+  private def firstOf(parts: Array[Array[FirstRow]], k: Int): Seq[FirstRow] =
+    parts.toSeq.flatten.sortBy(r => (!r._1, r._2)).take(k)
 
   /** Appends `(i, Y, coins…)` rows, one call per row, into one [[Block]],
     * with the encodes at `fxAt`.
@@ -890,7 +956,9 @@ object KMeans {
     * Partition indices and in-partition row order are the plan's, so the
     * ++ round's per-partition `rand` replay and `max_by`'s tie order hold.
     * The first scan builds the blocks and runs as the plan's one SQL
-    * execution; every later scan reads them. A block the memory store
+    * execution (for a size-gated fit, [[Points.place]]'s job, which also
+    * brings the blocks within their share to the driver); every later scan
+    * reads them. A block the memory store
     * refuses (or evicts, or one unpersisted) is rebuilt from the plan by the
     * scan that needs it: one more decode of its rows, with the same bits.
     */
@@ -899,14 +967,15 @@ object KMeans {
     val ansi: Boolean = KMeans.ansi(df)
     private val sc = df.sparkSession.sparkContext
     private var blocks: RDD[Block] = null
+    // the plan, until the first scan (which builds the blocks) runs it
     private var qe: org.apache.spark.sql.execution.QueryExecution = null
+    // the first `firstKnown` rows, from the placement job ([[Points.place]])
+    private var first: Seq[FirstRow] = Nil
+    private var firstKnown = 0
 
-    /** `f(partition, block)` for every block, as ONE job described as
-      * `name` (the first, which builds the blocks, as `KMeans.build+…`).
-      */
-    def scan[A: ClassTag](name: String)(f: (Int, Block) => A): Array[A] = {
-      val first = blocks == null
-      if (first) {
+    /** The blocks, planned on first use. */
+    private def planned(): RDD[Block] = {
+      if (blocks == null) {
         val (nu, fxAt, ansi) = (coins.size, this.fxAt, this.ansi)
         val rows = withIterConf(df.sparkSession) {
           qe = df.select(col("i") +: col("Y") +: coins: _*).queryExecution
@@ -919,17 +988,55 @@ object KMeans {
         }
           .setName("KMeans points").persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       }
-      def job() = blocks.mapPartitionsWithIndex((p, it) => Iterator.single(f(p, it.next()))).collect()
-      if (!first) described(sc, name)(job())
-      else described(sc, "KMeans.build+" + name.stripPrefix("KMeans.")) {
-        org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(job())
+      blocks
+    }
+
+    /** How many blocks (partitions) the points make. */
+    def partitions: Int = planned().getNumPartitions
+
+    /** `f(partition, block)` for every block, as ONE job described as
+      * `name` (the first, which builds the blocks, as `KMeans.build+…`).
+      */
+    def scan[A: ClassTag](name: String)(f: (Int, Block) => A): Array[A] = {
+      val rdd = planned()
+      def job() = rdd.mapPartitionsWithIndex((p, it) => Iterator.single(f(p, it.next()))).collect()
+      val build = qe
+      if (build == null) described(sc, name)(job())
+      else {
+        qe = null
+        described(sc, "KMeans.build+" + name.stripPrefix("KMeans.")) {
+          org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(build, Some(name))(job())
+        }
       }
     }
+
+    /** The blocks of partitions `parts`, as ONE job described as `name`
+      * (none for no partition).
+      */
+    def fetch(name: String, parts: Seq[Int]): Array[Block] =
+      if (parts.isEmpty) Array.empty
+      else described(sc, name)(sc.runJob(planned(), (it: Iterator[Block]) => it.next(), parts))
+
+    /** Keep each block's `k` first rows, `parts`, as the first rows of the
+      * whole placement ([[firstRows]]).
+      */
+    def placedFirst(k: Int, parts: Array[Array[FirstRow]]): Unit = {
+      first = firstOf(parts, k)
+      firstKnown = k
+    }
+
+    /** The `k` first rows `keep` accepts: the placement job's where it
+      * brought them, else one scan.
+      */
+    def firstRows(k: Int, keep: Long => Boolean): Seq[FirstRow] =
+      if (keep == null && k <= firstKnown) first.take(k)
+      else firstOf(scan("KMeans.firstK")((_, b) => b.firstK(k, keep)), k)
 
     /** Drop the blocks; a later scan would build them again. */
     def release(): Unit = if (blocks != null) {
       blocks.unpersist(blocking = false)
       blocks = null
+      qe = null
     }
   }
 
@@ -953,14 +1060,12 @@ object KMeans {
 
     /** Each block's k first rows, merged on the driver in `orderBy("i")`
       * order (a tied key goes to the earlier partition): [[seedFirstK]]'s
-      * centroids without its query.
+      * centroids without its query, and without a job of their own where
+      * the placement job brought them.
       */
-    def firstK(k: Int): Seq[Centroid] = {
-      val keep = this.keep
-      resident.scan("KMeans.firstK")((_, b) => b.firstK(k, keep)).toSeq.flatten
-        .sortBy(r => (!r._1, r._2)).take(k).zipWithIndex
+    def firstK(k: Int): Seq[Centroid] =
+      resident.firstRows(k, keep).zipWithIndex
         .map { case (r, ix) => Centroid(ix + 1L, Option(r._3).map(_.toSeq).orNull) }
-    }
 
     def where(accept: Long => Boolean): Points = {
       val keep = this.keep
@@ -971,10 +1076,12 @@ object KMeans {
     def release(): Unit = resident.release()
   }
 
-  /** The collected placement: the key-ordered rows `keep` accepts. `ys`
-    * and the encode cache `fxs` cover every row.
+  /** The collected placement: the rows `keep` accepts (every row for
+    * null, else never a null key), in key order with a null key first and
+    * a tied key in partition order. `ys` and the encode cache `fxs` cover
+    * every row.
     */
-  private[graft] final class Collected private[KMeans] (keys: Array[Long],
+  private[graft] final class Collected private[KMeans] (keys: Array[Long], nullKey: Array[Boolean],
       val ys: Array[Array[Double]], us: Array[Array[Double]], fxs: Array[Array[Long]],
       dimScale: (Int, Double), val ansi: Boolean, keep: Long => Boolean) extends Points {
     def fxAt: Option[(Int, Double)] = Some(dimScale)
@@ -992,18 +1099,63 @@ object KMeans {
         }
         p.fx = fxs(ix)
         p.i = keys(ix)
+        p.nullKey = nullKey(ix)
         if (us != null) p.u = us(ix)
         p
       }))
     }
 
-    def firstK(k: Int): Seq[Centroid] =
-      kept.take(k).zipWithIndex.map { case (ix, j) => Centroid(j + 1L, ys(ix).toSeq) }.toSeq
+    def firstK(k: Int): Seq[Centroid] = kept.take(k).zipWithIndex
+      .map { case (ix, j) => Centroid(j + 1L, Option(ys(ix)).map(_.toSeq).orNull) }.toSeq
 
     def where(accept: Long => Boolean): Points =
-      new Collected(keys, ys, us, fxs, dimScale, ansi, i => keep(i) && accept(i))
+      new Collected(keys, nullKey, ys, us, fxs, dimScale, ansi,
+        if (keep == null) accept else i => keep(i) && accept(i))
 
-    private def kept: Iterator[Int] = keys.indices.iterator.filter(ix => keep(keys(ix)))
+    private def kept: Iterator[Int] =
+      if (keep == null) keys.indices.iterator
+      else keys.indices.iterator.filter(ix => !nullKey(ix) && keep(keys(ix)))
+  }
+
+  private object Collected {
+    /** Row indices in key order: a null key first, a tied key in index order. */
+    def keyOrder(keys: Array[Long], nullKey: Array[Boolean]): Array[Int] = {
+      val ix = Array.tabulate[Integer](keys.length)(Integer.valueOf)
+      java.util.Arrays.sort(ix, (a: Integer, b: Integer) =>
+        if (nullKey(a) != nullKey(b)) { if (nullKey(a)) -1 else 1 }
+        else java.lang.Long.compare(keys(a), keys(b)))
+      ix.map(_.intValue)
+    }
+
+    /** The rows of `blocks` (in partition order), merged in key order; each
+      * row keeps the encodes its block made at `dimScale`.
+      */
+    def of(blocks: Seq[Block], dimScale: (Int, Double), ansi: Boolean): Collected = {
+      import java.util.Arrays.copyOfRange
+      val n = blocks.map(_.rows).sum
+      val nu = blocks.headOption.fold(0)(_.nu)
+      val keys = new Array[Long](n)
+      val nullKey = new Array[Boolean](n)
+      val ys = new Array[Array[Double]](n)
+      val us = if (nu == 0) null else new Array[Array[Double]](n)
+      val fxs = new Array[Array[Long]](n)
+      var at = 0
+      blocks.foreach { b =>
+        var off = 0
+        for (r <- 0 until b.rows) {
+          keys(at) = b.keys(r)
+          nullKey(at) = b.nullKey(r)
+          if (b.lens(r) >= 0) ys(at) = copyOfRange(b.ys, off, off + b.lens(r))
+          if (us != null) us(at) = copyOfRange(b.us, r * nu, (r + 1) * nu)
+          if (b.fx != null && b.fxSet(r)) fxs(at) = copyOfRange(b.fx, r * b.dim, (r + 1) * b.dim)
+          off += math.max(b.lens(r), 0)
+          at += 1
+        }
+      }
+      val order = keyOrder(keys, nullKey)
+      new Collected(order.map(keys), order.map(nullKey), order.map(ys),
+        if (us == null) null else order.map(us), order.map(fxs), dimScale, ansi, null)
+    }
   }
 
   // ------------------------------------------------------------ convergence
@@ -1027,36 +1179,46 @@ object KMeans {
   // ----------------------------------------------------- size-aware local fit
 
   /** Size-aware fit: identical results to [[fit]] (bitwise, pinned in
-    * KMeansSpec), the placement picked by input size. While `rows·dim` fits
-    * on the driver (`localMaxCells`, default 4M doubles = 32 MB) the points
-    * are collected once ([[fitLocal]]) and the 30-odd Lloyd steps stop
-    * paying ~0.1 s of per-job scheduling each; past it they stay
-    * partitioned ([[fit]]). `plusPlus` seeding stays partitioned at any
-    * size: its `rand(seed)` draw is seeded per partition.
+    * KMeansSpec), the placement picked by input size from the job that
+    * builds it ([[Points.place]]: the block build is the size gate, no
+    * count runs first). While `rows·dim` fits on the driver
+    * (`localMaxCells`, default 4M doubles = 32 MB) that job brings the
+    * points ([[fitLocal]]'s placement) and the 30-odd Lloyd steps stop
+    * paying ~0.1 s of per-job scheduling each; past it they stay resident
+    * blocks and the job's first rows are the first-k seeds ([[fit]]).
+    * `plusPlus` seeding stays partitioned at any size, with no gate: its
+    * `rand(seed)` draw is seeded per partition.
     */
   def fitAuto(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false,
-      localMaxCells: Long = 4000000L): FitResult = {
-    requireFx(fxScale)
-    lazy val n = gateCount(points)
-    if (plusPlus || n * dim > localMaxCells)
-      fit(points, k, dim, tol, maxIter, seed, plusPlus, fxScale, parallelSeed)
-    else fitLocal(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed)
-  }
+      localMaxCells: Long = 4000000L): FitResult =
+    if (plusPlus) fit(points, k, dim, tol, maxIter, seed, plusPlus, fxScale, parallelSeed)
+    else placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, localMaxCells)
 
   /** [[fit]] over COLLECTED points, for small inputs — the identical
-    * `FitResult` bit for bit: ONE select brings the rows and, for k-means||,
-    * every round's coin to the driver, and the same seeding passes and
-    * [[iterate]] run over them.
+    * `FitResult` bit for bit: [[fitAuto]]'s placement with no bound, whose
+    * one job brings the rows and, for k-means||, every round's coin to the
+    * driver, and the same seeding passes and [[iterate]] run over them.
     */
   def fitLocal(points: DataFrame, k: Int, dim: Int, tol: Double,
       maxIter: Int, seed: Long, fxScale: Double, parallelSeed: Boolean,
-      rounds: Int = 3, overFactor: Double = 2.0): FitResult = {
-    val held = Points.collected(points, dim, fxScale,
-      coins = if (parallelSeed) coinCols(seed, rounds) else Nil).head
-    val cs = if (parallelSeed) parallelSeeds(held, k, seed, rounds, overFactor) else held.firstK(k)
-    iterate(held, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
+      rounds: Int = 3, overFactor: Double = 2.0): FitResult =
+    placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, Long.MaxValue,
+      rounds, overFactor)
+
+  /** The first-k or k-means|| fit over [[Points.place]]'s placement at
+    * `maxCells` ([[fitAuto]], [[fitLocal]], [[fit]]).
+    */
+  private def placedFit(points: DataFrame, k: Int, dim: Int, tol: Double, maxIter: Int,
+      seed: Long, fxScale: Double, parallelSeed: Boolean, maxCells: Long, rounds: Int = 3,
+      overFactor: Double = 2.0): FitResult = {
+    requireFx(fxScale)
+    val coins = if (parallelSeed) coinCols(seed, rounds) else Nil
+    Points.withPlaced(points, coins, (dim, fxScale), if (parallelSeed) 1 else k, maxCells) { placed =>
+      val cs = if (parallelSeed) parallelSeeds(placed, k, seed, rounds, overFactor) else placed.firstK(k)
+      iterate(placed, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
+    }
   }
 
   /** Spark's `round(x)` for doubles (`BigDecimal(x).setScale(0, HALF_UP)`)
@@ -1124,23 +1286,13 @@ object KMeans {
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult = {
     requireFx(fxScale)
-    val coins = if (parallelSeed) coinCols(seed, 3) else Nil
-    Points.withPartitioned(points, coins, Some((dim, fxScale))) { placed =>
-      val cs =
-        if (parallelSeed) parallelSeeds(placed, k, seed, rounds = 3, overFactor = 2.0)
-        else if (plusPlus) plusPlusSeeds(placed, k, seed)
-        else placed.firstK(k)
-      iterate(placed, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
+    if (parallelSeed || !plusPlus)
+      placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, maxCells = -1L)
+    else Points.withPartitioned(points, fxAt = Some((dim, fxScale))) { placed =>
+      iterate(placed, Seq(plusPlusSeeds(placed, k, seed)), dim, tol, maxIter, fxScale,
+        startStep = 0L).head
     }
   }
-
-  /** A size gate's `points.count()`, as ONE job described as `KMeans.gate`:
-    * under [[withIterConf]], where AQE would run the count's aggregate as
-    * two.
-    */
-  private[operators] def gateCount(points: DataFrame): Long =
-    withIterConf(points.sparkSession)(described(points.sparkSession.sparkContext, "KMeans.gate")(
-      points.count()))
 
   /** `body` with its jobs described as `name` (the Spark UI's and event
     * log's job description), the caller's description restored after.
@@ -1152,18 +1304,16 @@ object KMeans {
   }
 
   /** Per-iteration query tuning, restored on exit: around the planning of
-    * the partitioned placement (on its first scan) and the size gates'
-    * counts ([[gateCount]]). The collected placement leaves the session
-    * conf alone.
+    * the points plan whose blocks make either placement ([[Points]]).
     *
     * The Lloyd steps, the k-means|| passes and the k-means++ rounds are
     * kernel jobs over resident blocks that shuffle nothing and plan
-    * nothing; what still plans a query (the points plan itself, a count, a
-    * points frame with an aggregate under it) carries few rows after
-    * map-side partial aggregation, so the right reducer count is 1 — the
-    * default final-stage tasks are pure scheduling overhead, and AQE's
-    * per-stage re-planning adds ~50 ms to every tiny job and splits a
-    * count into two. Points-scale data never crosses a shuffle.
+    * nothing; what still plans a query (the points plan itself, a points
+    * frame with an aggregate under it) carries few rows after map-side
+    * partial aggregation, so the right reducer count is 1 — the default
+    * final-stage tasks are pure scheduling overhead, and AQE's per-stage
+    * re-planning adds ~50 ms to every tiny job and splits an aggregate's
+    * job into two. Points-scale data never crosses a shuffle.
     *
     * Reentrancy: concurrent fits on one session (gapStatistic runs its
     * per-k fits in parallel) must not interleave save/restore pairs — a
@@ -1244,22 +1394,25 @@ object KMeans {
     * data where Lloyd converges within the budget the bounded and free
     * fits coincide.
     *
-    * Placement, as in [[fitAuto]]: while `rows·dim ≤ localMaxCells` the ~k·9
-    * seeding jobs and the Lloyd jobs would be pure fixed cost, so the points
-    * are collected and [[boundedFits]] runs the chain over them,
-    * bit-identical (KMeansSpec); past the bound, or where it declines, the
-    * distributed chain runs.
+    * Placement, as in [[fitAuto]] (one job, [[Points.place]]): while
+    * `rows·dim ≤ localMaxCells` the ~k·9 seeding jobs and the Lloyd jobs
+    * would be pure fixed cost, so the points are collected and
+    * [[boundedFits]] runs the chain over them, bit-identical (KMeansSpec);
+    * past the bound the distributed chain runs over the resident blocks,
+    * and where the replay declines, over blocks built again.
     */
   def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e6,
       weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult = {
-    val local = if (gateCount(points) * dim > localMaxCells) None
-      else boundedFits(Points.collected(points, dim, fxScale).head, Seq(k), dim, tol,
-        lloydSteps, fxScale, weightScale)
-    local.fold(Points.withPartitioned(points, fxAt = Some((dim, fxScale))) { placed =>
-      iterate(placed, Seq(inverseCdfSeeds(points, placed.firstK(1), k, weightScale)), dim, tol,
+    def distributed(placed: Partitioned): FitResult =
+      try iterate(placed, Seq(inverseCdfSeeds(points, placed.firstK(1), k, weightScale)), dim, tol,
         lloydSteps, fxScale, startStep = 0L).head
-    })(_.head)
+      finally placed.release()
+    Points.place(points, Nil, (dim, fxScale), 1, localMaxCells) match {
+      case Left(placed) => distributed(placed)
+      case Right(held) => boundedFits(held, Seq(k), dim, tol, lloydSteps, fxScale, weightScale)
+        .fold(distributed(Points.partitioned(points, fxAt = Some((dim, fxScale)))))(_.head)
+    }
   }
 
   /** [[fitBounded]]'s seeds over a frame: the min-key point `first`, then
@@ -1334,10 +1487,12 @@ object KMeans {
     * kernel scan of the batch, ≤ P partial arrays to the driver, no
     * shuffle).
     *
-    * One loop, either placement: while `rows·dim ≤ localMaxCells` the points
-    * are collected once (saving ~20 jobs of fixed cost), past it they are
-    * resident blocks, and each step scans the rows the int64 LCG predicate
-    * keeps. The FitResult is bit-identical (pinned in KMeansSpec).
+    * One loop, either placement, chosen by [[fitAuto]]'s one placement job
+    * ([[Points.place]]): while `rows·dim ≤ localMaxCells` (and
+    * `localMaxCells > 0`) the points are collected (saving ~20 jobs of fixed
+    * cost), past it they are resident blocks, and each step scans the rows
+    * the int64 LCG predicate keeps. The FitResult is bit-identical (pinned
+    * in KMeansSpec).
     *
     * Convergence is monitored with the same [[movement]] metric and `tol`;
     * the log records each step's centroids so the WCR history stays
@@ -1349,9 +1504,7 @@ object KMeans {
       batchFrac: Double = 0.1, tol: Double = 0.01, maxIter: Int = 20,
       seed: Long = 42L, localMaxCells: Long = 4000000L): FitResult = {
     require(batchFrac > 0 && batchFrac <= 1, s"batchFrac $batchFrac not in (0,1]")
-    if (localMaxCells > 0 && gateCount(points) * dim <= localMaxCells)
-      miniBatch(Points.collected(points, dim, 1e6).head, k, dim, batchFrac, tol, maxIter, seed)
-    else Points.withPartitioned(points, fxAt = Some((dim, 1e6)))(
+    Points.withPlaced(points, Nil, (dim, 1e6), k, if (localMaxCells > 0) localMaxCells else -1L)(
       miniBatch(_, k, dim, batchFrac, tol, maxIter, seed))
   }
 

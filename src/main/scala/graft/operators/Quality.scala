@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps._
 import graft.operators.KMeans.Centroid
 import graft.plans.{NearestSqDistLit, PairDistStats}
@@ -576,12 +577,15 @@ object Quality {
     * all the dispersions ([[elbowSums]]' d2 sums at `scale`); the
     * `refSets + 1` set chains are independent and run concurrently (the
     * [[gapStatistic]] pool rule).
-    * Below `localMaxRows` ONE select collects `Y` and every reference set
-    * (the same `refY` expression) in key order, and each set runs
-    * [[KMeans.boundedFits]] and the same elbow scan over its collected rows:
-    * bit-identical (pinned in QualitySpec), without the distributed form's
-    * ~130 tiny jobs of fixed cost. Where a set's replay declines, the
-    * distributed chain runs.
+    * Below `localMaxRows` ONE bounded collect ([[collectAtMost]], one job
+    * on balanced partitions, the size gate too) brings `Y` and every
+    * reference set (the same `refY` expression), ordered by key on the
+    * driver, and each set runs [[KMeans.boundedFits]] and the same elbow
+    * scan over its collected rows: bit-identical (pinned in QualitySpec),
+    * without the distributed form's ~130 tiny jobs of fixed cost. Where a
+    * set's replay declines, the distributed chain runs. The distributed
+    * chain caches a set for its run only where it is not cached already, so
+    * a caller's cache of `points` outlives it.
     */
   def gapStatisticFitted(points: DataFrame, dim: Int, ks: Seq[Int],
       refSets: Int = 3, scale: Double = 0.01, tol: Double = 0.01,
@@ -603,8 +607,8 @@ object Quality {
       points +: (0 until refSets).map(b => points.select(col("i"), refY(b).as("Y")))
 
     // per set, over the collected rows: the bounded fits and their dispersions
-    def localW(): Option[Seq[Seq[Double]]] = {
-      val ws = KMeans.Points.collected(points, dim, fxScale, col("Y") +: (0 until refSets).map(refY))
+    def localW(rows: Array[Row]): Option[Seq[Seq[Double]]] = {
+      val ws = KMeans.Points.collected(rows, 1 + refSets, dim, fxScale, KMeans.ansi(points))
         .map { held =>
           KMeans.boundedFits(held, ks, dim, tol, lloydSteps, fxScale, 1.0)
             .map(fits => elbowSums(held, fits.map(_.centroids), None, scale).map(_._2.get))
@@ -615,16 +619,19 @@ object Quality {
     // per set: nested ++ seeds, every k's bounded fit in one lockstep loop,
     // and ONE kernel dispersion scan over all ks (the elbow's d2 sums)
     def wOfSet(df0: DataFrame): Seq[Double] = {
-      val df = df0.cache()
+      val owned = df0.storageLevel == StorageLevel.NONE
+      val df = if (owned) df0.cache() else df0
       try KMeans.Points.withPartitioned(df, fxAt = Some((dim, fxScale))) { placed =>
         val seeds = KMeans.inverseCdfSeeds(df, placed.firstK(1), ks.max, weightScale = 1.0)
         val fitted = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = tol,
           maxIter = lloydSteps, fxScale = fxScale, startStep = 0L)
         elbowSums(placed, fitted.map(_.centroids), None, scale).map(_._2.get)
-      } finally df.unpersist()
+      } finally if (owned) df.unpersist()
     }
+    val rows = collectAtMost(points.select(col("i") +: col("Y") +: (0 until refSets).map(refY): _*),
+      math.min(localRowBound, Int.MaxValue - 2L).toInt)
     val ws: Seq[Seq[Double]] =
-      (if (KMeans.gateCount(points) <= localRowBound) localW() else None).getOrElse {
+      rows.flatMap(localW).getOrElse {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(sets.size)
         try {
           implicit val ec: scala.concurrent.ExecutionContext =

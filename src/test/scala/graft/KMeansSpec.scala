@@ -987,6 +987,28 @@ class KMeansSpec extends SparkSpec {
       val e = intercept[Exception](KMeans.fit(huge, k = 1, dim = 2))
       assert(messages(e).contains("CAST_OVERFLOW"), messages(e))
     })
+    // the collected placement: its blocks live for the placement job only
+    unchanged("fitAuto, collected")(KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3))
+    unchanged("fitAuto, collected, k-means||")(
+      KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3, parallelSeed = true))
+    unchanged("fitLocal")(KMeans.fitLocal(emb, k = 4, dim = 64, tol = 0.01, maxIter = 3, seed = 1L,
+      fxScale = 1e6, parallelSeed = false))
+    unchanged("fitBounded, collected")(KMeans.fitBounded(emb, k = 3, dim = 64))
+    unchanged("fitMiniBatch, collected")(KMeans.fitMiniBatch(emb, k = 4, dim = 64, maxIter = 3))
+    unchanged("collected, null Y") {
+      val e = intercept[Exception](KMeans.fitAuto(nullY, k = 1, dim = 2, maxIter = 1))
+      assert(messages(e).contains("Y is null"), messages(e))
+    }
+    unchanged("collected, CAST_OVERFLOW")(withAnsi(on = true) {
+      val e = intercept[Exception](KMeans.fitAuto(huge, k = 1, dim = 2))
+      assert(messages(e).contains("CAST_OVERFLOW"), messages(e))
+    })
+    val boom = udf((i: Long) => if (i == 2L) throw new IllegalStateException("boom") else Seq(i.toDouble, 0.0))
+    val failing = pts(1L -> Nil, 2L -> Nil, 3L -> Nil).select(col("i"), boom(col("i")).as("Y"))
+    for (cells <- Seq(0L, 4000000L)) unchanged(s"a placement job that throws, localMaxCells $cells") {
+      val e = intercept[Exception](KMeans.fitAuto(failing, k = 1, dim = 2, localMaxCells = cells))
+      assert(messages(e).contains("boom"), messages(e))
+    }
   }
 
   test("a fit whose blocks are unpersisted between steps gives the same bits") {
@@ -1032,5 +1054,109 @@ class KMeansSpec extends SparkSpec {
       assert(bits(KMeans.seedParallel(withNull, k = 6, seed = 7)) ==
         bits(KMeans.seedParallel(emb, k = 6, seed = 7)), s"ANSI $ansi")
     }
+  }
+
+  /** `body`'s result, and the jobs, SQL executions and task result bytes it ran. */
+  private def observed[T](body: => T): (T, Int, Int, Long) = {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.ListenerDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val (jobs, sqls, bytes) = (new AtomicInteger, new AtomicInteger, new AtomicLong)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.resultSize)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqls.incrementAndGet()
+        case _ => ()
+      }
+    }
+    ListenerDrain(sc)
+    sc.addSparkListener(l)
+    try { val r = body; ListenerDrain(sc); (r, jobs.get, sqls.get, bytes.get) }
+    finally sc.removeSparkListener(l)
+  }
+
+  test("a distributed fitAuto runs its placement job, one job per step and one " +
+      "SQL execution") {
+    val p = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    p.count()
+    for (parallel <- Seq(false, true)) {
+      val (fit, jobs, sqls, _) = observed(KMeans.fitAuto(p, k = 4, dim = 64, maxIter = 5,
+        parallelSeed = parallel, localMaxCells = 1))
+      // k-means|| adds its 3 rounds' phi and draw jobs and the weights job
+      val seeding = if (parallel) 7 else 0
+      assert(fit.steps > 0 && jobs == 1 + seeding + fit.steps && sqls == 1,
+        s"k-means|| $parallel: ${fit.steps} steps, $jobs jobs, $sqls SQL executions")
+    }
+    p.unpersist()
+  }
+
+  test("a collected fit is one placement job on balanced partitions, two when a " +
+      "partition outgrows its share, with the same bits") {
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    val n = emb.count()
+    // nine rows in ten hash to one of 4 partitions, past its share of n·64 cells
+    val skewed = emb.repartition(4, when(col("i") % 10 === 0, col("i")).otherwise(lit(0L))).cache()
+    skewed.count()
+    val bound = n * 64
+    val fits: Seq[(String, (DataFrame, Long) => KMeans.FitResult)] = Seq(
+      "fitAuto" -> ((p, cells) => KMeans.fitAuto(p, k = 6, dim = 64, localMaxCells = cells)),
+      "fitAuto, k-means||" -> ((p, cells) =>
+        KMeans.fitAuto(p, k = 6, dim = 64, parallelSeed = true, localMaxCells = cells)),
+      "fitBounded" -> ((p, cells) => KMeans.fitBounded(p, k = 5, dim = 64, weightScale = 1e6,
+        localMaxCells = cells)),
+      "fitMiniBatch" -> ((p, cells) => KMeans.fitMiniBatch(p, k = 8, dim = 64, batchFrac = 0.2,
+        seed = 42, localMaxCells = cells)))
+    for ((what, fit) <- fits) {
+      val (balanced, balancedJobs, _, _) = observed(fit(emb, 4000000L))
+      val (outgrown, outgrownJobs, _, _) = observed(fit(skewed, bound))
+      assert(balancedJobs == 1 && outgrownJobs == 2, s"$what: $balancedJobs and $outgrownJobs jobs")
+      assert(resultBits(outgrown) == resultBits(balanced), what)
+      assert(resultBits(fit(skewed, 0L)) == resultBits(balanced), s"$what, distributed")
+    }
+    skewed.unpersist()
+  }
+
+  test("past the bound the placement job brings counts and first rows, not blocks") {
+    val dim = 512 // 4 KiB of coordinates per row, so result bytes count rows
+    val p = spark.range(0, 1000, 1, 10)
+      .select(col("id").as("i"), array_repeat(col("id").cast("double"), dim).as("Y")).cache()
+    p.count()
+    // 10 partitions of 100 rows, the bound 500 rows: a share is 50 rows
+    val bound = 500L * dim
+    val (over, jobs, _, bytes) = observed(KMeans.fitAuto(p, k = 2, dim = dim, maxIter = 0,
+      localMaxCells = bound))
+    assert(jobs == 1, s"$jobs jobs")
+    assert(bytes < bound / 10 * 8, s"past the bound the driver received $bytes bytes")
+    assert(over.centroids.map(_.c.head) == Seq(0.0, 1.0))
+    // within it, every block fits its share and rides the same job
+    val (within, withinJobs, _, _) = observed(KMeans.fitAuto(p, k = 2, dim = dim, maxIter = 2,
+      localMaxCells = 2 * bound))
+    assert(withinJobs == 1, s"within the bound: $withinJobs jobs")
+    assert(resultBits(within) == resultBits(KMeans.fitAuto(p, k = 2, dim = dim, maxIter = 2,
+      localMaxCells = 0L)))
+    p.unpersist()
+  }
+
+  test("a null key is first in key order in either placement, and in no " +
+      "mini-batch") {
+    val emb = Tables.yhEmbeddings(spark, sf("0.001"))
+    val withNullKey = emb.union(Seq[(Option[Long], Seq[Double])](None -> Seq.fill(64)(0.5))
+      .toDF("i", "Y")).repartition(3).cache()
+    for (parallel <- Seq(false, true)) {
+      def fit(cells: Long) = KMeans.fitAuto(withNullKey, k = 6, dim = 64, seed = 7,
+        parallelSeed = parallel, localMaxCells = cells)
+      val held = fit(4000000L)
+      assert(resultBits(fit(0L)) == resultBits(held), s"k-means|| $parallel")
+      if (!parallel) assert(held.log.head.c == Seq.fill(64)(0.5))
+    }
+    def miniBatch(cells: Long) = KMeans.fitMiniBatch(withNullKey, k = 8, dim = 64,
+      batchFrac = 0.2, maxIter = 20, seed = 42, localMaxCells = cells)
+    assert(resultBits(miniBatch(0L)) == resultBits(miniBatch(4000000L)))
+    withNullKey.unpersist()
   }
 }

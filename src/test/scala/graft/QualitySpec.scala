@@ -176,10 +176,12 @@ class QualitySpec extends SparkSpec {
     unchanged("sweep")(sweepBits(yh, sample, Seq(2, 3), maxIter = 3))
     unchanged("nested")(Quality.optimalKNested(yh, sample, KMeans.seedFirstK(yh, 3), Seq(2, 3),
       d1Scale = 1e4, d2Scale = 0.01).collect())
-    // not yh's plan: the fitted gap caches and unpersists each of its sets
-    val other = Tables.yhOrders(spark, sf("0.001")).filter(col("i") > 0L)
-    unchanged("fitted gap")(Quality.gapStatisticFitted(other, dim = 2, ks = 2 to 3,
+    // the caller's cached frame itself: the forced-distributed gap caches
+    // only its reference sets, and leaves yh's cache, level and RDD as they were
+    val level = yh.storageLevel
+    unchanged("fitted gap")(Quality.gapStatisticFitted(yh, dim = 2, ks = 2 to 3,
       localMaxRows = 0L).collect())
+    assert(level != org.apache.spark.storage.StorageLevel.NONE && yh.storageLevel == level)
     val nullY = Seq[(Long, Seq[Double])](1L -> Seq(0.0, 0.0), 2L -> null,
       3L -> Seq(10.0, 0.0), 4L -> Seq(0.0, 10.0)).toDF("i", "Y")
     unchanged("a sweep over a null Y") {

@@ -15,8 +15,10 @@ are cut into passes at every job whose label matches --split (the first job
 of a pass, e.g. a fit's size-gate count); a run of consecutive matching jobs
 starts one pass. --pass N picks the N-th pass (1-based; default: the last).
 One line per job: its start relative to the pass's first job, the driver gap
-before it (since the previous job ended), its duration and its label, all in
-ms.
+before it (since the previous job ended), its duration, then its tasks (from
+their `SparkListenerTaskEnd` metrics): how many ran, the longest executor run
+time, the mean executor CPU time and the longest executor deserialize time,
+and last its label; times in ms.
 """
 import argparse
 import json
@@ -24,7 +26,8 @@ import re
 
 
 def jobs(path):
-    starts, ends = {}, {}
+    """(job, start, end, label, tasks) per job; tasks = (run ms, CPU ms, deserialize ms) each."""
+    starts, ends, job_of_stage, tasks = {}, {}, {}, {}
     with open(path) as f:
         for line in f:
             e = json.loads(line)
@@ -33,9 +36,23 @@ def jobs(path):
                 desc = (e.get("Properties") or {}).get("spark.job.description")
                 label = f"{desc} ({result['Stage Name']})" if desc else result["Stage Name"]
                 starts[e["Job ID"]] = (e["Submission Time"], label)
+                for s in e["Stage IDs"]:
+                    job_of_stage[s] = e["Job ID"]
             elif e["Event"] == "SparkListenerJobEnd":
                 ends[e["Job ID"]] = e["Completion Time"]
-    return [(j, t, ends.get(j, t), site) for j, (t, site) in sorted(starts.items())]
+            elif e["Event"] == "SparkListenerTaskEnd" and e.get("Task Metrics"):
+                m = e["Task Metrics"]
+                tasks.setdefault(job_of_stage.get(e["Stage ID"]), []).append(
+                    (m["Executor Run Time"], m["Executor CPU Time"] / 1e6, m["Executor Deserialize Time"]))
+    return [(j, t, ends.get(j, t), site, tasks.get(j, [])) for j, (t, site) in sorted(starts.items())]
+
+
+def task_summary(ts):
+    """Task count, max run ms, mean CPU ms, max deserialize ms."""
+    if not ts:
+        return f"{0:>5} {'-':>5} {'-':>5} {'-':>5}"
+    return (f"{len(ts):>5} {max(r for r, _, _ in ts):>5} {sum(c for _, c, _ in ts) / len(ts):>5.1f} "
+            f"{max(d for _, _, d in ts):>5}")
 
 
 def main():
@@ -45,7 +62,7 @@ def main():
     ap.add_argument("--pass", dest="pass_no", type=int, default=0)
     a = ap.parse_args()
     js = jobs(a.log)
-    hits = [bool(re.search(a.split, site)) for _, _, _, site in js]
+    hits = [bool(re.search(a.split, site)) for _, _, _, site, _ in js]
     firsts = [ix for ix, hit in enumerate(hits) if hit and not (ix > 0 and hits[ix - 1])]
     if not firsts:
         raise SystemExit(f"no job's label matches {a.split!r}")
@@ -54,12 +71,12 @@ def main():
     hi = firsts[n] if n < len(firsts) else len(js)
     t0 = js[lo][1]
     print(f"pass {n} of {len(firsts)}: {hi - lo} jobs, "
-          f"{max(e for _, _, e, _ in js[lo:hi]) - t0} ms from the first job's start to the last job's end")
-    print(f"{'job':>4} {'start':>6} {'gap':>5} {'dur':>5}  label")
+          f"{max(e for _, _, e, _, _ in js[lo:hi]) - t0} ms from the first job's start to the last job's end")
+    print(f"{'job':>4} {'start':>6} {'gap':>5} {'dur':>5} {'tasks':>5} {'run':>5} {'cpu':>5} {'deser':>5}  label")
     for ix in range(lo, hi):
-        j, t, e, site = js[ix]
+        j, t, e, site, ts = js[ix]
         gap = t - js[ix - 1][2] if ix > 0 else 0
-        print(f"{j:>4} {t - t0:>6} {gap:>5} {e - t:>5}  {site}")
+        print(f"{j:>4} {t - t0:>6} {gap:>5} {e - t:>5} {task_summary(ts)}  {site}")
 
 
 if __name__ == "__main__":
