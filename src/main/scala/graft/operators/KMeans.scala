@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.reflect.ClassTag
@@ -42,16 +43,18 @@ import graft.plans.NearestSqDistLit
   *    flat primitive arrays (keys, coordinates, their fixed-point encodes,
   *    the k-means|| coins; 16 B per cell) that every later scan reads, the
   *    blocks persisted MEMORY_ONLY and released when the fit ends (the
-  *    driver holds O(k·dim)); or COLLECTED, the key-ordered rows on the
-  *    driver, only while `rows·dim ≤ localMaxCells` (default 4M doubles,
-  *    32 MB; [[fitAuto]], [[fitBounded]], [[fitMiniBatch]]). The size
-  *    gate is the job that builds the blocks ([[Points.place]]): it counts
-  *    their rows and, under the bound, brings them to the driver, so a
-  *    gated fit runs no count of its own. Every scan — the Lloyd step, the
-  *    k-means|| passes, the ++ round, the elbow — is one per-row body with
-  *    one nearest fold ([[NearestSqDistLit.fold]]); the placement only
-  *    decides where it runs, so there is one Lloyd loop ([[iterate]]) and
-  *    one k-means|| chain for both.
+  *    driver holds O(k·dim)); or COLLECTED, the same blocks on the driver
+  *    in partition order, only while `rows·dim ≤ localMaxCells` (default
+  *    4M cells, 64 MB; [[fitAuto]], [[fitBounded]], [[fitMiniBatch]],
+  *    Quality.optimalKSweep). The size gate is the job that builds the
+  *    blocks ([[Points.place]]): it counts their rows and, under the
+  *    bound, brings them to the driver, so a gated fit runs no count of its
+  *    own. Every scan — the Lloyd step, the k-means|| passes, the ++ round,
+  *    the elbow — is one per-row body with one nearest fold
+  *    ([[NearestSqDistLit.fold]]), run per block with its partition's
+  *    index; the placement only decides where it runs, so there is one
+  *    Lloyd loop ([[iterate]]), one ++ chain and one k-means|| chain for
+  *    both.
   *  - Per-dimension sums are fixed-point integers (`round(x*scale)::long`,
   *    `fxScale > 0`), so results do not depend on partition count or merge
   *    order — a deterministic distributed k-means. A sum past the long
@@ -252,8 +255,10 @@ object KMeans {
   def seedPlusPlus(points: DataFrame, k: Int, seed: Long): Seq[Centroid] =
     Points.withPartitioned(points)(plusPlusSeeds(_, k, seed))
 
-  /** [[seedPlusPlus]] over placed points. */
-  private[operators] def plusPlusSeeds(points: Partitioned, k: Int, seed: Long): Seq[Centroid] = {
+  /** [[seedPlusPlus]] over placed points, either placement: the collected
+    * blocks keep their partition indices, so the draws are the same bits.
+    */
+  private[operators] def plusPlusSeeds(points: Points, k: Int, seed: Long): Seq[Centroid] = {
     require(k >= 1, s"k-means++ needs k >= 1, got $k")
     var cs = points.firstK(1)
     while (cs.size < k)
@@ -275,7 +280,7 @@ object KMeans {
     * key ≈ 1.0) still draws its `u`, so every other row keeps its key, but
     * its own key is −1.
     */
-  private def plusPlusRound(points: Partitioned, chosen: Seq[Centroid], seed: Long): Centroid = {
+  private def plusPlusRound(points: Points, chosen: Seq[Centroid], seed: Long): Centroid = {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     val (cs, k, dim) = foldOf(coords(chosen))
     val wins = points.indexed("KMeans.pp.round") { (part, it) =>
@@ -702,7 +707,7 @@ object KMeans {
   }
 
   /** Where a fit's points live, chosen once per fit: resident blocks on the
-    * executors ([[Partitioned]]) or the collected key-ordered rows
+    * executors ([[Partitioned]]) or the same blocks on the driver
     * ([[Collected]]). Every scan — the Lloyd step, the k-means|| passes, the
     * ++ round, the elbow, the mini-batch batch — is ONE per-row body over
     * [[Point]]s, and the placement only decides where it runs. A size-gated
@@ -716,10 +721,14 @@ object KMeans {
     /** (dim, fxScale) of the encodes the points hold, if they hold any. */
     def fxAt: Option[(Int, Double)]
 
-    /** `f` over the points: once per partition, in partition order, as ONE
-      * job described as `name`, or once over every row, in key order.
+    /** `f(partition, rows)` once per partition, in partition order: as ONE
+      * job described as `name`, or over the collected blocks on the driver.
       */
-    def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A]
+    def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A]
+
+    /** [[indexed]] without the partition index. */
+    def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A] =
+      indexed(name)((_, it) => f(it))
 
     /** [[seedFirstK]]: the `k` smallest-key points, j = 1..k. */
     def firstK(k: Int): Seq[Centroid]
@@ -755,9 +764,9 @@ object KMeans {
       * cells (Quality.collectAtMost's rule), the block itself, so the
       * driver receives O(`maxCells`) cells whatever the partitioning.
       * COLLECTED iff `rows·dim ≤ maxCells` (never for a negative
-      * `maxCells`): the blocks merged in key order, a second job fetching
-      * the persisted blocks that outgrew their share, the blocks released.
-      * Else the resident blocks, the caller's to release.
+      * `maxCells`): the blocks in partition order, a second job fetching
+      * the persisted blocks that outgrew their share, the persisted blocks
+      * released. Else the resident blocks, the caller's to release.
       */
     def place(points: DataFrame, coins: Seq[Column], fxAt: (Int, Double), firstK: Int,
         maxCells: Long): Either[Partitioned, Collected] = {
@@ -777,8 +786,8 @@ object KMeans {
         } else {
           val over = placed.indices.filter(placed(_)._3 == null)
           val fetched = (over zip resident.fetch("KMeans.place", over)).toMap
-          Right(Collected.of(placed.indices.map(p => fetched.getOrElse(p, placed(p)._3)), fxAt,
-            resident.ansi))
+          Right(new Collected(placed.indices.map(p => fetched.getOrElse(p, placed(p)._3)).toArray,
+            fxAt, resident.ansi, null))
         }
       } finally if (!resides) resident.release()
     }
@@ -788,27 +797,23 @@ object KMeans {
         maxCells: Long)(body: Points => A): A =
       place(points, coins, fxAt, firstK, maxCells).fold(p => try body(p) finally p.release(), body)
 
-    /** [[place]] with no bound: `points`' rows on the driver in key order,
-      * as the one placement of [[collected]]'s rows form.
+    /** [[place]] with no bound: `points`' blocks on the driver, as the one
+      * placement of [[collected]]'s rows form.
       */
     def collected(points: DataFrame, dim: Int, fxScale: Double,
         coins: Seq[Column] = Nil): Seq[Collected] =
       Seq(place(points, coins, (dim, fxScale), 0, Long.MaxValue).toOption.get)
 
-    /** `rows` = `(i, Y_1, …, Y_ys)` on the driver in key order: a
-      * placement per `Y` column, sharing the keys. Each row's encodes at
-      * (`dim`, `fxScale`) are made on its first scan and kept.
+    /** `rows` = `(i, Y_1, …, Y_ys)` on the driver: a placement per `Y`
+      * column, each one block of the rows in their order, with the encodes
+      * at (`dim`, `fxScale`).
       */
     def collected(rows: Array[org.apache.spark.sql.Row], ys: Int, dim: Int, fxScale: Double,
-        ansi: Boolean): Seq[Collected] = {
-      val nullKey = rows.map(_.isNullAt(0))
-      val keys = rows.map(r => if (r.isNullAt(0)) 0L else r.getLong(0))
-      val order = Collected.keyOrder(keys, nullKey)
-      (1 to ys).map { c =>
-        val yOf = order.map(ix => if (rows(ix).isNullAt(c)) null else rows(ix).getSeq[Double](c).toArray)
-        new Collected(order.map(keys), order.map(nullKey), yOf, null,
-          new Array[Array[Long]](rows.length), (dim, fxScale), ansi, null)
-      }
+        ansi: Boolean): Seq[Collected] = (1 to ys).map { c =>
+      val b = new BlockBuilder(0, Some((dim, fxScale)), ansi)
+      rows.foreach(r => b.add(InternalRow(if (r.isNullAt(0)) null else r.getLong(0),
+        if (r.isNullAt(c)) null else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](c).toArray))))
+      new Collected(Array(b.result()), (dim, fxScale), ansi, null)
     }
   }
 
@@ -834,7 +839,6 @@ object KMeans {
       */
     def points(keep: Long => Boolean): Iterator[Point] = new Iterator[Point] {
       private val p = new Point
-      p.u = new Array[Double](nu)
       private var r = 0   // the next row
       private var off = 0 // where its coordinates start in ys
       def hasNext: Boolean = {
@@ -844,28 +848,41 @@ object KMeans {
       }
       def next(): Point = {
         if (!hasNext) throw new NoSuchElementException("no more points")
-        p.y = if (lens(r) < 0) null else ys
-        p.yOff = off
-        p.n = math.max(lens(r), 0)
-        p.i = keys(r)
-        p.nullKey = nullKey(r)
-        var c = 0
-        while (c < nu) { p.u(c) = us(r * nu + c); c += 1 }
-        p.fx = if (fx != null && fxSet(r)) fx else null
-        p.fxOff = r * dim
+        load(p, r, off)
         off += p.n
         r += 1
         p
       }
     }
 
+    /** `p` moved to row `r`, whose coordinates start at `ys(off)`. */
+    def load(p: Point, r: Int, off: Int): Point = {
+      if (p.u == null) p.u = new Array[Double](nu)
+      p.y = if (lens(r) < 0) null else ys
+      p.yOff = off
+      p.n = math.max(lens(r), 0)
+      p.i = keys(r)
+      p.nullKey = nullKey(r)
+      var c = 0
+      while (c < nu) { p.u(c) = us(r * nu + c); c += 1 }
+      p.fx = if (fx != null && fxSet(r)) fx else null
+      p.fxOff = r * dim
+      p
+    }
+
+    /** Where each row's coordinates start in `ys`. */
+    def offsets: Array[Int] = {
+      val offs = new Array[Int](rows)
+      var r = 1
+      while (r < rows) { offs(r) = offs(r - 1) + math.max(lens(r - 1), 0); r += 1 }
+      offs
+    }
+
     /** The `k` first rows `keep` accepts in `orderBy("i")` order (a null key
       * first, a tied key in row order).
       */
     def firstK(k: Int, keep: Long => Boolean): Array[FirstRow] = {
-      val offs = new Array[Int](rows)
-      var r = 1
-      while (r < rows) { offs(r) = offs(r - 1) + math.max(lens(r - 1), 0); r += 1 }
+      val offs = offsets
       def before(a: Int, b: Int): Boolean =
         if (nullKey(a) != nullKey(b)) nullKey(a)
         else if (nullKey(a) || keys(a) == keys(b)) a < b
@@ -873,7 +890,7 @@ object KMeans {
       // the k first rows so far, the last of them at the head
       val heap = new java.util.PriorityQueue[Integer](math.max(k, 1),
         (a: Integer, b: Integer) => if (before(a, b)) 1 else if (before(b, a)) -1 else 0)
-      r = 0
+      var r = 0
       while (r < rows) {
         if (keep == null || (!nullKey(r) && keep(keys(r)))) {
           if (heap.size < k) heap.add(r)
@@ -1049,10 +1066,6 @@ object KMeans {
     def ansi: Boolean = resident.ansi
     def fxAt: Option[(Int, Double)] = resident.fxAt
 
-    def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A] =
-      indexed(name)((_, it) => f(it))
-
-    /** [[partials]], `f` also given its partition's index. */
     def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A] = {
       val keep = this.keep
       resident.scan(name)((p, b) => f(p, b.points(keep)))
@@ -1063,100 +1076,59 @@ object KMeans {
       * centroids without its query, and without a job of their own where
       * the placement job brought them.
       */
-    def firstK(k: Int): Seq[Centroid] =
-      resident.firstRows(k, keep).zipWithIndex
-        .map { case (r, ix) => Centroid(ix + 1L, Option(r._3).map(_.toSeq).orNull) }
+    def firstK(k: Int): Seq[Centroid] = firstCentroids(resident.firstRows(k, keep))
 
-    def where(accept: Long => Boolean): Points = {
-      val keep = this.keep
-      new Partitioned(resident, if (keep == null) accept else i => keep(i) && accept(i))
-    }
+    def where(accept: Long => Boolean): Points = new Partitioned(resident, both(keep, accept))
 
     /** Drop the blocks (every view's). */
     def release(): Unit = resident.release()
   }
 
-  /** The collected placement: the rows `keep` accepts (every row for
-    * null, else never a null key), in key order with a null key first and
-    * a tied key in partition order. `ys` and the encode cache `fxs` cover
-    * every row.
+  /** The collected placement: the placement job's blocks on the driver,
+    * block p the rows of partition p, so a scan runs per block as it runs
+    * per partition, with the same bits; the rows `keep` accepts (every row
+    * for null, else never a null key).
     */
-  private[graft] final class Collected private[KMeans] (keys: Array[Long], nullKey: Array[Boolean],
-      val ys: Array[Array[Double]], us: Array[Array[Double]], fxs: Array[Array[Long]],
+  private[graft] final class Collected private[KMeans] (blocks: Array[Block],
       dimScale: (Int, Double), val ansi: Boolean, keep: Long => Boolean) extends Points {
     def fxAt: Option[(Int, Double)] = Some(dimScale)
 
-    def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A] = {
-      val (dim, fxScale) = dimScale
-      val p = new Point
-      Array(f(kept.map { ix =>
-        p.y = ys(ix)
-        p.n = if (p.y == null) 0 else p.y.length
-        if (fxs(ix) == null && p.n >= dim) {
-          val fx = new Array[Long](dim)
-          encodeInto(p.y, 0, fx, 0, dim, fxScale, ansi)
-          fxs(ix) = fx
-        }
-        p.fx = fxs(ix)
-        p.i = keys(ix)
-        p.nullKey = nullKey(ix)
-        if (us != null) p.u = us(ix)
-        p
-      }))
-    }
+    def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A] =
+      Array.tabulate(blocks.length)(p => f(p, blocks(p).points(keep)))
 
-    def firstK(k: Int): Seq[Centroid] = kept.take(k).zipWithIndex
-      .map { case (ix, j) => Centroid(j + 1L, Option(ys(ix)).map(_.toSeq).orNull) }.toSeq
+    def firstK(k: Int): Seq[Centroid] = firstCentroids(firstOf(blocks.map(_.firstK(k, keep)), k))
 
-    def where(accept: Long => Boolean): Points =
-      new Collected(keys, nullKey, ys, us, fxs, dimScale, ansi,
-        if (keep == null) accept else i => keep(i) && accept(i))
+    def where(accept: Long => Boolean): Points = new Collected(blocks, dimScale, ansi, both(keep, accept))
 
-    private def kept: Iterator[Int] =
-      if (keep == null) keys.indices.iterator
-      else keys.indices.iterator.filter(ix => !nullKey(ix) && keep(keys(ix)))
-  }
-
-  private object Collected {
-    /** Row indices in key order: a null key first, a tied key in index order. */
-    def keyOrder(keys: Array[Long], nullKey: Array[Boolean]): Array[Int] = {
-      val ix = Array.tabulate[Integer](keys.length)(Integer.valueOf)
-      java.util.Arrays.sort(ix, (a: Integer, b: Integer) =>
-        if (nullKey(a) != nullKey(b)) { if (nullKey(a)) -1 else 1 }
-        else java.lang.Long.compare(keys(a), keys(b)))
-      ix.map(_.intValue)
-    }
-
-    /** The rows of `blocks` (in partition order), merged in key order; each
-      * row keeps the encodes its block made at `dimScale`.
+    /** The rows `keep` accepts in key order (a null key first, a tied key
+      * in partition order) through one [[Point]] cursor, for
+      * [[boundedFits]]' walk: each row as (block << 32 | row), sorted once.
       */
-    def of(blocks: Seq[Block], dimScale: (Int, Double), ansi: Boolean): Collected = {
-      import java.util.Arrays.copyOfRange
-      val n = blocks.map(_.rows).sum
-      val nu = blocks.headOption.fold(0)(_.nu)
-      val keys = new Array[Long](n)
-      val nullKey = new Array[Boolean](n)
-      val ys = new Array[Array[Double]](n)
-      val us = if (nu == 0) null else new Array[Array[Double]](n)
-      val fxs = new Array[Array[Long]](n)
-      var at = 0
-      blocks.foreach { b =>
-        var off = 0
-        for (r <- 0 until b.rows) {
-          keys(at) = b.keys(r)
-          nullKey(at) = b.nullKey(r)
-          if (b.lens(r) >= 0) ys(at) = copyOfRange(b.ys, off, off + b.lens(r))
-          if (us != null) us(at) = copyOfRange(b.us, r * nu, (r + 1) * nu)
-          if (b.fx != null && b.fxSet(r)) fxs(at) = copyOfRange(b.fx, r * b.dim, (r + 1) * b.dim)
-          off += math.max(b.lens(r), 0)
-          at += 1
-        }
-      }
-      val order = keyOrder(keys, nullKey)
-      new Collected(order.map(keys), order.map(nullKey), order.map(ys),
-        if (us == null) null else order.map(us), order.map(fxs), dimScale, ansi, null)
+    def inKeyOrder: Iterator[Point] = {
+      val p = new Point
+      order.iterator.filter(g => keep == null || (!nul(g) && keep(key(g))))
+        .map(g => blocks((g >>> 32).toInt).load(p, g.toInt, offs((g >>> 32).toInt)(g.toInt)))
+    }
+
+    private def nul(g: Long) = blocks((g >>> 32).toInt).nullKey(g.toInt)
+    private def key(g: Long) = blocks((g >>> 32).toInt).keys(g.toInt)
+    private lazy val offs = blocks.map(_.offsets)
+    private lazy val order: Array[Long] = {
+      val rows = blocks.indices.iterator.flatMap(b => Iterator.range(0, blocks(b).rows)
+        .map(r => java.lang.Long.valueOf(b.toLong << 32 | r))).toArray
+      java.util.Arrays.sort(rows, (a: java.lang.Long, b: java.lang.Long) =>
+        if (nul(a) != nul(b)) { if (nul(a)) -1 else 1 } else java.lang.Long.compare(key(a), key(b)))
+      rows.map(_.longValue)
     }
   }
+
+  /** A view's row filter and `accept`, both. */
+  private def both(keep: Long => Boolean, accept: Long => Boolean): Long => Boolean =
+    if (keep == null) accept else i => keep(i) && accept(i)
+
+  /** Centroids j = 1.. of first rows. */
+  private def firstCentroids(rows: Seq[FirstRow]): Seq[Centroid] =
+    rows.zipWithIndex.map { case (r, ix) => Centroid(ix + 1L, Option(r._3).map(_.toSeq).orNull) }
 
   // ------------------------------------------------------------ convergence
 
@@ -1182,19 +1154,19 @@ object KMeans {
     * KMeansSpec), the placement picked by input size from the job that
     * builds it ([[Points.place]]: the block build is the size gate, no
     * count runs first). While `rows·dim` fits on the driver
-    * (`localMaxCells`, default 4M doubles = 32 MB) that job brings the
-    * points ([[fitLocal]]'s placement) and the 30-odd Lloyd steps stop
-    * paying ~0.1 s of per-job scheduling each; past it they stay resident
-    * blocks and the job's first rows are the first-k seeds ([[fit]]).
-    * `plusPlus` seeding stays partitioned at any size, with no gate: its
-    * `rand(seed)` draw is seeded per partition.
+    * (`localMaxCells`, default 4M cells, 64 MB as blocks) that job brings the
+    * points ([[fitLocal]]'s placement) and the 30-odd Lloyd steps and
+    * k-means++ rounds stop paying ~0.1 s of per-job scheduling each; past
+    * it they stay resident blocks and the job's first rows are the first-k
+    * seeds ([[fit]]). Every seeding is gated: the collected blocks keep
+    * their partition indices, so `plusPlus`'s `rand(seed)` draw, seeded per
+    * partition, replays there too.
     */
   def fitAuto(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false,
       localMaxCells: Long = 4000000L): FitResult =
-    if (plusPlus) fit(points, k, dim, tol, maxIter, seed, plusPlus, fxScale, parallelSeed)
-    else placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, localMaxCells)
+    placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, localMaxCells, plusPlus)
 
   /** [[fit]] over COLLECTED points, for small inputs — the identical
     * `FitResult` bit for bit: [[fitAuto]]'s placement with no bound, whose
@@ -1205,18 +1177,21 @@ object KMeans {
       maxIter: Int, seed: Long, fxScale: Double, parallelSeed: Boolean,
       rounds: Int = 3, overFactor: Double = 2.0): FitResult =
     placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, Long.MaxValue,
-      rounds, overFactor)
+      plusPlus = false, rounds, overFactor)
 
-  /** The first-k or k-means|| fit over [[Points.place]]'s placement at
-    * `maxCells` ([[fitAuto]], [[fitLocal]], [[fit]]).
+  /** The first-k, k-means|| or (`plusPlus`) k-means++ fit over
+    * [[Points.place]]'s placement at `maxCells` ([[fitAuto]], [[fitLocal]],
+    * [[fit]]).
     */
   private def placedFit(points: DataFrame, k: Int, dim: Int, tol: Double, maxIter: Int,
-      seed: Long, fxScale: Double, parallelSeed: Boolean, maxCells: Long, rounds: Int = 3,
-      overFactor: Double = 2.0): FitResult = {
+      seed: Long, fxScale: Double, parallelSeed: Boolean, maxCells: Long, plusPlus: Boolean,
+      rounds: Int = 3, overFactor: Double = 2.0): FitResult = {
     requireFx(fxScale)
     val coins = if (parallelSeed) coinCols(seed, rounds) else Nil
-    Points.withPlaced(points, coins, (dim, fxScale), if (parallelSeed) 1 else k, maxCells) { placed =>
-      val cs = if (parallelSeed) parallelSeeds(placed, k, seed, rounds, overFactor) else placed.firstK(k)
+    val firstK = if (parallelSeed || plusPlus) 1 else k
+    Points.withPlaced(points, coins, (dim, fxScale), firstK, maxCells) { placed =>
+      val cs = if (parallelSeed) parallelSeeds(placed, k, seed, rounds, overFactor)
+        else if (plusPlus) plusPlusSeeds(placed, k, seed) else placed.firstK(k)
       iterate(placed, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
     }
   }
@@ -1281,23 +1256,18 @@ object KMeans {
     * assign → re-average until total movement < `tol` (reference stop:
     * `toUInt32(sum(d)*100) == 0`, i.e. movement < 0.01) or `maxIter`.
     * `points` should be cached by the caller (reference `Memory` engine).
+    * Always over resident blocks ([[Points.place]] with no collected
+    * bound): the partitioned reference every gated fit reproduces.
     */
   def fit(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
-      fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult = {
-    requireFx(fxScale)
-    if (parallelSeed || !plusPlus)
-      placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, maxCells = -1L)
-    else Points.withPartitioned(points, fxAt = Some((dim, fxScale))) { placed =>
-      iterate(placed, Seq(plusPlusSeeds(placed, k, seed)), dim, tol, maxIter, fxScale,
-        startStep = 0L).head
-    }
-  }
+      fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult =
+    placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, maxCells = -1L, plusPlus)
 
   /** `body` with its jobs described as `name` (the Spark UI's and event
     * log's job description), the caller's description restored after.
     */
-  private def described[A](sc: org.apache.spark.SparkContext, name: String)(body: => A): A = {
+  private[operators] def described[A](sc: org.apache.spark.SparkContext, name: String)(body: => A): A = {
     val desc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(name)
     try body finally sc.setLocalProperty("spark.job.description", desc)
@@ -1442,28 +1412,29 @@ object KMeans {
     */
   private[operators] def boundedFits(points: Collected, ks: Seq[Int], dim: Int, tol: Double,
       lloydSteps: Int, fxScale: Double, weightScale: Double): Option[Seq[FitResult]] = {
-    val ys = points.ys
-    require(ys.nonEmpty, "fitBounded on an empty relation")
-    def sameY(a: Array[Double], b: Array[Double]): Boolean =
-      (0 until dim).forall(d => a(d) == b(d)) // SQL value equality
-    var chosen = Vector(ys.head)
+    def y(p: Point) = if (p.y == null) null else java.util.Arrays.copyOfRange(p.y, p.yOff, p.yOff + p.n)
+    val first = points.inKeyOrder
+    require(first.hasNext, "fitBounded on an empty relation")
+    var chosen = Vector(y(first.next()))
     for (r <- 2 to ks.max) {
       val (uN, uD) = fixedU(r)
       val bound = Long.MaxValue / math.max(uN, math.max(uD, 1L))
       val (cs, kc, cd) = foldOf(chosen.map(_.toSeq))
-      val surv = ys.filter(y => !chosen.exists(c => sameY(c, y)))
-      val ws = surv.map(y =>
-        roundHalfUpLong(NearestSqDistLit.sqDist(cs, kc, cd, y, 0, y.length) * weightScale))
+      // the rows no seed equals (SQL value equality), in key order
+      def surv = points.inKeyOrder.filter(p =>
+        !chosen.exists(c => (0 until dim).forall(d => c(d) == p.y(p.yOff + d))))
+      val ws = surv.map(p =>
+        roundHalfUpLong(NearestSqDistLit.sqDist(cs, kc, cd, p.y, p.yOff, p.n) * weightScale)).toArray
       if (ws.map(_.toDouble).sum > bound.toDouble * 0.25) return None
       val total = ws.sum
       var cw = 0L; var pick = -1; var ix = 0
-      while (ix < surv.length && pick < 0) {
+      while (ix < ws.length && pick < 0) {
         cw += ws(ix)
         if (cw * uD >= total * uN) pick = ix
         ix += 1
       }
       require(pick >= 0, s"k-means++ draw $r returned no row")
-      chosen = chosen :+ surv(pick)
+      chosen = chosen :+ y(surv.drop(pick).next())
     }
     Some(iterate(points, ks.map(k => chosen.take(k).zipWithIndex.map { case (c, ix) =>
       Centroid(ix + 1L, c.toSeq) }), dim, tol, lloydSteps, fxScale, startStep = 0L))

@@ -107,12 +107,15 @@ object Quality {
     * silhouette) per candidate k, a null silhouette read as NaN. Each row is
     * bit-identical to the reference's per-k loop `KMeans.fit(plusPlus =
     * true)` + [[elbow]] + [[silhouetteSimplified]] (QualitySpec), but the
-    * points are placed once for the whole sweep (their blocks built by the
-    * first ++ pick, released at the end) and the ++ chain runs once, for
-    * `ks.max`: round r reads only the first r seeds and `seed + r`, so
-    * `seeds.take(k)` is k's own seeding. Then every k's fit runs in the one
-    * Lloyd loop's lockstep ([[KMeans.iterate]]: one kernel job per step for
-    * all k still moving) and one [[scoreKs]] scores all of them. `points`
+    * points are placed once for the whole sweep, as `KMeans.fitAuto` places
+    * them (one job builds the blocks and, while `rows·dim` ≤ 4M cells,
+    * brings them to the driver; past it they stay resident until the end),
+    * and the ++ chain runs once, for `ks.max`: round r reads only the first
+    * r seeds and `seed + r`, so `seeds.take(k)` is k's own seeding. Then
+    * every k's fit runs in the one Lloyd loop's lockstep
+    * ([[KMeans.iterate]]: one scan per step for all k still moving) and one
+    * [[scoreKs]] scores all of them. Below the bound the sweep is three
+    * jobs: the placement, the sample collect and the silhouette. `points`
     * should be cached by the caller; `sample` is the silhouette pre-sample
     * (its pair stage is O(|sample|²)).
     */
@@ -122,12 +125,13 @@ object Quality {
     require(ks.forall(_ >= 1), s"every k must be >= 1, got ${ks.mkString(", ")}")
     val spark = points.sparkSession
     import spark.implicits._
-    KMeans.Points.withPartitioned(points, fxAt = Some((dim, 1e6))) { placed =>
-      val seeds = if (ks.isEmpty) Nil else KMeans.plusPlusSeeds(placed, ks.max, seed)
+    (if (ks.isEmpty) Nil else KMeans.Points.withPlaced(points, Nil, (dim, 1e6), firstK = 1,
+        maxCells = 4000000L) { placed =>
+      val seeds = KMeans.plusPlusSeeds(placed, ks.max, seed)
       val fits = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
         fxScale = 1e6, startStep = 0L)
       scoreKs(placed, sample, ks.zip(fits.map(_.centroids)), d1Scale, d2Scale)
-    }.map { case (k, d1, d2, si) => (k, d1.get, d2.get, si.getOrElse(Double.NaN)) }
+    }).map { case (k, d1, d2, si) => (k, d1.get, d2.get, si.getOrElse(Double.NaN)) }
       .toDF("k", "elbow_d1", "elbow_d2", "silhouette")
   }
 
@@ -166,7 +170,8 @@ object Quality {
     def opt(r: Row, ix: Int) = if (r.isNullAt(ix)) None else Some(r.getDouble(ix))
     val e = elbowSums(points, sets.map(_._2), Some(d1Scale), d2Scale)
     val sel = sample.select(col("i"), col("Y"))
-    val si = collectAtMost(sel, maxCollectRows) match {
+    val sc = spark.sparkContext
+    val si = KMeans.described(sc, "Quality.sample")(collectAtMost(sel, maxCollectRows)) match {
       case None =>
         val dist = sel.cache()
         try sets.map { case (_, cs) => opt(silhouetteSimplifiedFromStats(
@@ -178,8 +183,8 @@ object Quality {
           val js = KMeans.nearestIds(ys, cs)
           (js, PairDistStats(Literal(0L), Literal(0L), ids, js, ys, dScale))
         }
-        val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.length))
-        val sums = spark.sparkContext.parallelize(rows.indices, slices).mapPartitions { ps =>
+        val slices = math.max(1, math.min(sc.defaultParallelism, rows.length))
+        val partials = sc.parallelize(rows.indices, slices).mapPartitions { ps =>
           val acc = new Array[Long](4 * kernels.size) // per set: same Σ, n; cross Σ, n
           ps.foreach { p =>
             val y = UnsafeArrayData.fromPrimitiveArray(ys(p))
@@ -193,7 +198,9 @@ object Quality {
             }
           }
           Iterator.single(acc)
-        }.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x)))
+        }
+        val sums = KMeans.described(sc, "Quality.silhouette")(
+          partials.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x))))
         sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, points.ansi))
     }
     sets.indices.map(ix => (sets(ix)._1.toLong, e(ix)._1, e(ix)._2, si(ix)))
@@ -628,8 +635,9 @@ object Quality {
         elbowSums(placed, fitted.map(_.centroids), None, scale).map(_._2.get)
       } finally if (owned) df.unpersist()
     }
-    val rows = collectAtMost(points.select(col("i") +: col("Y") +: (0 until refSets).map(refY): _*),
-      math.min(localRowBound, Int.MaxValue - 2L).toInt)
+    val rows = KMeans.described(points.sparkSession.sparkContext, "Quality.gap.collect")(collectAtMost(
+      points.select(col("i") +: col("Y") +: (0 until refSets).map(refY): _*),
+      math.min(localRowBound, Int.MaxValue - 2L).toInt))
     val ws: Seq[Seq[Double]] =
       rows.flatMap(localW).getOrElse {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(sets.size)

@@ -999,6 +999,12 @@ class KMeansSpec extends SparkSpec {
       val e = intercept[Exception](KMeans.fitAuto(nullY, k = 1, dim = 2, maxIter = 1))
       assert(messages(e).contains("Y is null"), messages(e))
     }
+    unchanged("fitAuto, collected, ++")(
+      KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3, plusPlus = true))
+    unchanged("collected ++, null Y") {
+      val e = intercept[Exception](KMeans.fitAuto(nullY, k = 2, dim = 2, maxIter = 1, plusPlus = true))
+      assert(messages(e).contains("Y is null"), messages(e))
+    }
     unchanged("collected, CAST_OVERFLOW")(withAnsi(on = true) {
       val e = intercept[Exception](KMeans.fitAuto(huge, k = 1, dim = 2))
       assert(messages(e).contains("CAST_OVERFLOW"), messages(e))
@@ -1158,5 +1164,42 @@ class KMeansSpec extends SparkSpec {
       batchFrac = 0.2, maxIter = 20, seed = 42, localMaxCells = cells)
     assert(resultBits(miniBatch(0L)) == resultBits(miniBatch(4000000L)))
     withNullKey.unpersist()
+  }
+
+  test("a gated k-means++ fitAuto gives fit's bits, or its error: 1, 3 and 7 " +
+      "partitions and a skewed one, ANSI on and off, null-Y, all-NaN, tied-key and -0.0 rows") {
+    // four planted corners; key 1 is the first seed and key 2 its -0.0 twin,
+    // and every fifth row's key ties with the row before it
+    val rows = (1 to 160).map { i =>
+      val (cx, cy) = ((i % 4 / 2) * 20.0, (i % 2) * 20.0)
+      (if (i % 5 == 0) i - 1L else i.toLong,
+        if (i <= 2) Seq(if (i == 1) 0.0 else -0.0, 1.0) else Seq(cx + i % 7 * 0.1, cy + i % 11 * 0.1))
+    }
+    val fixtures = Seq("tied keys, -0.0 twin" -> rows, "null Y" -> (rows :+ (500L -> null)),
+      "all-NaN Y" -> (rows :+ (501L -> Seq(Double.NaN, Double.NaN))))
+    def rootClass(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last.getClass.getName
+    def outcome(fit: => KMeans.FitResult): Either[String, Any] =
+      try Right(resultBits(fit)) catch { case e: Exception => Left(rootClass(e)) }
+    for ((name, fixture) <- fixtures) {
+      val df = fixture.toDF("i", "Y")
+      // nine rows in ten in one of 4 partitions, past its share of the bound:
+      // the placement job's second job fetches it
+      val skewed = df.repartition(4, when(col("i") % 10 === 1, col("i")).otherwise(lit(0L)))
+      val placings = Seq(1, 3, 7).map(n => (s"$n partitions", df.repartition(n), 4000000L)) :+
+        (("skewed", skewed, fixture.size * 2L))
+      for ((where, p0, cells) <- placings; ansi <- Seq(true, false)) withAnsi(ansi) {
+        val p = p0.cache()
+        for (seed <- Seq(0L, 7L)) {
+          val want = outcome(KMeans.fit(p, k = 4, dim = 2, maxIter = 10, seed = seed, plusPlus = true))
+          val got = outcome(KMeans.fitAuto(p, k = 4, dim = 2, maxIter = 10, seed = seed, plusPlus = true,
+            localMaxCells = cells))
+          assert(got == want, s"$name, $where, ANSI $ansi, seed $seed")
+          assert(got.isLeft == (name == "null Y" || name == "all-NaN Y" && ansi),
+            s"$name, $where, ANSI $ansi, seed $seed: $got")
+        }
+        p.unpersist()
+      }
+    }
   }
 }

@@ -184,10 +184,30 @@ class QualitySpec extends SparkSpec {
     assert(level != org.apache.spark.storage.StorageLevel.NONE && yh.storageLevel == level)
     val nullY = Seq[(Long, Seq[Double])](1L -> Seq(0.0, 0.0), 2L -> null,
       3L -> Seq(10.0, 0.0), 4L -> Seq(0.0, 10.0)).toDF("i", "Y")
+    unchanged("a collected sweep, k = 1..4")(sweepBits(yh, sample, 1 to 4, maxIter = 3))
+    unchanged("a collected sweep over a null Y on two partitions") {
+      val e = intercept[Exception](
+        Quality.optimalKSweep(nullY.repartition(2), nullY, dim = 2, ks = Seq(3, 2)).collect())
+      assert(messages(e).contains("Y is null"), messages(e))
+    }
     unchanged("a sweep over a null Y") {
       val e = intercept[Exception](Quality.optimalKSweep(nullY, nullY, dim = 2, ks = Seq(2)).collect())
       assert(messages(e).contains("Y is null"), messages(e))
     }
+  }
+
+  test("below the gate a k-means++ fitAuto is one job and optimalKSweep three " +
+      "(none for no ks)") {
+    val yh = Tables.yhOrders(spark, sf("0.001")).cache()
+    yh.count()
+    val sample = yh.filter(col("i") % 29 === 0)
+    // the placement job brings the blocks; the ++ rounds and Lloyd steps run on them
+    val (fit, fitJobs) = countJobs(KMeans.fitAuto(yh, k = 4, dim = 2, plusPlus = true, maxIter = 5))
+    assert(fit.steps > 0 && fitJobs == 1, s"${fit.steps} steps, $fitJobs jobs")
+    // the placement, the sample collect and the silhouette job
+    val (rows, sweepJobs) = countJobs(sweepBits(yh, sample, 2 to 4, maxIter = 5))
+    assert(rows.size == 3 && sweepJobs == 3, s"the sweep ran $sweepJobs jobs")
+    assert(countJobs(sweepBits(yh, sample, Nil, maxIter = 5)) == ((Nil, 0)))
   }
 
   test("optimalKSweep rejects k < 1; no ks gives an empty frame") {
