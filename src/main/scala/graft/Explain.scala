@@ -15,6 +15,20 @@ import org.apache.spark.sql.SparkSession
   * often the RIGHT plan (see the funnel/spans decision comments).
   */
 object Explain {
+
+  /** File scans per table (the root path's name, `.parquet` stripped) in
+    * `df`'s pre-AQE physical plan — the `--scan-audit` count. Scan NODES
+    * are counted, not plan text: the text over-reports for persisted
+    * queries because every InMemoryRelation description embeds its child
+    * scan's string.
+    */
+  def scanCounts(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+    df.queryExecution.sparkPlan.collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.headOption
+          .map(_.getName.stripSuffix(".parquet")).getOrElse("?")
+    }.groupBy(identity).view.mapValues(_.size).toMap
+
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).filterNot(_.startsWith("--"))
@@ -36,23 +50,14 @@ object Explain {
         // InMemoryTableScans into later plans and mask their re-scans
         spark.catalog.clearCache()
         try {
-          // count actual scan NODES in the pre-AQE physical tree — plan
-          // TEXT over-reports for persisted queries because every
-          // InMemoryRelation description embeds its child scan's string
-          val plan = fn(spark, dir).queryExecution.sparkPlan
-          val scans = plan.collect {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-              f.relation.location.rootPaths.headOption
-                .map(_.getName.stripSuffix(".parquet")).getOrElse("?")
-          }
-          val byTable = scans.groupBy(identity).view.mapValues(_.size)
+          val df = fn(spark, dir)
           // cache hits reported for context, never used to suppress: a
           // cached subtree on one branch says nothing about a different
           // table being re-scanned 4x elsewhere in the same plan
-          val cached = plan.collect {
+          val cached = df.queryExecution.sparkPlan.collect {
             case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => c
           }.size
-          byTable.toSeq.filter(_._2 >= 3).sortBy(-_._2).foreach { case (t, n) =>
+          scanCounts(df).toSeq.filter(_._2 >= 3).sortBy(-_._2).foreach { case (t, n) =>
             println(s"[scan-audit] $qn: $n scans of $t (cached subtrees: $cached)")
           }
         } catch { case e: Throwable =>

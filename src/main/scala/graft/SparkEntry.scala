@@ -270,11 +270,14 @@ object SparkEntry {
     tbl
   }
 
-  /** Persisted lexical TF inverted index for `text_tfidf_indexed` /
-    * `text_bm25_indexed`: the aggregated (doc_id, dl, token, tf) relation —
-    * the corpus tokenize + explode + groupBy paid ONCE at build time —
-    * stored BUCKETED BY TOKEN, so posting-list probes co-locate without an
-    * index-side Exchange. The lexical twin of [[ensureIvfIndex]].
+  /** Persisted lexical TF inverted index for `text_tfidf_indexed`,
+    * `text_bm25_indexed` and the indexed retrieval probes: the
+    * `TextAnalysis.tfRelation` `(doc_id, dl, token, tf, df, n_docs,
+    * total_len)` — the corpus tokenize + explode + groupBy and the df and
+    * corpus-scalar rollups paid ONCE at build time — stored BUCKETED BY
+    * TOKEN, so posting-list probes co-locate without an index-side Exchange
+    * and derive no corpus statistic per query. The lexical twin of
+    * [[ensureIvfIndex]].
     */
   private def ensureTfIndex(s: SparkSession, dir: String): String = {
     val key = dirKey(dir)
@@ -1807,12 +1810,13 @@ object SparkEntry {
       TextAnalysis.bm25(Tables.read(s, dir, "documents"))),
     // the same rankings off the PERSISTED token-bucketed TF inverted index
     // (build/probe split — the lexical twin of sim_ivf_indexed): no corpus
-    // tokenize/explode at query time, same oracles. DELIBERATELY
-    // un-persisted probe reads (scan-audit flags 3-5 index scans): each is
-    // a pruned columnar read of the pre-aggregated bucketed table — the
-    // production probe shape at any index size, where caching a
-    // corpus×token relation in memory is exactly what doesn't scale (the
-    // funnel-family rule; walls already sit below the direct forms' floors)
+    // tokenize/explode and no df/N rollup at query time (the index rows
+    // carry df, n_docs and total_len), same oracles. DELIBERATELY
+    // un-persisted probe reads: each is a pruned columnar read of the
+    // pre-aggregated bucketed table — the production probe shape at any
+    // index size, where caching a corpus×token relation in memory is
+    // exactly what doesn't scale (the funnel-family rule; walls already sit
+    // below the direct forms' floors)
     "text_tfidf_indexed" -> ((s, dir) =>
       TextAnalysis.tfidfFromTf(s.table(ensureTfIndex(s, dir)))),
     "text_bm25_indexed" -> ((s, dir) =>

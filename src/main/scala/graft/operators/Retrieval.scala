@@ -38,42 +38,32 @@ object Retrieval {
       centroids: Seq[KMeans.Centroid], nQueries: Int = 5, nTerms: Int = 3,
       kList: Int = 10, kOut: Int = 10, rrfK: Int = 60,
       nProbe: Int = 2, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val toks = docs.select(col("doc_id"), Dedup.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        size(col("toks")).cast("long").as("dl"))
-    // persisted: the aggregated per-doc term counts feed THREE consumers
-    // (df rollup, pseudo-query term selection, sparse scoring join) — the
-    // same rule as text_tfidf/text_bm25: one corpus explode, not three
-    val tf = toks.select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
-      .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
-      .persist()
-    val scal = toks.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len"))
+    // persisted: the tf relation feeds TWO consumers (pseudo-query term
+    // selection, sparse scoring join) — the same rule as text_bm25: one
+    // corpus explode, not two
+    val tf = graft.TransientCaches.register(TextAnalysis.tfRelation(docs).persist())
     val dense = Similarity.ivfTopK(emb, centroids, nQueries, nProbe, kList)
       .select(col("q_id"), col("n_id").as("doc_id"), col("rnk").as("rnk_dense"))
-    hybridRrfFromParts(tf, scal, dense, nQueries, nTerms, kList, kOut,
-      rrfK, k1, b)
+    hybridRrfFromParts(tf, dense, nQueries, nTerms, kList, kOut, rrfK, k1, b)
   }
 
   /** [[hybridRrf]] over PRE-BUILT parts — the fully indexed RAG probe: the
-    * sparse half reads an already-materialized `(doc_id, dl, token, tf)`
-    * relation (the `ensureTfIndex` table — no corpus tokenize at query
-    * time) and the dense half is ANY (q_id, doc_id, rnk_dense) ranking
-    * (e.g. the persisted-IVF `ivfTopKIndexed` probe) — CONTRACT: its q_id
-    * domain must equal the pseudo-query domain `[0, nQueries)` (the sparse
-    * half hard-codes pseudo-queries to `doc_id < nQueries`; a dense ranking
+    * sparse half reads an already-materialized [[TextAnalysis.tfRelation]]
+    * (the `ensureTfIndex` table — no corpus tokenize at query time, and
+    * `df`, `n_docs` and `total_len` are read off the index rows) and the
+    * dense half is ANY (q_id, doc_id, rnk_dense) ranking (e.g. the
+    * persisted-IVF `ivfTopKIndexed` probe) — CONTRACT: its q_id domain must
+    * equal the pseudo-query domain `[0, nQueries)` (the sparse half
+    * hard-codes pseudo-queries to `doc_id < nQueries`; a dense ranking
     * built with a different query set would otherwise silently surface
     * dense-only rows through the full_outer fusion join). Enforced in the
     * row path with `raise_error` — no eager validation scan at plan
     * construction, a mismatched dense half fails loudly at execution.
-    * Scalars fold from the tf relation's distinct doc rows (exact under
-    * `TextAnalysis.tfRelation`'s non-null-text contract). Same fusion,
-    * same oracle as the direct form.
+    * Same fusion, same oracle as the direct form.
     */
   def hybridRrfIndexed(tf: DataFrame, dense: DataFrame, nQueries: Int = 5,
       nTerms: Int = 3, kList: Int = 10, kOut: Int = 10, rrfK: Int = 60,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val scal = tf.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len"))
     val denseChecked = dense.select(
       when(col("q_id") < 0 || col("q_id") >= nQueries,
         raise_error(concat(
@@ -81,8 +71,8 @@ object Retrieval {
           col("q_id").cast("string"))))
         .otherwise(col("q_id")).as("q_id"),
       col("doc_id"), col("rnk_dense"))
-    hybridRrfFromParts(tf.select("doc_id", "dl", "token", "tf"), scal,
-      denseChecked, nQueries, nTerms, kList, kOut, rrfK, k1, b)
+    hybridRrfFromParts(tf, denseChecked, nQueries, nTerms, kList, kOut,
+      rrfK, k1, b)
   }
 
   /** Pseudo-relevance-feedback query expansion (Rocchio-lite / RM1 shape):
@@ -97,8 +87,8 @@ object Retrieval {
     * per-doc sum, deterministic tie orders at every rank cut), so the
     * two-round composition stays hash-exact against the ANSI oracle.
     *
-    * Scale shape: the corpus pays ONE tokenize + tf groupBy (persisted —
-    * five consumers: df rollup, initial terms, round-1 scoring, feedback
+    * Scale shape: the corpus pays ONE [[TextAnalysis.tfRelation]]
+    * (persisted — four consumers: initial terms, round-1 scoring, feedback
     * term harvest, round-2 scoring); both scoring rounds are broadcast
     * token equi-joins bounded by posting lists; the feedback relations are
     * nQueries·nFb and nQueries·nExp rows — driver-free, broadcast by size.
@@ -110,50 +100,33 @@ object Retrieval {
       graft.TransientCaches.register(TextAnalysis.tfRelation(docs).persist()),
       nQueries, nTerms, nFb, nExp, kOut, k1, b)
 
-  /** [[prfBm25]] over an ALREADY-MATERIALIZED `(doc_id, dl, token, tf)`
-    * relation — the probe half of the build/probe split: with the
-    * persisted token-bucketed TF index (`ensureTfIndex`), BOTH scoring
-    * rounds and the feedback-term harvest read pre-aggregated index rows
-    * and the corpus is never tokenized at query time. Scalars fold from
-    * the index's distinct doc rows (exact under
-    * [[TextAnalysis.tfRelation]]'s non-null-text contract). Same
-    * expansion, same oracle as the direct form.
+  /** [[prfBm25]] over an ALREADY-MATERIALIZED [[TextAnalysis.tfRelation]]
+    * — the probe half of the build/probe split: with the persisted
+    * token-bucketed TF index (`ensureTfIndex`), BOTH scoring rounds and the
+    * feedback-term harvest read pre-aggregated index rows, `df`, `n_docs`
+    * and `total_len` included, so the corpus is never tokenized and no
+    * corpus statistic is rolled up at query time. Same expansion, same
+    * oracle as the direct form.
     */
   def prfBm25FromTf(tf: DataFrame, nQueries: Int = 5, nTerms: Int = 3,
       nFb: Int = 3, nExp: Int = 2, kOut: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // the tf input is deliberately NOT persisted here: the direct caller
-    // persists its freshly-computed relation (six consumers would re-run
+    // persists its freshly-computed relation (its consumers would re-run
     // the corpus tokenize), but the INDEXED caller hands in the bucketed
     // index table, and the scan-audit follow-up MEASURED that
-    // materializing it costs more than its 11 bucketed re-scans
+    // materializing it costs more than its bucketed re-scans
     // (2.72 s → 2.94 s at sf0.1) — the round-12 "never cache corpus-scale
-    // projections" counter-case again
-    val scal = tf.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len"))
-    // persisted: the vocabulary df rollup re-aggregates the whole tf
-    // relation and feeds THREE consumers (initial terms, expansion-term df
-    // lookup, and the round-2 union's recompute of qterms)
-    val df = graft.TransientCaches.register(
-      tf.groupBy("token").agg(count(lit(1)).as("df")).persist())
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(desc("score_e6"), asc("token"))
-    // qterms is deliberately NOT persisted: its tf-read + df-join + window
-    // subtree does re-run per consumer (the 10× smoke trial counted 5
-    // scalar-BNLJ subtrees), but materializing it MEASURED slower at sf0.1
-    // (the persist barrier costs more than the tiny recomputes) — the same
-    // verdict as the tf-input persist trial recorded above
-    val qterms = tf.filter(col("doc_id") < nQueries)
-      .join(df, "token").crossJoin(broadcast(scal))
-      .withColumn("score_e6",
-        round(col("tf") * col("n_docs") * 1000000.0 / col("df")).cast("long"))
-      .withColumn("trnk", row_number().over(wq))
-      .filter(col("trnk") <= nTerms)
-      .select(col("doc_id").as("q_id"), col("token"), col("df"))
+    // projections" counter-case again.
+    // qterms is deliberately NOT persisted either: its tf-read + window
+    // subtree does re-run per consumer, but materializing it MEASURED
+    // slower at sf0.1 (the persist barrier costs more than the tiny
+    // recomputes) — the same verdict as the tf-input persist trial
+    val qterms = pseudoQueryTerms(tf, nQueries, nTerms)
     def score(q: DataFrame): DataFrame = {
       val termE6 = TextAnalysis.bm25TermE6(col("tf"), col("df"), col("dl"),
         col("n_docs"), col("total_len"), k1, b)
-      tf.join(broadcast(q), "token").crossJoin(broadcast(scal))
+      tf.join(broadcast(q), "token")
         .filter(col("doc_id") =!= col("q_id"))
         .select(col("q_id"), col("doc_id"), termE6.as("term_e6"))
         .groupBy("q_id", "doc_id").agg(sum("term_e6").as("score_e6"))
@@ -168,39 +141,43 @@ object Retrieval {
       .partitionBy("q_id").orderBy(desc("fb_tf"), asc("token"))
     val expTerms = tf.join(broadcast(fb), "doc_id")
       .groupBy("q_id", "token").agg(sum("tf").as("fb_tf"))
-      .join(qterms.select("q_id", "token"), Seq("q_id", "token"), "left_anti")
+      .join(qterms, Seq("q_id", "token"), "left_anti")
       .withColumn("ernk", row_number().over(we))
       .filter(col("ernk") <= nExp)
-      .join(df, "token")
-      .select(col("q_id"), col("token"), col("df"))
+      .select(col("q_id"), col("token"))
     score(qterms.unionByName(expTerms))
       .withColumn("rnk", row_number().over(ws).cast("long"))
       .filter(col("rnk") <= kOut)
       .select(col("q_id"), col("doc_id"), col("rnk"), col("score_e6"))
   }
 
-  private def hybridRrfFromParts(tf: DataFrame, scal: DataFrame,
-      dense: DataFrame, nQueries: Int, nTerms: Int, kList: Int, kOut: Int,
-      rrfK: Int, k1: Double, b: Double): DataFrame = {
-    val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
-    // pseudo-queries: each query doc's top-nTerms TFIDF terms (the
-    // TextAnalysis.tfidf score and tie order exactly), with df carried
+  /** The pseudo-queries `(q_id, token)`: each query doc's (`doc_id <
+    * nQueries`) top-nTerms TFIDF terms — the [[TextAnalysis.tfidf]] score
+    * and tie order exactly, off the tf relation's `df` and `n_docs`.
+    */
+  private def pseudoQueryTerms(tf: DataFrame, nQueries: Int,
+      nTerms: Int): DataFrame = {
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(desc("score_e6"), asc("token"))
-    val qterms = tf.filter(col("doc_id") < nQueries)
-      .join(df, "token").crossJoin(broadcast(scal))
+    tf.filter(col("doc_id") < nQueries)
       .withColumn("score_e6",
         round(col("tf") * col("n_docs") * 1000000.0 / col("df")).cast("long"))
       .withColumn("trnk", row_number().over(wq))
       .filter(col("trnk") <= nTerms)
-      .select(col("doc_id").as("q_id"), col("token"), col("df"))
+      .select(col("doc_id").as("q_id"), col("token"))
+  }
+
+  private def hybridRrfFromParts(tf: DataFrame, dense: DataFrame,
+      nQueries: Int, nTerms: Int, kList: Int, kOut: Int, rrfK: Int,
+      k1: Double, b: Double): DataFrame = {
+    val qterms = pseudoQueryTerms(tf, nQueries, nTerms)
     // Okapi BM25 of every corpus doc against each query's term set — the
     // SHARED TextAnalysis.bm25TermE6 definition, per q_id
     val termE6 = TextAnalysis.bm25TermE6(col("tf"), col("df"), col("dl"),
       col("n_docs"), col("total_len"), k1, b)
     val ws = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id").orderBy(desc("score_e6"), asc("doc_id"))
-    val sparse = tf.join(broadcast(qterms), "token").crossJoin(broadcast(scal))
+    val sparse = tf.join(broadcast(qterms), "token")
       .filter(col("doc_id") =!= col("q_id"))
       .select(col("q_id"), col("doc_id"), termE6.as("term_e6"))
       .groupBy("q_id", "doc_id").agg(sum("term_e6").as("score_e6"))

@@ -163,62 +163,62 @@ object TextAnalysis {
     * double (≤2^53 by construction), one correctly-rounded division, fixed-
     * point round — both engines land the identical BIGINT.
     *
-    * Shape: the classic two-shuffle TF-IDF — one groupBy (doc, token) for
-    * tf, one groupBy token for df, then an equi-join on token (df side is
-    * vocabulary-sized; partial aggregation keeps both map-side combined)
-    * and a per-doc top-k window. No collect, no driver state — at 100 TB
-    * the vocabulary join is a plain hash join keyed on token.
+    * Shape: the classic two-shuffle TF-IDF — the [[tfRelation]] (one
+    * groupBy (doc, token) for tf, one groupBy token for df, joined on token;
+    * partial aggregation keeps both map-side combined), then a per-doc
+    * top-k window. No collect, no driver state — at 100 TB the vocabulary
+    * join is a plain hash join keyed on token.
     */
-  def tfidf(docs: DataFrame, k: Int = 3): DataFrame = {
-    // persisted: the aggregated (doc, token) counts feed both the df rollup
-    // and the score join — one corpus explode instead of two
-    val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-      .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-      .persist()
-    // scalar N rides in as a 1-row broadcast: Catalyst plans a
-    // BroadcastNestedLoopJoin, which against a single-row build side IS the
-    // scalar-subquery plan — each stream row meets exactly one build row, no
-    // duplication, no quadratic anything (declared in PlansSpec's allowlist)
-    tfidfScore(tf, docs.agg(count(lit(1)).as("n_docs")), k)
-  }
+  def tfidf(docs: DataFrame, k: Int = 3): DataFrame =
+    tfidfFromTf(tfRelation(docs), k)
 
-  /** The TF inverted-index RELATION `(doc_id, dl, token, tf)` — the ONE
-    * definition of the index layout, used by the `ensureTfIndex` builder
-    * and the probe-parity specs, so the stored shape and what the tests
-    * verify can never drift apart. Contract: `text` must be non-null (a
-    * NULL text yields no token rows, which would silently drop the doc
-    * from the index-derived N/total_len scalars — coalesce upstream if a
-    * corpus can carry NULLs; the fixture cannot).
+  /** The TF inverted-index RELATION `(doc_id, dl, token, tf, df, n_docs,
+    * total_len)` — the ONE definition of the index layout, used by the
+    * `ensureTfIndex` builder, the direct scorers and the probe-parity specs,
+    * so the stored shape and what the tests verify can never drift apart.
+    *
+    * Besides the per-(doc, token) count `tf` and the doc length `dl`, every
+    * row carries the corpus statistics the scorers need, so a probe of the
+    * stored index derives none of them per query: `df` (`count(1)` of the
+    * token's rows) and the corpus scalars `n_docs`/`total_len` (count and
+    * length sum of the distinct `(doc_id, dl)` pairs). Contract: `text`
+    * must be non-null (a NULL text yields no token rows, which would
+    * silently drop the doc from `n_docs`/`total_len` — coalesce upstream if
+    * a corpus can carry NULLs; the fixture cannot). A non-null text always
+    * owns ≥1 token row: whitespace split of even an empty text yields one
+    * token.
     */
-  def tfRelation(docs: DataFrame): DataFrame =
+  def tfRelation(docs: DataFrame): DataFrame = {
     // Par.widenBy (r18): tokenize + explode + the (doc, token) partial
     // aggregate all run in the scan stage; byte-starved single-file scans
     // serialize the whole TF build. Keyed spread — no pre-sort of text.
-    Par.widenBy(docs, col("doc_id"))
+    // persisted: tf feeds three consumers (the rows, the df rollup, the
+    // scalar fold), each pruned to other columns, so Spark reuses no
+    // exchange among them and each would tokenize the corpus again
+    val tf = graft.TransientCaches.register(Par.widenBy(docs, col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
         explode(col("toks")).as("token"))
       .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
+      .persist())
+    // the scalar rides in as a one-row broadcast — the scalar-subquery plan
+    val scal = tf.select("doc_id", "dl").distinct()
+      .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len"))
+    tf.join(tf.groupBy("token").agg(count(lit(1)).as("df")), "token")
+      .crossJoin(broadcast(scal))
+      .select("doc_id", "dl", "token", "tf", "df", "n_docs", "total_len")
+  }
 
-  /** [[tfidf]] over an ALREADY-MATERIALIZED `(doc_id, …, token, tf)`
-    * relation — the probe half of the build/probe split (`ensureTfIndex`):
-    * the corpus tokenize + explode + (doc, token) groupBy happened ONCE at
-    * index-build time; a probe pays only the vocabulary df rollup and the
-    * scoring join, both over pre-aggregated index rows. N comes from the
-    * index itself (every NON-NULL-text doc owns ≥1 token row — whitespace
-    * split of even an empty text yields one token — so the distinct-doc
-    * count is exact under [[tfRelation]]'s non-null contract).
+  /** [[tfidf]] over an ALREADY-MATERIALIZED [[tfRelation]] — the probe half
+    * of the build/probe split (`ensureTfIndex`): the corpus tokenize +
+    * explode + (doc, token) groupBy and the df and N rollups happened ONCE
+    * at index-build time; a probe reads `tf`, `df` and `n_docs` off the
+    * index rows and pays only the per-doc top-k window.
     */
-  def tfidfFromTf(tf: DataFrame, k: Int = 3): DataFrame =
-    tfidfScore(tf.select("doc_id", "token", "tf"),
-      tf.agg(countDistinct("doc_id").as("n_docs")), k)
-
-  private def tfidfScore(tf: DataFrame, n: DataFrame, k: Int): DataFrame = {
-    val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
+  def tfidfFromTf(tf: DataFrame, k: Int = 3): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(desc("score_e6"), asc("token"))
-    tf.join(df, "token").crossJoin(broadcast(n))
-      .withColumn("score_e6",
+    tf.withColumn("score_e6",
         round(col("tf") * col("n_docs") * 1000000.0 / col("df")).cast("long"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
@@ -241,57 +241,57 @@ object TextAnalysis {
     * N/total_len` product stays well under 2^53 here; at extreme corpus
     * sizes pre-divide into an e6 fixed-point avgdl instead.
     *
-    * Scale shape: tf is the classic (doc, token) groupBy; the query-term and
-    * scalar relations are 1-to-nTerms rows and broadcast; the final cut is a
-    * TakeOrdered over per-doc scores (never a global sort), with the rank
-    * assigned among the k survivors only.
+    * Scale shape: tf is the [[tfRelation]]; the query-term relation is
+    * nTerms rows and broadcast; the final cut is a TakeOrdered over per-doc
+    * scores (never a global sort), with the rank assigned among the k
+    * survivors only.
     */
   def bm25(docs: DataFrame, nTerms: Int = 3, k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val toks = Par.widenBy(docs, col("doc_id"))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), col("toks"),
-        size(col("toks")).cast("long").as("dl"))
-    // persisted: the aggregated per-doc term counts feed the query-term
-    // selection AND the scoring join — one corpus explode instead of two
-    val tf = toks.select(col("doc_id"), col("dl"), explode(col("toks")).as("token"))
-      .groupBy("doc_id", "dl", "token").agg(count(lit(1)).as("tf"))
-      .persist()
-    val scal = toks.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len"))
-    bm25Score(tf, scal, nTerms, k, k1, b)
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    // persisted: the tf relation feeds the query-term selection AND the
+    // scoring join — one corpus explode instead of two
+    bm25FromTf(graft.TransientCaches.register(tfRelation(docs).persist()),
+      nTerms, k, k1, b)
 
-  /** [[bm25]] over an ALREADY-MATERIALIZED `(doc_id, dl, token, tf)`
-    * relation — the probe half of the build/probe split (`ensureTfIndex`):
-    * no corpus tokenize/explode at query time; the (n_docs, total_len)
-    * scalars fold from the index's distinct (doc, dl) pairs (exact under
-    * [[tfRelation]]'s non-null-text contract — every doc owns ≥1 token
-    * row).
+  /** [[bm25]] over an ALREADY-MATERIALIZED [[tfRelation]] — the probe half
+    * of the build/probe split (`ensureTfIndex`): no corpus tokenize/explode
+    * at query time, and `df`, `n_docs` and `total_len` are read off the
+    * index rows.
     */
   def bm25FromTf(tf: DataFrame, nTerms: Int = 3, k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val scal = tf.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len"))
-    bm25Score(tf.select("doc_id", "dl", "token", "tf"), scal, nTerms, k, k1, b)
+    val q = bm25TopTerms(tf, nTerms).select("token")
+    val termE6 = bm25TermE6(col("tf"), col("df"), col("dl"),
+      col("n_docs"), col("total_len"), k1, b)
+    val scored = tf.join(broadcast(q), "token")
+      .select(col("doc_id"), col("dl"), termE6.as("term_e6"))
+      .groupBy("doc_id", "dl")
+      .agg(sum("term_e6").as("score_e6"), count(lit(1)).as("n_hit"))
+      .orderBy(desc("score_e6"), asc("doc_id")).limit(k)
+    val w = org.apache.spark.sql.expressions.Window
+      .orderBy(desc("score_e6"), asc("doc_id"))
+    // rank over the k survivors only — the window sees k rows, not the corpus
+    scored.withColumn("rnk", row_number().over(w).cast("long"))
+      .select(col("rnk"), col("doc_id"), col("dl"), col("n_hit"), col("score_e6"))
   }
 
-  /** Offline FIT of the [[bm25]] query artifacts from a TF relation — the
-    * (token, df) query terms and the (n_docs, total_len) corpus scalars —
-    * for the streaming scorer's fit/apply split (`bm25ScoreStream`). Both
-    * collects are k-sized by contract: `nTerms` rows and one scalar row.
+  /** Offline FIT of the [[bm25]] query artifacts from a [[tfRelation]] —
+    * the (token, df) query terms and the (n_docs, total_len) corpus scalars,
+    * read off one index row — for the streaming scorer's fit/apply split
+    * (`bm25ScoreStream`). Both collects are k-sized by contract: `nTerms`
+    * rows and one scalar row.
     */
   def bm25Fit(tf: DataFrame,
       nTerms: Int = 3): (Seq[(String, Long)], Long, Long) = {
     val terms = bm25TopTerms(tf, nTerms).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val s = tf.select("doc_id", "dl").distinct()
-      .agg(count(lit(1)).as("n_docs"), sum("dl").as("total_len")).head()
+    val s = tf.select("n_docs", "total_len").head()
     (terms, s.getLong(0), s.getLong(1))
   }
 
   /** The Okapi per-term score in e6 fixed point — ONE definition shared by
     * the batch scorer and the streaming ingest scorer (every input is a
-    * Column: batch passes crossJoined scalar columns, the stream passes
+    * Column: batch passes the index's scalar columns, the stream passes
     * literals — the identical expression tree, so scores are bit-identical).
     */
   private[graft] def bm25TermE6(tf: Column, df: Column, dl: Column,
@@ -303,30 +303,14 @@ object TextAnalysis {
       1e6).cast("long")
 
   /** The (Σtf desc, token) top-term selection shared by the batch scorer
-    * and [[bm25Fit]] — one definition of the query's tie order.
+    * and [[bm25Fit]] — one definition of the query's tie order; `df` is the
+    * [[tfRelation]] column (every row of a token carries the same value).
     */
   private[graft] def bm25TopTerms(tf: DataFrame, nTerms: Int): DataFrame =
     tf.groupBy("token")
-      .agg(sum("tf").as("cnt"), count(lit(1)).as("df"))
+      .agg(sum("tf").as("cnt"), max("df").as("df"))
       .orderBy(desc("cnt"), asc("token")).limit(nTerms)
       .select(col("token"), col("df"))
-
-  private def bm25Score(tf: DataFrame, scal: DataFrame, nTerms: Int, k: Int,
-      k1: Double, b: Double): DataFrame = {
-    val q = bm25TopTerms(tf, nTerms)
-    val termE6 = bm25TermE6(col("tf"), col("df"), col("dl"),
-      col("n_docs"), col("total_len"), k1, b)
-    val scored = tf.join(broadcast(q), "token").crossJoin(broadcast(scal))
-      .select(col("doc_id"), col("dl"), termE6.as("term_e6"))
-      .groupBy("doc_id", "dl")
-      .agg(sum("term_e6").as("score_e6"), count(lit(1)).as("n_hit"))
-      .orderBy(desc("score_e6"), asc("doc_id")).limit(k)
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(desc("score_e6"), asc("doc_id"))
-    // rank over the k survivors only — the window sees k rows, not the corpus
-    scored.withColumn("rnk", row_number().over(w).cast("long"))
-      .select(col("rnk"), col("doc_id"), col("dl"), col("n_hit"), col("score_e6"))
-  }
 
   /** k-anonymity generalization-lattice search — the governance pass a
     * corpus owner runs before releasing doc-level metadata (the

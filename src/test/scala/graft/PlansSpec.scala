@@ -241,11 +241,9 @@ class PlansSpec extends SparkSpec {
       // text_bm25 (corpus N + total length); its corpus-scale joins are
       // broadcast equi-joins on token and the IVF cell equi-join
       "retrieval_hybrid",
-      // retrieval_prf runs text_bm25's one-row scalar crossJoin twice (one
-      // per scoring round); corpus-scale joins are broadcast equi on token
+      // retrieval_prf builds text_bm25's tf relation (the same one-row
+      // scalar crossJoin); corpus-scale joins are broadcast equi on token
       "retrieval_prf",
-      // the indexed twin shares the same two one-row scalar crossJoins
-      "retrieval_prf_indexed",
       // sim_binary broadcast-cross-joins the tiny query side by design over
       // 16-byte sign codes (the compressed scan IS the point — the sim_sq8
       // precedent); sim_binary_recall embeds it plus the sim_topk exact
@@ -287,10 +285,7 @@ class PlansSpec extends SparkSpec {
       "sim_cell_balance",
       // sim_cell_rebalance aggregates that census to its one-row decision —
       // the identical inherited scalar crossJoin, nothing corpus-scale added
-      "sim_cell_rebalance",
-      // the indexed probe twins share their direct forms' ONE-row scalar
-      // crossJoin (corpus N / (n_docs, total_len)) — same declared shape
-      "text_tfidf_indexed", "text_bm25_indexed", "retrieval_hybrid_indexed")
+      "sim_cell_rebalance")
     // skipped: queries whose CONSTRUCTION runs eager driver work (full fits,
     // O(n²) pair-stat collects) — their inner plans are asserted elsewhere.
     // km_validity's k×k (4×4-row) centroid-pair join is an intentional

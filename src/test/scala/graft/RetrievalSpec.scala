@@ -92,6 +92,14 @@ class RetrievalSpec extends SparkSpec {
     assert(indexed == direct)
   }
 
+  test("retrieval_hybrid_indexed scans the TF index twice") {
+    // the index rows carry df, n_docs and total_len: the probe reads the
+    // index once for the pseudo-query terms and once for the scoring join
+    val q = SparkEntry.queries("retrieval_hybrid_indexed")(spark, sf("0.001"))
+    val tfScans = Explain.scanCounts(q).filter(_._1.startsWith("graft_tf_idx")).values
+    assert(tfScans.toSeq == Seq(2), s"TF index scans: ${Explain.scanCounts(q)}")
+  }
+
   test("prfBm25: expansion surfaces a doc round 1 cannot reach; the " +
       "harvested term is the top NEW feedback term; ranks are gapless") {
     // query doc 0's terms are {apple, banana}. Doc 3 contains ONLY cherry —

@@ -1390,6 +1390,40 @@ class TextEventsSpec extends SparkSpec {
     assert(got(3L) == ((3L, 1L, 0L, 0L, -1L, 0L, 0L, 0L)))
   }
 
+  test("tfRelation's stored df, n_docs and total_len equal their per-query derivations") {
+    // reference derivations: df = count(1) per token; (n_docs, total_len)
+    // = count and sum(dl) of the distinct (doc_id, dl) pairs
+    def check(docs: org.apache.spark.sql.DataFrame): Unit = {
+      val tf = TextAnalysis.tfRelation(docs)
+      assert(tf.columns.toSeq ==
+        Seq("doc_id", "dl", "token", "tf", "df", "n_docs", "total_len"))
+      val df = tf.groupBy("token").agg(count(lit(1)).as("df_q"))
+      val scal = tf.select("doc_id", "dl").distinct()
+        .agg(count(lit(1)).as("n_q"), sum("dl").as("len_q"))
+      val off = tf.join(df, "token").crossJoin(scal)
+        .filter(col("df") =!= col("df_q") || col("n_docs") =!= col("n_q") ||
+          col("total_len") =!= col("len_q"))
+      assert(off.count() == 0, off.limit(5).collect().mkString("\n"))
+      val s = tf.select("n_docs", "total_len").distinct().as[(Long, Long)].collect()
+      assert(s.length == 1 && s.head._1 == docs.count(), s.mkString(", "))
+    }
+    check(Tables.read(spark, sf("0.001"), "documents"))
+    val edge = Seq(
+      (1L, ""),          // empty text: one "" token, dl 1
+      (2L, "solo"),      // one token
+      (3L, "a a a b"),   // repeated tokens: tf 3
+      (4L, "a c"),       // 4 and 5 have equal dl (2): both count in n_docs
+      (5L, "b c")).toDF("doc_id", "text")
+    check(edge)
+    val rows = TextAnalysis.tfRelation(edge)
+      .as[(Long, Long, String, Long, Long, Long, Long)].collect().toSet
+    assert(rows == Set(
+      (1L, 1L, "", 1L, 1L, 5L, 10L), (2L, 1L, "solo", 1L, 1L, 5L, 10L),
+      (3L, 4L, "a", 3L, 2L, 5L, 10L), (3L, 4L, "b", 1L, 2L, 5L, 10L),
+      (4L, 2L, "a", 1L, 2L, 5L, 10L), (4L, 2L, "c", 1L, 2L, 5L, 10L),
+      (5L, 2L, "b", 1L, 2L, 5L, 10L), (5L, 2L, "c", 1L, 2L, 5L, 10L)))
+  }
+
   test("persisted TF index probes rank identically; probe plan never re-tokenizes") {
     val docs = Tables.read(spark, sf("0.001"), "documents")
     val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Job timeline of one pass from a Spark event log.
 
-  python3 tools/job_timeline.py <event-log> --split <regex> [--pass N]
+  python3 tools/job_timeline.py <event-log> --split <regex> [--pass N[-M]]
 
 The event log comes from any run with Spark's event log on, e.g. a perfbench
 run started with
@@ -13,12 +13,16 @@ A job's label is its description (`SparkContext.setJobDescription`, e.g.
 `KMeans.lloyd`) followed by its call site (the result stage's name). Jobs
 are cut into passes at every job whose label matches --split (the first job
 of a pass, e.g. a fit's size-gate count); a run of consecutive matching jobs
-starts one pass. --pass N picks the N-th pass (1-based; default: the last).
+starts one pass. --pass N picks the N-th pass (1-based; default: the last),
+--pass N-M the passes N through M as one span (for a workload whose pass
+holds several matching runs, e.g. a suite_sample pass with two k-means fits).
 One line per job: its start relative to the pass's first job, the driver gap
 before it (since the previous job ended), its duration, then its tasks (from
 their `SparkListenerTaskEnd` metrics): how many ran, the longest executor run
 time, the mean executor CPU time and the longest executor deserialize time,
-and last its label; times in ms.
+and last its label; times in ms. A job with no stages (Spark starts one for
+an action over an empty RDD, e.g. `listTables`) is labelled "(no stages)"
+and shows 0 tasks.
 """
 import argparse
 import json
@@ -32,9 +36,10 @@ def jobs(path):
         for line in f:
             e = json.loads(line)
             if e["Event"] == "SparkListenerJobStart":
-                result = max(e["Stage Infos"], key=lambda s: s["Stage ID"])
+                site = (max(e["Stage Infos"], key=lambda s: s["Stage ID"])["Stage Name"]
+                        if e["Stage Infos"] else "no stages")
                 desc = (e.get("Properties") or {}).get("spark.job.description")
-                label = f"{desc} ({result['Stage Name']})" if desc else result["Stage Name"]
+                label = f"{desc} ({site})" if desc else site
                 starts[e["Job ID"]] = (e["Submission Time"], label)
                 for s in e["Stage IDs"]:
                     job_of_stage[s] = e["Job ID"]
@@ -59,18 +64,23 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("log")
     ap.add_argument("--split", required=True)
-    ap.add_argument("--pass", dest="pass_no", type=int, default=0)
+    ap.add_argument("--pass", dest="pass_no", default="")
     a = ap.parse_args()
     js = jobs(a.log)
     hits = [bool(re.search(a.split, site)) for _, _, _, site, _ in js]
     firsts = [ix for ix, hit in enumerate(hits) if hit and not (ix > 0 and hits[ix - 1])]
     if not firsts:
         raise SystemExit(f"no job's label matches {a.split!r}")
-    n = a.pass_no or len(firsts)
+    n, _, m = a.pass_no.partition("-")
+    n = int(n) if n else len(firsts)
+    m = int(m) if m else n
+    if not 1 <= n <= m <= len(firsts):
+        raise SystemExit(f"--pass {a.pass_no}: the log has passes 1-{len(firsts)}")
     lo = firsts[n - 1]
-    hi = firsts[n] if n < len(firsts) else len(js)
+    hi = firsts[m] if m < len(firsts) else len(js)
     t0 = js[lo][1]
-    print(f"pass {n} of {len(firsts)}: {hi - lo} jobs, "
+    span = f"{n}" if m == n else f"{n}-{m}"
+    print(f"pass {span} of {len(firsts)}: {hi - lo} jobs, "
           f"{max(e for _, _, e, _, _ in js[lo:hi]) - t0} ms from the first job's start to the last job's end")
     print(f"{'job':>4} {'start':>6} {'gap':>5} {'dur':>5} {'tasks':>5} {'run':>5} {'cpu':>5} {'deser':>5}  label")
     for ix in range(lo, hi):
