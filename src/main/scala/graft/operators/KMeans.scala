@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.GraftJobShim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -982,7 +983,6 @@ object KMeans {
   private final class Resident(df: DataFrame, coins: Seq[Column],
       val fxAt: Option[(Int, Double)]) {
     val ansi: Boolean = KMeans.ansi(df)
-    private val sc = df.sparkSession.sparkContext
     private var blocks: RDD[Block] = null
     // the plan, until the first scan (which builds the blocks) runs it
     private var qe: org.apache.spark.sql.execution.QueryExecution = null
@@ -998,7 +998,7 @@ object KMeans {
           qe = df.select(col("i") +: col("Y") +: coins: _*).queryExecution
           qe.toRdd
         }
-        blocks = rows.mapPartitions { it =>
+        blocks = GraftJobShim.mapPartitionsInternal(rows) { it =>
           val b = new BlockBuilder(nu, fxAt, ansi)
           it.foreach(b.add)
           Iterator.single(b.result())
@@ -1012,27 +1012,24 @@ object KMeans {
     def partitions: Int = planned().getNumPartitions
 
     /** `f(partition, block)` for every block, as ONE job described as
-      * `name` (the first, which builds the blocks, as `KMeans.build+…`).
+      * `name` (the first, which builds the blocks, as `KMeans.build+…`),
+      * submitted by [[GraftJobShim.run]] on the persisted blocks RDD
+      * itself: no RDD made and no closure cleaned per scan.
       */
     def scan[A: ClassTag](name: String)(f: (Int, Block) => A): Array[A] = {
-      val rdd = planned()
-      def job() = rdd.mapPartitionsWithIndex((p, it) => Iterator.single(f(p, it.next()))).collect()
-      val build = qe
-      if (build == null) described(sc, name)(job())
-      else {
-        qe = null
-        described(sc, "KMeans.build+" + name.stripPrefix("KMeans.")) {
-          org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(build, Some(name))(job())
-        }
-      }
+      val (rdd, build) = (planned(), qe)
+      qe = null
+      def job(label: String) = GraftJobShim.run(rdd, label)((p, it) => f(p, it.next()))
+      if (build == null) job(name)
+      else org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(build, Some(name))(
+        job("KMeans.build+" + name.stripPrefix("KMeans.")))
     }
 
     /** The blocks of partitions `parts`, as ONE job described as `name`
       * (none for no partition).
       */
     def fetch(name: String, parts: Seq[Int]): Array[Block] =
-      if (parts.isEmpty) Array.empty
-      else described(sc, name)(sc.runJob(planned(), (it: Iterator[Block]) => it.next(), parts))
+      if (parts.isEmpty) Array.empty else GraftJobShim.run(planned(), name, parts)((_, it) => it.next())
 
     /** Keep each block's `k` first rows, `parts`, as the first rows of the
       * whole placement ([[firstRows]]).
@@ -1263,15 +1260,6 @@ object KMeans {
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult =
     placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, maxCells = -1L, plusPlus)
-
-  /** `body` with its jobs described as `name` (the Spark UI's and event
-    * log's job description), the caller's description restored after.
-    */
-  private[operators] def described[A](sc: org.apache.spark.SparkContext, name: String)(body: => A): A = {
-    val desc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(name)
-    try body finally sc.setLocalProperty("spark.job.description", desc)
-  }
 
   /** Per-iteration query tuning, restored on exit: around the planning of
     * the points plan whose blocks make either placement ([[Points]]).

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.GraftJobShim
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.InternalRow
@@ -156,10 +157,12 @@ object Quality {
     * ([[elbowSums]]). The sample is collected once (bounded, one job when
     * its partitions are balanced: [[collectAtMost]]) and labelled per set on the driver by the
     * Lloyd kernel's argmin ([[KMeans.nearestIds]], ≡ [[KMeans.assign]]);
-    * then ONE job over its index range runs each row's
-    * [[graft.plans.PairDistStats]] kernel per set and sums the set's same-
-    * and cross-cluster (Σsfx, count) longs (exact regroupings of the stats
-    * rows), which [[simplifiedSi]] finishes. Past the bound each set runs
+    * then ONE job over its index range ([[GraftJobShim.run]], no closure
+    * cleaned) runs each row's [[graft.plans.PairDistStats]] kernel per set
+    * and sums the set's same- and cross-cluster (Σsfx, count) longs (exact
+    * regroupings of the stats rows); the partitions' sums merge on the
+    * driver in partition order (long sums: exact in any order) and
+    * [[simplifiedSi]] finishes them. Past the bound each set runs
     * [[silhouettePairStatsJoin]] over the cached sample instead.
     */
   private def scoreKs(points: KMeans.Points, sample: DataFrame, sets: Seq[(Int, Seq[Centroid])],
@@ -170,8 +173,7 @@ object Quality {
     def opt(r: Row, ix: Int) = if (r.isNullAt(ix)) None else Some(r.getDouble(ix))
     val e = elbowSums(points, sets.map(_._2), Some(d1Scale), d2Scale)
     val sel = sample.select(col("i"), col("Y"))
-    val sc = spark.sparkContext
-    val si = KMeans.described(sc, "Quality.sample")(collectAtMost(sel, maxCollectRows)) match {
+    val si = collectAtMost(sel, maxCollectRows, "Quality.sample") match {
       case None =>
         val dist = sel.cache()
         try sets.map { case (_, cs) => opt(silhouetteSimplifiedFromStats(
@@ -183,8 +185,9 @@ object Quality {
           val js = KMeans.nearestIds(ys, cs)
           (js, PairDistStats(Literal(0L), Literal(0L), ids, js, ys, dScale))
         }
-        val slices = math.max(1, math.min(sc.defaultParallelism, rows.length))
-        val partials = sc.parallelize(rows.indices, slices).mapPartitions { ps =>
+        val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, rows.length))
+        val partials = GraftJobShim.run(spark.sparkContext.parallelize(rows.indices, slices),
+            "Quality.silhouette") { (_, ps) =>
           val acc = new Array[Long](4 * kernels.size) // per set: same Σ, n; cross Σ, n
           ps.foreach { p =>
             val y = UnsafeArrayData.fromPrimitiveArray(ys(p))
@@ -197,10 +200,9 @@ object Quality {
               }
             }
           }
-          Iterator.single(acc)
+          acc
         }
-        val sums = KMeans.described(sc, "Quality.silhouette")(
-          partials.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x))))
+        val sums = partials.reduce((a, b) => Array.tabulate(a.length)(x => a(x) + b(x)))
         sets.indices.map(s => simplifiedSi(sums.slice(4 * s, 4 * s + 4), dScale, points.ansi))
     }
     sets.indices.map(ix => (sets(ix)._1.toLong, e(ix)._1, e(ix)._2, si(ix)))
@@ -214,13 +216,14 @@ object Quality {
     * balanced partitioning answers in ONE job (`take` scans partition 0
     * first and the rest in a second job). Only if some partition outgrows
     * its share while the total fits does a second job fetch those
-    * partitions, which then hold at most `max` rows between them.
+    * partitions, which then hold at most `max` rows between them. Both
+    * jobs are described as `name` and submitted by [[GraftJobShim.run]].
     */
-  private[graft] def collectAtMost(df: DataFrame, max: Int): Option[Array[Row]] = {
+  private[graft] def collectAtMost(df: DataFrame, max: Int,
+      name: String = "Quality.collectAtMost"): Option[Array[Row]] = {
     val rdd = df.queryExecution.toRdd
-    val sc = df.sparkSession.sparkContext
     val share = max / math.max(1, rdd.getNumPartitions) + 1
-    val counted = sc.runJob(rdd, (it: Iterator[InternalRow]) => {
+    val counted = GraftJobShim.run(rdd, name) { (_, it) =>
       val kept = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       var n = 0L
       while (n <= max && it.hasNext) {
@@ -229,11 +232,11 @@ object Quality {
         n += 1
       }
       (n, if (n <= share) kept.toArray else null)
-    })
+    }
     if (counted.iterator.map(_._1).sum > max) return None
     val over = counted.indices.filter(p => counted(p)._2 == null)
     val refetched = if (over.isEmpty) Array.empty[Array[InternalRow]]
-      else sc.runJob(rdd, (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, over)
+      else GraftJobShim.run(rdd, name, over)((_, it) => it.map(_.copy()).toArray)
     val byPart = (over zip refetched).toMap
     val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
     Some(counted.indices.iterator
@@ -460,7 +463,7 @@ object Quality {
       maxCollectRows: Int = 1000000): DataFrame = {
     val spark = assigned.sparkSession
     val sel = assigned.select(col("i"), col("j"), col("Y"))
-    val rows = collectAtMost(sel, maxCollectRows) match {
+    val rows = collectAtMost(sel, maxCollectRows, "Quality.pairStats.collect") match {
       case Some(rows) => rows
       case None => return silhouettePairStatsJoin(assigned, dScale)
     }
@@ -635,9 +638,8 @@ object Quality {
         elbowSums(placed, fitted.map(_.centroids), None, scale).map(_._2.get)
       } finally if (owned) df.unpersist()
     }
-    val rows = KMeans.described(points.sparkSession.sparkContext, "Quality.gap.collect")(collectAtMost(
-      points.select(col("i") +: col("Y") +: (0 until refSets).map(refY): _*),
-      math.min(localRowBound, Int.MaxValue - 2L).toInt))
+    val rows = collectAtMost(points.select(col("i") +: col("Y") +: (0 until refSets).map(refY): _*),
+      math.min(localRowBound, Int.MaxValue - 2L).toInt, "Quality.gap.collect")
     val ws: Seq[Seq[Double]] =
       rows.flatMap(localW).getOrElse {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(sets.size)

@@ -60,13 +60,11 @@ object Ranking {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
     val rdd = ranged.queryExecution.toRdd
-    val counts = rdd
-      .mapPartitionsWithIndex((i, it) => {
-        var c = 0L
-        while (it.hasNext) { it.next(); c += 1 }
-        Iterator((i, c))
-      }, preservesPartitioning = true)
-      .collect().sortBy(_._1).map(_._2)
+    val counts = org.apache.spark.GraftJobShim.run(rdd, "Ranking.globalRank.count") { (_, it) =>
+      var c = 0L
+      while (it.hasNext) { it.next(); c += 1 }
+      c
+    }
     val offsets = counts.scanLeft(0L)(_ + _)
     val withRank = rdd.mapPartitionsWithIndex { (i, it) =>
       val proj = UnsafeProjection.create(schema)

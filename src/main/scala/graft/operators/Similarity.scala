@@ -1976,25 +1976,25 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     val d = dim
-    val parts = emb2v(emb).select(col("v")).queryExecution.toRdd
-      .mapPartitions { it =>
-        var n = 0L
-        val s = new Array[Double](d)
-        val ss = new Array[Double](d * d)
-        while (it.hasNext) {
-          val arr = it.next().getArray(0)
-          n += 1
-          var i = 0
-          while (i < d) {
-            val xi = arr.getDouble(i)
-            s(i) += xi
-            var j = 0
-            while (j < d) { ss(i * d + j) += xi * arr.getDouble(j); j += 1 }
-            i += 1
-          }
+    val parts = org.apache.spark.GraftJobShim.run(emb2v(emb).select(col("v")).queryExecution.toRdd,
+      "Similarity.pca1") { (_, it) =>
+      var n = 0L
+      val s = new Array[Double](d)
+      val ss = new Array[Double](d * d)
+      while (it.hasNext) {
+        val arr = it.next().getArray(0)
+        n += 1
+        var i = 0
+        while (i < d) {
+          val xi = arr.getDouble(i)
+          s(i) += xi
+          var j = 0
+          while (j < d) { ss(i * d + j) += xi * arr.getDouble(j); j += 1 }
+          i += 1
         }
-        Iterator.single((n, s, ss))
-      }.collect()
+      }
+      (n, s, ss)
+    }
     val n = parts.map(_._1).sum.toDouble
     val s = new Array[Double](d)
     val ss = new Array[Double](d * d)

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.GraftJobShim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
@@ -98,7 +99,7 @@ case class BroadcastAsofJoinExec(
     val outExprs: Seq[Expression] = output
     val joinedSchema: Seq[Attribute] = lOut :+ asofOut
     val bcast = right.executeBroadcast[Array[InternalRow]]()
-    left.execute().mapPartitions { lIter =>
+    GraftJobShim.mapPartitionsInternal(left.execute()) { lIter =>
       val rExtract = UnsafeProjection.create(Seq(rk, rt), rOut)
       // key -> ascending ts array, built once per partition from the
       // broadcast rows (dimension-sized by the strategy's own test)

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.GraftJobShim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, BaseOrdering, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
@@ -114,7 +115,7 @@ case class PartialTopKPerGroupExec(
   protected override def doExecute(): RDD[InternalRow] = {
     val childOut = child.output
     val (g, so, kk) = (groupExprs, sortOrder, k)
-    child.execute().mapPartitions { iter =>
+    GraftJobShim.mapPartitionsInternal(child.execute()) { iter =>
       val buffer = new GroupTopKBuffer(
         UnsafeProjection.create(g, childOut),
         RowOrdering.create(so, childOut), kk)
@@ -150,7 +151,7 @@ case class FinalTopKPerGroupExec(
     val (g, kk) = (groupExprs, k)
     val outExprs: Seq[Expression] = output
     val joinedSchema: Seq[Attribute] = childOut :+ rankOut
-    child.execute().mapPartitions { iter =>
+    GraftJobShim.mapPartitionsInternal(child.execute()) { iter =>
       val keyProj = UnsafeProjection.create(g, childOut)
       val resultProj = UnsafeProjection.create(outExprs, joinedSchema)
       val joined = new JoinedRow

@@ -1017,6 +1017,39 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  test("every Lloyd job of a partitioned fit runs on the resident blocks RDD itself") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    emb.count()
+    val lloyd = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "KMeans.lloyd")
+          lloyd.add(e.stageInfos.maxBy(_.stageId).rddInfos.head.name)
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    val fit = try { val f = KMeans.fit(emb, k = 4, dim = 64, maxIter = 3); org.apache.spark.ListenerDrain(sc); f }
+      finally sc.removeSparkListener(l)
+    val names = lloyd.toArray.toSeq
+    assert(names.size == fit.steps && names.forall(_ == "KMeans points"), names)
+  }
+
+  test("a scan whose body captures a non-serializable value fails its job with " +
+      "Task not serializable and leaves no persisted RDD") {
+    val sc = spark.sparkContext
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    emb.count()
+    val before = sc.getPersistentRDDs.keySet
+    val notSerializable = new Object
+    val (e, jobs, _, _) = observed(intercept[org.apache.spark.SparkException](
+      KMeans.Points.withPartitioned(emb)(_.partials("KMeans.test")(_ => notSerializable.hashCode))))
+    assert(messages(e).contains("Task not serializable"), messages(e))
+    assert(jobs == 1, s"$jobs jobs")
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("a fit whose blocks are unpersisted between steps gives the same bits") {
     val sc = spark.sparkContext
     val p = Tables.yhEmbeddings(spark, sf("0.001")).repartition(3).cache()
