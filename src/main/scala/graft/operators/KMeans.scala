@@ -1,10 +1,10 @@
 package graft.operators
 
+import java.math.BigInteger
 import org.apache.spark.GraftJobShim
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.reflect.ClassTag
@@ -25,37 +25,29 @@ import graft.plans.NearestSqDistLit
   *    executors inside each step's task closure — the analog of the
   *    reference's scalar-subquery broadcast of `(groupArray(j),
   *    groupArray(C))` (k-means.sql:36). No join, no shuffle for assignment.
-  *  - Each Lloyd step of the fit loop is ONE job: a primitive per-partition
-  *    kernel ([[LloydKernel]]) does the O(k·dim) argmin and the fixed-point
-  *    sums per row, and the ≤ P partial (Σ, n) arrays merge on the driver.
-  *    Partial per-partition sums are the property that made the reference
-  *    shard-friendly (README.md:15).
-  *  - Each k-means++ seeding round is ONE kernel job too
-  *    ([[seedPlusPlusScalable]]): it replays the `rand(seed)`/`max_by`
-  *    draw per partition, the partitions' winners merge on the driver, and
-  *    no query is planned per round.
+  *  - Every scan is ONE kernel job with one per-row body and no query
+  *    planned, its ≤ P partial answers merged on the driver: a Lloyd step
+  *    ([[LloydKernel]]: the O(k·dim) argmin and fixed-point (Σ, n) per
+  *    partition — the partial sums that made the reference shard-friendly,
+  *    README.md:15), a k-means++ round ([[seedPlusPlusScalable]]: the
+  *    `rand(seed)`/`max_by` draw replayed per partition), a k-means|| pass,
+  *    the elbow, and the exact inverse-CDF draw ([[inverseCdfDraw]]: a
+  *    key-bucket census, then the crossing bucket's rows).
   *  - Several fits over the same points run in LOCKSTEP ([[iterate]]): one
-  *    scan per step feeds each row to every still-moving centroid set's
-  *    kernel, so a choose-K sweep pays one job per step, not one per
-  *    (k, step).
-  *  - Each fit places its points once ([[Points]]) and shares the
-  *    placement across its seeding, Lloyd loop and scoring: PARTITIONED,
-  *    each partition's rows decoded ONCE per fit into a resident block of
-  *    flat primitive arrays (keys, coordinates, their fixed-point encodes,
-  *    the k-means|| coins; 16 B per cell) that every later scan reads, the
-  *    blocks persisted MEMORY_ONLY and released when the fit ends (the
-  *    driver holds O(k·dim)); or COLLECTED, the same blocks on the driver
-  *    in partition order, only while `rows·dim ≤ localMaxCells` (default
-  *    4M cells, 64 MB; [[fitAuto]], [[fitBounded]], [[fitMiniBatch]],
-  *    Quality.optimalKSweep). The size gate is the job that builds the
-  *    blocks ([[Points.place]]): it counts their rows and, under the
-  *    bound, brings them to the driver, so a gated fit runs no count of its
-  *    own. Every scan — the Lloyd step, the k-means|| passes, the ++ round,
-  *    the elbow — is one per-row body with one nearest fold
-  *    ([[NearestSqDistLit.fold]]), run per block with its partition's
-  *    index; the placement only decides where it runs, so there is one
-  *    Lloyd loop ([[iterate]]), one ++ chain and one k-means|| chain for
-  *    both.
+  *    scan per step serves every still-moving centroid set, so a choose-K
+  *    sweep pays one job per step, not one per (k, step).
+  *  - Each fit places its points once ([[Points]]) for its seeding, Lloyd
+  *    loop and scoring: PARTITIONED, each partition decoded ONCE into a
+  *    resident block of flat primitive arrays (keys, coordinates, their
+  *    fixed-point encodes, the k-means|| coins; 16 B per cell), persisted
+  *    MEMORY_ONLY until the fit ends (the driver holds O(k·dim)); or
+  *    COLLECTED, the same blocks on the driver in partition order, while
+  *    `rows·dim ≤ localMaxCells` (default 4M cells, 64 MB; [[fitAuto]],
+  *    [[fitBounded]], [[fitMiniBatch]], Quality.optimalKSweep and both gap
+  *    statistics). The size gate is the job that builds the blocks
+  *    ([[Points.place]]), which under the bound also brings them. A scan
+  *    runs per block with its partition's index, so either placement gives
+  *    the same bits through one Lloyd loop and one chain per seeding.
   *  - Per-dimension sums are fixed-point integers (`round(x*scale)::long`,
   *    `fxScale > 0`), so results do not depend on partition count or merge
   *    order — a deterministic distributed k-means. A sum past the long
@@ -125,6 +117,12 @@ object KMeans {
     * integers, making cumulative sums order-exact and the whole draw
     * bit-reproducible against the DuckDB oracle.
     *
+    * A null `Y` weighs null (not the clamp below) and is never drawn; a
+    * null key that survives the anti-join fails the bucket collect
+    * (`ROW_VALUE_IS_NULL`). This form is the `km_seed_next` oracle query,
+    * ReferenceSurface's `centroidsInit` view and the specs' reference for
+    * the fits' kernel draw ([[inverseCdfDraw]]), as [[lloydStepDF]] is.
+    *
     * NOTE scale: the global running sum is a two-level prefix sum, not a
     * single-partition window. Rows are bucketed by a DETERMINISTIC range
     * function of the key (`(i - min_i) div width`, monotone in `i`), each
@@ -134,20 +132,15 @@ object KMeans {
     * one-window form in any partitioning — the oracle compare stays exact
     * while the stage scales as P parallel tasks. (Bucketing is a pure
     * function of the data, so re-executions of the lazy plan can never
-    * disagree with the offsets job.) [[seedPlusPlusScalable]] remains the
-    * production fit path — it needs no prefix sum at all.
+    * disagree with the offsets job.)
     *
     * NOTE overflow: the integer-domain compare needs `total·uNum` and
-    * `cw·uDen` to fit in a signed 64-bit long (cw ≤ total). With this
-    * binding's per-row weights (~2.5e11) that bound is approached around
-    * sf1+. Round 18 (r17 verdict task 4): instead of require-failing and
-    * asking the caller to shrink `weightScale` by hand, the pass now
-    * AUTO-DERIVES the shrink from the observed double-domain total
-    * (weights are only sampling weights — scaling them down uniformly
-    * preserves the distribution up to rounding), so the exact seeding
-    * path survives any sf without a knob; the `require` below remains as
-    * the backstop. The adaptive branch never fires at oracle scale, so
-    * published hashes are untouched.
+    * `cw·uDen` to fit in a signed 64-bit long (cw ≤ total), which this
+    * binding's per-row weights (~2.5e11) approach around sf1+. Instead of
+    * failing, the pass derives a shrink of `weightScale` from the observed
+    * double-domain total (weights are only sampling weights: a uniform
+    * rescale keeps the distribution up to rounding); the `require` below
+    * is the backstop. The rescale never fires at oracle scale.
     *
     * `d1Weights = true` is the BUG-COMPAT mode: weight by plain L2 distance
     * exactly as the reference's `centroidsInit` actually computes it
@@ -175,18 +168,13 @@ object KMeans {
       else antiJoined
     val d2 = graft.plans.native.nearest_sq_dist(col("Y"), coords(chosen))
     val weight = if (d1Weights) sqrt(d2) else d2
-    // per-row long cast clamped at 2^62 so ANSI cast can never throw: the
-    // clamp is provably inert whenever the adaptive branch below does NOT
-    // fire (every row ≤ the double total ≤ bound/2 ≤ 2^62), and after the
-    // branch fires the rescaled rows are tiny — the clamped value is only
-    // ever read on in-bounds weights
-    def weightedAt(s: Double) = surviving.withColumn(
-      "w", least(round(weight * s), lit((1L << 62).toDouble)).cast("long"))
-    // ONE scalar-aggregate pass: the exact integer total rides as a
-    // decimal(38,0) sum (exact at any magnitude — a long sum would ANSI-
-    // throw exactly when the adaptive rescale is needed), the UNCLAMPED
-    // double-domain sum is the overflow sentinel the rescale derives its
-    // shrink from, plus the key range for bucketing.
+    // the long cast clamped at 2^62 so the ANSI cast never throws: inert
+    // unless the total passes bound/2, where the rescale below reweighs
+    def weightedAt(s: Double) = surviving.withColumn("w",
+      when(weight.isNotNull, least(round(weight * s), lit((1L << 62).toDouble))).cast("long"))
+    // ONE aggregate: the exact total as a decimal(38,0) sum (a long sum would
+    // throw exactly where the rescale is needed), the key range, and the
+    // UNCLAMPED double sum: the sentinel the rescale derives its shrink from
     def headAt(s: Double) = weightedAt(s).agg(
       sum(col("w").cast("decimal(38,0)")), min("i"), max("i"),
       count(lit(1)), sum(round(weight * s))).head()
@@ -198,8 +186,7 @@ object KMeans {
         .select(lit(chosen.map(_.j).max + 1).as("j"), col("i"), col("Y")).limit(0)
     // ADAPTIVE weightScale (the overflow NOTE above): past half the bound the
     // unclamped total is rescaled to a quarter of it, so post-rescale
-    // sum(round(w·s')) ≤ bound/4 + n/2 — in-bounds at any sf. (The collected
-    // replay, KMeans.boundedFits, declines past a quarter.)
+    // sum(round(w·s')) ≤ bound/4 + n/2 — in-bounds at any sf
     if (head.getDouble(4) > bound.toDouble * 0.5) {
       effScale = weightScale * (bound.toDouble * 0.25) / head.getDouble(4)
       head = headAt(effScale)
@@ -215,7 +202,7 @@ object KMeans {
     val width = math.max(1L, (maxI - minI) / nBuckets + 1)
     val bucketed = weighted.withColumn("b", ((col("i") - minI) / width).cast("int"))
     val bucketSums = bucketed.groupBy("b").agg(sum("w").as("bw"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+      .collect().map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).sortBy(_._1)
     val offsets = bucketSums.map(_._1)
       .zip(bucketSums.map(_._2).scanLeft(0L)(_ + _)).toMap
     val localW = Window.partitionBy("b").orderBy("i")
@@ -351,7 +338,7 @@ object KMeans {
       parallelSeeds(_, k, seed, rounds, overFactor))
 
   /** [[seedParallel]] over points carrying the coins of rounds 1..`rounds`. */
-  private def parallelSeeds(points: Points, k: Int, seed: Long, rounds: Int,
+  private[operators] def parallelSeeds(points: Points, k: Int, seed: Long, rounds: Int,
       overFactor: Double): Seq[Centroid] = {
     var cands = points.firstK(1).map(_.c).toVector
     val l = overFactor * k
@@ -532,9 +519,6 @@ object KMeans {
 
   private def requireFx(fxScale: Double): Unit =
     require(fxScale > 0, s"fxScale must be > 0 (fixed-point sums), got $fxScale")
-
-  private[operators] def ansi(points: DataFrame): Boolean =
-    points.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
 
   /** Per-centroid-id sufficient statistics of one step: (Σ fixed-point
     * coordinates, row count).
@@ -736,6 +720,9 @@ object KMeans {
 
     /** The points whose key `keep` accepts (a null key never). */
     def where(keep: Long => Boolean): Points
+
+    /** The smallest and the largest non-null key, if any (a view's: its placement's). */
+    def keyRange: Option[(Long, Long)]
   }
 
   private[graft] object Points {
@@ -761,9 +748,10 @@ object KMeans {
       * at `fxAt`), chosen from ONE job described as `KMeans.build+place`:
       * the job that builds [[partitioned]]'s blocks also returns each
       * block's row count, its `firstK` first rows ([[Partitioned.firstK]]'s
-      * answer) and, where the block fits its even share ⌈`maxCells`/P⌉
-      * cells (Quality.collectAtMost's rule), the block itself, so the
-      * driver receives O(`maxCells`) cells whatever the partitioning.
+      * answer), its key range ([[Points.keyRange]]) and, where the block
+      * fits its even share ⌈`maxCells`/P⌉ cells (Quality.collectAtMost's
+      * rule), the block itself, so the driver receives O(`maxCells`) cells
+      * whatever the partitioning.
       * COLLECTED iff `rows·dim ≤ maxCells` (never for a negative
       * `maxCells`): the blocks in partition order, a second job fetching
       * the persisted blocks that outgrew their share, the persisted blocks
@@ -778,9 +766,10 @@ object KMeans {
         val parts = math.max(1, resident.partitions)
         val share = if (maxCells < 0) -1L else maxCells / parts + (if (maxCells % parts == 0) 0 else 1)
         val placed = resident.scan("KMeans.place") { (_, b) =>
-          (b.rows, b.firstK(firstK, null), if (math.max(b.rows.toLong * dim, b.cells) <= share) b else null)
+          (b.rows, b.firstK(firstK, null), if (math.max(b.rows.toLong * dim, b.cells) <= share) b else null,
+            b.keyRange)
         }
-        resident.placedFirst(firstK, placed.map(_._2))
+        resident.placedFirst(firstK, placed.map(_._2), spanOf(placed.map(_._4)))
         if (placed.iterator.map(_._1.toLong).sum * dim > maxCells) {
           resides = true
           Left(new Partitioned(resident, null))
@@ -798,24 +787,10 @@ object KMeans {
         maxCells: Long)(body: Points => A): A =
       place(points, coins, fxAt, firstK, maxCells).fold(p => try body(p) finally p.release(), body)
 
-    /** [[place]] with no bound: `points`' blocks on the driver, as the one
-      * placement of [[collected]]'s rows form.
-      */
+    /** [[place]] with no bound: `points`' blocks on the driver. */
     def collected(points: DataFrame, dim: Int, fxScale: Double,
         coins: Seq[Column] = Nil): Seq[Collected] =
       Seq(place(points, coins, (dim, fxScale), 0, Long.MaxValue).toOption.get)
-
-    /** `rows` = `(i, Y_1, …, Y_ys)` on the driver: a placement per `Y`
-      * column, each one block of the rows in their order, with the encodes
-      * at (`dim`, `fxScale`).
-      */
-    def collected(rows: Array[org.apache.spark.sql.Row], ys: Int, dim: Int, fxScale: Double,
-        ansi: Boolean): Seq[Collected] = (1 to ys).map { c =>
-      val b = new BlockBuilder(0, Some((dim, fxScale)), ansi)
-      rows.foreach(r => b.add(InternalRow(if (r.isNullAt(0)) null else r.getLong(0),
-        if (r.isNullAt(c)) null else UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](c).toArray))))
-      new Collected(Array(b.result()), (dim, fxScale), ansi, null)
-    }
   }
 
   /** One partition's rows, decoded once into flat primitive arrays (no
@@ -871,19 +846,22 @@ object KMeans {
       p
     }
 
-    /** Where each row's coordinates start in `ys`. */
-    def offsets: Array[Int] = {
-      val offs = new Array[Int](rows)
-      var r = 1
-      while (r < rows) { offs(r) = offs(r - 1) + math.max(lens(r - 1), 0); r += 1 }
-      offs
+    /** The smallest and the largest non-null key, if any. */
+    def keyRange: Option[(Long, Long)] = {
+      var (lo, hi, r) = (Long.MaxValue, Long.MinValue, 0)
+      while (r < rows) {
+        if (!nullKey(r)) { lo = math.min(lo, keys(r)); hi = math.max(hi, keys(r)) }
+        r += 1
+      }
+      if (lo > hi) None else Some((lo, hi))
     }
 
     /** The `k` first rows `keep` accepts in `orderBy("i")` order (a null key
       * first, a tied key in row order).
       */
     def firstK(k: Int, keep: Long => Boolean): Array[FirstRow] = {
-      val offs = offsets
+      val offs = new Array[Int](rows + 1) // where each row's Y starts
+      (0 until rows).foreach(r => offs(r + 1) = offs(r) + math.max(lens(r), 0))
       def before(a: Int, b: Int): Boolean =
         if (nullKey(a) != nullKey(b)) nullKey(a)
         else if (nullKey(a) || keys(a) == keys(b)) a < b
@@ -904,6 +882,10 @@ object KMeans {
       }
     }
   }
+
+  /** The key range spanning `ranges`. */
+  private def spanOf(ranges: Seq[Option[(Long, Long)]]): Option[(Long, Long)] =
+    ranges.flatten.reduceOption((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
 
   /** A first row as [[Block.firstK]] gives it: (null key, key, Y or null). */
   private type FirstRow = (Boolean, Long, Array[Double])
@@ -982,13 +964,15 @@ object KMeans {
     */
   private final class Resident(df: DataFrame, coins: Seq[Column],
       val fxAt: Option[(Int, Double)]) {
-    val ansi: Boolean = KMeans.ansi(df)
+    val ansi: Boolean = df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
     private var blocks: RDD[Block] = null
     // the plan, until the first scan (which builds the blocks) runs it
     private var qe: org.apache.spark.sql.execution.QueryExecution = null
-    // the first `firstKnown` rows, from the placement job ([[Points.place]])
+    // the first `firstKnown` rows and the key range, from the placement job
+    // ([[Points.place]])
     private var first: Seq[FirstRow] = Nil
     private var firstKnown = 0
+    private var range: Option[Option[(Long, Long)]] = None
 
     /** The blocks, planned on first use. */
     private def planned(): RDD[Block] = {
@@ -1032,12 +1016,17 @@ object KMeans {
       if (parts.isEmpty) Array.empty else GraftJobShim.run(planned(), name, parts)((_, it) => it.next())
 
     /** Keep each block's `k` first rows, `parts`, as the first rows of the
-      * whole placement ([[firstRows]]).
+      * whole placement ([[firstRows]]), and its key range `keys`.
       */
-    def placedFirst(k: Int, parts: Array[Array[FirstRow]]): Unit = {
+    def placedFirst(k: Int, parts: Array[Array[FirstRow]], keys: Option[(Long, Long)]): Unit = {
       first = firstOf(parts, k)
       firstKnown = k
+      range = Some(keys)
     }
+
+    /** The placement job's key range (an inverse-CDF draw's buckets). */
+    def keyRange: Option[(Long, Long)] =
+      range.getOrElse(throw new IllegalStateException("no placement job has run: no key range"))
 
     /** The `k` first rows `keep` accepts: the placement job's where it
       * brought them, else one scan.
@@ -1077,6 +1066,8 @@ object KMeans {
 
     def where(accept: Long => Boolean): Points = new Partitioned(resident, both(keep, accept))
 
+    def keyRange: Option[(Long, Long)] = resident.keyRange
+
     /** Drop the blocks (every view's). */
     def release(): Unit = resident.release()
   }
@@ -1097,26 +1088,7 @@ object KMeans {
 
     def where(accept: Long => Boolean): Points = new Collected(blocks, dimScale, ansi, both(keep, accept))
 
-    /** The rows `keep` accepts in key order (a null key first, a tied key
-      * in partition order) through one [[Point]] cursor, for
-      * [[boundedFits]]' walk: each row as (block << 32 | row), sorted once.
-      */
-    def inKeyOrder: Iterator[Point] = {
-      val p = new Point
-      order.iterator.filter(g => keep == null || (!nul(g) && keep(key(g))))
-        .map(g => blocks((g >>> 32).toInt).load(p, g.toInt, offs((g >>> 32).toInt)(g.toInt)))
-    }
-
-    private def nul(g: Long) = blocks((g >>> 32).toInt).nullKey(g.toInt)
-    private def key(g: Long) = blocks((g >>> 32).toInt).keys(g.toInt)
-    private lazy val offs = blocks.map(_.offsets)
-    private lazy val order: Array[Long] = {
-      val rows = blocks.indices.iterator.flatMap(b => Iterator.range(0, blocks(b).rows)
-        .map(r => java.lang.Long.valueOf(b.toLong << 32 | r))).toArray
-      java.util.Arrays.sort(rows, (a: java.lang.Long, b: java.lang.Long) =>
-        if (nul(a) != nul(b)) { if (nul(a)) -1 else 1 } else java.lang.Long.compare(key(a), key(b)))
-      rows.map(_.longValue)
-    }
+    lazy val keyRange: Option[(Long, Long)] = spanOf(blocks.map(_.keyRange))
   }
 
   /** A view's row filter and `accept`, both. */
@@ -1195,23 +1167,13 @@ object KMeans {
 
   /** Spark's `round(x)` for doubles (`BigDecimal(x).setScale(0, HALF_UP)`)
     * followed by a long cast — the ONE Spark scalar the local kernels must
-    * reproduce themselves (pinned ≡ Spark `round` and ≡ the BigDecimal
-    * form in PropertySpec).
-    *
-    * Fast path (r19): the original `BigDecimal(x).setScale(0, HALF_UP)`
-    * allocates a BigDecimal PER CALL, and the blocked cosine kernels call
-    * this once per candidate PAIR (millions of calls per query at bench
-    * scale, billions at 100 TB). For finite |x| < 2^52 the decimal-exact
-    * HALF_UP decision is ONE exact double comparison: `floor(x) + 0.5` is
-    * exactly representable (ulp(floor(x)) ≤ 0.5 there), double comparisons
-    * are exact, and HALF_UP rounds up iff the exact value sits at or above
-    * that midpoint for x ≥ 0 (ties away from zero) / strictly above it for
-    * x < 0 (the tie goes DOWN to floor: −2.5 → −3). NOTE `x − floor(x)`
-    * is NOT exact in general (−0.49999999999999994 + 1 rounds to 0.5), so
-    * the comparison must be against fl + 0.5, never against a computed
-    * fraction. For |x| ≥ 2^52 doubles are already integral. Non-finite x
-    * keeps the BigDecimal path so NaN/Infinity still throw exactly as
-    * before. PropertySpec pins ≡ BigDecimal over the adversarial ladder.
+    * reproduce themselves (pinned ≡ Spark `round` and ≡ the BigDecimal form
+    * over an adversarial ladder in PropertySpec), without a BigDecimal per
+    * call (the blocked cosine kernels call it once per candidate pair): for
+    * finite |x| < 2^52, `floor(x) + 0.5` is exact, so HALF_UP is one double
+    * compare against it — at or above for x ≥ 0, strictly above for x < 0
+    * (−2.5 → −3); never against the inexact `x − floor(x)`. Past 2^52 x is
+    * integral; a non-finite x keeps the BigDecimal path and its throw.
     */
   private[graft] def roundHalfUpLong(x: Double): Long =
     if (java.lang.Double.isFinite(x)) {
@@ -1262,25 +1224,17 @@ object KMeans {
     placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, maxCells = -1L, plusPlus)
 
   /** Per-iteration query tuning, restored on exit: around the planning of
-    * the points plan whose blocks make either placement ([[Points]]).
+    * the points plan whose blocks make either placement ([[Points]]). Every
+    * later scan is a kernel job that plans nothing; what still plans a
+    * query carries few rows after map-side partial aggregation, so the
+    * right reducer count is 1, and AQE's per-stage re-planning would add
+    * ~50 ms to every tiny job and split an aggregate's job into two.
     *
-    * The Lloyd steps, the k-means|| passes and the k-means++ rounds are
-    * kernel jobs over resident blocks that shuffle nothing and plan
-    * nothing; what still plans a query (the points plan itself, a points
-    * frame with an aggregate under it) carries few rows after map-side
-    * partial aggregation, so the right reducer count is 1 — the default
-    * final-stage tasks are pure scheduling overhead, and AQE's per-stage
-    * re-planning adds ~50 ms to every tiny job and splits an aggregate's
-    * job into two. Points-scale data never crosses a shuffle.
-    *
-    * Reentrancy: concurrent fits on one session (gapStatistic runs its
-    * per-k fits in parallel) must not interleave save/restore pairs — a
-    * naive save could capture ANOTHER fit's in-flight iter conf and
-    * "restore" the session to aqe=off/1-partition permanently. The guard is
-    * reference-counted per session: the first entrant saves the caller's
-    * conf and applies the iter conf, nested/concurrent entrants just bump
-    * the count (they want the identical conf), and the last leaver
-    * restores the original.
+    * Reentrant: fits on one session from several threads must not
+    * interleave save/restore pairs (a save could capture another fit's iter
+    * conf and "restore" it for good), so the guard is reference-counted per
+    * session: the first entrant saves the caller's conf and applies the
+    * iter conf, later ones bump the count, and the last leaver restores.
     */
   private val iterConfDepth =
     new java.util.IdentityHashMap[SparkSession, (Int, String, String)]()
@@ -1327,7 +1281,7 @@ object KMeans {
     * bounded fits ([[fitBounded]], Quality.gapStatisticFitted): the u for
     * k-means++ round r is `FixedUs((r − 2) mod 7)` — small numerators and
     * denominators keep the integer threshold compare `cw·uDen ≥ tw·uNum`
-    * far from the Long overflow bound.
+    * far from the Long overflow bound. Each round is an [[inverseCdfDraw]].
     */
   val FixedUs: Seq[(Long, Long)] = Seq((1L, 2L), (1L, 3L), (2L, 5L),
     (3L, 7L), (5L, 11L), (7L, 13L), (11L, 17L))
@@ -1352,81 +1306,150 @@ object KMeans {
     * data where Lloyd converges within the budget the bounded and free
     * fits coincide.
     *
-    * Placement, as in [[fitAuto]] (one job, [[Points.place]]): while
-    * `rows·dim ≤ localMaxCells` the ~k·9 seeding jobs and the Lloyd jobs
-    * would be pure fixed cost, so the points are collected and
-    * [[boundedFits]] runs the chain over them, bit-identical (KMeansSpec);
-    * past the bound the distributed chain runs over the resident blocks,
-    * and where the replay declines, over blocks built again.
+    * One body over [[Points.place]]'s placement, as [[fitAuto]]'s: the
+    * points are collected while `rows·dim ≤ localMaxCells`, else resident
+    * blocks, and the [[inverseCdfSeeds]] draws and the [[iterate]] loop run
+    * over either with the same bits (KMeansSpec). Partitioned, the fit is
+    * the placement job, at most 2 jobs per draw (3 where the weights
+    * rescale) and 1 per Lloyd step.
     */
   def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e6,
-      weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult = {
-    def distributed(placed: Partitioned): FitResult =
-      try iterate(placed, Seq(inverseCdfSeeds(points, placed.firstK(1), k, weightScale)), dim, tol,
-        lloydSteps, fxScale, startStep = 0L).head
-      finally placed.release()
-    Points.place(points, Nil, (dim, fxScale), 1, localMaxCells) match {
-      case Left(placed) => distributed(placed)
-      case Right(held) => boundedFits(held, Seq(k), dim, tol, lloydSteps, fxScale, weightScale)
-        .fold(distributed(Points.partitioned(points, fxAt = Some((dim, fxScale)))))(_.head)
-    }
-  }
+      weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult =
+    Points.withPlaced(points, Nil, (dim, fxScale), 1, localMaxCells)(placed =>
+      iterate(placed, Seq(inverseCdfSeeds(placed, k, weightScale)), dim, tol, lloydSteps, fxScale,
+        startStep = 0L).head)
 
-  /** [[fitBounded]]'s seeds over a frame: the min-key point `first`, then
-    * [[seedNextInverseCdf]]'s draws 2..`kMax` at [[fixedU]].
+  /** [[fitBounded]]'s seeds over placed points: the min-key point, then
+    * [[inverseCdfDraw]]s 2..`kMax` at [[fixedU]] (k's seeds: the k-prefix).
     */
-  private[operators] def inverseCdfSeeds(points: DataFrame, first: Seq[Centroid], kMax: Int,
-      weightScale: Double): Seq[Centroid] =
+  private[operators] def inverseCdfSeeds(points: Points, kMax: Int,
+      weightScale: Double): Seq[Centroid] = {
+    val first = points.firstK(1)
+    require(first.nonEmpty, "fitBounded on an empty relation")
     (2 to kMax).foldLeft(first) { (seeds, r) =>
       val (uN, uD) = fixedU(r)
-      val drawn = seedNextInverseCdf(points, seeds, uN, uD, weightScale).collect()
+      val drawn = inverseCdfDraw(points, seeds, uN, uD, weightScale)
       require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
-      seeds :+ Centroid(drawn.head.getLong(0), drawn.head.getSeq[Double](2))
+      seeds ++ drawn
     }
-
-  /** [[fitBounded]]'s chain over collected points, one fit per k: the
-    * inverse-CDF draws replayed over the key-ordered rows (`roundHalfUpLong`
-    * ≡ Spark `round`, pinned in PropertySpec; the cumulative pick walks key
-    * order like the windowed prefix sum), run ONCE to `ks.max` — k's seeds
-    * are the k-prefix — then every k's Lloyd loop in lockstep ([[iterate]]).
-    * Also Quality.gapStatisticFitted's collected chain.
-    *
-    * None — the caller runs the distributed chain — when a draw's
-    * double-domain weight total passes a quarter of its overflow bound:
-    * past half of it the distributed draw rescales, from a total summed in
-    * partition order, so no replay can promise its pick; the quarter leaves
-    * room for summation-order ulps.
-    */
-  private[operators] def boundedFits(points: Collected, ks: Seq[Int], dim: Int, tol: Double,
-      lloydSteps: Int, fxScale: Double, weightScale: Double): Option[Seq[FitResult]] = {
-    def y(p: Point) = if (p.y == null) null else java.util.Arrays.copyOfRange(p.y, p.yOff, p.yOff + p.n)
-    val first = points.inKeyOrder
-    require(first.hasNext, "fitBounded on an empty relation")
-    var chosen = Vector(y(first.next()))
-    for (r <- 2 to ks.max) {
-      val (uN, uD) = fixedU(r)
-      val bound = Long.MaxValue / math.max(uN, math.max(uD, 1L))
-      val (cs, kc, cd) = foldOf(chosen.map(_.toSeq))
-      // the rows no seed equals (SQL value equality), in key order
-      def surv = points.inKeyOrder.filter(p =>
-        !chosen.exists(c => (0 until dim).forall(d => c(d) == p.y(p.yOff + d))))
-      val ws = surv.map(p =>
-        roundHalfUpLong(NearestSqDistLit.sqDist(cs, kc, cd, p.y, p.yOff, p.n) * weightScale)).toArray
-      if (ws.map(_.toDouble).sum > bound.toDouble * 0.25) return None
-      val total = ws.sum
-      var cw = 0L; var pick = -1; var ix = 0
-      while (ix < ws.length && pick < 0) {
-        cw += ws(ix)
-        if (cw * uD >= total * uN) pick = ix
-        ix += 1
-      }
-      require(pick >= 0, s"k-means++ draw $r returned no row")
-      chosen = chosen :+ y(surv.drop(pick).next())
-    }
-    Some(iterate(points, ks.map(k => chosen.take(k).zipWithIndex.map { case (c, ix) =>
-      Centroid(ix + 1L, c.toSeq) }), dim, tol, lloydSteps, fxScale, startStep = 0L))
   }
+
+  /** An [[inverseCdfDraw]] census's key-range buckets, and the most rows of
+    * several keys its crossing bucket brings to the driver unsplit.
+    */
+  private val DrawBuckets = 1024
+  private val DrawRows = 4096
+
+  /** [[seedNextInverseCdf]]'s draw (D² weights, every row) as kernel scans
+    * over the placed points, either placement, planning no query:
+    *  - a null `Y`, or one equal to a chosen centroid under SQL equality
+    *    (same length; NaN = NaN, −0.0 = 0.0), has no weight; another row
+    *    weighs `least(round(x), 2^62)::long` for x =
+    *    [[NearestSqDistLit.sqDist]]·s ([[fxEncode]]'s round and cast);
+    *  - the total is exact; the sentinel `Σ round(x)` (past 2^52 `round(x)`
+    *    is `x`) is a double summed as Spark sums it for that plan: in row
+    *    order per partition from 0.0, then over the partitions in index
+    *    order. Past half the overflow bound the weights rescale to a quarter
+    *    of it; past the bound the draw fails;
+    *  - the drawn row is the first in key order whose running weight sum
+    *    `cw` has `cw·uDen ≥ total·uNum`. Key order puts a null key first and
+    *    a tied key in partition, then row order ([[Block.firstK]]'s): on
+    *    unique non-null keys, the DataFrame form's pick (KMeansSpec).
+    * The first scan is a census ([[drawScan]]); the driver finds the
+    * crossing bucket, and the next scan brings its rows or, past
+    * [[DrawRows]] rows of several keys, splits it again. Partitioned, a
+    * draw is 2 jobs (3 where the weights rescale). None where no row has
+    * weight or none crosses.
+    */
+  private[graft] def inverseCdfDraw(points: Points, chosen: Seq[Centroid], uNum: Long,
+      uDen: Long, weightScale: Double): Option[Centroid] = {
+    require(chosen.forall(_.c != null), "Y is null: a k-means point needs coordinates")
+    val bound = Long.MaxValue / math.max(uNum, math.max(uDen, 1L))
+    val (lo, hi) = points.keyRange.getOrElse((0L, -1L))
+    val first = drawScan(points, chosen, weightScale, lo, hi, nulls = true, rows = false)
+    if (first.sentinel.isEmpty) return None
+    val rescaled = first.sentinel.get > bound.toDouble * 0.5
+    val s = if (rescaled) weightScale * (bound.toDouble * 0.25) / first.sentinel.get else weightScale
+    val c = if (rescaled) drawScan(points, chosen, s, lo, hi, nulls = true, rows = false) else first
+    val total = c.total.longValueExact()
+    require(total >= 0 && total <= bound,
+      s"k-means++ draw would overflow Long: total weight $total × u=$uNum/$uDen; " +
+        "reduce weightScale")
+    // census `c` of the keys in [lo, hi], after `cw` of weight in key order
+    @annotation.tailrec
+    def descend(c: DrawCensus, lo: Long, hi: Long, cw: Long): Option[Centroid] = {
+      val ends = c.sums.scanLeft(cw)(_ + _).tail // the weight to each bucket's end
+      val b = ends.indices.indexWhere(b => c.ns(b) > 0 && ends(b) * uDen >= total * uNum)
+      val width = java.lang.Long.divideUnsigned(hi - lo, DrawBuckets) + 1
+      val (bLo, bHi) = if (b <= 0) (0L, -1L) else {
+        val l = lo + (b - 1) * width
+        (l, if (java.lang.Long.compareUnsigned(hi - l, width - 1) <= 0) hi else l + width - 1)
+      }
+      val cwBefore = if (b < 0) 0L else ends(b) - c.sums(b)
+      if (b > 0 && c.ns(b) > DrawRows && bLo != bHi)
+        descend(drawScan(points, chosen, s, bLo, bHi, nulls = false, rows = false), bLo, bHi, cwBefore)
+      else if (b < 0) None
+      else {
+        var w = cwBefore
+        drawScan(points, chosen, s, bLo, bHi, nulls = b == 0, rows = true).rows
+          .sortBy(r => (!r._1, r._2, r._3, r._4)).find { r => w += r._5; w * uDen >= total * uNum }
+          .map(r => Centroid(chosen.map(_.j).max + 1, r._6.toSeq))
+      }
+    }
+    descend(c, lo, hi, 0L)
+  }
+
+  /** A [[drawScan]]: per bucket (0: the null keys) the weight sum and row
+    * count, the exact total, the sentinel (None without a weighted row) and
+    * the rows, each (null key, key, partition, row, weight, Y), where asked.
+    */
+  private[graft] final case class DrawCensus(sums: Array[Long], ns: Array[Int], total: BigInteger,
+      sentinel: Option[Double], rows: Seq[(Boolean, Long, Int, Int, Long, Array[Double])])
+
+  /** One [[inverseCdfDraw]] scan at weight scale `s`, ONE job described as
+    * `KMeans.draw` where partitioned: the weighted rows with a key in
+    * [`lo`, `hi`], in [[DrawBuckets]] even key ranges, and (`nulls`) those
+    * with a null key; the partitions' answers merge in index order.
+    */
+  private[graft] def drawScan(points: Points, chosen: Seq[Centroid], s: Double, lo: Long, hi: Long,
+      nulls: Boolean, rows: Boolean): DrawCensus = {
+    import BigInteger.{ZERO, valueOf}
+    val (cs, k, dim) = foldOf(coords(chosen))
+    val (ys, ansi) = (chosen.map(_.c.toArray).toArray, points.ansi)
+    val width = java.lang.Long.divideUnsigned(hi - lo, DrawBuckets) + 1
+    val parts = points.indexed("KMeans.draw") { (part, it) =>
+      val (sums, ns) = (new Array[Long](DrawBuckets + 1), new Array[Int](DrawBuckets + 1))
+      val drawn = Array.newBuilder[(Boolean, Long, Int, Int, Long, Array[Double])]
+      var (t, big, sentinel, row) = (0L, ZERO, 0.0, -1)
+      it.foreach { p =>
+        row += 1
+        val b = if (p.nullKey) { if (nulls) 0 else -1 }
+          else if (p.i >= lo && p.i <= hi) 1 + java.lang.Long.divideUnsigned(p.i - lo, width).toInt
+          else -1
+        if (b >= 0 && p.y != null && !ys.exists(sqlEquals(_, p))) {
+          val x = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n) * s
+          val w = if (x.isNaN || x >= 4.611686018427387904e18) 1L << 62 else fxEncode(x, ansi)
+          sums(b) += w; ns(b) += 1
+          val sum = t + w // past the long range, the rows so far move to `big`
+          if (((t ^ sum) & (w ^ sum)) < 0) { big = big.add(valueOf(t)); t = w } else t = sum
+          sentinel += (if (math.abs(x) < 4.503599627370496e15) roundHalfUpLong(x).toDouble else x)
+          if (rows) drawn += ((p.nullKey, p.i, part, row, w, p.y.slice(p.yOff, p.yOff + p.n)))
+        }
+      }
+      DrawCensus(sums, ns, big.add(valueOf(t)), Option.when(ns.exists(_ > 0))(sentinel), drawn.result().toSeq)
+    }
+    val sentinels = parts.flatMap(_.sentinel)
+    DrawCensus(Array.tabulate(DrawBuckets + 1)(b => parts.map(_.sums(b)).sum),
+      Array.tabulate(DrawBuckets + 1)(b => parts.map(_.ns(b)).sum),
+      parts.map(_.total).foldLeft(ZERO)(_ add _),
+      Option.when(sentinels.nonEmpty)(sentinels.foldLeft(0.0)(_ + _)), parts.flatMap(_.rows).toSeq)
+  }
+
+  /** `c` equals `p`'s `Y` under SQL equality: same length; NaN = NaN, −0.0 = 0.0. */
+  private def sqlEquals(c: Array[Double], p: Point): Boolean =
+    c.length == p.n && c.indices.forall(d =>
+      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(c(d), p.y(p.yOff + d)) == 0)
 
   /** Mini-batch k-means (Sculley 2010, "Web-scale k-means clustering"):
     * each iteration assigns only a deterministic pseudo-random BATCH of

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps._
 import graft.operators.KMeans.Centroid
 import graft.plans.{NearestSqDistLit, PairDistStats}
@@ -335,24 +334,15 @@ object Quality {
       seeds: Seq[Centroid], refSets: Int = 3, scale: Double = 0.01): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted && ks.max <= seeds.size,
       s"need ascending ks with ${ks.max} seeds")
-    val lcgM = GapLcgM
-    def lcgA(b: Int, d: Int): Long = gapLcgA(b, dim, d)
-    def lcgC(b: Int, d: Int): Long = GapLcgC0 + (b * dim + d).toLong * GapLcgCStep
-    val (lo, hi) = boundingBox(points, dim)
-    // one reference coordinate vector per existing row id (same cardinality
-    // as the data, zero materialization — pure column expressions over i)
-    def refY(b: Int): Column = array((0 until dim).map { d =>
-      ((col("i") * lcgA(b, d) + lcgC(b, d)) % lcgM).cast("double") /
-        lcgM.toDouble * (hi(d) - lo(d)) + lo(d)
-    }: _*)
+    val (_, lo, hi) = boundingBox(points, dim)
     // reference-side nested seeds: the draws at the ks.max smallest ids,
     // computed with the identical integer-then-double op sequence
     val seedIds = points.select(col("i")).orderBy("i").limit(ks.max)
       .collect().map(_.getLong(0)).toSeq
     def refSeeds(b: Int): Seq[Seq[Double]] = seedIds.map { i =>
       (0 until dim).map { d =>
-        ((i * lcgA(b, d) + lcgC(b, d)) % lcgM).toDouble /
-          lcgM.toDouble * (hi(d) - lo(d)) + lo(d)
+        ((i * gapLcgA(b, dim, d) + gapLcgC(b, dim, d)) % GapLcgM).toDouble /
+          GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
       }
     }
     // ONE scan: all (refSets+1)·|ks| fixed-point dispersions together
@@ -360,7 +350,7 @@ object Quality {
       sumFx(graft.plans.native.nearest_sq_dist(
         col("Y"), seeds.take(k).map(_.c)), scale).as(s"wd_$k") +:
         (0 until refSets).map(b => sumFx(graft.plans.native.nearest_sq_dist(
-          refY(b), refSeeds(b).take(k)), scale).as(s"wr_${b}_$k"))
+          gapRefY(b, dim, lo, hi), refSeeds(b).take(k)), scale).as(s"wr_${b}_$k"))
     }
     val w = points.agg(aggs.head, aggs.tail: _*).head()
     def wOf(name: String): Double = w.getDouble(w.fieldIndex(name))
@@ -368,15 +358,27 @@ object Quality {
       (0 until refSets).map(b => ks.map(k => wOf(s"wr_${b}_$k"))))
   }
 
-  /** Per-dimension (lo, hi) of `Y`, the gap reference box (exact: min and
-    * max only compare).
+  /** The row count and the per-dimension (lo, hi) of `Y`, the gap
+    * reference box (exact: min and max only compare), from one query.
     */
-  private def boundingBox(points: DataFrame, dim: Int): (Seq[Double], Seq[Double]) = {
+  private def boundingBox(points: DataFrame, dim: Int): (Long, Seq[Double], Seq[Double]) = {
     val aggs = (0 until dim).flatMap(d =>
       Seq(min(element_at(col("Y"), d + 1)), max(element_at(col("Y"), d + 1))))
-    val box = points.agg(aggs.head, aggs.tail: _*).head()
-    ((0 until dim).map(d => box.getDouble(2 * d)), (0 until dim).map(d => box.getDouble(2 * d + 1)))
+    val box = points.agg(count(lit(1)), aggs: _*).head()
+    (box.getLong(0), (0 until dim).map(d => box.getDouble(1 + 2 * d)),
+      (0 until dim).map(d => box.getDouble(2 + 2 * d)))
   }
+
+  /** Reference set `b`'s `Y`: the LCG uniforms of the key `i` stretched to
+    * the box (`lo`, `hi`), as [[gapStatisticNested]] and
+    * [[gapStatisticFitted]] draw them — one vector per row, the data's
+    * cardinality, pure column expressions (never materialized).
+    */
+  private def gapRefY(b: Int, dim: Int, lo: Seq[Double], hi: Seq[Double]): Column =
+    array((0 until dim).map { d =>
+      ((col("i") * gapLcgA(b, dim, d) + gapLcgC(b, dim, d)) % GapLcgM).cast("double") /
+        GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
+    }: _*)
 
   /** The gap rows from each set's dispersion per k (`ws(0)` the data,
     * `ws(b)` reference set b, both indexed like `ks`): driver-side scalar
@@ -427,6 +429,7 @@ object Quality {
   val GapLcgAStep = 999983L
   def gapLcgA(b: Int, dim: Int, d: Int): Long =
     GapLcgA + (b * dim + d).toLong * GapLcgAStep
+  def gapLcgC(b: Int, dim: Int, d: Int): Long = GapLcgC0 + (b * dim + d).toLong * GapLcgCStep
 
   /** The shared O(n²) stage behind BOTH silhouette variants: for every
     * (point i1 in cluster j1, other cluster j2) the exact integer sum of
@@ -561,12 +564,12 @@ object Quality {
     * discipline applied to the fitted gap (the emb_pq_fitted move: replace
     * the non-replayable fit internals with deterministic machinery the
     * oracle can unroll, keep the fit real):
-    *  - seeding per set is NESTED exact inverse-CDF k-means++
-    *    ([[KMeans.seedNextInverseCdf]], the reference's `centroidsInit`
-    *    machinery): first centroid = min-key point, then `ks.max − 1`
-    *    D²-weighted draws with FIXED RATIONAL u's (integer-domain threshold
-    *    compare — bit-reproducible in ANSI SQL); the k-fit starts from the
-    *    first k seeds, so seeding cost is shared across the sweep;
+    *  - seeding per set is NESTED exact inverse-CDF k-means++, the
+    *    reference's `centroidsInit` draw as [[KMeans.fitBounded]] runs it:
+    *    first centroid = min-key point, then `ks.max − 1` D²-weighted draws
+    *    with FIXED RATIONAL u's (integer-domain threshold compare —
+    *    bit-reproducible in ANSI SQL); the k-fit starts from the first k
+    *    seeds, so seeding cost is shared across the sweep;
     *  - each (set, k) fit is `fitFrom`'s movement-gated Lloyd loop bounded
     *    at `lloydSteps` iterations (fixed-point 1e4 re-averages, tol-gated
     *    stop — exactly the km_wcr_log unrolled-CTE contract);
@@ -579,110 +582,65 @@ object Quality {
     * iterations is the published cost of hash-exactness — on data where
     * Lloyd converges within the budget the two forms coincide.
     *
-    * Scale shape: per set, the points are placed once (resident blocks,
-    * built by the min-key pick and released at the end), the ++ draws are
-    * the two-level-prefix-sum form (no single-partition window at scale),
-    * every k's Lloyd loop runs in lockstep ([[KMeans.iterate]]: one
-    * sufficient-stats scan per step for all ks) and one kernel scan gives
-    * all the dispersions ([[elbowSums]]' d2 sums at `scale`); the
-    * `refSets + 1` set chains are independent and run concurrently (the
-    * [[gapStatistic]] pool rule).
-    * Below `localMaxRows` ONE bounded collect ([[collectAtMost]], one job
-    * on balanced partitions, the size gate too) brings `Y` and every
-    * reference set (the same `refY` expression), ordered by key on the
-    * driver, and each set runs [[KMeans.boundedFits]] and the same elbow
-    * scan over its collected rows: bit-identical (pinned in QualitySpec),
-    * without the distributed form's ~130 tiny jobs of fixed cost. Where a
-    * set's replay declines, the distributed chain runs. The distributed
-    * chain caches a set for its run only where it is not cached already, so
-    * a caller's cache of `points` outlives it.
+    * Scale shape: one box scan, then [[setDispersions]], each set collected
+    * while `rows ≤ localMaxRows` (−1: `rows·dim` ≤ 4M cells, as
+    * [[KMeans.fitBounded]]; 0: resident blocks), with the same bits on
+    * either placement (QualitySpec).
     */
   def gapStatisticFitted(points: DataFrame, dim: Int, ks: Seq[Int],
       refSets: Int = 3, scale: Double = 0.01, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e4,
       localMaxRows: Long = -1L): DataFrame = {
-    // localMaxRows = -1 (default) takes fitBounded's 4M-cell budget in rows
-    // of dim doubles; 0 forces the distributed chain (the QualitySpec seam)
-    val localRowBound =
-      if (localMaxRows >= 0) localMaxRows
-      else 4000000L / math.max(dim, 1)
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
-    val (lo, hi) = boundingBox(points, dim)
-    def lcgC(b: Int, d: Int): Long = GapLcgC0 + (b * dim + d).toLong * GapLcgCStep
-    def refY(b: Int): Column = array((0 until dim).map { d =>
-      ((col("i") * gapLcgA(b, dim, d) + lcgC(b, d)) % GapLcgM).cast("double") /
-        GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
-    }: _*)
-    val sets: Seq[DataFrame] =
-      points +: (0 until refSets).map(b => points.select(col("i"), refY(b).as("Y")))
-
-    // per set, over the collected rows: the bounded fits and their dispersions
-    def localW(rows: Array[Row]): Option[Seq[Seq[Double]]] = {
-      val ws = KMeans.Points.collected(rows, 1 + refSets, dim, fxScale, KMeans.ansi(points))
-        .map { held =>
-          KMeans.boundedFits(held, ks, dim, tol, lloydSteps, fxScale, 1.0)
-            .map(fits => elbowSums(held, fits.map(_.centroids), None, scale).map(_._2.get))
-        }
-      if (ws.forall(_.isDefined)) Some(ws.flatten) else None
-    }
-
-    // per set: nested ++ seeds, every k's bounded fit in one lockstep loop,
-    // and ONE kernel dispersion scan over all ks (the elbow's d2 sums)
-    def wOfSet(df0: DataFrame): Seq[Double] = {
-      val owned = df0.storageLevel == StorageLevel.NONE
-      val df = if (owned) df0.cache() else df0
-      try KMeans.Points.withPartitioned(df, fxAt = Some((dim, fxScale))) { placed =>
-        val seeds = KMeans.inverseCdfSeeds(df, placed.firstK(1), ks.max, weightScale = 1.0)
-        val fitted = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = tol,
-          maxIter = lloydSteps, fxScale = fxScale, startStep = 0L)
-        elbowSums(placed, fitted.map(_.centroids), None, scale).map(_._2.get)
-      } finally if (owned) df.unpersist()
-    }
-    val rows = collectAtMost(points.select(col("i") +: col("Y") +: (0 until refSets).map(refY): _*),
-      math.min(localRowBound, Int.MaxValue - 2L).toInt, "Quality.gap.collect")
-    val ws: Seq[Seq[Double]] =
-      rows.flatMap(localW).getOrElse {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(sets.size)
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val fs = sets.map(s => scala.concurrent.Future(wOfSet(s)))
-          fs.map(f => scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
-      }
-    gapRows(points.sparkSession, ks, ws)
+    val maxCells = if (localMaxRows < 0) 4000000L
+      else (BigInt(localMaxRows) * math.max(dim, 1)).min(Long.MaxValue).toLong
+    val (_, lo, hi) = boundingBox(points, dim)
+    val sets = points +: (0 until refSets).map(b =>
+      points.select(col("i"), gapRefY(b, dim, lo, hi).as("Y")))
+    gapRows(points.sparkSession, ks,
+      setDispersions(sets, Nil, dim, fxScale, maxCells, tol, lloydSteps, scale) { placed =>
+        val seeds = KMeans.inverseCdfSeeds(placed, ks.max, weightScale = 1.0)
+        ks.map(seeds.take)
+      })
   }
+
+  /** Each set's dispersions, one set at a time over ONE placement each
+    * ([[KMeans.Points.place]] with `coins`, collected within `maxCells`, so
+    * the driver holds at most one set): the centroid sets `seeds` gives,
+    * their Lloyd loops in lockstep ([[KMeans.iterate]]: one scan per step)
+    * and one scan for all their d2 sums at `scale` ([[elbowSums]]).
+    */
+  private def setDispersions(sets: Seq[DataFrame], coins: Seq[Column], dim: Int, fxScale: Double,
+      maxCells: Long, tol: Double, maxIter: Int, scale: Double)(
+      seeds: KMeans.Points => Seq[Seq[Centroid]]): Seq[Seq[Double]] =
+    sets.map(KMeans.Points.withPlaced(_, coins, (dim, fxScale), firstK = 1, maxCells) { placed =>
+      val fits = KMeans.iterate(placed, seeds(placed), dim, tol, maxIter, fxScale, startStep = 0L)
+      elbowSums(placed, fits.map(_.centroids), None, scale).map(_._2.get)
+    })
 
   /** Gap statistic (Tibshirani, Walther & Hastie 2001), the textbook form:
     * gap(k) = mean_b log W*_kb − log W_k, where W_k is the D² dispersion of
     * the DATA under its own k-fit and each W*_kb is the dispersion of a
     * uniform reference draw (data's bounding box) under THAT SET'S own
     * k-fit; s_k = sd_b(log W*_kb)·√(1+1/B). `chosen` marks the standard
-    * pick — the smallest k with gap(k) ≥ gap(k+1) − s(k+1). Fitting both
-    * sides matters: un-fitted dispersion keeps falling past the true k and
-    * the criterion never fires.
+    * pick — the smallest k with gap(k) ≥ gap(k+1) − s(k+1), compared on
+    * the e6-rounded values ([[gapRows]]). Fitting both sides matters:
+    * un-fitted dispersion keeps falling past the true k and the criterion
+    * never fires.
     *
-    * Scale shape: ks·(B+1) fits (each `fitAuto` — driver-local under the
-    * size threshold, the distributed loop above it) + one fused
-    * box-and-count scan; reference coordinates are pure xxhash64 functions
-    * of the row id (deterministic under ANY partitioning — `rand()` is
-    * not) and never driver-materialized. Only ks·(B+1) scalars collect.
+    * Scale shape: one box-and-count scan, then [[setDispersions]] with the
+    * k-means|| coins at `KMeans.fitAuto`'s 4M-cell gate: each k's fit is
+    * bit-identical to `fitAuto(parallelSeed = true)` alone and its W to
+    * `sumFx(nearest_sq_dist, scale)`. Reference coordinates are pure
+    * xxhash64 functions of the row id (deterministic under ANY partitioning
+    * — `rand()` is not), never driver-materialized past the gate.
     */
   def gapStatistic(points: DataFrame, dim: Int, ks: Seq[Int],
       refSets: Int = 3, seed: Long = 42L, scale: Double = 1e4,
       maxIter: Int = 20): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
     val spark = points.sparkSession
-    import spark.implicits._
-    val boxAggs = (0 until dim).flatMap { d =>
-      Seq(min(element_at(col("Y"), d + 1)).as(s"lo_$d"),
-        max(element_at(col("Y"), d + 1)).as(s"hi_$d"))
-    }
-    val row = points.agg(count(lit(1)).as("n"), boxAggs: _*).head()
-    val n = row.getLong(0)
-    val lo = (0 until dim).map(d => row.getDouble(1 + 2 * d))
-    val hi = (0 until dim).map(d => row.getDouble(2 + 2 * d))
+    val (n, lo, hi) = boundingBox(points, dim)
     val m = 1000003L // coordinate resolution of the hash-uniform draw
     def refSet(b: Int): DataFrame = {
       val coordCols = (0 until dim).map { d =>
@@ -692,45 +650,13 @@ object Quality {
       }
       spark.range(n).select((col("id") + 1).as("i"), array(coordCols: _*).as("Y"))
     }
-    def wcss(df: DataFrame, k: Int): Double = {
-      // seeding matters twice here: first-k-by-key seeds can land in one
-      // true cluster (Lloyd never escapes, inverting the data/reference
-      // gap), and rand()-based ++ draws depend on partitioning — k-means||
-      // spreads seeds AND keeps the fit a pure function of the data
-      val fit = KMeans.fitAuto(df, k = k, dim = dim, seed = seed,
-        parallelSeed = true, maxIter = maxIter)
-      df.agg(sumFx(graft.plans.native.nearest_sq_dist(
-        col("Y"), fit.centroids.map(_.c)), scale).as("w")).head().getDouble(0)
-    }
-    val refs = (0 until refSets).map(b => refSet(b).cache())
-    def safeLog(x: Double) = math.log(math.max(x, 1e-300))
-    // the ks·(B+1) fits are independent and dominated by per-fit fixed cost
-    // (plan + codegen + scheduling), not data — run them concurrently;
-    // values are pure functions of (set, k), so completion order is moot
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(ks.size * (refSets + 1), 24))
-    val stats = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val wF = (for (df <- points +: refs; k <- ks)
-        yield (df, k) -> scala.concurrent.Future(wcss(df, k))).toMap
-      def w(df: DataFrame, k: Int): Double =
-        scala.concurrent.Await.result(wF((df, k)),
-          scala.concurrent.duration.Duration.Inf)
-      ks.map { k =>
-        val logs = refs.map(r => safeLog(w(r, k)))
-        val mean = logs.sum / logs.length
-        val sd = math.sqrt(logs.map(x => (x - mean) * (x - mean)).sum / logs.length)
-        (k, mean - safeLog(w(points, k)), sd * math.sqrt(1.0 + 1.0 / logs.length))
-      }
-    } finally pool.shutdown()
-    refs.foreach(_.unpersist())
-    val chosen = stats.zip(stats.drop(1)).collectFirst {
-      case ((k, gap, _), (_, gapNext, skNext)) if gap >= gapNext - skNext => k
-    }.getOrElse(ks.max)
-    stats.map { case (k, gap, sk) =>
-      (k.toLong, math.round(gap * 1e6), math.round(sk * 1e6),
-        if (k == chosen) 1L else 0L)
-    }.toDF("k", "gap_e6", "sk_e6", "chosen")
+    // seeding matters twice here: first-k-by-key seeds can land in one true
+    // cluster (Lloyd never escapes, inverting the data/reference gap), and
+    // rand()-based ++ draws depend on partitioning — k-means|| spreads seeds
+    // AND keeps the fit a pure function of the data
+    val ws = setDispersions(points +: (0 until refSets).map(refSet), KMeans.coinCols(seed, 3), dim,
+      1e6, 4000000L, tol = 0.01, maxIter, scale)(p => ks.map(KMeans.parallelSeeds(p, _, seed, 3, 2.0)))
+    // a dispersion of 0 (every point a centroid) logs as 1e-300's
+    gapRows(spark, ks, ws.map(_.map(math.max(_, 1e-300))))
   }
 }

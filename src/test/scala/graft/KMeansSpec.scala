@@ -640,8 +640,8 @@ class KMeansSpec extends SparkSpec {
       .toDF("i", "Y").repartition(3).cache()
   }
 
-  test("fitBounded past the draw's overflow bound: the collected replay declines " +
-      "and the result is the distributed chain's") {
+  test("fitBounded past the draw's overflow bound: the collected placement rescales " +
+      "as the partitioned one does") {
     def logBits(r: KMeans.FitResult): Seq[(Long, Long, Seq[Long])] =
       r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
     val p = wideSquare()
@@ -887,7 +887,7 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("concurrent fits restore the session conf (withIterConf reentrancy)") {
-    // gapStatistic runs its per-k fits in parallel on ONE session; an
+    // a caller may run fits in parallel on ONE session; an
     // interleaved save/restore could capture another fit's in-flight iter
     // conf and leave the session permanently at aqe=off/1-partition,
     // degrading every later query in the process. The guard is
@@ -994,6 +994,10 @@ class KMeansSpec extends SparkSpec {
     unchanged("fitLocal")(KMeans.fitLocal(emb, k = 4, dim = 64, tol = 0.01, maxIter = 3, seed = 1L,
       fxScale = 1e6, parallelSeed = false))
     unchanged("fitBounded, collected")(KMeans.fitBounded(emb, k = 3, dim = 64))
+    for (cells <- Seq(0L, 4000000L)) unchanged(s"fitBounded over a null Y, localMaxCells $cells") {
+      val e = intercept[Exception](KMeans.fitBounded(nullY, k = 2, dim = 2, localMaxCells = cells))
+      assert(messages(e).contains("Y is null"), messages(e))
+    }
     unchanged("fitMiniBatch, collected")(KMeans.fitMiniBatch(emb, k = 4, dim = 64, maxIter = 3))
     unchanged("collected, null Y") {
       val e = intercept[Exception](KMeans.fitAuto(nullY, k = 1, dim = 2, maxIter = 1))
@@ -1234,5 +1238,114 @@ class KMeansSpec extends SparkSpec {
         p.unpersist()
       }
     }
+  }
+
+  /** The draws 2..`kMax` of `p` at [[KMeans.fixedU]], each the kernel draw
+    * over `p` placed at `cells` and the [[KMeans.seedNextInverseCdf]]
+    * reference, from the reference's seeds so far.
+    */
+  private def drawPairs(p: DataFrame, dim: Int, kMax: Int,
+      cells: Long): Seq[(Option[Centroid], Option[Centroid])] =
+    KMeans.Points.withPlaced(p, Nil, (dim, 1e6), firstK = 1, cells) { placed =>
+      (2 to kMax).foldLeft((KMeans.seedFirstK(p, 1), Vector.empty[(Option[Centroid], Option[Centroid])])) {
+        case ((seeds, pairs), r) =>
+          val (uN, uD) = KMeans.fixedU(r)
+          val want = KMeans.seedNextInverseCdf(p, seeds, uN, uD).collect()
+            .map(x => Centroid(x.getLong(0), x.getSeq[Double](2))).headOption
+          (seeds ++ want, pairs :+ (KMeans.inverseCdfDraw(placed, seeds, uN, uD, 1.0) -> want))
+      }._2
+    }
+
+  test("the kernel inverse-CDF draw is seedNextInverseCdf's on unique keys: 1, 3 and 7 " +
+      "partitions, either placement, a rescaled draw and weights past 2^52") {
+    val past52 = (1 to 12).map(i => i.toLong -> Seq(i * 8e6, i % 3 * 5e6)).toDF("i", "Y")
+    val fixtures = Seq("orders" -> Tables.yhOrders(spark, sf("0.001")), "wideSquare" -> wideSquare(),
+      "past 2^52" -> past52)
+    for ((name, df) <- fixtures; n <- Seq(1, 3, 7)) {
+      val p = df.repartition(n).cache()
+      for (cells <- Seq(0L, 4000000L)) {
+        val pairs = drawPairs(p, dim = 2, kMax = 5, cells)
+        pairs.zipWithIndex.foreach { case ((got, want), ix) =>
+          assert(got.map(c => bits(Seq(c))) == want.map(c => bits(Seq(c))) && want.nonEmpty,
+            s"$name, $n partitions, localMaxCells $cells, draw ${ix + 2}: $got, want $want")
+        }
+      }
+      p.unpersist()
+    }
+  }
+
+  test("the draw census's sentinel is Spark's sum(round(x)) over the same partitions, " +
+      "bit for bit: 1, 3 and 7 partitions, either placement") {
+    import java.lang.Double.doubleToRawLongBits
+    // 2000 squared distances near 1e18, past 2^52: summed in another order
+    // their total differs in its last bits
+    val rnd = new scala.util.Random(5)
+    val df = (1L to 2000L).map(i => i -> Seq(rnd.nextDouble() * 1e9, rnd.nextDouble() * 1e9))
+      .toDF("i", "Y")
+    val reordered = Seq(1, 3, 7).map { n =>
+      val p = df.repartition(n).cache()
+      val chosen = KMeans.seedFirstK(p, 1)
+      val chosenDf = chosen.map(_.c).toDF("C")
+      val rounded = p.join(chosenDf, p("Y") === chosenDf("C"), "left_anti")
+        .select(round(graft.plans.native.nearest_sq_dist(col("Y"), chosen.map(_.c)) * 1.0).as("r"))
+      val want = rounded.agg(sum("r")).head().getDouble(0)
+      for (cells <- Seq(0L, 4000000L)) {
+        val got = KMeans.Points.withPlaced(p, Nil, (2, 1e6), firstK = 1, cells) { placed =>
+          val (lo, hi) = placed.keyRange.get
+          KMeans.drawScan(placed, chosen, 1.0, lo, hi, nulls = true, rows = false).sentinel.get
+        }
+        assert(doubleToRawLongBits(got) == doubleToRawLongBits(want), s"$n partitions, localMaxCells $cells")
+      }
+      val otherOrder = rounded.collect().map(_.getDouble(0)).reverse.sum
+      p.unpersist()
+      otherOrder != want
+    }
+    assert(reordered.contains(true), "the fixture's sum does not depend on its order")
+  }
+
+  test("a null Y is never drawn, and fitBounded and gapStatisticFitted fail on it in the " +
+      "Lloyd loop with Y is null, on either placement, ANSI on and off") {
+    val rows = (1 to 41).map(i => i.toLong -> Seq(i % 4 * 20.0 + i * 0.3, i % 3 * 15.0))
+    val clean = rows.filter(_._1 != 21L).toDF("i", "Y").repartition(3).cache()
+    val withNull = rows.map(r => if (r._1 == 21L) r._1 -> null else r).toDF("i", "Y").repartition(3).cache()
+    for (ansi <- Seq(true, false)) withAnsi(ansi) {
+      for (cells <- Seq(0L, 4000000L)) {
+        assert(drawPairs(withNull, 2, 6, cells) == drawPairs(clean, 2, 6, cells),
+          s"ANSI $ansi, localMaxCells $cells")
+        val e = intercept[Exception](KMeans.fitBounded(withNull, k = 4, dim = 2, localMaxCells = cells))
+        assert(messages(e).contains("Y is null"), s"ANSI $ansi, localMaxCells $cells: ${messages(e)}")
+      }
+      for (rowsBound <- Seq(0L, -1L)) {
+        val e = intercept[Exception](
+          graft.operators.Quality.gapStatisticFitted(withNull, dim = 2, ks = 2 to 4,
+            localMaxRows = rowsBound).collect())
+        assert(messages(e).contains("Y is null"), s"ANSI $ansi, localMaxRows $rowsBound: ${messages(e)}")
+      }
+    }
+    Seq(clean, withNull).foreach(_.unpersist())
+  }
+
+  test("fitBounded on duplicate keys: the collected and partitioned placements give the " +
+      "same bits, 1, 3 and 7 partitions, ANSI on and off") {
+    // 80 rows, each of 40 keys twice with its two points apart; not cached,
+    // so each placement runs the plan again
+    val rows = (1 to 80).map(i => (i % 40).toLong -> Seq(i % 4 * 20.0 + i % 7 * 0.5, i % 5 * 13.0 + i % 3))
+    for (n <- Seq(1, 3, 7); ansi <- Seq(true, false)) withAnsi(ansi) {
+      val p = rows.toDF("i", "Y").repartition(n)
+      def fit(cells: Long) = KMeans.fitBounded(p, k = 5, dim = 2, lloydSteps = 3, localMaxCells = cells)
+      assert(resultBits(fit(0L)) == resultBits(fit(4000000L)), s"$n partitions, ANSI $ansi")
+    }
+  }
+
+  test("a forced-distributed fitBounded runs its placement job, at most 2 jobs per draw " +
+      "and 1 per Lloyd step, and no SQL execution per draw") {
+    val p = Tables.yhOrders(spark, sf("0.001")).cache()
+    p.count()
+    val (fit, jobs, sqls, _) = observed(KMeans.fitBounded(p, k = 4, dim = 2, lloydSteps = 3,
+      fxScale = 1e4, localMaxCells = 0))
+    // the placement job's execution is the fit's only one
+    assert(fit.steps > 0 && jobs <= 1 + 2 * 3 + fit.steps && sqls == 1,
+      s"${fit.steps} steps, $jobs jobs, $sqls SQL executions")
+    p.unpersist()
   }
 }

@@ -177,7 +177,7 @@ class QualitySpec extends SparkSpec {
     unchanged("nested")(Quality.optimalKNested(yh, sample, KMeans.seedFirstK(yh, 3), Seq(2, 3),
       d1Scale = 1e4, d2Scale = 0.01).collect())
     // the caller's cached frame itself: the forced-distributed gap caches
-    // only its reference sets, and leaves yh's cache, level and RDD as they were
+    // nothing of its own, and leaves yh's cache, level and RDD as they were
     val level = yh.storageLevel
     unchanged("fitted gap")(Quality.gapStatisticFitted(yh, dim = 2, ks = 2 to 3,
       localMaxRows = 0L).collect())
@@ -194,6 +194,18 @@ class QualitySpec extends SparkSpec {
       val e = intercept[Exception](Quality.optimalKSweep(nullY, nullY, dim = 2, ks = Seq(2)).collect())
       assert(messages(e).contains("Y is null"), messages(e))
     }
+    unchanged("a collected fitted gap")(Quality.gapStatisticFitted(yh, dim = 2, ks = 2 to 3).collect())
+    for (rows <- Seq(0L, -1L)) unchanged(s"a fitted gap over a null Y, localMaxRows $rows") {
+      val e = intercept[Exception](
+        Quality.gapStatisticFitted(nullY, dim = 2, ks = 2 to 3, localMaxRows = rows).collect())
+      assert(messages(e).contains("Y is null"), messages(e))
+    }
+    unchanged("a collected gap")(Quality.gapStatistic(yh, dim = 2, ks = 2 to 3, maxIter = 3).collect())
+    // past fitAuto's 4M-cell gate: each set's placement stays resident blocks
+    val wide = spark.range(2000001).select((col("id") + 1).as("i"),
+      array((col("id") % 97).cast("double"), (col("id") % 89).cast("double")).as("Y"))
+    unchanged("a partitioned gap")(Quality.gapStatistic(wide, dim = 2, ks = Seq(2), refSets = 1,
+      maxIter = 1).collect())
   }
 
   test("below the gate a k-means++ fitAuto is one job and optimalKSweep three " +
@@ -393,8 +405,8 @@ class QualitySpec extends SparkSpec {
     assert(local == dist, s"local=$local dist=$dist")
   }
 
-  test("gapStatisticFitted past the draws' overflow bound: the collected chain " +
-      "declines and the rows are the distributed chain's") {
+  test("gapStatisticFitted past the draws' overflow bound: the collected placement " +
+      "rescales as the partitioned one does, and gives its rows") {
     // 1000 points uniform in [0, 1e9]²: squared distances near 1e18 put the
     // inverse-CDF draws' weight totals past their overflow bound
     val rnd = new scala.util.Random(1)
