@@ -292,14 +292,25 @@ object SparkEntry {
     tbl
   }
 
-  /** Persisted IVF index for `sim_ivf_indexed`: built once per dir (the
-    * build-time shuffle is the cost the build/probe split amortizes).
+  /** A persisted IVF index: its table and the cells it was built over. */
+  private[graft] final case class IvfIndex(table: String, cells: Seq[KMeans.Centroid])
+
+  /** The IVF index builds, per dir key: memoized like [[bucketedCache]]'s
+    * and, like them, not cleared by [[clearMemos]]; the cells ride with the
+    * table, so a probe reads them instead of recounting and recollecting
+    * them ([[embCells]]).
     */
-  private def ensureIvfIndex(s: SparkSession, dir: String): String = {
+  private val ivfIndexes = scala.collection.concurrent.TrieMap.empty[String, IvfIndex]
+
+  /** Persisted IVF index for `sim_ivf_indexed`: built once per dir (the
+    * build-time shuffle is the cost the build/probe split amortizes), over
+    * [[embCells]], which the index returns with its table.
+    */
+  private[graft] def ensureIvfIndex(s: SparkSession, dir: String): IvfIndex = {
     val key = dirKey(dir)
     val tag = tagOf(key)
     val tbl = s"graft_ivf_idx_$tag"
-    bucketedCache.getOrElseUpdate("ivf|" + key, {
+    ivfIndexes.getOrElseUpdate(key, {
       pruneStaleTables(s, "graft_ivf_idx")
       val emb = Tables.read(s, dir, "embeddings")
       // the production build path ships the r17 CHOOSER: routed build
@@ -325,8 +336,8 @@ object SparkEntry {
       Similarity.buildIvfIndexAuto(emb, cells, supers,
         tbl, buckets = 8, Some(taggedTmpPath("graft_ivf_idx", tag)),
         agreePpm = 1000000L)
+      IvfIndex(tbl, cells)
     })
-    tbl
   }
 
   /** Materialize every media payload as a REAL file once per dir — the
@@ -547,6 +558,16 @@ object SparkEntry {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
+  /** [[KMeans.census]] joined to the centroids' two coordinates: `(j, n,
+    * cx, cy)` per centroid with rows, as `census.join(cs, j = j2)` gives
+    * them, both sides already on the driver.
+    */
+  private def censusWith(s: SparkSession, points: DataFrame, cs: Seq[Centroid]): DataFrame = {
+    import s.implicits._
+    val n = KMeans.census(points, cs).as[(Long, Long)].collect().toMap
+    cs.flatMap(c => n.get(c.j).map((c.j, _, c.c(0), c.c(1)))).toDF("j", "n", "cx", "cy")
+  }
+
   private def xy(df: DataFrame): DataFrame =
     df.select(col("i"), element_at(col("Y"), 1).as("x"), element_at(col("Y"), 2).as("y"))
 
@@ -555,8 +576,8 @@ object SparkEntry {
     * repeated query redoes its real work instead of reading a memo and
     * reporting a flattering near-zero.
     *
-    * `bucketedCache` is deliberately NOT cleared: it memoizes persisted
-    * INDEX builds (bucketed tables, partitioned layouts, ANN/MinHash
+    * `bucketedCache` and `ivfIndexes` are deliberately NOT cleared: they
+    * memoize persisted INDEX builds (bucketed tables, partitioned layouts, ANN/MinHash
     * indexes) whose one-time build cost is amortized by design — the
     * published queries time the PROBE against a prebuilt index (the
     * build runs untimed in [[prewarmIndexes]]), so a re-run that re-paid
@@ -983,7 +1004,7 @@ object SparkEntry {
     // free-running form (k-means|| seeding, MLlib-style convergence) stays
     // spec-pinned in QualitySpec's planted-k test of Quality.gapStatistic.
     "km_gap_fitted" -> ((s, dir) => {
-      val yh = Tables.yhOrders(s, dir).filter(col("i") % 7 === 0).cache()
+      val yh = Tables.yhOrders(s, dir).filter(col("i") % 7 === 0)
       Quality.gapStatisticFitted(yh, dim = 2, ks = 2 to 6)
     }),
 
@@ -1036,16 +1057,9 @@ object SparkEntry {
     // k-means.sh:16-33 is this loop). km_fit stays the free-running
     // k-means|| twin (rows-only by construction). ----
     "km_fit_bounded" -> ((s, dir) => {
-      import s.implicits._
-      val yh = Tables.yhOrders(s, dir).cache()
-      val fit = try KMeans.fitBounded(yh, k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 3, fxScale = 1e4) finally yh.unpersist()
-      val cs = fit.centroids.map(c => (c.j, c.c(0), c.c(1)))
-        .toDF("j2", "cx", "cy")
-      KMeans.assign(Tables.yhOrders(s, dir), fit.centroids)
-        .groupBy("j").agg(count(lit(1)).as("n"))
-        .join(broadcast(cs), col("j") === col("j2"))
-        .select(col("j"), col("n"), col("cx"), col("cy"))
+      val fit = KMeans.fitBounded(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
+        lloydSteps = 3, fxScale = 1e4)
+      censusWith(s, Tables.yhOrders(s, dir), fit.centroids)
     }),
 
     // ---- the FREE-RUNNING fit: km_fit_bounded's exact chain with the
@@ -1055,26 +1069,16 @@ object SparkEntry {
     // oracle replays it as a RECURSIVE CTE (OracleSql.kmFitFree): data
     // decides the iteration count on BOTH engines ----
     "km_fit_free" -> ((s, dir) => {
-      import s.implicits._
-      val yh = Tables.yhOrders(s, dir).cache()
-      val fit = try KMeans.fitBounded(yh, k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 64, fxScale = 1e4) finally yh.unpersist()
-      val cs = fit.centroids.map(c => (c.j, c.c(0), c.c(1)))
-        .toDF("j2", "cx", "cy")
-      KMeans.assign(Tables.yhOrders(s, dir), fit.centroids)
-        .groupBy("j").agg(count(lit(1)).as("n"))
-        .join(broadcast(cs), col("j") === col("j2"))
-        .select(col("j"), col("n"), col("cx"), col("cy"))
+      val fit = KMeans.fitBounded(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
+        lloydSteps = 64, fxScale = 1e4)
+      censusWith(s, Tables.yhOrders(s, dir), fit.centroids)
     }),
 
     // ---- full fit loop (E1). Round 16: hash-gated via a PINNED-FIXTURE
     // census oracle (OracleSql.pinnedCensus) — the seeded k-means‖ fit is
     // measured deterministic across JVMs and cpu counts ----
     "km_fit" -> ((s, dir) => {
-      val fit = embFit(s, dir)
-      KMeans.assign(Tables.yhEmbeddings(s, dir), fit.centroids)
-        .groupBy("j").agg(count(lit(1)).as("n"))
-        .select(col("j"), col("n"))
+      KMeans.census(Tables.yhEmbeddings(s, dir), embFit(s, dir).centroids)
     }),
 
     // ---- mini-batch fit (Sculley 2010) — the web-scale variant: each
@@ -1086,9 +1090,7 @@ object SparkEntry {
     // km_fit2_exact discipline extended to the whole mini-batch loop ----
     "km_fit_minibatch" -> ((s, dir) => {
       val fit = KMeans.fitMiniBatch(Tables.yhEmbeddings(s, dir), k = 8, dim = 64)
-      KMeans.assign(Tables.yhEmbeddings(s, dir), fit.centroids)
-        .groupBy("j").agg(count(lit(1)).as("n"))
-        .select(col("j"), col("n"))
+      KMeans.census(Tables.yhEmbeddings(s, dir), fit.centroids)
     }),
 
     // ---- the WCR centroid log (S2: append-only iteration history).
@@ -1455,8 +1457,8 @@ object SparkEntry {
     // index — zero corpus tokenize/assignment at query time, same oracle
     "retrieval_hybrid_indexed" -> ((s, dir) => {
       val emb = Tables.read(s, dir, "embeddings")
-      val dense = Similarity.ivfTopKIndexed(emb, ensureIvfIndex(s, dir),
-          embCells(s, dir))
+      val idx = ensureIvfIndex(s, dir)
+      val dense = Similarity.ivfTopKIndexed(emb, idx.table, idx.cells)
         .select(col("q_id"), col("n_id").as("doc_id"),
           col("rnk").as("rnk_dense"))
       Retrieval.hybridRrfIndexed(s.table(ensureTfIndex(s, dir)), dense)
@@ -1556,9 +1558,8 @@ object SparkEntry {
     // Same oracle as sim_ivf: the stored doubles roundtrip parquet exactly.
     "sim_ivf_indexed" -> ((s, dir) => {
       val emb = Tables.read(s, dir, "embeddings")
-      val cents = embCells(s, dir)
       val idx = ensureIvfIndex(s, dir)
-      Similarity.ivfTopKIndexed(emb, idx, cents)
+      Similarity.ivfTopKIndexed(emb, idx.table, idx.cells)
     }),
     // index FRESHNESS: the persisted index plus an un-indexed delta batch
     // (every 10th vector re-keyed under +1e6 — "new docs since the build"),
@@ -1568,8 +1569,8 @@ object SparkEntry {
       val emb = Tables.read(s, dir, "embeddings")
       val delta = emb.filter(col("vec_id") % 10 === 7)
         .withColumn("vec_id", col("vec_id") + 1000000L)
-      Similarity.ivfTopKDelta(emb, ensureIvfIndex(s, dir), delta,
-        embCells(s, dir))
+      val idx = ensureIvfIndex(s, dir)
+      Similarity.ivfTopKDelta(emb, idx.table, delta, idx.cells)
     }),
     // the same brute-force ranking planned through the NATIVE two-phase
     // top-k-per-group operator (plans/TopKPerGroupPlan.scala): candidates
@@ -1595,8 +1596,8 @@ object SparkEntry {
     // times) extends to range queries unchanged
     "sim_range_indexed" -> ((s, dir) => {
       val emb = Tables.read(s, dir, "embeddings")
-      val cents = embCells(s, dir)
-      Similarity.ivfRangeIndexed(emb, ensureIvfIndex(s, dir), cents)
+      val idx = ensureIvfIndex(s, dir)
+      Similarity.ivfRangeIndexed(emb, idx.table, idx.cells)
     }),
     // mutual k-NN graph over ALL vectors (not a query handful): cell-blocked
     // candidates, per-vector top-k window, mutuality via a self-join on the

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.reflect.ClassTag
+import scala.util.{Failure, Success, Try}
 import graft.functions.VectorOps._
 import graft.plans.NearestSqDistLit
 
@@ -48,6 +49,10 @@ import graft.plans.NearestSqDistLit
   *    ([[Points.place]]), which under the bound also brings them. A scan
   *    runs per block with its partition's index, so either placement gives
   *    the same bits through one Lloyd loop and one chain per seeding.
+  *  - A placement can hold several point SETS over the same rows
+  *    ([[Points.withSets]]): the gap statistics place their input once
+  *    and derive their reference sets from it, so every set's draws,
+  *    Lloyd steps and dispersions share each scan.
   *  - Per-dimension sums are fixed-point integers (`round(x*scale)::long`,
   *    `fxScale > 0`), so results do not depend on partition count or merge
   *    order — a deterministic distributed k-means. A sum past the long
@@ -118,8 +123,9 @@ object KMeans {
     * bit-reproducible against the DuckDB oracle.
     *
     * A null `Y` weighs null (not the clamp below) and is never drawn; a
-    * null key that survives the anti-join fails the bucket collect
-    * (`ROW_VALUE_IS_NULL`). This form is the `km_seed_next` oracle query,
+    * null key that survives the anti-join comes first in the running sum
+    * (its own bucket, before every other), as [[inverseCdfDraw]] orders
+    * it. This form is the `km_seed_next` oracle query,
     * ReferenceSurface's `centroidsInit` view and the specs' reference for
     * the fits' kernel draw ([[inverseCdfDraw]]), as [[lloydStepDF]] is.
     *
@@ -200,7 +206,8 @@ object KMeans {
     // two-level prefix sum over deterministic key-range buckets (see scaladoc)
     val nBuckets = math.max(1, spark.sparkContext.defaultParallelism)
     val width = math.max(1L, (maxI - minI) / nBuckets + 1)
-    val bucketed = weighted.withColumn("b", ((col("i") - minI) / width).cast("int"))
+    // the null keys' bucket, −1, sorts first
+    val bucketed = weighted.withColumn("b", coalesce(((col("i") - minI) / width).cast("int"), lit(-1)))
     val bucketSums = bucketed.groupBy("b").agg(sum("w").as("bw"))
       .collect().map(r => r.getInt(0) -> (if (r.isNullAt(1)) 0L else r.getLong(1))).sortBy(_._1)
     val offsets = bucketSums.map(_._1)
@@ -304,6 +311,19 @@ object KMeans {
     shiftrightunsigned(xxhash64(col("i"), lit(seed), lit(r)), 11)
       .cast("double") / lit(9007199254740992.0) // 2^53
 
+  /** [[coinCol]]'s coins of rounds 1..`u.length` for the key `i`, as Spark
+    * evaluates `xxhash64(i, seed, r)` (seed 42, the long `i` and `seed`
+    * then the int `r`), into `u`.
+    */
+  private[graft] def coins(i: Long, seed: Long, u: Array[Double]): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64.{hashInt, hashLong}
+    var r = 0
+    while (r < u.length) {
+      u(r) = (hashInt(r + 1, hashLong(seed, hashLong(i, 42L))) >>> 11).toDouble / 9007199254740992.0
+      r += 1
+    }
+  }
+
   /** [[coinCol]] for rounds 1..`rounds`. */
   private[graft] def coinCols(seed: Long, rounds: Int): Seq[Column] =
     (1 to rounds).map(coinCol(seed, _))
@@ -390,19 +410,24 @@ object KMeans {
     }.flatten.sortBy(d => (d._1, d._2)).map(_._3).toSeq
   }
 
-  /** How many points each candidate attracts: the argmin counted per slot.
-    * A null `Y` and the no-winner slot (no distance below Double.MaxValue)
-    * drop, as `nearestIdCols`' id −1 matched no candidate.
+  /** How many points each candidate attracts: the argmin counted per slot
+    * ([[slotCounts]]). A null `Y` and the no-winner slot (no distance below
+    * Double.MaxValue) drop, as `nearestIdCols`' id −1 matched no candidate.
     */
-  private[graft] def parallelWeights(points: Points, cands: Seq[Seq[Double]]): Array[Long] = {
+  private[graft] def parallelWeights(points: Points, cands: Seq[Seq[Double]]): Array[Long] =
+    slotCounts("KMeans.parallel.weights", points, cands).init
+
+  /** Rows per nearest-centroid slot of `cands` ([[NearestSqDistLit.fold]]'s),
+    * slot k counting the no-winner rows and the null `Y`s, from ONE scan
+    * described as `name`.
+    */
+  private def slotCounts(name: String, points: Points, cands: Seq[Seq[Double]]): Array[Long] = {
     val (cs, k, dim) = foldOf(cands)
-    points.partials("KMeans.parallel.weights") { it =>
-      val w = new Array[Long](k + 1)
-      it.foreach { p =>
-        if (p.y != null) w(NearestSqDistLit.fold(cs, k, dim, p.y, p.yOff, p.n, null)) += 1
-      }
-      w
-    }.foldLeft(new Array[Long](k + 1))((a, b) => Array.tabulate(k + 1)(x => a(x) + b(x))).init
+    points.partials(name) { it =>
+      val n = new Array[Long](k + 1)
+      it.foreach(p => n(if (p.y == null) k else NearestSqDistLit.fold(cs, k, dim, p.y, p.yOff, p.n, null)) += 1)
+      n
+    }.foldLeft(new Array[Long](k + 1))((a, b) => Array.tabulate(k + 1)(x => a(x) + b(x)))
   }
 
   /** Driver-side weighted k-means for the k-means|| refine: weighted ++
@@ -491,6 +516,22 @@ object KMeans {
     ys.map(y => js(NearestSqDistLit.fold(flat, k, dim, y, 0, y.length, null)))
   }
 
+  /** `assign(points, cs).groupBy("j").agg(count(lit(1)).as("n"))` as `(j,
+    * n)` rows in `j` order, without a query: `points` placed as resident
+    * blocks ([[Points.partitioned]]) by the ONE job of its one scan,
+    * described as `KMeans.build+census`, which counts rows per
+    * [[nearestIds]] slot ([[slotCounts]]) and brings only the counts to
+    * the driver; a null `Y` and the no-winner slot count as `j = −1`, and
+    * slots sharing an id count together (pinned ≡ in KMeansSpec).
+    */
+  def census(points: DataFrame, cs: Seq[Centroid]): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val counts = Points.withPartitioned(points)(slotCounts("KMeans.census", _, coords(cs)))
+    val js = ids(cs) :+ -1L
+    js.indices.filter(counts(_) > 0).groupMapReduce(js)(counts(_))(_ + _).toSeq.sorted.toDF("j", "n")
+  }
+
   // ------------------------------------------------------------- Lloyd step
 
   /** New centroids = per-cluster, per-dimension mean (reference Lloyd insert,
@@ -526,7 +567,8 @@ object KMeans {
   private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
 
   /** The Lloyd step of the fit loop ([[iterate]]) and [[fitMiniBatch]],
-    * for every centroid set in `sets` at once, as ONE scan of the points
+    * for every centroid set in `sets` at once (set x over point set
+    * `of(x)`, [[bySets]]), as ONE scan of the points
     * described as `name`: each point's [[fxEncode]]d coordinates (held by
     * the placement, encoded per row where it holds none) go to one
     * [[LloydKernel]] per set (argmin + fixed-point per-slot sums), and the
@@ -547,24 +589,28 @@ object KMeans {
     * per partition emits one (Σ, n) array pair per set straight to the
     * driver.
     */
-  private def kernelStats(name: String, points: Points, sets: Seq[Seq[Centroid]], dim: Int,
+  private def kernelStats(name: String, points: Points, sets: Seq[Seq[Centroid]], of: Seq[Int], dim: Int,
       fxScale: Double): Seq[Stats] = {
     require(points.fxAt.forall(_ == ((dim, fxScale))),
       s"the points hold encodes at ${points.fxAt.get}, not at ($dim, $fxScale)")
     val flats = sets.map(cs => (flatten(cs, dim), cs.size)).toArray
+    val bySet = bySets(of, sets.size)
     val ansi = points.ansi
-    val partials = points.partials(name) { it =>
+    val partials = points.scanSets(name) { (_, rows) =>
       val kerns = flats.map { case (f, k) => new LloydKernel(f, k, dim, ansi) }
       val buf = new Array[Long](dim)
-      while (it.hasNext) {
-        val p = it.next()
-        require(p.y != null, "Y is null: a k-means point needs coordinates")
-        require(p.n >= dim, s"Y has ${p.n} coordinates, dim is $dim")
-        var fx = p.fx
-        var fxOff = p.fxOff
-        if (fx == null) { encodeInto(p.y, p.yOff, buf, 0, dim, fxScale, ansi); fx = buf; fxOff = 0 }
-        var s = 0
-        while (s < kerns.length) { kerns(s).add(p.y, p.yOff, fx, fxOff); s += 1 }
+      bySet.foreach { case (ps, mine) =>
+        val it = rows(ps)
+        while (it.hasNext) {
+          val p = it.next()
+          require(p.y != null, "Y is null: a k-means point needs coordinates")
+          require(p.n >= dim, s"Y has ${p.n} coordinates, dim is $dim")
+          var fx = p.fx
+          var fxOff = p.fxOff
+          if (fx == null) { encodeInto(p.y, p.yOff, buf, 0, dim, fxScale, ansi); fx = buf; fxOff = 0 }
+          var s = 0
+          while (s < mine.length) { kerns(mine(s)).add(p.y, p.yOff, fx, fxOff); s += 1 }
+        }
       }
       kerns.map(k => (k.sums, k.cnts))
     }
@@ -573,6 +619,15 @@ object KMeans {
       partials.foreach { p => total.merge(p(s)._1, p(s)._2) }
       total.stats(ids(sets(s)).toArray)
     }
+  }
+
+  /** The point sets `of` names (set 0 for all where empty) for `n` centroid
+    * sets, in set order, each with the indices of its centroid sets.
+    */
+  private[operators] def bySets(of: Seq[Int], n: Int): Array[(Int, Array[Int])] = {
+    val set = if (of.isEmpty) Seq.fill(n)(0) else of
+    require(set.size == n, s"${set.size} point sets for $n centroid sets")
+    set.indices.groupBy(set(_)).toArray.sortBy(_._1).map { case (ps, ix) => (ps, ix.toArray) }
   }
 
   /** Centroid coordinates as one row-major `k·dim` array. */
@@ -697,7 +752,9 @@ object KMeans {
     * ++ round, the elbow, the mini-batch batch — is ONE per-row body over
     * [[Point]]s, and the placement only decides where it runs. A size-gated
     * fit chooses from ONE job ([[Points.place]]): the job that builds the
-    * blocks is the size gate.
+    * blocks is the size gate. A placement holds one or more point SETS over
+    * the same rows (set 0 the placed `Y`, the others [[Points.withSets]]'s
+    * functions of the key), so one scan serves every set.
     */
   private[graft] sealed abstract class Points {
     /** `spark.sql.ansi.enabled` of the points' session. */
@@ -706,23 +763,81 @@ object KMeans {
     /** (dim, fxScale) of the encodes the points hold, if they hold any. */
     def fxAt: Option[(Int, Double)]
 
-    /** `f(partition, rows)` once per partition, in partition order: as ONE
-      * job described as `name`, or over the collected blocks on the driver.
+    /** How many point sets the placement holds. */
+    def sets: Int
+
+    /** `f(partition, set ⇒ that set's rows)` once per partition, in
+      * partition order: as ONE job described as `name`, or over the
+      * collected blocks on the driver.
       */
-    def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A]
+    def scanSets[A: ClassTag](name: String)(f: (Int, Int => Iterator[Point]) => A): Array[A]
+
+    /** [[scanSets]] over set 0. */
+    def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A] =
+      scanSets(name)((p, rows) => f(p, rows(0)))
 
     /** [[indexed]] without the partition index. */
     def partials[A: ClassTag](name: String)(f: Iterator[Point] => A): Array[A] =
       indexed(name)((_, it) => f(it))
 
-    /** [[seedFirstK]]: the `k` smallest-key points, j = 1..k. */
-    def firstK(k: Int): Seq[Centroid]
+    /** [[seedFirstK]] of set `set`: the `k` smallest-key points, j = 1..k. */
+    def firstK(k: Int, set: Int = 0): Seq[Centroid]
 
     /** The points whose key `keep` accepts (a null key never). */
     def where(keep: Long => Boolean): Points
 
-    /** The smallest and the largest non-null key, if any (a view's: its placement's). */
-    def keyRange: Option[(Long, Long)]
+    /** The smallest and the largest non-null key of set 0, if any (a
+      * view's: its placement's).
+      */
+    def keyRange: Option[(Long, Long)] = keyRangeOf(0)
+
+    /** [[keyRange]] of point set `set`. */
+    def keyRangeOf(set: Int): Option[(Long, Long)]
+
+    /** The placement job's [[Block.box]] of set 0, merged over the
+      * partitions in index order, where the placement asked for it.
+      */
+    def box: Box
+
+    /** Point set `s` alone, as set 0. */
+    def only(s: Int): Points = if (s == 0 && sets == 1) this else new OneSet(this, s)
+  }
+
+  /** Point set `set` of `points` alone, as set 0 (its scans are `points`'). */
+  private final class OneSet(points: Points, set: Int) extends Points {
+    def ansi: Boolean = points.ansi
+    def fxAt: Option[(Int, Double)] = points.fxAt
+    def sets: Int = 1
+    def scanSets[A: ClassTag](name: String)(f: (Int, Int => Iterator[Point]) => A): Array[A] = {
+      val set = this.set
+      points.scanSets(name)((p, rows) => f(p, _ => rows(set)))
+    }
+    def firstK(k: Int, s: Int = 0): Seq[Centroid] = points.firstK(k, set)
+    def where(keep: Long => Boolean): Points = new OneSet(points.where(keep), set)
+    def keyRangeOf(s: Int): Option[(Long, Long)] = points.keyRangeOf(set)
+    def box: Box = points.box
+  }
+
+  /** Per dimension d, `min` then `max` of `element_at(Y, d + 1)` (None for
+    * null) at `2d` and `2d + 1`: [[Block.box]]'s answer.
+    */
+  private[graft] type Box = Array[Option[Double]]
+
+  /** Box `b` merged after box `a`, as Spark's `min`/`max` merge their
+    * partial buffers: a later value replaces the buffer only where it is
+    * strictly less (min) or greater (max) under SQL ordering (NaN above
+    * every number, −0.0 = 0.0), so a tie keeps the earlier one.
+    */
+  private def mergeBox(a: Box, b: Box): Box =
+    Array.tabulate(a.length)(x => (a(x), b(x)) match {
+      case (Some(u), Some(v)) => Some(if (replaces(x % 2 == 0, v, u)) v else u)
+      case (u, v) => u.orElse(v)
+    })
+
+  /** `v` is strictly below (`min`) or above `u` under SQL ordering. */
+  private def replaces(min: Boolean, v: Double, u: Double): Boolean = {
+    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(v, u)
+    if (min) c < 0 else c > 0
   }
 
   private[graft] object Points {
@@ -732,7 +847,7 @@ object KMeans {
       */
     def partitioned(points: DataFrame, coins: Seq[Column] = Nil,
         fxAt: Option[(Int, Double)] = None): Partitioned =
-      new Partitioned(new Resident(points, coins, fxAt), null)
+      new Partitioned(Resident(points, coins, fxAt), null)
 
     /** `body` over [[partitioned]] points, released when it returns or
       * throws: a fit's one placement, shared by its seeding, its Lloyd loop
@@ -755,21 +870,28 @@ object KMeans {
       * COLLECTED iff `rows·dim ≤ maxCells` (never for a negative
       * `maxCells`): the blocks in partition order, a second job fetching
       * the persisted blocks that outgrew their share, the persisted blocks
-      * released. Else the resident blocks, the caller's to release.
+      * released. Else the resident blocks, the caller's to release. With
+      * `box`, the job also returns each block's [[Block.box]] at `dim`
+      * ([[Points.box]]).
       */
     def place(points: DataFrame, coins: Seq[Column], fxAt: (Int, Double), firstK: Int,
-        maxCells: Long): Either[Partitioned, Collected] = {
-      val resident = new Resident(points, coins, Some(fxAt))
+        maxCells: Long, box: Boolean = false): Either[Partitioned, Collected] = {
+      val resident = Resident(points, coins, Some(fxAt))
       val dim = fxAt._1
+      val ansi = resident.ansi
       var resides = false
       try {
         val parts = math.max(1, resident.partitions)
         val share = if (maxCells < 0) -1L else maxCells / parts + (if (maxCells % parts == 0) 0 else 1)
-        val placed = resident.scan("KMeans.place") { (_, b) =>
-          (b.rows, b.firstK(firstK, null), if (math.max(b.rows.toLong * dim, b.cells) <= share) b else null,
-            b.keyRange)
+        val placed = resident.scan("KMeans.place") { (_, bs) =>
+          val b = bs(0)
+          (b.rows, b.firstK(firstK, null), if (math.max(b.rows.toLong * dim, b.cells) <= share) bs else null,
+            b.keyRange, if (box) b.box(dim, ansi) else null)
         }
-        resident.placedFirst(firstK, placed.map(_._2), spanOf(placed.map(_._4)))
+        val boxed = if (box) placed.map(_._5).foldLeft(Array.fill[Option[Double]](2 * dim)(None))(mergeBox)
+          else null
+        resident.placedFirst(firstK, Array(placed.map(_._2)), Array(spanOf(placed.map(_._4))), boxed,
+          placed.map(_._1))
         if (placed.iterator.map(_._1.toLong).sum * dim > maxCells) {
           resides = true
           Left(new Partitioned(resident, null))
@@ -777,21 +899,78 @@ object KMeans {
           val over = placed.indices.filter(placed(_)._3 == null)
           val fetched = (over zip resident.fetch("KMeans.place", over)).toMap
           Right(new Collected(placed.indices.map(p => fetched.getOrElse(p, placed(p)._3)).toArray,
-            fxAt, resident.ansi, null))
+            fxAt, ansi, null, boxed))
         }
       } finally if (!resides) resident.release()
     }
 
     /** `body` over [[place]]'s placement, released when it returns or throws. */
     def withPlaced[A](points: DataFrame, coins: Seq[Column], fxAt: (Int, Double), firstK: Int,
-        maxCells: Long)(body: Points => A): A =
-      place(points, coins, fxAt, firstK, maxCells).fold(p => try body(p) finally p.release(), body)
+        maxCells: Long, box: Boolean = false)(body: Points => A): A =
+      place(points, coins, fxAt, firstK, maxCells, box).fold(p => try body(p) finally p.release(), body)
+
+    /** `body` over `points` (one set, no key filter) and `extra` more point
+      * sets of as many rows: `derive(s, i, pos, y, u)` fills the `dim`
+      * coordinates `y` and the coins `u` (as many as the points carry) of
+      * set s's row derived from the placed row with key `i` (None for a
+      * null key) at position `pos` in partition, then row order, and gives
+      * its key (None: null). The encodes are at the points' `fxAt`.
+      * COLLECTED points derive them on the driver; PARTITIONED points
+      * ([[place]]'s) in ONE job described as `KMeans.sets`, which builds
+      * resident blocks of every set (set 0's the placed blocks themselves)
+      * and returns each block's first row per set, and then drops the
+      * placed blocks (a later rebuild runs their plan again). The derived
+      * blocks are released when `body` returns or throws.
+      */
+    def withSets[A](points: Points, extra: Int, dim: Int)(derive: Derive)(body: Points => A): A =
+      points match {
+        case c: Collected =>
+          val offsets = c.blocks.map(_.head.rows.toLong).scanLeft(0L)(_ + _)
+          body(new Collected(c.blocks.indices.map { p =>
+            c.blocks(p).head +: derivedSets(c.blocks(p).head, offsets(p), extra, dim, c.fxAt, c.ansi, derive)
+          }.toArray, c.fxAt.get, c.ansi, null, c.boxed))
+        case p: Partitioned =>
+          val (parent, fxAt, ansi) = (p.resident, p.fxAt, p.ansi)
+          val offsets = parent.rowsPer.map(_.toLong).scanLeft(0L)(_ + _)
+          val sets = extra + 1
+          val derived = new Resident(ansi, fxAt, sets, () =>
+            (GraftJobShim.mapPartitionsWithIndexInternal(parent.planned()) { (part, it) =>
+              val bs = it.next()
+              Iterator.single(bs.head +: derivedSets(bs.head, offsets(part), extra, dim, fxAt, ansi, derive))
+            }, null))
+          try {
+            val firsts = derived.scan("KMeans.sets")((_, bs) => bs.map(b => (b.firstK(1, null), b.keyRange)))
+            derived.placedFirst(1, Array.tabulate(sets)(s => firsts.map(_(s)._1)),
+              Array.tabulate(sets)(s => spanOf(firsts.map(_(s)._2))), parent.box, parent.rowsPer)
+            parent.release()
+            body(new Partitioned(derived, null))
+          } finally derived.release()
+        case _ => throw new IllegalArgumentException("derive sets from a placement, not from a view of one set")
+      }
+
+    /** [[withSets]]' sets 1..`extra` of block `b`, whose first row is at `offset`. */
+    private def derivedSets(b: Block, offset: Long, extra: Int, dim: Int, fxAt: Option[(Int, Double)],
+        ansi: Boolean, derive: Derive): Array[Block] =
+      Array.tabulate(extra) { e =>
+        val out = new BlockBuilder(b.nu, fxAt, ansi)
+        val (y, u) = (new Array[Double](dim), new Array[Double](b.nu))
+        var r = 0
+        while (r < b.rows) {
+          val key = derive(e + 1, if (b.nullKey(r)) None else Some(b.keys(r)), offset + r, y, u)
+          out.addY(key.isEmpty, key.getOrElse(0L), y, u)
+          r += 1
+        }
+        out.result()
+      }
 
     /** [[place]] with no bound: `points`' blocks on the driver. */
     def collected(points: DataFrame, dim: Int, fxScale: Double,
         coins: Seq[Column] = Nil): Seq[Collected] =
       Seq(place(points, coins, (dim, fxScale), 0, Long.MaxValue).toOption.get)
   }
+
+  /** [[Points.withSets]]' row derivation: (set, key, position, y, u) ⇒ key. */
+  private[graft] type Derive = (Int, Option[Long], Long, Array[Double], Array[Double]) => Option[Long]
 
   /** One partition's rows, decoded once into flat primitive arrays (no
     * object per row): row r's key `keys(r)` (`nullKey(r)` for a null key),
@@ -856,6 +1035,32 @@ object KMeans {
       if (lo > hi) None else Some((lo, hi))
     }
 
+    /** [[Points.box]] over this block's rows in row order, as Spark's
+      * `min`/`max(element_at(Y, d + 1))` aggregate them ([[mergeBox]]'s
+      * rule): a null `Y` adds nothing, and a `Y` of n < `dim` coordinates
+      * adds its n, or under `ansi` fails as `element_at` does at index n + 1.
+      */
+    def box(dim: Int, ansi: Boolean): Box = {
+      val out = Array.fill[Option[Double]](2 * dim)(None)
+      var (r, off) = (0, 0)
+      while (r < rows) {
+        val n = lens(r)
+        if (n >= 0) {
+          if (n < dim && ansi) throw org.apache.spark.sql.GraftPlanShim.elementAtError(n + 1, n)
+          var d = 0
+          while (d < math.min(n, dim)) {
+            val v = ys(off + d)
+            if (out(2 * d).forall(replaces(min = true, v, _))) out(2 * d) = Some(v)
+            if (out(2 * d + 1).forall(replaces(min = false, v, _))) out(2 * d + 1) = Some(v)
+            d += 1
+          }
+          off += n
+        }
+        r += 1
+      }
+      out
+    }
+
     /** The `k` first rows `keep` accepts in `orderBy("i")` order (a null key
       * first, a tied key in row order).
       */
@@ -914,27 +1119,45 @@ object KMeans {
     private var fxSet = if (fxAt.isEmpty) null else new Array[Boolean](cap)
 
     def add(row: InternalRow): Unit = {
+      val a = if (row.isNullAt(1)) null else row.getArray(1)
+      val len = if (a == null) -1 else a.numElements()
+      next(row.isNullAt(0), if (row.isNullAt(0)) 0L else row.getLong(0), len)
+      var d = 0
+      while (d < len) { ys(cells + d) = a.getDouble(d); d += 1 }
+      var c = 0
+      while (c < nu) { us(rows * nu + c) = row.getDouble(2 + c); c += 1 }
+      done()
+    }
+
+    /** [[add]] for a row of key `key` (`nullKey`), coordinates `y` and coins `u`. */
+    def addY(nullKey: Boolean, key: Long, y: Array[Double], u: Array[Double]): Unit = {
+      next(nullKey, key, y.length)
+      System.arraycopy(y, 0, ys, cells, y.length)
+      System.arraycopy(u, 0, us, rows * nu, nu)
+      done()
+    }
+
+    /** Start the next row: its key and the length of its `Y` (−1: null). */
+    private def next(nk: Boolean, key: Long, len: Int): Unit = {
       if (rows == cap) {
         cap *= 2
         keys = copyOf(keys, cap); nullKey = copyOf(nullKey, cap); lens = copyOf(lens, cap)
         us = copyOf(us, cap * nu)
         if (fx != null) { fx = copyOf(fx, cap * dim); fxSet = copyOf(fxSet, cap) }
       }
-      nullKey(rows) = row.isNullAt(0)
-      keys(rows) = if (nullKey(rows)) 0L else row.getLong(0)
-      if (row.isNullAt(1)) lens(rows) = -1
-      else {
-        val a = row.getArray(1)
-        val len = a.numElements()
-        if (cells + len > ys.length) ys = copyOf(ys, math.max(2 * ys.length, cells + len))
-        var d = 0
-        while (d < len) { ys(cells + d) = a.getDouble(d); d += 1 }
-        lens(rows) = len
+      nullKey(rows) = nk
+      keys(rows) = if (nk) 0L else key
+      lens(rows) = len
+      if (cells + len > ys.length) ys = copyOf(ys, math.max(2 * ys.length, cells + len))
+    }
+
+    /** Finish the row [[next]] started, its coordinates in place. */
+    private def done(): Unit = {
+      val len = lens(rows)
+      if (len >= 0) {
         if (fx != null && len >= dim) fxSet(rows) = encodes(cells, rows * dim)
         cells += len
       }
-      var c = 0
-      while (c < nu) { us(rows * nu + c) = row.getDouble(2 + c); c += 1 }
       rows += 1
     }
 
@@ -950,44 +1173,40 @@ object KMeans {
         if (fx == null) null else copyOf(fxSet, rows))
   }
 
-  /** The blocks behind a partitioned placement: `points`' `(i, Y, coins…)`
-    * rows, planned once under [[withIterConf]], each partition decoded once
-    * into a [[Block]] and persisted MEMORY_ONLY until [[release]].
-    * Partition indices and in-partition row order are the plan's, so the
-    * ++ round's per-partition `rand` replay and `max_by`'s tie order hold.
-    * The first scan builds the blocks and runs as the plan's one SQL
+  /** The blocks behind a partitioned placement, per partition one [[Block]]
+    * per point set: `source`'s blocks RDD (and the query execution its
+    * first scan runs under, if any), planned on first use, persisted
+    * MEMORY_ONLY until [[release]]. [[Resident.apply]]'s are `points`'
+    * `(i, Y, coins…)` rows, planned once under [[withIterConf]], each
+    * partition decoded once; [[Points.withSets]]' derive more sets from
+    * those. Partition indices and in-partition row order are the plan's, so
+    * the ++ round's per-partition `rand` replay and `max_by`'s tie order
+    * hold. The first scan builds the blocks and runs as the plan's one SQL
     * execution (for a size-gated fit, [[Points.place]]'s job, which also
     * brings the blocks within their share to the driver); every later scan
     * reads them. A block the memory store
     * refuses (or evicts, or one unpersisted) is rebuilt from the plan by the
     * scan that needs it: one more decode of its rows, with the same bits.
     */
-  private final class Resident(df: DataFrame, coins: Seq[Column],
-      val fxAt: Option[(Int, Double)]) {
-    val ansi: Boolean = df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
-    private var blocks: RDD[Block] = null
+  private final class Resident(val ansi: Boolean, val fxAt: Option[(Int, Double)], val sets: Int,
+      source: () => (RDD[Array[Block]], org.apache.spark.sql.execution.QueryExecution)) {
+    private var blocks: RDD[Array[Block]] = null
     // the plan, until the first scan (which builds the blocks) runs it
     private var qe: org.apache.spark.sql.execution.QueryExecution = null
-    // the first `firstKnown` rows and the key range, from the placement job
-    // ([[Points.place]])
-    private var first: Seq[FirstRow] = Nil
+    // per set, the first `firstKnown` rows; the key range and the box, from
+    // the placement job ([[Points.place]])
+    private var first: Array[Seq[FirstRow]] = Array.fill(sets)(Nil)
     private var firstKnown = 0
-    private var range: Option[Option[(Long, Long)]] = None
+    private var range: Array[Option[(Long, Long)]] = null
+    private var boxed: Box = null
+    private var rowCounts: Array[Int] = null
 
     /** The blocks, planned on first use. */
-    private def planned(): RDD[Block] = {
+    def planned(): RDD[Array[Block]] = {
       if (blocks == null) {
-        val (nu, fxAt, ansi) = (coins.size, this.fxAt, this.ansi)
-        val rows = withIterConf(df.sparkSession) {
-          qe = df.select(col("i") +: col("Y") +: coins: _*).queryExecution
-          qe.toRdd
-        }
-        blocks = GraftJobShim.mapPartitionsInternal(rows) { it =>
-          val b = new BlockBuilder(nu, fxAt, ansi)
-          it.foreach(b.add)
-          Iterator.single(b.result())
-        }
-          .setName("KMeans points").persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+        val (rdd, q) = source()
+        qe = q
+        blocks = rdd.setName("KMeans points").persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       }
       blocks
     }
@@ -995,12 +1214,13 @@ object KMeans {
     /** How many blocks (partitions) the points make. */
     def partitions: Int = planned().getNumPartitions
 
-    /** `f(partition, block)` for every block, as ONE job described as
-      * `name` (the first, which builds the blocks, as `KMeans.build+…`),
-      * submitted by [[GraftJobShim.run]] on the persisted blocks RDD
-      * itself: no RDD made and no closure cleaned per scan.
+    /** `f(partition, blocks)` for every partition, as ONE job described as
+      * `name` (the first, which builds the blocks from a plan, as
+      * `KMeans.build+…`), submitted by [[GraftJobShim.run]] on the
+      * persisted blocks RDD itself: no RDD made and no closure cleaned per
+      * scan.
       */
-    def scan[A: ClassTag](name: String)(f: (Int, Block) => A): Array[A] = {
+    def scan[A: ClassTag](name: String)(f: (Int, Array[Block]) => A): Array[A] = {
       val (rdd, build) = (planned(), qe)
       qe = null
       def job(label: String) = GraftJobShim.run(rdd, label)((p, it) => f(p, it.next()))
@@ -1012,28 +1232,39 @@ object KMeans {
     /** The blocks of partitions `parts`, as ONE job described as `name`
       * (none for no partition).
       */
-    def fetch(name: String, parts: Seq[Int]): Array[Block] =
+    def fetch(name: String, parts: Seq[Int]): Array[Array[Block]] =
       if (parts.isEmpty) Array.empty else GraftJobShim.run(planned(), name, parts)((_, it) => it.next())
 
-    /** Keep each block's `k` first rows, `parts`, as the first rows of the
-      * whole placement ([[firstRows]]), and its key range `keys`.
+    /** Keep each block's `k` first rows per set, `parts(set)`, as the first
+      * rows of the whole placement ([[firstRows]]), its key range per set,
+      * its box and each block's row count.
       */
-    def placedFirst(k: Int, parts: Array[Array[FirstRow]], keys: Option[(Long, Long)]): Unit = {
-      first = firstOf(parts, k)
+    def placedFirst(k: Int, parts: Array[Array[Array[FirstRow]]], keys: Array[Option[(Long, Long)]],
+        box: Box, rows: Array[Int]): Unit = {
+      first = parts.map(firstOf(_, k))
       firstKnown = k
-      range = Some(keys)
+      range = keys
+      boxed = box
+      rowCounts = rows
     }
 
-    /** The placement job's key range (an inverse-CDF draw's buckets). */
-    def keyRange: Option[(Long, Long)] =
-      range.getOrElse(throw new IllegalStateException("no placement job has run: no key range"))
+    /** The placement job's row count per block. */
+    def rowsPer: Array[Int] =
+      Option(rowCounts).getOrElse(throw new IllegalStateException("no placement job has run: no row counts"))
 
-    /** The `k` first rows `keep` accepts: the placement job's where it
-      * brought them, else one scan.
+    /** The placement job's key range of set `set` (an inverse-CDF draw's buckets). */
+    def keyRange(set: Int): Option[(Long, Long)] =
+      Option(range).getOrElse(throw new IllegalStateException("no placement job has run: no key range"))(set)
+
+    /** The placement job's box (null where it took none). */
+    def box: Box = boxed
+
+    /** The `k` first rows of set `set` that `keep` accepts: the placement
+      * job's where it brought them, else one scan.
       */
-    def firstRows(k: Int, keep: Long => Boolean): Seq[FirstRow] =
-      if (keep == null && k <= firstKnown) first.take(k)
-      else firstOf(scan("KMeans.firstK")((_, b) => b.firstK(k, keep)), k)
+    def firstRows(k: Int, keep: Long => Boolean, set: Int): Seq[FirstRow] =
+      if (keep == null && k <= firstKnown) first(set).take(k)
+      else firstOf(scan("KMeans.firstK")((_, bs) => bs(set).firstK(k, keep)), k)
 
     /** Drop the blocks; a later scan would build them again. */
     def release(): Unit = if (blocks != null) {
@@ -1043,18 +1274,37 @@ object KMeans {
     }
   }
 
+  private object Resident {
+    /** `points`' `(i, Y, coins…)` rows as one point set, with the encodes
+      * at `fxAt`.
+      */
+    def apply(df: DataFrame, coins: Seq[Column], fxAt: Option[(Int, Double)]): Resident = {
+      val ansi = df.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean
+      val nu = coins.size
+      new Resident(ansi, fxAt, 1, () => withIterConf(df.sparkSession) {
+        val qe = df.select(col("i") +: col("Y") +: coins: _*).queryExecution
+        (GraftJobShim.mapPartitionsInternal(qe.toRdd) { it =>
+          val b = new BlockBuilder(nu, fxAt, ansi)
+          it.foreach(b.add)
+          Iterator.single(Array(b.result()))
+        }, qe)
+      })
+    }
+  }
+
   /** The partitioned placement: a view of one [[Resident]]'s blocks, the
     * rows `keep` accepts (every row for null). Each scan is one kernel job
     * over the blocks — no decode, no encode, no query planned.
     */
-  private[graft] final class Partitioned private[KMeans] (resident: Resident,
+  private[graft] final class Partitioned private[KMeans] (private[KMeans] val resident: Resident,
       keep: Long => Boolean) extends Points {
     def ansi: Boolean = resident.ansi
     def fxAt: Option[(Int, Double)] = resident.fxAt
+    def sets: Int = resident.sets
 
-    def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A] = {
+    def scanSets[A: ClassTag](name: String)(f: (Int, Int => Iterator[Point]) => A): Array[A] = {
       val keep = this.keep
-      resident.scan(name)((p, b) => f(p, b.points(keep)))
+      resident.scan(name)((p, bs) => f(p, s => bs(s).points(keep)))
     }
 
     /** Each block's k first rows, merged on the driver in `orderBy("i")`
@@ -1062,34 +1312,46 @@ object KMeans {
       * centroids without its query, and without a job of their own where
       * the placement job brought them.
       */
-    def firstK(k: Int): Seq[Centroid] = firstCentroids(resident.firstRows(k, keep))
+    def firstK(k: Int, set: Int = 0): Seq[Centroid] = firstCentroids(resident.firstRows(k, keep, set))
 
     def where(accept: Long => Boolean): Points = new Partitioned(resident, both(keep, accept))
 
-    def keyRange: Option[(Long, Long)] = resident.keyRange
+    def keyRangeOf(set: Int): Option[(Long, Long)] = resident.keyRange(set)
+
+    def box: Box = noBox(resident.box)
 
     /** Drop the blocks (every view's). */
     def release(): Unit = resident.release()
   }
 
   /** The collected placement: the placement job's blocks on the driver,
-    * block p the rows of partition p, so a scan runs per block as it runs
-    * per partition, with the same bits; the rows `keep` accepts (every row
-    * for null, else never a null key).
+    * `blocks(p)` the rows of partition p (one block per point set), so a
+    * scan runs per block as it runs per partition, with the same bits; the
+    * rows `keep` accepts (every row for null, else never a null key).
     */
-  private[graft] final class Collected private[KMeans] (blocks: Array[Block],
-      dimScale: (Int, Double), val ansi: Boolean, keep: Long => Boolean) extends Points {
+  private[graft] final class Collected private[KMeans] (private[KMeans] val blocks: Array[Array[Block]],
+      dimScale: (Int, Double), val ansi: Boolean, keep: Long => Boolean,
+      private[KMeans] val boxed: Box) extends Points {
     def fxAt: Option[(Int, Double)] = Some(dimScale)
+    def sets: Int = blocks.headOption.fold(1)(_.length)
 
-    def indexed[A: ClassTag](name: String)(f: (Int, Iterator[Point]) => A): Array[A] =
-      Array.tabulate(blocks.length)(p => f(p, blocks(p).points(keep)))
+    def scanSets[A: ClassTag](name: String)(f: (Int, Int => Iterator[Point]) => A): Array[A] =
+      Array.tabulate(blocks.length)(p => f(p, s => blocks(p)(s).points(keep)))
 
-    def firstK(k: Int): Seq[Centroid] = firstCentroids(firstOf(blocks.map(_.firstK(k, keep)), k))
+    def firstK(k: Int, set: Int = 0): Seq[Centroid] =
+      firstCentroids(firstOf(blocks.map(_(set).firstK(k, keep)), k))
 
-    def where(accept: Long => Boolean): Points = new Collected(blocks, dimScale, ansi, both(keep, accept))
+    def where(accept: Long => Boolean): Points = new Collected(blocks, dimScale, ansi, both(keep, accept), boxed)
 
-    lazy val keyRange: Option[(Long, Long)] = spanOf(blocks.map(_.keyRange))
+    private lazy val ranges = Array.tabulate(sets)(s => spanOf(blocks.map(_(s).keyRange)))
+    def keyRangeOf(set: Int): Option[(Long, Long)] = ranges(set)
+
+    def box: Box = noBox(boxed)
   }
+
+  /** `box`, or where the placement took none, the error. */
+  private def noBox(box: Box): Box =
+    Option(box).getOrElse(throw new IllegalStateException("the placement took no box"))
 
   /** A view's row filter and `accept`, both. */
   private def both(keep: Long => Boolean, accept: Long => Boolean): Long => Boolean =
@@ -1169,18 +1431,23 @@ object KMeans {
     * followed by a long cast — the ONE Spark scalar the local kernels must
     * reproduce themselves (pinned ≡ Spark `round` and ≡ the BigDecimal form
     * over an adversarial ladder in PropertySpec), without a BigDecimal per
-    * call (the blocked cosine kernels call it once per candidate pair): for
-    * finite |x| < 2^52, `floor(x) + 0.5` is exact, so HALF_UP is one double
-    * compare against it — at or above for x ≥ 0, strictly above for x < 0
-    * (−2.5 → −3); never against the inexact `x − floor(x)`. Past 2^52 x is
-    * integral; a non-finite x keeps the BigDecimal path and its throw.
+    * call (the block build encodes every coordinate with it) and without a
+    * branch: for finite |x| < 2^52, `t = trunc(|x|)` and `frac = |x| − t`
+    * are exact, and so is `frac − 0.5` wherever it is ≥ 0 (Sterbenz), so
+    * HALF_UP is `t + 1` exactly when the sign bit of `frac − 0.5` is clear
+    * (never a compare against an inexact `|x| + 0.5`); the sign of x is
+    * then restored, so a midpoint rounds away from zero (−2.5 → −3). Past
+    * 2^52 x is integral; a non-finite x keeps the BigDecimal path and its
+    * throw.
     */
   private[graft] def roundHalfUpLong(x: Double): Long =
     if (java.lang.Double.isFinite(x)) {
-      if (math.abs(x) < 4.503599627370496e15) { // 2^52
-        val fl = math.floor(x)
-        val half = fl + 0.5 // exact: |fl| < 2^52 ⟹ ulp(fl) ≤ 0.5
-        (if (if (x >= 0.0) x >= half else x > half) fl + 1.0 else fl).toLong
+      val a = math.abs(x)
+      if (a < 4.503599627370496e15) { // 2^52
+        val t = a.toLong
+        val up = (java.lang.Double.doubleToRawLongBits(a - t - 0.5) >>> 63) ^ 1L
+        val sign = java.lang.Double.doubleToRawLongBits(x) >> 63 // 0, or −1 for a negative x
+        ((t + up) ^ sign) - sign
       } else x.toLong // integral already; toLong saturates like the old path
     } else
       BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble.toLong
@@ -1317,21 +1584,31 @@ object KMeans {
       lloydSteps: Int = 3, fxScale: Double = 1e6,
       weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult =
     Points.withPlaced(points, Nil, (dim, fxScale), 1, localMaxCells)(placed =>
-      iterate(placed, Seq(inverseCdfSeeds(placed, k, weightScale)), dim, tol, lloydSteps, fxScale,
+      iterate(placed, inverseCdfSeeds(placed, k, weightScale).map(_.get), dim, tol, lloydSteps, fxScale,
         startStep = 0L).head)
 
-  /** [[fitBounded]]'s seeds over placed points: the min-key point, then
-    * [[inverseCdfDraw]]s 2..`kMax` at [[fixedU]] (k's seeds: the k-prefix).
+  /** [[fitBounded]]'s seeds over placed points, for each point set in
+    * `sets`: its min-key point, then [[inverseCdfDraw]]s 2..`kMax` at
+    * [[fixedU]] (k's seeds: the k-prefix), every set's draw r in the same
+    * scans ([[inverseCdfDraws]]). A set whose draw fails on the driver
+    * takes no part in the later draws and gives its error (the first
+    * set's is raised at once).
     */
-  private[operators] def inverseCdfSeeds(points: Points, kMax: Int,
-      weightScale: Double): Seq[Centroid] = {
-    val first = points.firstK(1)
-    require(first.nonEmpty, "fitBounded on an empty relation")
-    (2 to kMax).foldLeft(first) { (seeds, r) =>
+  private[operators] def inverseCdfSeeds(points: Points, kMax: Int, weightScale: Double,
+      sets: Seq[Int] = Seq(0)): Seq[Try[Seq[Centroid]]] = {
+    val firsts = sets.map(points.firstK(1, _))
+    require(firsts.forall(_.nonEmpty), "fitBounded on an empty relation")
+    (2 to kMax).foldLeft(firsts.map(Try(_))) { (seeds, r) =>
       val (uN, uD) = fixedU(r)
-      val drawn = inverseCdfDraw(points, seeds, uN, uD, weightScale)
-      require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
-      seeds ++ drawn
+      val live = sets.indices.filter(seeds(_).isSuccess)
+      val drawn = (live zip inverseCdfDraws(points, live.map(x => sets(x) -> seeds(x).get), uN, uD,
+        weightScale)).toMap
+      val next = seeds.indices.map(x => drawn.get(x).fold(seeds(x)) { d =>
+        d.map(c => seeds(x).get :+ c.getOrElse(throw new IllegalArgumentException(
+          s"requirement failed: k-means++ draw $r returned no row")))
+      })
+      next.head.get // the first set's error at once
+      next
     }
   }
 
@@ -1363,41 +1640,75 @@ object KMeans {
     * weight or none crosses.
     */
   private[graft] def inverseCdfDraw(points: Points, chosen: Seq[Centroid], uNum: Long,
-      uDen: Long, weightScale: Double): Option[Centroid] = {
-    require(chosen.forall(_.c != null), "Y is null: a k-means point needs coordinates")
+      uDen: Long, weightScale: Double): Option[Centroid] =
+    inverseCdfDraws(points, Seq(0 -> chosen), uNum, uDen, weightScale).head.get
+
+  /** One [[inverseCdfDraw]] per (point set, chosen centroids) in `draws`,
+    * in LOCKSTEP: each round of scans is ONE job serving every draw still
+    * waiting for one, so partitioned the draws together take the jobs of
+    * the longest of them. A draw that fails on the driver (its `require`s)
+    * gives its error and stops; the others go on.
+    */
+  private[graft] def inverseCdfDraws(points: Points, draws: Seq[(Int, Seq[Centroid])], uNum: Long,
+      uDen: Long, weightScale: Double): Seq[Try[Option[Centroid]]] = {
     val bound = Long.MaxValue / math.max(uNum, math.max(uDen, 1L))
-    val (lo, hi) = points.keyRange.getOrElse((0L, -1L))
-    val first = drawScan(points, chosen, weightScale, lo, hi, nulls = true, rows = false)
-    if (first.sentinel.isEmpty) return None
-    val rescaled = first.sentinel.get > bound.toDouble * 0.5
-    val s = if (rescaled) weightScale * (bound.toDouble * 0.25) / first.sentinel.get else weightScale
-    val c = if (rescaled) drawScan(points, chosen, s, lo, hi, nulls = true, rows = false) else first
-    val total = c.total.longValueExact()
-    require(total >= 0 && total <= bound,
-      s"k-means++ draw would overflow Long: total weight $total × u=$uNum/$uDen; " +
-        "reduce weightScale")
-    // census `c` of the keys in [lo, hi], after `cw` of weight in key order
-    @annotation.tailrec
-    def descend(c: DrawCensus, lo: Long, hi: Long, cw: Long): Option[Centroid] = {
-      val ends = c.sums.scanLeft(cw)(_ + _).tail // the weight to each bucket's end
-      val b = ends.indices.indexWhere(b => c.ns(b) > 0 && ends(b) * uDen >= total * uNum)
-      val width = java.lang.Long.divideUnsigned(hi - lo, DrawBuckets) + 1
-      val (bLo, bHi) = if (b <= 0) (0L, -1L) else {
-        val l = lo + (b - 1) * width
-        (l, if (java.lang.Long.compareUnsigned(hi - l, width - 1) <= 0) hi else l + width - 1)
+    // a draw waiting for the census of its query `q`, and what it does with it
+    final case class Waiting(q: DrawQuery, next: DrawCensus => Either[Waiting, Option[Centroid]])
+    type Step = Either[Waiting, Option[Centroid]]
+    def tried(step: => Step): Either[Waiting, Try[Option[Centroid]]] =
+      Try(step) match {
+        case Success(Left(w)) => Left(w)
+        case Success(Right(c)) => Right(Success(c))
+        case Failure(e) => Right(Failure(e))
       }
-      val cwBefore = if (b < 0) 0L else ends(b) - c.sums(b)
-      if (b > 0 && c.ns(b) > DrawRows && bLo != bHi)
-        descend(drawScan(points, chosen, s, bLo, bHi, nulls = false, rows = false), bLo, bHi, cwBefore)
-      else if (b < 0) None
-      else {
-        var w = cwBefore
-        drawScan(points, chosen, s, bLo, bHi, nulls = b == 0, rows = true).rows
-          .sortBy(r => (!r._1, r._2, r._3, r._4)).find { r => w += r._5; w * uDen >= total * uNum }
-          .map(r => Centroid(chosen.map(_.j).max + 1, r._6.toSeq))
+    def start(set: Int, chosen: Seq[Centroid]): Step = {
+      require(chosen.forall(_.c != null), "Y is null: a k-means point needs coordinates")
+      val (lo, hi) = points.keyRangeOf(set).getOrElse((0L, -1L))
+      def query(s: Double, lo: Long, hi: Long, nulls: Boolean, rows: Boolean) =
+        DrawQuery(set, chosen, s, lo, hi, nulls, rows)
+      // census `c` of the keys in [lo, hi] at scale s, after `cw` of weight in key order
+      def descend(c: DrawCensus, s: Double, total: Long, lo: Long, hi: Long, cw: Long): Step = {
+        val ends = c.sums.scanLeft(cw)(_ + _).tail // the weight to each bucket's end
+        val b = ends.indices.indexWhere(b => c.ns(b) > 0 && ends(b) * uDen >= total * uNum)
+        val width = java.lang.Long.divideUnsigned(hi - lo, DrawBuckets) + 1
+        val (bLo, bHi) = if (b <= 0) (0L, -1L) else {
+          val l = lo + (b - 1) * width
+          (l, if (java.lang.Long.compareUnsigned(hi - l, width - 1) <= 0) hi else l + width - 1)
+        }
+        val cwBefore = if (b < 0) 0L else ends(b) - c.sums(b)
+        if (b > 0 && c.ns(b) > DrawRows && bLo != bHi)
+          Left(Waiting(query(s, bLo, bHi, nulls = false, rows = false),
+            descend(_, s, total, bLo, bHi, cwBefore)))
+        else if (b < 0) Right(None)
+        else Left(Waiting(query(s, bLo, bHi, nulls = b == 0, rows = true), { r =>
+          var w = cwBefore
+          Right(r.rows.sortBy(r => (!r._1, r._2, r._3, r._4)).find { r => w += r._5; w * uDen >= total * uNum }
+            .map(r => Centroid(chosen.map(_.j).max + 1, r._6.toSeq)))
+        }))
       }
+      def census(c: DrawCensus, s: Double): Step = {
+        val total = c.total.longValueExact()
+        require(total >= 0 && total <= bound,
+          s"k-means++ draw would overflow Long: total weight $total × u=$uNum/$uDen; " +
+            "reduce weightScale")
+        descend(c, s, total, lo, hi, 0L)
+      }
+      Left(Waiting(query(weightScale, lo, hi, nulls = true, rows = false), { first =>
+        if (first.sentinel.isEmpty) Right(None)
+        else if (first.sentinel.get > bound.toDouble * 0.5) {
+          val s = weightScale * (bound.toDouble * 0.25) / first.sentinel.get
+          Left(Waiting(query(s, lo, hi, nulls = true, rows = false), census(_, s)))
+        } else census(first, weightScale)
+      }))
     }
-    descend(c, lo, hi, 0L)
+    val steps = draws.map { case (set, chosen) => tried(start(set, chosen)) }.toArray
+    while (steps.exists(_.isLeft)) {
+      val waiting = steps.indices.filter(steps(_).isLeft)
+      val qs = waiting.map(steps(_).left.toOption.get)
+      val censuses = drawScans(points, qs.map(_.q))
+      waiting.indices.foreach(x => steps(waiting(x)) = tried(qs(x).next(censuses(x))))
+    }
+    steps.map(_.toOption.get).toSeq
   }
 
   /** A [[drawScan]]: per bucket (0: the null keys) the weight sum and row
@@ -1407,43 +1718,66 @@ object KMeans {
   private[graft] final case class DrawCensus(sums: Array[Long], ns: Array[Int], total: BigInteger,
       sentinel: Option[Double], rows: Seq[(Boolean, Long, Int, Int, Long, Array[Double])])
 
-  /** One [[inverseCdfDraw]] scan at weight scale `s`, ONE job described as
-    * `KMeans.draw` where partitioned: the weighted rows with a key in
-    * [`lo`, `hi`], in [[DrawBuckets]] even key ranges, and (`nulls`) those
-    * with a null key; the partitions' answers merge in index order.
-    */
+  /** One [[drawScan]] of point set `set`. */
+  private[graft] final case class DrawQuery(set: Int, chosen: Seq[Centroid], s: Double, lo: Long,
+      hi: Long, nulls: Boolean, rows: Boolean)
+
+  /** One [[inverseCdfDraw]] scan of set 0 at weight scale `s`: [[drawScans]]. */
   private[graft] def drawScan(points: Points, chosen: Seq[Centroid], s: Double, lo: Long, hi: Long,
-      nulls: Boolean, rows: Boolean): DrawCensus = {
+      nulls: Boolean, rows: Boolean): DrawCensus =
+    drawScans(points, Seq(DrawQuery(0, chosen, s, lo, hi, nulls, rows))).head
+
+  /** The [[inverseCdfDraw]] scans `qs` as ONE job described as
+    * `KMeans.draw` where partitioned: per query, the weighted rows of its
+    * point set with a key in [`lo`, `hi`], in [[DrawBuckets]] even key
+    * ranges, and (`nulls`) those with a null key; the partitions' answers
+    * merge in index order.
+    */
+  private[graft] def drawScans(points: Points, qs: Seq[DrawQuery]): Seq[DrawCensus] = {
     import BigInteger.{ZERO, valueOf}
-    val (cs, k, dim) = foldOf(coords(chosen))
-    val (ys, ansi) = (chosen.map(_.c.toArray).toArray, points.ansi)
-    val width = java.lang.Long.divideUnsigned(hi - lo, DrawBuckets) + 1
-    val parts = points.indexed("KMeans.draw") { (part, it) =>
-      val (sums, ns) = (new Array[Long](DrawBuckets + 1), new Array[Int](DrawBuckets + 1))
-      val drawn = Array.newBuilder[(Boolean, Long, Int, Int, Long, Array[Double])]
-      var (t, big, sentinel, row) = (0L, ZERO, 0.0, -1)
-      it.foreach { p =>
-        row += 1
-        val b = if (p.nullKey) { if (nulls) 0 else -1 }
-          else if (p.i >= lo && p.i <= hi) 1 + java.lang.Long.divideUnsigned(p.i - lo, width).toInt
-          else -1
-        if (b >= 0 && p.y != null && !ys.exists(sqlEquals(_, p))) {
-          val x = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n) * s
-          val w = if (x.isNaN || x >= 4.611686018427387904e18) 1L << 62 else fxEncode(x, ansi)
-          sums(b) += w; ns(b) += 1
-          val sum = t + w // past the long range, the rows so far move to `big`
-          if (((t ^ sum) & (w ^ sum)) < 0) { big = big.add(valueOf(t)); t = w } else t = sum
-          sentinel += (if (math.abs(x) < 4.503599627370496e15) roundHalfUpLong(x).toDouble else x)
-          if (rows) drawn += ((p.nullKey, p.i, part, row, w, p.y.slice(p.yOff, p.yOff + p.n)))
+    val ansi = points.ansi
+    val plans = qs.map { q =>
+      (foldOf(coords(q.chosen)), q.chosen.map(_.c.toArray).toArray,
+        java.lang.Long.divideUnsigned(q.hi - q.lo, DrawBuckets) + 1)
+    }.toArray
+    val bySet = bySets(qs.map(_.set), qs.size)
+    val queries = qs.toArray
+    val parts = points.scanSets("KMeans.draw") { (part, rows) =>
+      val out = new Array[DrawCensus](queries.length)
+      bySet.foreach { case (set, mine) => mine.foreach { x =>
+        val q = queries(x)
+        val ((cs, k, dim), ys, width) = plans(x)
+        val (sums, ns) = (new Array[Long](DrawBuckets + 1), new Array[Int](DrawBuckets + 1))
+        val drawn = Array.newBuilder[(Boolean, Long, Int, Int, Long, Array[Double])]
+        var (t, big, sentinel, row) = (0L, ZERO, 0.0, -1)
+        rows(set).foreach { p =>
+          row += 1
+          val b = if (p.nullKey) { if (q.nulls) 0 else -1 }
+            else if (p.i >= q.lo && p.i <= q.hi) 1 + java.lang.Long.divideUnsigned(p.i - q.lo, width).toInt
+            else -1
+          if (b >= 0 && p.y != null && !ys.exists(sqlEquals(_, p))) {
+            val x = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n) * q.s
+            val w = if (x.isNaN || x >= 4.611686018427387904e18) 1L << 62 else fxEncode(x, ansi)
+            sums(b) += w; ns(b) += 1
+            val sum = t + w // past the long range, the rows so far move to `big`
+            if (((t ^ sum) & (w ^ sum)) < 0) { big = big.add(valueOf(t)); t = w } else t = sum
+            sentinel += (if (math.abs(x) < 4.503599627370496e15) roundHalfUpLong(x).toDouble else x)
+            if (q.rows) drawn += ((p.nullKey, p.i, part, row, w, p.y.slice(p.yOff, p.yOff + p.n)))
+          }
         }
-      }
-      DrawCensus(sums, ns, big.add(valueOf(t)), Option.when(ns.exists(_ > 0))(sentinel), drawn.result().toSeq)
+        out(x) = DrawCensus(sums, ns, big.add(valueOf(t)), Option.when(ns.exists(_ > 0))(sentinel),
+          drawn.result().toSeq)
+      } }
+      out
     }
-    val sentinels = parts.flatMap(_.sentinel)
-    DrawCensus(Array.tabulate(DrawBuckets + 1)(b => parts.map(_.sums(b)).sum),
-      Array.tabulate(DrawBuckets + 1)(b => parts.map(_.ns(b)).sum),
-      parts.map(_.total).foldLeft(ZERO)(_ add _),
-      Option.when(sentinels.nonEmpty)(sentinels.foldLeft(0.0)(_ + _)), parts.flatMap(_.rows).toSeq)
+    queries.indices.map { x =>
+      val ps = parts.map(_(x))
+      val sentinels = ps.flatMap(_.sentinel)
+      DrawCensus(Array.tabulate(DrawBuckets + 1)(b => ps.map(_.sums(b)).sum),
+        Array.tabulate(DrawBuckets + 1)(b => ps.map(_.ns(b)).sum),
+        ps.map(_.total).foldLeft(ZERO)(_ add _),
+        Option.when(sentinels.nonEmpty)(sentinels.foldLeft(0.0)(_ + _)), ps.flatMap(_.rows).toSeq)
+    }
   }
 
   /** `c` equals `p`'s `Y` under SQL equality: same length; NaN = NaN, −0.0 = 0.0. */
@@ -1505,7 +1839,7 @@ object KMeans {
       step += 1
       val salt = 12345L + seed + step
       val batch = placed.where(i => (i * 1103515245L + salt) % mod < cut)
-      val stats = kernelStats("KMeans.miniBatch", batch, Seq(cs), dim, fxScale = 1e6).head
+      val stats = kernelStats("KMeans.miniBatch", batch, Seq(cs), Nil, dim, fxScale = 1e6).head
       val next = cs.map { c =>
         stats.get(c.j) match {
           case Some((sums, cnt)) =>
@@ -1532,13 +1866,14 @@ object KMeans {
     * serving all sets still moving. Each set keeps its own stop rule
     * (movement < `tol` or `maxIter` steps), log and emptied-cluster
     * warning, so its [[FitResult]] is bit-identical to fitting it alone,
-    * partitioned or collected (pinned in KMeansSpec). Steps are numbered
-    * from `startStep` (see [[fitFrom]]).
+    * partitioned or collected (pinned in KMeansSpec). Init `x` iterates
+    * over point set `of(x)` (set 0 for every init where `of` is empty).
+    * Steps are numbered from `startStep` (see [[fitFrom]]).
     */
   private[graft] def iterate(points: Points, inits: Seq[Seq[Centroid]], dim: Int,
-      tol: Double, maxIter: Int, fxScale: Double, startStep: Long): Seq[FitResult] = {
+      tol: Double, maxIter: Int, fxScale: Double, startStep: Long, of: Seq[Int] = Nil): Seq[FitResult] = {
     requireFx(fxScale)
-    final class Run(var cs: Seq[Centroid]) {
+    final class Run(var cs: Seq[Centroid], val set: Int) {
       // a resumed run's starting centroids were already logged (at
       // startStep) by the run that produced them — only a fresh fit logs
       // its seeds
@@ -1547,10 +1882,10 @@ object KMeans {
       var move = Double.MaxValue
       def moving: Boolean = move >= tol && step < startStep + maxIter
     }
-    val runs = inits.map(new Run(_))
+    val runs = inits.indices.map(ix => new Run(inits(ix), if (of.isEmpty) 0 else of(ix)))
     var active = runs.filter(_.moving)
     while (active.nonEmpty) {
-      val stats = kernelStats("KMeans.lloyd", points, active.map(_.cs), dim, fxScale)
+      val stats = kernelStats("KMeans.lloyd", points, active.map(_.cs), active.map(_.set), dim, fxScale)
       active.zip(stats).foreach { case (r, st) =>
         r.step += 1
         val next = centroidsOf(st, fxScale)

@@ -243,7 +243,8 @@ object Quality {
   }
 
   /** [[elbow]]'s sums for every centroid set, from ONE scan of the
-    * placement: per point and set, the squared distance `m` that
+    * placement (set x over point set `of(x)`, set 0 for all where `of` is
+    * empty): per point and set, the squared distance `m` that
     * `nearest_sq_dist` computes ([[NearestSqDistLit.sqDist]], the one
     * nearest fold), encoded as `round(sqrt(m)·d1Scale)::long` and
     * `round(m·d2Scale)::long` ([[KMeans.fxEncode]], CAST_OVERFLOW under
@@ -253,35 +254,39 @@ object Quality {
     * [[elbow]] per set (QualitySpec).
     */
   private def elbowSums(points: KMeans.Points, sets: Seq[Seq[Centroid]], d1Scale: Option[Double],
-      d2Scale: Double): Seq[(Option[Double], Option[Double])] = {
+      d2Scale: Double, of: Seq[Int] = Nil): Seq[(Option[Double], Option[Double])] = {
     val ansi = points.ansi
     val folds = sets.map(cs => KMeans.foldOf(cs.map(_.c))).toArray
-    val partials = points.partials("Quality.elbow") { it =>
+    val bySet = KMeans.bySets(of, sets.size)
+    val partials = points.scanSets("Quality.elbow") { (_, rows) =>
       val acc = new Array[Long](2 * folds.length) // per set: Σ d1, Σ d2
-      var seen = 0L
-      it.foreach { p =>
-        if (p.y != null) {
-          seen += 1
-          var s = 0
-          while (s < folds.length) {
-            val (cs, k, dim) = folds(s)
-            val m = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n)
-            d1Scale.foreach { sc =>
-              acc(2 * s) = KMeans.plusLong(acc(2 * s), KMeans.fxEncode(math.sqrt(m) * sc, ansi), ansi)
+      val seen = new Array[Long](folds.length)
+      bySet.foreach { case (ps, mine) =>
+        rows(ps).foreach { p =>
+          if (p.y != null) {
+            var x = 0
+            while (x < mine.length) {
+              val s = mine(x)
+              val (cs, k, dim) = folds(s)
+              val m = NearestSqDistLit.sqDist(cs, k, dim, p.y, p.yOff, p.n)
+              d1Scale.foreach { sc =>
+                acc(2 * s) = KMeans.plusLong(acc(2 * s), KMeans.fxEncode(math.sqrt(m) * sc, ansi), ansi)
+              }
+              acc(2 * s + 1) = KMeans.plusLong(acc(2 * s + 1), KMeans.fxEncode(m * d2Scale, ansi), ansi)
+              seen(s) += 1
+              x += 1
             }
-            acc(2 * s + 1) = KMeans.plusLong(acc(2 * s + 1), KMeans.fxEncode(m * d2Scale, ansi), ansi)
-            s += 1
           }
         }
       }
       (seen, acc)
     }
-    val seen = partials.map(_._1).sum
     val sums = partials.map(_._2).foldLeft(new Array[Long](2 * folds.length)) { (a, b) =>
       Array.tabulate(a.length)(x => KMeans.plusLong(a(x), b(x), ansi))
     }
-    def total(x: Int, scale: Double) = if (seen == 0) None else Some(sums(x).toDouble / scale)
-    sets.indices.map(s => (d1Scale.flatMap(total(2 * s, _)), total(2 * s + 1, d2Scale)))
+    def total(s: Int, x: Int, scale: Double) =
+      if (partials.forall(_._1(s) == 0)) None else Some(sums(x).toDouble / scale)
+    sets.indices.map(s => (d1Scale.flatMap(total(s, 2 * s, _)), total(s, 2 * s + 1, d2Scale)))
   }
 
   /** [[silhouetteSimplifiedFromStats]]' arithmetic on (same Σsfx, count,
@@ -314,7 +319,8 @@ object Quality {
     * in SQL, the same discipline as [[graft.Dedup]]'s minhash constants.
     * Deterministic under any partitioning by construction.
     *
-    * Scale shape: one box-agg scan + ONE multi-aggregate scan computing all
+    * Scale shape: one box scan (a placement job that builds no collected
+    * copy) + ONE multi-aggregate scan computing all
     * (refSets+1)·|ks| fixed-point dispersions in a single pass (the
     * reference coordinates are expressions over `i`, never materialized);
     * only (refSets+1)·|ks| scalars reach the driver. The log / mean / sd
@@ -334,7 +340,9 @@ object Quality {
       seeds: Seq[Centroid], refSets: Int = 3, scale: Double = 0.01): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted && ks.max <= seeds.size,
       s"need ascending ks with ${ks.max} seeds")
-    val (_, lo, hi) = boundingBox(points, dim)
+    // the reference box from one placement job, never collected
+    val (lo, hi) = KMeans.Points.withPlaced(points, Nil, (dim, 1e6), firstK = 0, maxCells = -1L,
+      box = true)(p => boxBounds(p.box, dim))
     // reference-side nested seeds: the draws at the ks.max smallest ids,
     // computed with the identical integer-then-double op sequence
     val seedIds = points.select(col("i")).orderBy("i").limit(ks.max)
@@ -358,17 +366,6 @@ object Quality {
       (0 until refSets).map(b => ks.map(k => wOf(s"wr_${b}_$k"))))
   }
 
-  /** The row count and the per-dimension (lo, hi) of `Y`, the gap
-    * reference box (exact: min and max only compare), from one query.
-    */
-  private def boundingBox(points: DataFrame, dim: Int): (Long, Seq[Double], Seq[Double]) = {
-    val aggs = (0 until dim).flatMap(d =>
-      Seq(min(element_at(col("Y"), d + 1)), max(element_at(col("Y"), d + 1))))
-    val box = points.agg(count(lit(1)), aggs: _*).head()
-    (box.getLong(0), (0 until dim).map(d => box.getDouble(1 + 2 * d)),
-      (0 until dim).map(d => box.getDouble(2 + 2 * d)))
-  }
-
   /** Reference set `b`'s `Y`: the LCG uniforms of the key `i` stretched to
     * the box (`lo`, `hi`), as [[gapStatisticNested]] and
     * [[gapStatisticFitted]] draw them — one vector per row, the data's
@@ -385,7 +382,7 @@ object Quality {
     * math, op-for-op the oracle SQL's expressions, and `chosen` compares
     * the e6-rounded integers so the pick is engine-exact.
     */
-  private def gapRows(spark: SparkSession, ks: Seq[Int], ws: Seq[Seq[Double]]): DataFrame = {
+  private[graft] def gapRows(spark: SparkSession, ks: Seq[Int], ws: Seq[Seq[Double]]): DataFrame = {
     import spark.implicits._
     val refSets = ws.size - 1
     val stats = ks.zipWithIndex.map { case (k, ix) =>
@@ -582,10 +579,17 @@ object Quality {
     * iterations is the published cost of hash-exactness — on data where
     * Lloyd converges within the budget the two forms coincide.
     *
-    * Scale shape: one box scan, then [[setDispersions]], each set collected
-    * while `rows ≤ localMaxRows` (−1: `rows·dim` ≤ 4M cells, as
-    * [[KMeans.fitBounded]]; 0: resident blocks), with the same bits on
-    * either placement (QualitySpec).
+    * Scale shape: ONE placement of `(i, Y)`, whose job also returns the
+    * bounding box ([[KMeans.Points.place]]'s `box`), collected while
+    * `rows ≤ localMaxRows` (−1: `rows·dim` ≤ 4M cells, as
+    * [[KMeans.fitBounded]]; 0: resident blocks). The reference sets are
+    * derived from the placed rows ([[KMeans.Points.withSets]]: on the
+    * driver, or in one job building resident blocks of all four sets), and
+    * every set's draws ([[KMeans.inverseCdfSeeds]]), its Lloyd steps
+    * ([[KMeans.iterate]]) and its dispersions ([[elbowSums]]) then run in
+    * the same scans, with the same bits on either placement (QualitySpec).
+    * Gated it is one job; forced-distributed, 1 placement + 1 derivation +
+    * 2 per draw + 1 per Lloyd step + 1 elbow.
     */
   def gapStatisticFitted(points: DataFrame, dim: Int, ks: Seq[Int],
       refSets: Int = 3, scale: Double = 0.01, tol: Double = 0.01,
@@ -594,29 +598,58 @@ object Quality {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
     val maxCells = if (localMaxRows < 0) 4000000L
       else (BigInt(localMaxRows) * math.max(dim, 1)).min(Long.MaxValue).toLong
-    val (_, lo, hi) = boundingBox(points, dim)
-    val sets = points +: (0 until refSets).map(b =>
-      points.select(col("i"), gapRefY(b, dim, lo, hi).as("Y")))
-    gapRows(points.sparkSession, ks,
-      setDispersions(sets, Nil, dim, fxScale, maxCells, tol, lloydSteps, scale) { placed =>
-        val seeds = KMeans.inverseCdfSeeds(placed, ks.max, weightScale = 1.0)
-        ks.map(seeds.take)
-      })
+    val sets = 0 to refSets
+    val ws = KMeans.Points.withPlaced(points, Nil, (dim, fxScale), firstK = 1, maxCells, box = true) { placed =>
+      val (lo, hi) = boxBounds(placed.box, dim)
+      val ansi = placed.ansi
+      KMeans.Points.withSets(placed, refSets, dim) { (s, i, _, y, _) =>
+        gapRefRow(s - 1, dim, i, lo, hi, ansi, y)
+        i
+      } { all =>
+        // a reference set whose draw fails leaves the fits, and its error
+        // is raised after the sets before it have finished theirs, as one
+        // set at a time would raise it
+        val seeds = KMeans.inverseCdfSeeds(all, ks.max, weightScale = 1.0, sets)
+        val live = sets.filter(seeds(_).isSuccess)
+        val of = live.flatMap(s => ks.map(_ => s))
+        val fits = KMeans.iterate(all, live.flatMap(s => ks.map(seeds(s).get.take)), dim, tol, lloydSteps,
+          fxScale, startStep = 0L, of)
+        val dispersions = elbowSums(all, fits.map(_.centroids), None, scale, of).map(_._2.get)
+        seeds.foreach(_.get)
+        dispersions.grouped(ks.size).toSeq
+      }
+    }
+    gapRows(points.sparkSession, ks, ws)
   }
 
-  /** Each set's dispersions, one set at a time over ONE placement each
-    * ([[KMeans.Points.place]] with `coins`, collected within `maxCells`, so
-    * the driver holds at most one set): the centroid sets `seeds` gives,
-    * their Lloyd loops in lockstep ([[KMeans.iterate]]: one scan per step)
-    * and one scan for all their d2 sums at `scale` ([[elbowSums]]).
+  /** The per-dimension (lo, hi) of a placement's box, read from a `Row`
+    * laid out as the box query's was (a count, then `min`/`max` per
+    * dimension), so a null bound fails as `Row.getDouble` fails on it.
     */
-  private def setDispersions(sets: Seq[DataFrame], coins: Seq[Column], dim: Int, fxScale: Double,
-      maxCells: Long, tol: Double, maxIter: Int, scale: Double)(
-      seeds: KMeans.Points => Seq[Seq[Centroid]]): Seq[Seq[Double]] =
-    sets.map(KMeans.Points.withPlaced(_, coins, (dim, fxScale), firstK = 1, maxCells) { placed =>
-      val fits = KMeans.iterate(placed, seeds(placed), dim, tol, maxIter, fxScale, startStep = 0L)
-      elbowSums(placed, fits.map(_.centroids), None, scale).map(_._2.get)
-    })
+  private def boxBounds(box: KMeans.Box, dim: Int): (Seq[Double], Seq[Double]) = {
+    val row = Row.fromSeq(0L +: box.toSeq.map(_.map(Double.box).orNull))
+    ((0 until dim).map(d => row.getDouble(1 + 2 * d)), (0 until dim).map(d => row.getDouble(2 + 2 * d)))
+  }
+
+  /** Reference set `b`'s `Y` for the row with key `i`, into `y`:
+    * [[gapRefY]] as Spark evaluates it — `i·A + C` in longs
+    * (ARITHMETIC_OVERFLOW under `ansi`, else wrapping), `% M`, then the
+    * double ops in order; a null key's coordinates are null, which the
+    * placement reads as 0.0.
+    */
+  private def gapRefRow(b: Int, dim: Int, i: Option[Long], lo: Seq[Double], hi: Seq[Double],
+      ansi: Boolean, y: Array[Double]): Unit = {
+    import org.apache.spark.sql.GraftPlanShim.{addExact, multiplyExact}
+    var d = 0
+    while (d < dim) {
+      val (a, c) = (gapLcgA(b, dim, d), gapLcgC(b, dim, d))
+      y(d) = i.fold(0.0) { i =>
+        val lcg = if (ansi) addExact(multiplyExact(i, a), c) else i * a + c
+        (lcg % GapLcgM).toDouble / GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
+      }
+      d += 1
+    }
+  }
 
   /** Gap statistic (Tibshirani, Walther & Hastie 2001), the textbook form:
     * gap(k) = mean_b log W*_kb − log W_k, where W_k is the D² dispersion of
@@ -628,35 +661,59 @@ object Quality {
     * un-fitted dispersion keeps falling past the true k and the criterion
     * never fires.
     *
-    * Scale shape: one box-and-count scan, then [[setDispersions]] with the
-    * k-means|| coins at `KMeans.fitAuto`'s 4M-cell gate: each k's fit is
+    * Scale shape: ONE placement of the points with the k-means|| coins at
+    * `KMeans.fitAuto`'s 4M-cell gate, whose job also returns the bounding
+    * box; the reference sets are derived from it ([[KMeans.Points.withSets]])
+    * as the rows `(i, Y)` of `spark.range(n)` keyed `1..n`, row `i` at the
+    * data's `i`-th place, which leaves every fit unchanged (k-means|| and
+    * the fixed-point Lloyd steps do not depend on the partitioning of
+    * unique keys). Each (set, k) is seeded alone, all fits run in one
+    * lockstep and one scan takes every dispersion: each k's fit is
     * bit-identical to `fitAuto(parallelSeed = true)` alone and its W to
     * `sumFx(nearest_sq_dist, scale)`. Reference coordinates are pure
     * xxhash64 functions of the row id (deterministic under ANY partitioning
-    * — `rand()` is not), never driver-materialized past the gate.
+    * — `rand()` is not).
     */
   def gapStatistic(points: DataFrame, dim: Int, ks: Seq[Int],
       refSets: Int = 3, seed: Long = 42L, scale: Double = 1e4,
       maxIter: Int = 20): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
-    val spark = points.sparkSession
-    val (n, lo, hi) = boundingBox(points, dim)
-    val m = 1000003L // coordinate resolution of the hash-uniform draw
-    def refSet(b: Int): DataFrame = {
-      val coordCols = (0 until dim).map { d =>
-        val u = pmod(xxhash64(col("id"), lit(seed + b * dim + d)), lit(m))
-          .cast("double") / m.toDouble
-        u * (hi(d) - lo(d)) + lo(d)
+    val sets = 0 to refSets
+    val ws = KMeans.Points.withPlaced(points, KMeans.coinCols(seed, 3), (dim, 1e6), firstK = 1,
+        maxCells = 4000000L, box = true) { placed =>
+      val (lo, hi) = boxBounds(placed.box, dim)
+      KMeans.Points.withSets(placed, refSets, dim) { (s, _, pos, y, u) =>
+        uniformRefRow(s - 1, dim, seed, pos, lo, hi, y)
+        KMeans.coins(pos + 1, seed, u)
+        Some(pos + 1)
+      } { all =>
+        // seeding matters twice here: first-k-by-key seeds can land in one
+        // true cluster (Lloyd never escapes, inverting the data/reference
+        // gap), and rand()-based ++ draws depend on partitioning — k-means||
+        // spreads seeds AND keeps the fit a pure function of the data
+        val of = sets.flatMap(s => ks.map(_ => s))
+        val inits = sets.flatMap(s => ks.map(KMeans.parallelSeeds(all.only(s), _, seed, 3, 2.0)))
+        val fits = KMeans.iterate(all, inits, dim, tol = 0.01, maxIter, 1e6, startStep = 0L, of)
+        elbowSums(all, fits.map(_.centroids), None, scale, of).map(_._2.get).grouped(ks.size).toSeq
       }
-      spark.range(n).select((col("id") + 1).as("i"), array(coordCols: _*).as("Y"))
     }
-    // seeding matters twice here: first-k-by-key seeds can land in one true
-    // cluster (Lloyd never escapes, inverting the data/reference gap), and
-    // rand()-based ++ draws depend on partitioning — k-means|| spreads seeds
-    // AND keeps the fit a pure function of the data
-    val ws = setDispersions(points +: (0 until refSets).map(refSet), KMeans.coinCols(seed, 3), dim,
-      1e6, 4000000L, tol = 0.01, maxIter, scale)(p => ks.map(KMeans.parallelSeeds(p, _, seed, 3, 2.0)))
     // a dispersion of 0 (every point a centroid) logs as 1e-300's
-    gapRows(spark, ks, ws.map(_.map(math.max(_, 1e-300))))
+    gapRows(points.sparkSession, ks, ws.map(_.map(math.max(_, 1e-300))))
+  }
+
+  /** [[gapStatistic]]'s reference set `b`: the `Y` of `spark.range(n)`'s row
+    * `id` = `pos`, into `y` — per dimension d, `pmod(xxhash64(id, seed + b·dim
+    * + d), m) / m` stretched to the box, as Spark evaluates it.
+    */
+  private def uniformRefRow(b: Int, dim: Int, seed: Long, pos: Long, lo: Seq[Double], hi: Seq[Double],
+      y: Array[Double]): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64.hashLong
+    val m = 1000003L // coordinate resolution of the hash-uniform draw
+    var d = 0
+    while (d < dim) {
+      val r = hashLong(seed + b * dim + d, hashLong(pos, 42L)) % m
+      y(d) = (if (r < 0) (r + m) % m else r).toDouble / m.toDouble * (hi(d) - lo(d)) + lo(d)
+      d += 1
+    }
   }
 }

@@ -1593,9 +1593,8 @@ object Similarity {
     try {
       val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Double])]
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      // DuckDB round() is half-away-from-zero, like Spark's HALF_UP on abs
-      def e6(x: Double): Long =
-        (if (x >= 0) math.floor(x * 1e6 + 0.5) else math.ceil(x * 1e6 - 0.5)).toLong
+      // Spark's round(x * 1e6)::long (HALF_UP, as DuckDB's round); NaN → 0
+      def e6(x: Double): Long = KMeans.fxEncode(x * 1e6, ansi = false)
       (1 to k).foreach { r =>
         val base = pool.filter(!col("vec_id").isin(selected.map(_._1).toSeq: _*))
         val scored =

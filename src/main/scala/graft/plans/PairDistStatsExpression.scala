@@ -122,25 +122,23 @@ case class PairDistStats(
 }
 
 object PairDistStats {
-  /** Exact fast path for Spark's `round(d)` on a non-negative double:
-    * `BigDecimal.valueOf(d).setScale(0, HALF_UP)` — i.e. HALF_UP on the
-    * SHORTEST-DECIMAL representation — collapses to plain binary HALF_UP
-    * here, because for 0 ≤ d < 2^52 no half-integer boundary `k + 0.5`
-    * (itself exactly representable in that range) can lie strictly between
-    * `d` and its shortest decimal `R(d)`: `R(d)` rounds-to-nearest back to
-    * `d`, which a representable value in between would contradict. And
-    * binary HALF_UP is computed exactly as `floor(d) + (frac ≥ 0.5)` since
-    * `frac = d − floor(d)` is an exact FP subtraction (Sterbenz: `d` and
-    * `floor(d)` are within a factor of 2, or `floor(d) = 0`). This avoids
-    * the `Double.toString` inside `BigDecimal.valueOf` (~2 µs/call), which
-    * otherwise dominates the whole O(n²) silhouette stage. Parity with the
-    * BigDecimal form is pinned in PlansSpec, including adversarial
-    * near-`.5` values like `0.49999999999999994`.
+  /** Spark's `round(d)` on a double as a long, through the one HALF_UP
+    * kernel ([[graft.operators.KMeans.roundHalfUpLong]]), for either sign:
+    * `BigDecimal.valueOf(d).setScale(0, HALF_UP)` — HALF_UP on the
+    * SHORTEST-DECIMAL representation — collapses to plain binary HALF_UP,
+    * because for |d| < 2^52 no half-integer boundary `k + 0.5` (itself
+    * exactly representable in that range) can lie strictly between `d`
+    * and its shortest decimal `R(d)`: `R(d)` rounds-to-nearest back to `d`,
+    * which a representable value in between would contradict. A midpoint
+    * rounds away from zero (−2.5 → −3, as Spark's does); a non-finite `d`
+    * casts as the JVM does (NaN → 0). This avoids the `Double.toString`
+    * inside `BigDecimal.valueOf` (~2 µs/call), which otherwise dominates the
+    * whole O(n²) silhouette stage. Parity with the BigDecimal form is
+    * pinned in PlansSpec, including adversarial near-`.5` values like
+    * `0.49999999999999994` and negative midpoints.
     */
-  def roundHalfUp(d: Double): Long = {
-    val f = math.floor(d)
-    f.toLong + (if (d - f >= 0.5) 1L else 0L)
-  }
+  def roundHalfUp(d: Double): Long =
+    if (java.lang.Double.isFinite(d)) graft.operators.KMeans.roundHalfUpLong(d) else d.toLong
 
   /** The definitional form `roundHalfUp` is proven against (what Spark's
     * `round` evaluates for a double) — test-support only.

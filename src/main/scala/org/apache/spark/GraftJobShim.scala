@@ -55,4 +55,8 @@ object GraftJobShim {
   /** `rdd.mapPartitions(f)` without cleaning `f` ([[run]]'s trade). */
   def mapPartitionsInternal[T, U: ClassTag](rdd: RDD[T])(f: Iterator[T] => Iterator[U]): RDD[U] =
     rdd.mapPartitionsInternal(f)
+
+  /** `rdd.mapPartitionsWithIndex(f)` without cleaning `f` ([[run]]'s trade). */
+  def mapPartitionsWithIndexInternal[T, U: ClassTag](rdd: RDD[T])(f: (Int, Iterator[T]) => Iterator[U]): RDD[U] =
+    rdd.mapPartitionsWithIndexInternal(f)
 }

@@ -30,4 +30,21 @@ object GraftPlanShim {
     */
   def xorShiftRandom(seed: Long): java.util.Random =
     new org.apache.spark.util.random.XORShiftRandom(seed)
+
+  /** The error `element_at(a, index)` raises under ANSI on an array of
+    * `n` elements (`INVALID_ARRAY_INDEX_IN_ELEMENT_AT`) —
+    * `QueryExecutionErrors` is `private[sql]`. Used by
+    * `graft.operators.KMeans`'s placement box, which replays
+    * `min`/`max(element_at(Y, d + 1))`.
+    */
+  def elementAtError(index: Int, n: Int): Throwable =
+    errors.QueryExecutionErrors.invalidElementAtIndexError(index, n, null)
+
+  /** `a * b` and `a + b` on longs as Spark evaluates them under ANSI
+    * (`ARITHMETIC_OVERFLOW` on overflow) — `MathUtils` is `private[sql]`.
+    * Used by `graft.operators.Quality`'s gap reference sets, which replay
+    * `i * A + C`.
+    */
+  def multiplyExact(a: Long, b: Long): Long = catalyst.util.MathUtils.multiplyExact(a, b)
+  def addExact(a: Long, b: Long): Long = catalyst.util.MathUtils.addExact(a, b)
 }

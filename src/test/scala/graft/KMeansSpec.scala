@@ -1348,4 +1348,43 @@ class KMeansSpec extends SparkSpec {
       s"${fit.steps} steps, $jobs jobs, $sqls SQL executions")
     p.unpersist()
   }
+
+  test("census is assign + groupBy(j).count in one job: ties, an all-NaN row, a null Y, " +
+      "a shared id and k > rows, 1, 3 and 7 partitions") {
+    // (5, 0) is as near centroid 1 as centroid 2 (the earlier slot wins);
+    // the all-NaN row and the null Y have no nearest centroid (j = −1)
+    val rows = Seq[(Long, Seq[Double])](1L -> Seq(0.0, 0.0), 2L -> Seq(5.0, 0.0), 3L -> Seq(10.0, 0.0),
+      4L -> Seq(Double.NaN, Double.NaN), 5L -> null, 6L -> Seq(9.0, 1.0), 7L -> Seq(-1.0, 0.5))
+    val sets = Seq(
+      "ties" -> Seq(Centroid(1, Seq(0.0, 0.0)), Centroid(2, Seq(10.0, 0.0))),
+      "a shared id" -> Seq(Centroid(3, Seq(0.0, 0.0)), Centroid(1, Seq(10.0, 0.0)), Centroid(3, Seq(5.0, 5.0))),
+      "k > rows" -> (1 to 9).map(j => Centroid(j, Seq(j * 1.5, j % 2 * 1.0))),
+      "no centroid" -> Nil)
+    for (n <- Seq(1, 3, 7); (name, cs) <- sets) {
+      val p = rows.toDF("i", "Y").repartition(n).cache()
+      val want = KMeans.assign(p, cs).groupBy("j").agg(count(lit(1)).as("n"))
+        .as[(Long, Long)].collect().toSeq.sorted
+      val (got, jobs, _, _) = observed(KMeans.census(p, cs).as[(Long, Long)].collect().toSeq)
+      assert(got == want, s"$name, $n partitions")
+      assert(jobs == 1, s"$name, $n partitions: $jobs jobs")
+      p.unpersist()
+    }
+  }
+
+  test("both inverse-CDF draw forms order a null key first: rows keyed 1, null, 2, 3 with " +
+      "the key-1 point chosen draw key 2") {
+    // weights null 1, key 2 100, key 3 400: at u = 1/5 the running sum
+    // crosses 100.2 at key 2 only when the null key's weight comes first
+    val p = Seq[(Option[Long], Seq[Double])](Some(1L) -> Seq(0.0, 0.0), None -> Seq(1.0, 0.0),
+      Some(2L) -> Seq(10.0, 0.0), Some(3L) -> Seq(20.0, 0.0)).toDF("i", "Y").repartition(2).cache()
+    val chosen = Seq(Centroid(1, Seq(0.0, 0.0)))
+    val df = KMeans.seedNextInverseCdf(p, chosen, uNum = 1, uDen = 5).collect()
+    assert(df.map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2))).toSeq == Seq((2L, 2L, Seq(10.0, 0.0))))
+    for (cells <- Seq(0L, 4000000L)) {
+      val drawn = KMeans.Points.withPlaced(p, Nil, (2, 1e6), firstK = 1, cells)(
+        KMeans.inverseCdfDraw(_, chosen, 1, 5, 1.0))
+      assert(drawn == Some(Centroid(2, Seq(10.0, 0.0))), s"localMaxCells $cells")
+    }
+    p.unpersist()
+  }
 }

@@ -453,6 +453,19 @@ class PlansSpec extends SparkSpec {
     }
   }
 
+  test("roundHalfUp rounds negative midpoints away from zero and 0.49999999999999994 to 0, " +
+      "as Spark's round does") {
+    import org.apache.spark.sql.functions.{round => sparkRound}
+    val xs = Seq(-0.5, -1.5, -2.5, -3.5, -1e6 - 0.5, 0.5, 2.5, 0.49999999999999994,
+      -0.49999999999999994, -2.4999999999999996, Math.nextDown(-2.5), Math.nextUp(-2.5), -0.0)
+    val want = xs.toDF("x").select(sparkRound(col("x")).cast("long")).as[Long].collect().toSeq
+    assert(xs.map(graft.plans.PairDistStats.roundHalfUp) == want)
+    assert(xs.map(graft.operators.KMeans.roundHalfUpLong) == want)
+    assert(graft.plans.PairDistStats.roundHalfUp(-2.5) == -3L)
+    // the floor(v + 0.5) form rounds it up: 0.49999999999999994 + 0.5 is 1.0
+    assert(math.floor(0.49999999999999994 + 0.5) == 1.0 && want(7) == 0L)
+  }
+
   test("native nearest_sq_dist equals the HOF min fold on real data") {
     val yh = Tables.yhOrders(spark, sf("0.001"))
     val cs = graft.operators.KMeans.seedFirstK(yh, 5).map(_.c)

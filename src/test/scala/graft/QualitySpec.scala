@@ -432,4 +432,106 @@ class QualitySpec extends SparkSpec {
     assert(got.count(_._3 > 1000L) >= 4,
       s"reference spread collapsed — translated (correlated) ref sets? $got")
   }
+
+  /** The fitted gap one set at a time: the box as Spark's
+    * `min`/`max(element_at(Y, d + 1))`, each reference set the LCG columns
+    * over `i` placed on its own, and per set the kernel draws, the Lloyd
+    * loop and `elbow`'s d2 — the per-set form the one-placement gap replaces.
+    */
+  private def perSetGap(p: DataFrame, dim: Int, ks: Seq[Int]): DataFrame = {
+    val aggs = (0 until dim).flatMap(d => Seq(min(element_at(col("Y"), d + 1)), max(element_at(col("Y"), d + 1))))
+    val box = p.agg(count(lit(1)), aggs: _*).head()
+    val (lo, hi) = ((0 until dim).map(d => box.getDouble(1 + 2 * d)), (0 until dim).map(d => box.getDouble(2 + 2 * d)))
+    def refY(b: Int) = array((0 until dim).map { d =>
+      ((col("i") * Quality.gapLcgA(b, dim, d) + Quality.gapLcgC(b, dim, d)) % Quality.GapLcgM).cast("double") /
+        Quality.GapLcgM.toDouble * (hi(d) - lo(d)) + lo(d)
+    }: _*)
+    val ws = (p +: (0 until 3).map(b => p.select(col("i"), refY(b).as("Y")))).map { set =>
+      KMeans.Points.withPlaced(set, Nil, (dim, 1e4), firstK = 1, maxCells = 4000000L) { placed =>
+        val seeds = (2 to ks.max).foldLeft(placed.firstK(1)) { (sd, r) =>
+          val (uN, uD) = KMeans.fixedU(r)
+          val drawn = KMeans.inverseCdfDraw(placed, sd, uN, uD, 1.0)
+          require(drawn.nonEmpty, s"k-means++ draw $r returned no row")
+          sd ++ drawn
+        }
+        KMeans.iterate(placed, ks.map(seeds.take), dim, 0.01, 3, 1e4, startStep = 0L)
+          .map(f => Quality.elbow(set, f.centroids, d2Scale = 0.01).head().getDouble(1))
+      }
+    }
+    Quality.gapRows(spark, ks, ws)
+  }
+
+  /** The rows, or the error's class tag (`[ERROR_CLASS]`, else its root class). */
+  private def outcome(df: => DataFrame): Either[String, Seq[Row]] =
+    try Right(df.collect().toSeq.sortBy(_.getLong(0))) catch { case e: Exception =>
+      val all = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      Left("\\[[A-Z_]+\\]".r.findFirstIn(messages(e)).getOrElse(all.last.getClass.getName))
+    }
+
+  test("the one-placement fitted gap gives the per-set gap's rows or its error: a null key, " +
+      "a NaN, -0.0, a short Y and rows past the draws' overflow bound, 1, 3 and 7 partitions, " +
+      "either gate, ANSI on and off") {
+    val base = (1 to 60).map(i => i.toLong -> Seq(i % 4 * 20.0 + i * 0.3, i % 3 * 15.0 + i % 7 * 0.5))
+    def at(key: Long, y: Seq[Double]) = base.map(r => if (r._1 == key) key -> y else r)
+    val rnd = new scala.util.Random(1)
+    val fixtures: Seq[(String, DataFrame)] = Seq(
+      "a null key" -> base.map(r => (if (r._1 == 1L) None else Some(r._1), r._2)).toDF("i", "Y"),
+      "a NaN" -> at(7L, Seq(Double.NaN, 3.0)).toDF("i", "Y"),
+      "-0.0" -> base.map(r => r._1 -> (if (r._1 <= 3L) Seq(if (r._1 == 2L) 0.0 else -0.0, -0.0) else r._2))
+        .toDF("i", "Y"),
+      "a short Y" -> at(9L, Seq(4.0)).toDF("i", "Y"),
+      "past the overflow bound" -> (1L to 300L).map(i => i -> Seq(rnd.nextDouble() * 1e9, rnd.nextDouble() * 1e9))
+        .toDF("i", "Y"))
+    for ((name, df) <- fixtures; n <- Seq(1, 3, 7); ansi <- Seq(true, false)) {
+      val saved = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      val p = df.repartition(n).cache()
+      try {
+        val want = outcome(perSetGap(p, dim = 2, ks = 2 to 4))
+        for (rows <- Seq(-1L, 0L)) {
+          val got = outcome(Quality.gapStatisticFitted(p, dim = 2, ks = 2 to 4, localMaxRows = rows))
+          assert(got == want, s"$name, $n partitions, ANSI $ansi, localMaxRows $rows")
+        }
+        assert(want.isLeft == (name == "a short Y" || name == "a NaN" && ansi), s"$name, ANSI $ansi: $want")
+      } finally { p.unpersist(); spark.conf.set("spark.sql.ansi.enabled", saved) }
+    }
+  }
+
+  test("the placement's box is Spark's min and max of element_at(Y, d + 1), bit for bit: " +
+      "NaN, -0.0 and 0.0 ties, a null Y and a short Y, 1, 3 and 7 partitions, either gate") {
+    import java.lang.Double.doubleToLongBits
+    val rows = (1 to 40).map { i =>
+      i.toLong -> (i % 10 match {
+        case 0 => Seq(-0.0, 0.0)
+        case 1 => Seq(0.0, -0.0)
+        case 2 => Seq(Double.NaN, 0.0)
+        case 3 => null
+        case 4 => Seq(-0.0)
+        case _ => Seq(i % 3 * 0.0, -(i % 2) * 0.0)
+      })
+    }
+    val saved = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false") // the short Y is null at index 2
+    try for (n <- Seq(1, 3, 7)) {
+      val p = rows.toDF("i", "Y").repartition(n).cache()
+      val aggs = (0 until 2).flatMap(d => Seq(min(element_at(col("Y"), d + 1)), max(element_at(col("Y"), d + 1))))
+      val row = p.agg(count(lit(1)), aggs: _*).head()
+      val want = (1 to 4).map(x => if (row.isNullAt(x)) None else Some(doubleToLongBits(row.getDouble(x))))
+      for (cells <- Seq(0L, 4000000L)) {
+        val got = KMeans.Points.withPlaced(p, Nil, (2, 1e6), firstK = 0, cells, box = true)(_.box)
+        assert(got.toSeq.map(_.map(doubleToLongBits)) == want, s"$n partitions, localMaxCells $cells")
+      }
+      p.unpersist()
+    } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+  }
+
+  test("km_gap_fitted runs one engine job below the gate, and 16 forced-distributed " +
+      "(placement, derivation, 5 draws of 2, 3 Lloyd steps, the elbow)") {
+    val yh = Tables.yhOrders(spark, sf("0.01")).filter(col("i") % 7 === 0)
+    SparkEntry.queries("km_gap_fitted")(spark, sf("0.01"))
+    val (_, gated) = countJobs(SparkEntry.queries("km_gap_fitted")(spark, sf("0.01")))
+    assert(gated == 1, s"gated: $gated jobs")
+    val (_, dist) = countJobs(Quality.gapStatisticFitted(yh, dim = 2, ks = 2 to 6, localMaxRows = 0L))
+    assert(dist == 16, s"forced-distributed: $dist jobs")
+  }
 }

@@ -905,6 +905,38 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS spec_ivf_idx")
   }
 
+  test("the persisted IVF index carries the cells it was built over; a rewritten fixture " +
+      "gets new cells") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf_cells").toFile
+    val src = Tables.read(spark, sf("0.001"), "embeddings")
+    src.write.parquet(s"$dir/embeddings.parquet")
+    def cellsOf(d: String) = {
+      val emb = Tables.read(spark, d, "embeddings")
+      Similarity.fixedCentroids(emb, Similarity.autoCells(emb.count()))
+    }
+    val built = SparkEntry.ensureIvfIndex(spark, dir.toString)
+    try {
+      assert(built.cells == cellsOf(dir.toString))
+      // the probe reads the build's cells
+      val emb = Tables.read(spark, dir.toString, "embeddings")
+      assert(SparkEntry.queries("sim_ivf_indexed")(spark, dir.toString).collect().toSet ==
+        Similarity.ivfTopKIndexed(emb, built.table, built.cells).collect().toSet)
+      // rewrite the fixture in place: the first vectors flip sign
+      src.withColumn("embedding", when(col("vec_id") < 16, transform(col("embedding"), x => -x))
+        .otherwise(col("embedding"))).write.parquet(s"$dir/next.parquet")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/embeddings.parquet"))
+      assert(new java.io.File(s"$dir/next.parquet").renameTo(new java.io.File(s"$dir/embeddings.parquet")))
+      val rebuilt = SparkEntry.ensureIvfIndex(spark, dir.toString)
+      try {
+        assert(rebuilt.cells == cellsOf(dir.toString))
+        assert(rebuilt.cells != built.cells)
+      } finally spark.sql(s"DROP TABLE IF EXISTS ${rebuilt.table}")
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS ${built.table}")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
   test("persisted IVF-PQ index probes identically to on-the-fly codes, no index-side Exchange") {
     val emb = Tables.read(spark, sf("0.001"), "embeddings")
     val cents = Similarity.fixedCentroids(emb, 16)
