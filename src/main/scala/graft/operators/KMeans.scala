@@ -1440,17 +1440,16 @@ object KMeans {
     * 2^52 x is integral; a non-finite x keeps the BigDecimal path and its
     * throw.
     */
-  private[graft] def roundHalfUpLong(x: Double): Long =
-    if (java.lang.Double.isFinite(x)) {
-      val a = math.abs(x)
-      if (a < 4.503599627370496e15) { // 2^52
-        val t = a.toLong
-        val up = (java.lang.Double.doubleToRawLongBits(a - t - 0.5) >>> 63) ^ 1L
-        val sign = java.lang.Double.doubleToRawLongBits(x) >> 63 // 0, or −1 for a negative x
-        ((t + up) ^ sign) - sign
-      } else x.toLong // integral already; toLong saturates like the old path
-    } else
-      BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble.toLong
+  private[graft] def roundHalfUpLong(x: Double): Long = {
+    val a = math.abs(x)
+    if (a < 4.503599627370496e15) { // 2^52; false for NaN and ±∞
+      val t = a.toLong
+      val up = (java.lang.Double.doubleToRawLongBits(a - t - 0.5) >>> 63) ^ 1L
+      val sign = java.lang.Double.doubleToRawLongBits(x) >> 63 // 0, or −1 for a negative x
+      ((t + up) ^ sign) - sign
+    } else if (java.lang.Double.isFinite(x)) x.toLong // integral already; toLong saturates
+    else BigDecimal(x).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble.toLong
+  }
 
   /** Q2 BUG-COMPAT movement: the reference's `deltaFinish` AS BUILT
     * (k-means.sql:54 `order by step desc limit 2 by step`), which keeps 2
@@ -1584,31 +1583,29 @@ object KMeans {
       lloydSteps: Int = 3, fxScale: Double = 1e6,
       weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult =
     Points.withPlaced(points, Nil, (dim, fxScale), 1, localMaxCells)(placed =>
-      iterate(placed, inverseCdfSeeds(placed, k, weightScale).map(_.get), dim, tol, lloydSteps, fxScale,
+      iterate(placed, inverseCdfSeeds(placed, k, weightScale)._1, dim, tol, lloydSteps, fxScale,
         startStep = 0L).head)
 
   /** [[fitBounded]]'s seeds over placed points, for each point set in
     * `sets`: its min-key point, then [[inverseCdfDraw]]s 2..`kMax` at
     * [[fixedU]] (k's seeds: the k-prefix), every set's draw r in the same
-    * scans ([[inverseCdfDraws]]). A set whose draw fails on the driver
-    * takes no part in the later draws and gives its error (the first
-    * set's is raised at once).
+    * scans ([[inverseCdfDraws]]). A draw that fails on the driver stops its
+    * set and every set after it, as running the sets one at a time would:
+    * the seeds of the sets before it come back with its error, and the
+    * first set's error is raised at once.
     */
   private[operators] def inverseCdfSeeds(points: Points, kMax: Int, weightScale: Double,
-      sets: Seq[Int] = Seq(0)): Seq[Try[Seq[Centroid]]] = {
+      sets: Seq[Int] = Seq(0)): (Seq[Seq[Centroid]], Option[Throwable]) = {
     val firsts = sets.map(points.firstK(1, _))
     require(firsts.forall(_.nonEmpty), "fitBounded on an empty relation")
-    (2 to kMax).foldLeft(firsts.map(Try(_))) { (seeds, r) =>
+    (2 to kMax).foldLeft((firsts, Option.empty[Throwable])) { case ((seeds, failed), r) =>
       val (uN, uD) = fixedU(r)
-      val live = sets.indices.filter(seeds(_).isSuccess)
-      val drawn = (live zip inverseCdfDraws(points, live.map(x => sets(x) -> seeds(x).get), uN, uD,
-        weightScale)).toMap
-      val next = seeds.indices.map(x => drawn.get(x).fold(seeds(x)) { d =>
-        d.map(c => seeds(x).get :+ c.getOrElse(throw new IllegalArgumentException(
-          s"requirement failed: k-means++ draw $r returned no row")))
-      })
-      next.head.get // the first set's error at once
-      next
+      val drawn = inverseCdfDraws(points, sets zip seeds, uN, uD, weightScale).map(_.flatMap(_.toRight(
+        new IllegalArgumentException(s"requirement failed: k-means++ draw $r returned no row")).toTry))
+      val ok = drawn.takeWhile(_.isSuccess).map(_.get)
+      val failure = drawn.drop(ok.size).headOption.map(_.failed.get)
+      if (ok.isEmpty) failure.foreach(throw _)
+      (seeds.zip(ok).map { case (s, c) => s :+ c }, failure.orElse(failed))
     }
   }
 
@@ -1656,11 +1653,7 @@ object KMeans {
     final case class Waiting(q: DrawQuery, next: DrawCensus => Either[Waiting, Option[Centroid]])
     type Step = Either[Waiting, Option[Centroid]]
     def tried(step: => Step): Either[Waiting, Try[Option[Centroid]]] =
-      Try(step) match {
-        case Success(Left(w)) => Left(w)
-        case Success(Right(c)) => Right(Success(c))
-        case Failure(e) => Right(Failure(e))
-      }
+      Try(step).fold(e => Right(Failure(e)), _.map(Success(_)))
     def start(set: Int, chosen: Seq[Centroid]): Step = {
       require(chosen.forall(_.c != null), "Y is null: a k-means point needs coordinates")
       val (lo, hi) = points.keyRangeOf(set).getOrElse((0L, -1L))

@@ -581,10 +581,11 @@ object Quality {
     *
     * Scale shape: ONE placement of `(i, Y)`, whose job also returns the
     * bounding box ([[KMeans.Points.place]]'s `box`), collected while
-    * `rows ≤ localMaxRows` (−1: `rows·dim` ≤ 4M cells, as
-    * [[KMeans.fitBounded]]; 0: resident blocks). The reference sets are
-    * derived from the placed rows ([[KMeans.Points.withSets]]: on the
-    * driver, or in one job building resident blocks of all four sets), and
+    * `rows ≤ localMaxRows` (−1: `(refSets + 1)·rows·dim` ≤ 4M cells, so
+    * the driver holds every set within [[KMeans.fitBounded]]'s budget; 0:
+    * resident blocks). The reference sets are derived from the placed rows
+    * ([[KMeans.Points.withSets]]: on the driver, or in one job building
+    * resident blocks of all four sets), and
     * every set's draws ([[KMeans.inverseCdfSeeds]]), its Lloyd steps
     * ([[KMeans.iterate]]) and its dispersions ([[elbowSums]]) then run in
     * the same scans, with the same bits on either placement (QualitySpec).
@@ -596,7 +597,7 @@ object Quality {
       lloydSteps: Int = 3, fxScale: Double = 1e4,
       localMaxRows: Long = -1L): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
-    val maxCells = if (localMaxRows < 0) 4000000L
+    val maxCells = if (localMaxRows < 0) 4000000L / (refSets + 1)
       else (BigInt(localMaxRows) * math.max(dim, 1)).min(Long.MaxValue).toLong
     val sets = 0 to refSets
     val ws = KMeans.Points.withPlaced(points, Nil, (dim, fxScale), firstK = 1, maxCells, box = true) { placed =>
@@ -606,16 +607,14 @@ object Quality {
         gapRefRow(s - 1, dim, i, lo, hi, ansi, y)
         i
       } { all =>
-        // a reference set whose draw fails leaves the fits, and its error
-        // is raised after the sets before it have finished theirs, as one
-        // set at a time would raise it
-        val seeds = KMeans.inverseCdfSeeds(all, ks.max, weightScale = 1.0, sets)
-        val live = sets.filter(seeds(_).isSuccess)
-        val of = live.flatMap(s => ks.map(_ => s))
-        val fits = KMeans.iterate(all, live.flatMap(s => ks.map(seeds(s).get.take)), dim, tol, lloydSteps,
+        // a reference set whose draw fails raises its error after the sets
+        // before it have finished their fits, as one set at a time would
+        val (seeds, failure) = KMeans.inverseCdfSeeds(all, ks.max, weightScale = 1.0, sets)
+        val of = seeds.indices.flatMap(s => ks.map(_ => s))
+        val fits = KMeans.iterate(all, seeds.flatMap(sd => ks.map(sd.take)), dim, tol, lloydSteps,
           fxScale, startStep = 0L, of)
         val dispersions = elbowSums(all, fits.map(_.centroids), None, scale, of).map(_._2.get)
-        seeds.foreach(_.get)
+        failure.foreach(throw _)
         dispersions.grouped(ks.size).toSeq
       }
     }
@@ -661,9 +660,10 @@ object Quality {
     * un-fitted dispersion keeps falling past the true k and the criterion
     * never fires.
     *
-    * Scale shape: ONE placement of the points with the k-means|| coins at
-    * `KMeans.fitAuto`'s 4M-cell gate, whose job also returns the bounding
-    * box; the reference sets are derived from it ([[KMeans.Points.withSets]])
+    * Scale shape: ONE placement of the points with the k-means|| coins,
+    * collected while every set fits `KMeans.fitAuto`'s 4M-cell gate
+    * together (`(refSets + 1)·rows·dim` ≤ 4M), whose job also returns the
+    * bounding box; the reference sets are derived from it ([[KMeans.Points.withSets]])
     * as the rows `(i, Y)` of `spark.range(n)` keyed `1..n`, row `i` at the
     * data's `i`-th place, which leaves every fit unchanged (k-means|| and
     * the fixed-point Lloyd steps do not depend on the partitioning of
@@ -680,7 +680,7 @@ object Quality {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
     val sets = 0 to refSets
     val ws = KMeans.Points.withPlaced(points, KMeans.coinCols(seed, 3), (dim, 1e6), firstK = 1,
-        maxCells = 4000000L, box = true) { placed =>
+        maxCells = 4000000L / (refSets + 1), box = true) { placed =>
       val (lo, hi) = boxBounds(placed.box, dim)
       KMeans.Points.withSets(placed, refSets, dim) { (s, _, pos, y, u) =>
         uniformRefRow(s - 1, dim, seed, pos, lo, hi, y)
