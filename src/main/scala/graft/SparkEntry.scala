@@ -558,14 +558,15 @@ object SparkEntry {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** [[KMeans.census]] joined to the centroids' two coordinates: `(j, n,
-    * cx, cy)` per centroid with rows, as `census.join(cs, j = j2)` gives
-    * them, both sides already on the driver.
+  /** A fit's [[KMeans.census]] rows joined to its centroids' two
+    * coordinates: `(j, n, cx, cy)` per centroid with rows, as
+    * `census.join(cs, j = j2)` gives them, both sides already on the driver.
     */
-  private def censusWith(s: SparkSession, points: DataFrame, cs: Seq[Centroid]): DataFrame = {
+  private def censusWith(s: SparkSession, fitted: (KMeans.FitResult, Seq[(Long, Long)])): DataFrame = {
     import s.implicits._
-    val n = KMeans.census(points, cs).as[(Long, Long)].collect().toMap
-    cs.flatMap(c => n.get(c.j).map((c.j, _, c.c(0), c.c(1)))).toDF("j", "n", "cx", "cy")
+    val (fit, census) = fitted
+    val n = census.toMap
+    fit.centroids.flatMap(c => n.get(c.j).map((c.j, _, c.c(0), c.c(1)))).toDF("j", "n", "cx", "cy")
   }
 
   private def xy(df: DataFrame): DataFrame =
@@ -1056,11 +1057,9 @@ object SparkEntry {
     // unrolls seeding, steps, gate and census as CTEs; reference
     // k-means.sh:16-33 is this loop). km_fit stays the free-running
     // k-means|| twin (rows-only by construction). ----
-    "km_fit_bounded" -> ((s, dir) => {
-      val fit = KMeans.fitBounded(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 3, fxScale = 1e4)
-      censusWith(s, Tables.yhOrders(s, dir), fit.centroids)
-    }),
+    "km_fit_bounded" -> ((s, dir) =>
+      censusWith(s, KMeans.fitBoundedCensus(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
+        lloydSteps = 3, fxScale = 1e4))),
 
     // ---- the FREE-RUNNING fit: km_fit_bounded's exact chain with the
     // step budget lifted to a safety cap, so the loop runs until the
@@ -1068,11 +1067,9 @@ object SparkEntry {
     // reference's while-delta≥tol lifecycle, k-means.sh:16-33) and the
     // oracle replays it as a RECURSIVE CTE (OracleSql.kmFitFree): data
     // decides the iteration count on BOTH engines ----
-    "km_fit_free" -> ((s, dir) => {
-      val fit = KMeans.fitBounded(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 64, fxScale = 1e4)
-      censusWith(s, Tables.yhOrders(s, dir), fit.centroids)
-    }),
+    "km_fit_free" -> ((s, dir) =>
+      censusWith(s, KMeans.fitBoundedCensus(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
+        lloydSteps = 64, fxScale = 1e4))),
 
     // ---- full fit loop (E1). Round 16: hash-gated via a PINNED-FIXTURE
     // census oracle (OracleSql.pinnedCensus) — the seeded k-means‖ fit is
@@ -1089,8 +1086,8 @@ object SparkEntry {
     // updates and the movement stop all replay as unrolled CTEs — the
     // km_fit2_exact discipline extended to the whole mini-batch loop ----
     "km_fit_minibatch" -> ((s, dir) => {
-      val fit = KMeans.fitMiniBatch(Tables.yhEmbeddings(s, dir), k = 8, dim = 64)
-      KMeans.census(Tables.yhEmbeddings(s, dir), fit.centroids)
+      import s.implicits._
+      KMeans.fitMiniBatchCensus(Tables.yhEmbeddings(s, dir), k = 8, dim = 64)._2.toDF("j", "n")
     }),
 
     // ---- the WCR centroid log (S2: append-only iteration history).

@@ -38,7 +38,8 @@ import graft.plans.NearestSqDistLit
   *    scan per step serves every still-moving centroid set, so a choose-K
   *    sweep pays one job per step, not one per (k, step).
   *  - Each fit places its points once ([[Points]]) for its seeding, Lloyd
-  *    loop and scoring: PARTITIONED, each partition decoded ONCE into a
+  *    loop and scoring (a fitted query's census too: [[fitBoundedCensus]],
+  *    [[fitMiniBatchCensus]]): PARTITIONED, each partition decoded ONCE into a
   *    resident block of flat primitive arrays (keys, coordinates, their
   *    fixed-point encodes, the k-means|| coins; 16 B per cell), persisted
   *    MEMORY_ONLY until the fit ends (the driver holds O(k·dim)); or
@@ -527,9 +528,25 @@ object KMeans {
   def census(points: DataFrame, cs: Seq[Centroid]): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val counts = Points.withPartitioned(points)(slotCounts("KMeans.census", _, coords(cs)))
+    Points.withPartitioned(points)(censusOf(_, cs)).toDF("j", "n")
+  }
+
+  /** [[census]]'s `(j, n)` rows over placed points (set 0): one
+    * [[slotCounts]] scan, a job described as `KMeans.census` over resident
+    * blocks, none over collected ones.
+    */
+  private[graft] def censusOf(points: Points, cs: Seq[Centroid]): Seq[(Long, Long)] = {
+    val counts = slotCounts("KMeans.census", points, coords(cs))
     val js = ids(cs) :+ -1L
-    js.indices.filter(counts(_) > 0).groupMapReduce(js)(counts(_))(_ + _).toSeq.sorted.toDF("j", "n")
+    js.indices.filter(counts(_) > 0).groupMapReduce(js)(counts(_))(_ + _).toSeq.sorted
+  }
+
+  /** `fit` over placed points, and [[censusOf]] its centroids over the same
+    * placement: a fit and its census build the blocks once.
+    */
+  private def withCensus(fit: Points => FitResult)(placed: Points): (FitResult, Seq[(Long, Long)]) = {
+    val f = fit(placed)
+    (f, censusOf(placed, f.centroids))
   }
 
   // ------------------------------------------------------------- Lloyd step
@@ -1381,6 +1398,9 @@ object KMeans {
 
   // ----------------------------------------------------- size-aware local fit
 
+  /** The size-gated fits' default collected bound: 4M cells, 64 MB as blocks. */
+  private val LocalMaxCells = 4000000L
+
   /** Size-aware fit: identical results to [[fit]] (bitwise, pinned in
     * KMeansSpec), the placement picked by input size from the job that
     * builds it ([[Points.place]]: the block build is the size gate, no
@@ -1396,7 +1416,7 @@ object KMeans {
   def fitAuto(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
       fxScale: Double = 1e6, parallelSeed: Boolean = false,
-      localMaxCells: Long = 4000000L): FitResult =
+      localMaxCells: Long = LocalMaxCells): FitResult =
     placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, localMaxCells, plusPlus)
 
   /** [[fit]] over COLLECTED points, for small inputs — the identical
@@ -1581,10 +1601,24 @@ object KMeans {
     */
   def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
       lloydSteps: Int = 3, fxScale: Double = 1e6,
-      weightScale: Double = 1.0, localMaxCells: Long = 4000000L): FitResult =
-    Points.withPlaced(points, Nil, (dim, fxScale), 1, localMaxCells)(placed =>
-      iterate(placed, inverseCdfSeeds(placed, k, weightScale)._1, dim, tol, lloydSteps, fxScale,
-        startStep = 0L).head)
+      weightScale: Double = 1.0, localMaxCells: Long = LocalMaxCells): FitResult =
+    Points.withPlaced(points, Nil, (dim, fxScale), 1, localMaxCells)(
+      bounded(_, k, dim, tol, lloydSteps, fxScale, weightScale))
+
+  /** [[fitBounded]] at its default bounds, and [[census]]'s rows of its
+    * centroids counted over the fit's own placement: collected, the census
+    * runs no job.
+    */
+  private[graft] def fitBoundedCensus(points: DataFrame, k: Int, dim: Int, tol: Double,
+      lloydSteps: Int, fxScale: Double): (FitResult, Seq[(Long, Long)]) =
+    Points.withPlaced(points, Nil, (dim, fxScale), 1, LocalMaxCells)(
+      withCensus(bounded(_, k, dim, tol, lloydSteps, fxScale, weightScale = 1.0)))
+
+  /** [[fitBounded]]'s seeds and Lloyd loop over placed points. */
+  private def bounded(placed: Points, k: Int, dim: Int, tol: Double, lloydSteps: Int,
+      fxScale: Double, weightScale: Double): FitResult =
+    iterate(placed, inverseCdfSeeds(placed, k, weightScale)._1, dim, tol, lloydSteps, fxScale,
+      startStep = 0L).head
 
   /** [[fitBounded]]'s seeds over placed points, for each point set in
     * `sets`: its min-key point, then [[inverseCdfDraw]]s 2..`kMax` at
@@ -1811,11 +1845,19 @@ object KMeans {
     */
   def fitMiniBatch(points: DataFrame, k: Int, dim: Int,
       batchFrac: Double = 0.1, tol: Double = 0.01, maxIter: Int = 20,
-      seed: Long = 42L, localMaxCells: Long = 4000000L): FitResult = {
+      seed: Long = 42L, localMaxCells: Long = LocalMaxCells): FitResult = {
     require(batchFrac > 0 && batchFrac <= 1, s"batchFrac $batchFrac not in (0,1]")
     Points.withPlaced(points, Nil, (dim, 1e6), k, if (localMaxCells > 0) localMaxCells else -1L)(
       miniBatch(_, k, dim, batchFrac, tol, maxIter, seed))
   }
+
+  /** [[fitMiniBatch]] at its defaults, and [[census]]'s rows of its
+    * centroids counted over the fit's own placement: collected, the census
+    * runs no job.
+    */
+  private[graft] def fitMiniBatchCensus(points: DataFrame, k: Int, dim: Int): (FitResult, Seq[(Long, Long)]) =
+    Points.withPlaced(points, Nil, (dim, 1e6), k, LocalMaxCells)(
+      withCensus(miniBatch(_, k, dim, batchFrac = 0.1, tol = 0.01, maxIter = 20, seed = 42L)))
 
   /** [[fitMiniBatch]]'s loop over placed points. */
   private def miniBatch(placed: Points, k: Int, dim: Int, batchFrac: Double, tol: Double,

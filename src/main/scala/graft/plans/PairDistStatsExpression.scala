@@ -94,7 +94,7 @@ case class PairDistStats(
             acc += diff * diff
             d += 1
           }
-          sfx += PairDistStats.roundHalfUp(math.sqrt(acc) * dScale)
+          sfx += PairDistStats.roundHalfUpDistance(math.sqrt(acc) * dScale)
           cnt += 1
         }
         p += 1
@@ -139,6 +139,19 @@ object PairDistStats {
     */
   def roundHalfUp(d: Double): Long =
     if (java.lang.Double.isFinite(d)) graft.operators.KMeans.roundHalfUpLong(d) else d.toLong
+
+  /** [[roundHalfUp]] of a `d` that is not negative (a scaled distance, or
+    * NaN): the same truncation kernel with no sign to restore, so the
+    * O(n²) pair loop pays for none. `t = trunc(d)` and `d − t` are exact
+    * below 2^52 and a midpoint's `frac − 0.5` is +0.0, so `t + 1` exactly
+    * when that sign bit is clear; from 2^52 on, and for NaN and +∞, the
+    * JVM cast (pinned ≡ [[roundHalfUp]] in PlansSpec).
+    */
+  def roundHalfUpDistance(d: Double): Long =
+    if (d < 4.503599627370496e15) { // 2^52; false for NaN and +∞
+      val t = d.toLong
+      t + ((java.lang.Double.doubleToRawLongBits(d - t - 0.5) >>> 63) ^ 1L)
+    } else d.toLong
 
   /** The definitional form `roundHalfUp` is proven against (what Spark's
     * `round` evaluates for a double) — test-support only.

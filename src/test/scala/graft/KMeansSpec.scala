@@ -1371,6 +1371,31 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  test("a fit's census over its own placement is the fit and census's rows; collected, " +
+      "it runs no job, partitioned one") {
+    val orders = Tables.yhOrders(spark, sf("0.001")).cache()
+    val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
+    def rows(df: DataFrame) = df.as[(Long, Long)].collect().toSeq
+    val (bounded, boundedJobs, _, _) = observed(KMeans.fitBounded(orders, k = 4, dim = 2,
+      lloydSteps = 64, fxScale = 1e4))
+    val ((fit, census), jobs, _, _) = observed(KMeans.fitBoundedCensus(orders, k = 4, dim = 2,
+      tol = 0.01, lloydSteps = 64, fxScale = 1e4))
+    assert(resultBits(fit) == resultBits(bounded) && census == rows(KMeans.census(orders, fit.centroids)))
+    assert(jobs == boundedJobs, s"$jobs jobs, the fit alone $boundedJobs")
+    val (mb, mbJobs, _, _) = observed(KMeans.fitMiniBatch(emb, k = 8, dim = 64))
+    val ((fit2, census2), jobs2, _, _) = observed(KMeans.fitMiniBatchCensus(emb, k = 8, dim = 64))
+    assert(resultBits(fit2) == resultBits(mb) && census2 == rows(KMeans.census(emb, fit2.centroids)))
+    assert(jobs2 == mbJobs, s"$jobs2 jobs, the fit alone $mbJobs")
+    val (placed, placedJobs, _, _) = observed(KMeans.Points.withPlaced(emb, Nil, (64, 1e6), 1, 0L) { p =>
+      p.firstK(1)
+      observed(KMeans.censusOf(p, fit2.centroids))
+    })
+    assert(placed._1 == census2 && placed._2 == 1 && placedJobs == 2,
+      s"partitioned: ${placed._2} census jobs of $placedJobs")
+    orders.unpersist()
+    emb.unpersist()
+  }
+
   test("both inverse-CDF draw forms order a null key first: rows keyed 1, null, 2, 3 with " +
       "the key-1 point chosen draw key 2") {
     // weights null 1, key 2 100, key 3 400: at u = 1/5 the running sum

@@ -466,6 +466,19 @@ class PlansSpec extends SparkSpec {
     assert(math.floor(0.49999999999999994 + 0.5) == 1.0 && want(7) == 0L)
   }
 
+  test("roundHalfUpDistance is roundHalfUp on non-negative values, NaN and +Infinity") {
+    import graft.plans.PairDistStats.{roundHalfUp, roundHalfUpDistance}
+    val boundaries = (0 to 60).map(k => k + 0.5) ++ Seq(4503599627370495.5, 1e15 + 0.5)
+    val ladder = boundaries.flatMap(b => Seq(Math.nextDown(b), b, Math.nextUp(b)))
+    val edges = Seq(0.0, -0.0, Double.MinPositiveValue, 0.49999999999999994, 0.9999999999999999,
+      Math.nextDown(4.503599627370496e15), 4.503599627370496e15, 9.3e18, Double.MaxValue,
+      Double.PositiveInfinity, Double.NaN)
+    val rnd = new scala.util.Random(11)
+    (ladder ++ edges ++ Seq.fill(200000)(rnd.nextDouble() * 2e9)).foreach { d =>
+      assert(roundHalfUpDistance(d) == roundHalfUp(d), s"d=$d")
+    }
+  }
+
   test("native nearest_sq_dist equals the HOF min fold on real data") {
     val yh = Tables.yhOrders(spark, sf("0.001"))
     val cs = graft.operators.KMeans.seedFirstK(yh, 5).map(_.c)
