@@ -284,7 +284,8 @@ object Bench {
         .map(_.sortBy(f => f.getName.stripPrefix("sf").toDoubleOption.getOrElse(Double.MaxValue)))
         .flatMap(_.headOption).map(_.getPath).getOrElse(sfDir)
       val tiny = Tables.yhEmbeddings(spark, tinyDir).cache()
-      operators.KMeans.fit(tiny, k = 4, dim = 64, maxIter = 3, plusPlus = true, seed = 1L)
+      operators.KMeans.fit(tiny, k = 4, dim = 64, operators.KMeans.PlusPlus(seed = 1L),
+        operators.KMeans.Lloyd(maxIter = 3), maxCells = -1)
       tiny.unpersist()
     } catch { case e: Throwable => System.err.println(s"[bench] warm-up failed: ${e.getMessage}") }
     spark.catalog.clearCache()

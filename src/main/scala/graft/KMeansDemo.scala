@@ -40,7 +40,7 @@ object KMeansDemo {
     println(s"generated ${points.count()} points in 4 planted clusters")
 
     // seeding + Lloyd loop (k-means.sh:8-33)
-    val fit = KMeans.fit(points, k = 4, dim = 2, tol = 0.01, plusPlus = true, seed = 7)
+    val fit = KMeans.fit(points, k = 4, dim = 2, KMeans.PlusPlus(seed = 7), maxCells = -1)
     println(s"converged after ${fit.steps} steps (movement ${f"${fit.finalMovement}%.4f"})")
     fit.centroids.foreach(c =>
       println(f"  centroid j=${c.j} at (${c.c(0)}%8.3f, ${c.c(1)}%8.3f)"))

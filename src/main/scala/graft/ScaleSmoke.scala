@@ -345,14 +345,13 @@ object ScaleSmoke {
 
   /** The flagship 64-dim k-means‖ FIT, run live (not through the binding,
     * whose per-dir memo would let a second rep read the first rep's fit):
-    * fitAuto goes distributed past the local-twin threshold (200k×64 ≫
+    * the fit goes distributed past the 4M-cell placement gate (200k×64 ≫
     * 4M cells), so this times the real k-means‖ seeding + movement-gated
     * Lloyd loop at scale, then the assignment census over the corpus.
     */
   def kmFitLive(spark: SparkSession, dir: String): DataFrame = {
     val pts = Tables.yhEmbeddings(spark, dir).cache()
-    val fit = operators.KMeans.fitAuto(pts, k = 10, dim = 64,
-      parallelSeed = true, seed = 42)
+    val fit = operators.KMeans.fit(pts, k = 10, dim = 64, operators.KMeans.Parallel(seed = 42))
     operators.KMeans.assign(pts, fit.centroids)
       .groupBy("j").agg(count(lit(1)).as("n"))
   }
@@ -556,13 +555,13 @@ object ScaleSmoke {
     }
     // "fit" is self-contained (r17 verdict task 5): the LIKE-FOR-LIKE
     // distributed base for the fit-family scale row. The r17 families row
-    // compared a 0.45 s driver-local twin (fitAuto under the 4M-cell
+    // compared a 0.45 s driver-local twin (the fit under the 4M-cell
     // threshold at 1×) against the real distributed loop at 100× — an
     // honest adjudication but not a scaling measurement. Here BOTH tiers
-    // run KMeans.fit DIRECTLY — the distributed k-means‖ seeding +
-    // movement-gated Lloyd loop; fitLocal is spec-pinned bit-identical,
-    // so bypassing fitAuto's tier choice changes nothing but the engine
-    // under test — at x(factor/10) and x(factor), then the assignment
+    // run KMeans.fit PARTITIONED (maxCells = -1) — the distributed
+    // k-means‖ seeding + movement-gated Lloyd loop; the collected placement
+    // is spec-pinned bit-identical, so bypassing the gate changes nothing
+    // but the engine under test — at x(factor/10) and x(factor), then the assignment
     // census. The ratio prices the distributed engine against a true 10×
     // volume step, with the census plan shape pinned invariant.
     if (mode == "fit") {
@@ -589,8 +588,8 @@ object ScaleSmoke {
         var centroids = Seq.empty[operators.KMeans.Centroid]
         val walls = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
-          val fit = operators.KMeans.fit(pts, k = 10, dim = 64,
-            parallelSeed = true, seed = 42)
+          val fit = operators.KMeans.fit(pts, k = 10, dim = 64, operators.KMeans.Parallel(seed = 42),
+            maxCells = -1)
           steps = fit.steps
           centroids = fit.centroids // deterministic: same seed every rep
           operators.KMeans.assign(pts, fit.centroids)

@@ -167,9 +167,9 @@ object SparkEntry {
       // arrives multi-partition and the same plan parallelizes naturally.
       val pts = Tables.yhEmbeddings(s, dir).cache()
       // k-means|| seeding: rounds+1 scans instead of k-1 — the scale path.
-      // fitAuto solves sub-threshold inputs driver-local with bit-identical
+      // The fit solves sub-threshold inputs driver-local with bit-identical
       // results (KMeansSpec pin); at real scale the distributed loop runs.
-      KMeans.fitAuto(pts, k = 10, dim = 64, parallelSeed = true, seed = 42)
+      KMeans.fit(pts, k = 10, dim = 64, KMeans.Parallel(seed = 42))
     })
 
   /** Bucketed-table pair for `q_bucketed_join`: pay the shuffle ONCE at
@@ -449,7 +449,7 @@ object SparkEntry {
     })
 
   /** Spherical twin of [[embFit]] for cosine ANN, in the BOUNDED
-    * oracle-replayable form ([[KMeans.fitBounded]]): exact inverse-CDF
+    * oracle-replayable form ([[KMeans.InverseCdf]]): exact inverse-CDF
     * k-means++ seeding + ≤3 movement-gated Lloyd steps over the
     * L2-normalized embeddings — every stage ANSI-expressible, so
     * `sim_ivf_fitted` is DuckDB hash-checked end to end (fit included).
@@ -460,8 +460,7 @@ object SparkEntry {
     fitCache.getOrElseUpdate("normb|" + dirKey(dir), {
       val pts = Similarity.normalize(Tables.read(s, dir, "embeddings"))
         .select(col("vec_id").as("i"), col("embedding").as("Y")).cache()
-      KMeans.fitBounded(pts, k = 10, dim = 64, tol = 0.01, lloydSteps = 3,
-        fxScale = 1e6, weightScale = 1e6)
+      KMeans.fit(pts, k = 10, dim = 64, KMeans.InverseCdf(weightScale = 1e6), KMeans.Lloyd(0.01, 3))
     })
 
   /** `dedup_components` and `dedup_keep` consume the SAME iterative
@@ -568,6 +567,12 @@ object SparkEntry {
     val n = census.toMap
     fit.centroids.flatMap(c => n.get(c.j).map((c.j, _, c.c(0), c.c(1)))).toDF("j", "n", "cx", "cy")
   }
+
+  /** A fit and its census rows counted over the fit's own placement
+    * ([[KMeans.fitThen]]): collected, the census runs no job.
+    */
+  private def fitCensus(placed: KMeans.Points, fit: KMeans.FitResult): (KMeans.FitResult, Seq[(Long, Long)]) =
+    (fit, KMeans.censusOf(placed, fit.centroids))
 
   private def xy(df: DataFrame): DataFrame =
     df.select(col("i"), element_at(col("Y"), 1).as("x"), element_at(col("Y"), 2).as("y"))
@@ -1051,15 +1056,15 @@ object SparkEntry {
     }),
 
     // ---- the BOUNDED oracle-replayable flagship fit over the orders YH
-    // (KMeans.fitBounded: exact inverse-CDF k-means++ with the FixedUs
+    // (KMeans.InverseCdf: exact inverse-CDF k-means++ with the FixedUs
     // rational draws + ≤3 movement-gated Lloyd steps) — the headline fit
     // path cross-engine HASH-CHECKED end to end (OracleSql.kmFitBounded
     // unrolls seeding, steps, gate and census as CTEs; reference
     // k-means.sh:16-33 is this loop). km_fit stays the free-running
     // k-means|| twin (rows-only by construction). ----
     "km_fit_bounded" -> ((s, dir) =>
-      censusWith(s, KMeans.fitBoundedCensus(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 3, fxScale = 1e4))),
+      censusWith(s, KMeans.fitThen(Tables.yhOrders(s, dir), k = 4, dim = 2, KMeans.InverseCdf(),
+        KMeans.Lloyd(0.01, 3), fxScale = 1e4)(fitCensus))),
 
     // ---- the FREE-RUNNING fit: km_fit_bounded's exact chain with the
     // step budget lifted to a safety cap, so the loop runs until the
@@ -1068,8 +1073,8 @@ object SparkEntry {
     // oracle replays it as a RECURSIVE CTE (OracleSql.kmFitFree): data
     // decides the iteration count on BOTH engines ----
     "km_fit_free" -> ((s, dir) =>
-      censusWith(s, KMeans.fitBoundedCensus(Tables.yhOrders(s, dir), k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 64, fxScale = 1e4))),
+      censusWith(s, KMeans.fitThen(Tables.yhOrders(s, dir), k = 4, dim = 2, KMeans.InverseCdf(),
+        KMeans.Lloyd(0.01, 64), fxScale = 1e4)(fitCensus))),
 
     // ---- full fit loop (E1). Round 16: hash-gated via a PINNED-FIXTURE
     // census oracle (OracleSql.pinnedCensus) — the seeded k-means‖ fit is
@@ -1087,7 +1092,8 @@ object SparkEntry {
     // km_fit2_exact discipline extended to the whole mini-batch loop ----
     "km_fit_minibatch" -> ((s, dir) => {
       import s.implicits._
-      KMeans.fitMiniBatchCensus(Tables.yhEmbeddings(s, dir), k = 8, dim = 64)._2.toDF("j", "n")
+      KMeans.fitThen(Tables.yhEmbeddings(s, dir), k = 8, dim = 64, KMeans.FirstK, KMeans.MiniBatch())(
+        fitCensus)._2.toDF("j", "n")
     }),
 
     // ---- the WCR centroid log (S2: append-only iteration history).
@@ -1103,7 +1109,7 @@ object SparkEntry {
     "km_wcr_log" -> ((s, dir) => {
       import s.implicits._
       val yh = Tables.yhOrders(s, dir).cache()
-      val fit = KMeans.fit(yh, k = 4, dim = 2, tol = 0.01, maxIter = 3,
+      val fit = KMeans.fit(yh, k = 4, dim = 2, KMeans.FirstK, KMeans.Lloyd(0.01, 3), maxCells = -1,
         fxScale = 1e4)
       yh.unpersist()
       fit.log.map(e => (e.step, e.j, e.c(0), e.c(1)))
@@ -1542,7 +1548,7 @@ object SparkEntry {
     // from a REAL k-means++ + Lloyd fit over the L2-NORMALIZED embeddings
     // (spherical cells — the geometrically sound blocking for cosine; see
     // Similarity.normalize). The fit is the BOUNDED oracle-replayable form
-    // (KMeans.fitBounded — the km_gap_fitted discipline), so the whole
+    // (KMeans.InverseCdf — the km_gap_fitted discipline), so the whole
     // query, fit included, is DuckDB hash-checked; fitted-cell recall vs
     // brute force stays pinned in SimilaritySpec.
     "sim_ivf_fitted" -> ((s, dir) => {

@@ -1264,7 +1264,7 @@ object Dedup {
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       maxIter: Int = 25, localMaxRows: Long = 2000000L): DataFrame = {
-    // DRIVER-LOCAL TWIN under `localMaxRows` (r19, the fitAuto/fitBounded
+    // DRIVER-LOCAL TWIN under `localMaxRows` (r19, the gated k-means fit's
     // discipline applied to the component loop): at sample sizes the
     // distributed loop is pure per-round fixed cost — each of the 2-6
     // label-propagation rounds pays a join+groupBy plan, an eager

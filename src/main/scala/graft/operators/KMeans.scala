@@ -38,14 +38,13 @@ import graft.plans.NearestSqDistLit
   *    scan per step serves every still-moving centroid set, so a choose-K
   *    sweep pays one job per step, not one per (k, step).
   *  - Each fit places its points once ([[Points]]) for its seeding, Lloyd
-  *    loop and scoring (a fitted query's census too: [[fitBoundedCensus]],
-  *    [[fitMiniBatchCensus]]): PARTITIONED, each partition decoded ONCE into a
-  *    resident block of flat primitive arrays (keys, coordinates, their
-  *    fixed-point encodes, the k-means|| coins; 16 B per cell), persisted
-  *    MEMORY_ONLY until the fit ends (the driver holds O(k·dim)); or
-  *    COLLECTED, the same blocks on the driver in partition order, while
-  *    `rows·dim ≤ localMaxCells` (default 4M cells, 64 MB; [[fitAuto]],
-  *    [[fitBounded]], [[fitMiniBatch]], Quality.optimalKSweep and both gap
+  *    loop and scoring (a fitted query's census too: [[fitThen]]):
+  *    PARTITIONED, each partition decoded ONCE into a resident block of
+  *    flat primitive arrays (keys, coordinates, their fixed-point encodes,
+  *    the k-means|| coins; 16 B per cell), persisted MEMORY_ONLY until the
+  *    fit ends (the driver holds O(k·dim)); or COLLECTED, the same blocks
+  *    on the driver in partition order, while `rows·dim ≤ maxCells`
+  *    (default 4M cells, 64 MB; [[fit]], Quality.optimalKSweep and both gap
   *    statistics). The size gate is the job that builds the blocks
   *    ([[Points.place]]), which under the bound also brings them. A scan
   *    runs per block with its partition's index, so either placement gives
@@ -325,45 +324,46 @@ object KMeans {
     }
   }
 
-  /** [[coinCol]] for rounds 1..`rounds`. */
-  private[graft] def coinCols(seed: Long, rounds: Int): Seq[Column] =
-    (1 to rounds).map(coinCol(seed, _))
+  /** k-means||' rounds, and the candidates each draws per centroid. */
+  private[graft] val ParallelRounds = 3
+  private val ParallelOverFactor = 2.0
+
+  /** [[coinCol]] for rounds 1..[[ParallelRounds]]. */
+  private[graft] def coinCols(seed: Long): Seq[Column] =
+    (1 to ParallelRounds).map(coinCol(seed, _))
 
   /** k-means|| seeding (Bahmani et al., "Scalable k-means++", VLDB 2012 —
     * the algorithm MLlib also uses): instead of k−1 sequential cluster-wide
     * rounds, run a FIXED small number of rounds that each oversample
-    * ~`overFactor·k` candidates in parallel (each point joins the candidate
+    * ~2·k candidates in parallel (each point joins the candidate
     * set independently with probability min(1, l·d²/ϕ)), then solve the
     * tiny weighted clustering problem on the candidates driver-side.
     *
     * Why it matters at 100 TB: sequential ++ is k−1 full scans BY DESIGN
-    * (each round depends on the last); k-means|| needs 2·`rounds` + 1
+    * (each round depends on the last); k-means|| needs 2·rounds + 1
     * scans regardless of k. Candidate sampling is deterministic — the per-point
     * coin is `xxhash64(i, seed, round)` mapped to [0, 1), a pure function of
     * the data, so any partitioning yields the same seeds (unlike `rand`,
     * which draws per partition index).
     *
     * The driver-side refine is weighted k-means++ then weighted Lloyd on
-    * ≤ rounds·overFactor·k candidates (each weighted by the number of points
+    * ≤ rounds·2·k candidates (each weighted by the number of points
     * it attracts) — O(candidates²·dim) driver work, microscopic next to one
     * data scan.
     *
     * The scans are [[parallelPhi]], [[parallelDraw]] and [[parallelWeights]],
     * each the arithmetic of the DataFrame step it replaces (KMeansSpec's
-    * reference), over the resident blocks here and the collected rows in
-    * [[fitLocal]]. A null `Y` has no distance and takes no part in them.
+    * reference), over the resident blocks here and over collected blocks
+    * in a gated [[fit]]. A null `Y` has no distance and takes no part in them.
     */
-  def seedParallel(points: DataFrame, k: Int, seed: Long, rounds: Int = 3,
-      overFactor: Double = 2.0): Seq[Centroid] =
-    Points.withPartitioned(points, coinCols(seed, rounds))(
-      parallelSeeds(_, k, seed, rounds, overFactor))
+  def seedParallel(points: DataFrame, k: Int, seed: Long): Seq[Centroid] =
+    Points.withPartitioned(points, coinCols(seed))(parallelSeeds(_, k, seed))
 
-  /** [[seedParallel]] over points carrying the coins of rounds 1..`rounds`. */
-  private[operators] def parallelSeeds(points: Points, k: Int, seed: Long, rounds: Int,
-      overFactor: Double): Seq[Centroid] = {
+  /** [[seedParallel]] over points carrying [[coinCols]]' coins. */
+  private[operators] def parallelSeeds(points: Points, k: Int, seed: Long): Seq[Centroid] = {
     var cands = points.firstK(1).map(_.c).toVector
-    val l = overFactor * k
-    for (r <- 1 to rounds) {
+    val l = ParallelOverFactor * k
+    for (r <- 1 to ParallelRounds) {
       val phi = parallelPhi(points, cands)
       if (phi > 0) cands = (cands ++ parallelDraw(points, cands, r, phi, l)).distinct
     }
@@ -541,14 +541,6 @@ object KMeans {
     js.indices.filter(counts(_) > 0).groupMapReduce(js)(counts(_))(_ + _).toSeq.sorted
   }
 
-  /** `fit` over placed points, and [[censusOf]] its centroids over the same
-    * placement: a fit and its census build the blocks once.
-    */
-  private def withCensus(fit: Points => FitResult)(placed: Points): (FitResult, Seq[(Long, Long)]) = {
-    val f = fit(placed)
-    (f, censusOf(placed, f.centroids))
-  }
-
   // ------------------------------------------------------------- Lloyd step
 
   /** New centroids = per-cluster, per-dimension mean (reference Lloyd insert,
@@ -583,7 +575,7 @@ object KMeans {
     */
   private type Stats = scala.collection.mutable.LongMap[(Array[Long], Long)]
 
-  /** The Lloyd step of the fit loop ([[iterate]]) and [[fitMiniBatch]],
+  /** The Lloyd step of the fit loop ([[iterate]]) and [[MiniBatch]],
     * for every centroid set in `sets` at once (set x over point set
     * `of(x)`, [[bySets]]), as ONE scan of the points
     * described as `name`: each point's [[fxEncode]]d coordinates (held by
@@ -1396,56 +1388,107 @@ object KMeans {
     }.sum
   }
 
-  // ----------------------------------------------------- size-aware local fit
+  // -------------------------------------------------------------------- fit
 
-  /** The size-gated fits' default collected bound: 4M cells, 64 MB as blocks. */
-  private val LocalMaxCells = 4000000L
+  /** The fits' default collected bound: 4M cells, 64 MB as blocks. */
+  private[graft] val LocalMaxCells = 4000000L
 
-  /** Size-aware fit: identical results to [[fit]] (bitwise, pinned in
-    * KMeansSpec), the placement picked by input size from the job that
-    * builds it ([[Points.place]]: the block build is the size gate, no
-    * count runs first). While `rows·dim` fits on the driver
-    * (`localMaxCells`, default 4M cells, 64 MB as blocks) that job brings the
-    * points ([[fitLocal]]'s placement) and the 30-odd Lloyd steps and
-    * k-means++ rounds stop paying ~0.1 s of per-job scheduling each; past
-    * it they stay resident blocks and the job's first rows are the first-k
-    * seeds ([[fit]]). Every seeding is gated: the collected blocks keep
-    * their partition indices, so `plusPlus`'s `rand(seed)` draw, seeded per
-    * partition, replays there too.
+  /** How [[fit]] picks its first centroids. */
+  sealed trait Seeding
+  /** The k points with the smallest keys ([[seedFirstK]]). */
+  case object FirstK extends Seeding
+  /** k-means++ ([[seedPlusPlus]]), its per-partition `rand(seed)` replayed collected too. */
+  final case class PlusPlus(seed: Long) extends Seeding
+  /** k-means|| ([[seedParallel]]) over points placed with their coins. */
+  final case class Parallel(seed: Long) extends Seeding
+
+  /** Exact inverse-CDF k-means++ ([[inverseCdfSeeds]]: the min-key point,
+    * then the [[FixedUs]] draws), ORACLE-REPLAYABLE: every stage is
+    * ANSI-expressible, so with a [[Lloyd]] step bounded at a few
+    * movement-gated iterations (the published cost of hash-exactness, the
+    * km_wcr_log contract) a query built on the centroids is DuckDB
+    * hash-checked END TO END (`km_fit_bounded`, `sim_ivf_fitted`).
+    * `weightScale` lifts the D² weights into integer range for small
+    * coordinates (L2-normalized vectors: 1e6).
     */
-  def fitAuto(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
-      maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
-      fxScale: Double = 1e6, parallelSeed: Boolean = false,
-      localMaxCells: Long = LocalMaxCells): FitResult =
-    placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, localMaxCells, plusPlus)
+  final case class InverseCdf(weightScale: Double = 1.0) extends Seeding
 
-  /** [[fit]] over COLLECTED points, for small inputs — the identical
-    * `FitResult` bit for bit: [[fitAuto]]'s placement with no bound, whose
-    * one job brings the rows and, for k-means||, every round's coin to the
-    * driver, and the same seeding passes and [[iterate]] run over them.
+  /** Resume from trained centroids `cs` ([[saveModel]], [[loadModel]]): steps
+    * are numbered from `startStep` and only a fresh fit (0) logs its seeds,
+    * so a resumed log CONCATENATES with the original's, bit-identical to the
+    * uninterrupted fit (pinned in KMeansSpec).
     */
-  def fitLocal(points: DataFrame, k: Int, dim: Int, tol: Double,
-      maxIter: Int, seed: Long, fxScale: Double, parallelSeed: Boolean,
-      rounds: Int = 3, overFactor: Double = 2.0): FitResult =
-    placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, Long.MaxValue,
-      plusPlus = false, rounds, overFactor)
+  final case class Given(cs: Seq[Centroid], startStep: Long = 0L) extends Seeding
 
-  /** The first-k, k-means|| or (`plusPlus`) k-means++ fit over
-    * [[Points.place]]'s placement at `maxCells` ([[fitAuto]], [[fitLocal]],
-    * [[fit]]).
+  /** How [[fit]] moves its centroids. */
+  sealed trait Step
+  /** Lloyd steps ([[iterate]]) until the movement is below `tol` or `maxIter` steps ran. */
+  final case class Lloyd(tol: Double = 0.01, maxIter: Int = 50) extends Step
+
+  /** Mini-batch k-means (Sculley 2010): each step assigns a deterministic
+    * BATCH of `frac` of the points (an int64 LCG bucket over the id, salted
+    * `seed + step`) and moves each touched centroid by Sculley's rule in
+    * AGGREGATED form, `c ← c + (s − cnt·c) / n_j` for `cnt` batch points
+    * summing to `s` and n_j points absorbed so far, off the fit loop's
+    * sufficient-stats scan: 20 steps cost ~2 full passes. The oracle
+    * replays it (`km_fit_minibatch`); quality vs full Lloyd is pinned in
+    * KMeansSpec.
     */
-  private def placedFit(points: DataFrame, k: Int, dim: Int, tol: Double, maxIter: Int,
-      seed: Long, fxScale: Double, parallelSeed: Boolean, maxCells: Long, plusPlus: Boolean,
-      rounds: Int = 3, overFactor: Double = 2.0): FitResult = {
-    requireFx(fxScale)
-    val coins = if (parallelSeed) coinCols(seed, rounds) else Nil
-    val firstK = if (parallelSeed || plusPlus) 1 else k
-    Points.withPlaced(points, coins, (dim, fxScale), firstK, maxCells) { placed =>
-      val cs = if (parallelSeed) parallelSeeds(placed, k, seed, rounds, overFactor)
-        else if (plusPlus) plusPlusSeeds(placed, k, seed) else placed.firstK(k)
-      iterate(placed, Seq(cs), dim, tol, maxIter, fxScale, startStep = 0L).head
-    }
+  final case class MiniBatch(frac: Double = 0.1, seed: Long = 42L, tol: Double = 0.01,
+      maxIter: Int = 20) extends Step {
+    require(frac > 0 && frac <= 1, s"batchFrac $frac not in (0,1]")
   }
+
+  /** The k-means fit — the reference's driver loop (k-means.sh:9-33):
+    * `seeding`, then `step` until the movement drops below its `tol`
+    * (reference stop: `toUInt32(sum(d)*100) == 0`) or its `maxIter`. The
+    * points (cached by the caller) are placed ONCE by the job that builds
+    * their blocks ([[Points.place]]): COLLECTED iff `rows·dim ≤ maxCells`
+    * (never for a negative `maxCells`), so a small fit pays no per-step
+    * job, else resident blocks; either gives the same bits (KMeansSpec).
+    * [[Given]] centroids at a negative `maxCells` run no placement job.
+    */
+  def fit(points: DataFrame, k: Int, dim: Int, seeding: Seeding, step: Step = Lloyd(),
+      maxCells: Long = LocalMaxCells, fxScale: Double = 1e6): FitResult =
+    fitThen(points, k, dim, seeding, step, maxCells, fxScale)((_, f) => f)
+
+  /** [[fit]], then `after` over the fit's own placement before it is
+    * released (a fitted query's census: [[censusOf]]).
+    */
+  private[graft] def fitThen[A](points: DataFrame, k: Int, dim: Int, seeding: Seeding,
+      step: Step = Lloyd(), maxCells: Long = LocalMaxCells, fxScale: Double = 1e6)(
+      after: (Points, FitResult) => A): A = {
+    requireFx(fxScale)
+    val (coins, firstK, startStep) = seeding match {
+      case FirstK => (Nil, k, 0L)
+      case Parallel(seed) => (coinCols(seed), 1, 0L)
+      case Given(cs, from) => require(cs.size == k, s"k = $k, ${cs.size} centroids given"); (Nil, 0, from)
+      case _ => (Nil, 1, 0L)
+    }
+    def run(placed: Points): A = {
+      val cs = seeding match {
+        case FirstK => placed.firstK(k)
+        case PlusPlus(seed) => plusPlusSeeds(placed, k, seed)
+        case Parallel(seed) => parallelSeeds(placed, k, seed)
+        case InverseCdf(weightScale) => inverseCdfSeeds(placed, k, weightScale)._1.head
+        case Given(given, _) => given
+      }
+      after(placed, step match {
+        case Lloyd(tol, maxIter) => iterate(placed, Seq(cs), dim, tol, maxIter, fxScale, startStep).head
+        case mb: MiniBatch => miniBatch(placed, cs, dim, mb, fxScale, startStep)
+      })
+    }
+    if (maxCells < 0 && firstK == 0) Points.withPartitioned(points, coins, Some((dim, fxScale)))(run)
+    else Points.withPlaced(points, coins, (dim, fxScale), firstK, maxCells)(run)
+  }
+
+  /** `fit(points, k, dim, FirstK, Lloyd(tol, maxIter))`, kept for perfbench, which calls it. */
+  def fitAuto(points: DataFrame, k: Int, dim: Int, tol: Double, maxIter: Int): FitResult =
+    fit(points, k, dim, FirstK, Lloyd(tol, maxIter))
+
+  /** `fit(points, cs.size, dim, Given(cs), Lloyd(tol, maxIter), -1)`, kept for perfbench. */
+  def fitFrom(points: DataFrame, cs: Seq[Centroid], dim: Int, tol: Double, maxIter: Int): FitResult =
+    fit(points, cs.size, dim, Given(cs), Lloyd(tol, maxIter), maxCells = -1L)
 
   /** Spark's `round(x)` for doubles (`BigDecimal(x).setScale(0, HALF_UP)`)
     * followed by a long cast — the ONE Spark scalar the local kernels must
@@ -1495,20 +1538,6 @@ object KMeans {
     }.sum
   }
 
-  // -------------------------------------------------------------- fit loop
-
-  /** The reference's full driver loop (k-means.sh:16-33): iterate
-    * assign → re-average until total movement < `tol` (reference stop:
-    * `toUInt32(sum(d)*100) == 0`, i.e. movement < 0.01) or `maxIter`.
-    * `points` should be cached by the caller (reference `Memory` engine).
-    * Always over resident blocks ([[Points.place]] with no collected
-    * bound): the partitioned reference every gated fit reproduces.
-    */
-  def fit(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
-      maxIter: Int = 50, seed: Long = 42L, plusPlus: Boolean = false,
-      fxScale: Double = 1e6, parallelSeed: Boolean = false): FitResult =
-    placedFit(points, k, dim, tol, maxIter, seed, fxScale, parallelSeed, maxCells = -1L, plusPlus)
-
   /** Per-iteration query tuning, restored on exit: around the planning of
     * the points plan whose blocks make either placement ([[Points]]). Every
     * later scan is a kernel job that plans nothing; what still plans a
@@ -1549,22 +1578,8 @@ object KMeans {
     }
   }
 
-  /** Resume a fit from previously trained centroids — the restart path a
-    * multi-hour 100 TB fit needs: [[saveModel]] after any step, reload, and
-    * continue. Steps are numbered from `startStep` so a resumed run's log
-    * CONCATENATES with the original's into one coherent WCR history, and
-    * iterating from a converged-at-step-s state is bit-identical to having
-    * run the plain fit for s + extra steps (each Lloyd step depends only on
-    * the current centroid set — pinned in KMeansSpec).
-    */
-  def fitFrom(points: DataFrame, centroids: Seq[Centroid], dim: Int,
-      tol: Double = 0.01, maxIter: Int = 50, fxScale: Double = 1e6,
-      startStep: Long = 0L): FitResult =
-    Points.withPartitioned(points, fxAt = Some((dim, fxScale)))(
-      iterate(_, Seq(centroids), dim, tol, maxIter, fxScale, startStep).head)
-
   /** Fixed rational inverse-CDF draws shared by the ORACLE-REPLAYABLE
-    * bounded fits ([[fitBounded]], Quality.gapStatisticFitted): the u for
+    * bounded fits ([[InverseCdf]], Quality.gapStatisticFitted): the u for
     * k-means++ round r is `FixedUs((r − 2) mod 7)` — small numerators and
     * denominators keep the integer threshold compare `cw·uDen ≥ tw·uNum`
     * far from the Long overflow bound. Each round is an [[inverseCdfDraw]].
@@ -1573,54 +1588,7 @@ object KMeans {
     (3L, 7L), (5L, 11L), (7L, 13L), (11L, 17L))
   def fixedU(r: Int): (Long, Long) = FixedUs((r - 2) % FixedUs.size)
 
-  /** Bounded ORACLE-REPLAYABLE fit — the km_gap_fitted discipline as a
-    * standalone entry point: exact inverse-CDF k-means++ seeding with the
-    * [[FixedUs]] rational draws (first seed = the min-key point, the
-    * reference's deterministic pick), then [[fitFrom]]'s movement-gated
-    * Lloyd bounded at `lloydSteps` iterations. Every stage is
-    * ANSI-expressible (anti-join by coordinates, integer D² weights,
-    * windowed cumulative threshold pick, fixed-point re-averages), so a
-    * query built on the returned centroids can be DuckDB-oracle
-    * hash-checked END TO END (`sim_ivf_fitted`). `weightScale` lifts the
-    * D² draw weights into integer range for small-coordinate data
-    * (L2-normalized vectors: 1e6 — at weightScale 1 their sub-4.0 squared
-    * distances would round to a handful of integer ties and degrade the
-    * draw).
-    *
-    * Bounding the Lloyd loop at `lloydSteps` movement-gated iterations is
-    * the published cost of hash-exactness (the km_wcr_log contract); on
-    * data where Lloyd converges within the budget the bounded and free
-    * fits coincide.
-    *
-    * One body over [[Points.place]]'s placement, as [[fitAuto]]'s: the
-    * points are collected while `rows·dim ≤ localMaxCells`, else resident
-    * blocks, and the [[inverseCdfSeeds]] draws and the [[iterate]] loop run
-    * over either with the same bits (KMeansSpec). Partitioned, the fit is
-    * the placement job, at most 2 jobs per draw (3 where the weights
-    * rescale) and 1 per Lloyd step.
-    */
-  def fitBounded(points: DataFrame, k: Int, dim: Int, tol: Double = 0.01,
-      lloydSteps: Int = 3, fxScale: Double = 1e6,
-      weightScale: Double = 1.0, localMaxCells: Long = LocalMaxCells): FitResult =
-    Points.withPlaced(points, Nil, (dim, fxScale), 1, localMaxCells)(
-      bounded(_, k, dim, tol, lloydSteps, fxScale, weightScale))
-
-  /** [[fitBounded]] at its default bounds, and [[census]]'s rows of its
-    * centroids counted over the fit's own placement: collected, the census
-    * runs no job.
-    */
-  private[graft] def fitBoundedCensus(points: DataFrame, k: Int, dim: Int, tol: Double,
-      lloydSteps: Int, fxScale: Double): (FitResult, Seq[(Long, Long)]) =
-    Points.withPlaced(points, Nil, (dim, fxScale), 1, LocalMaxCells)(
-      withCensus(bounded(_, k, dim, tol, lloydSteps, fxScale, weightScale = 1.0)))
-
-  /** [[fitBounded]]'s seeds and Lloyd loop over placed points. */
-  private def bounded(placed: Points, k: Int, dim: Int, tol: Double, lloydSteps: Int,
-      fxScale: Double, weightScale: Double): FitResult =
-    iterate(placed, inverseCdfSeeds(placed, k, weightScale)._1, dim, tol, lloydSteps, fxScale,
-      startStep = 0L).head
-
-  /** [[fitBounded]]'s seeds over placed points, for each point set in
+  /** [[InverseCdf]]'s seeds over placed points, for each point set in
     * `sets`: its min-key point, then [[inverseCdfDraw]]s 2..`kMax` at
     * [[fixedU]] (k's seeds: the k-prefix), every set's draw r in the same
     * scans ([[inverseCdfDraws]]). A draw that fails on the driver stops its
@@ -1631,7 +1599,7 @@ object KMeans {
   private[operators] def inverseCdfSeeds(points: Points, kMax: Int, weightScale: Double,
       sets: Seq[Int] = Seq(0)): (Seq[Seq[Centroid]], Option[Throwable]) = {
     val firsts = sets.map(points.firstK(1, _))
-    require(firsts.forall(_.nonEmpty), "fitBounded on an empty relation")
+    require(firsts.forall(_.nonEmpty), "an inverse-CDF seeding of an empty relation")
     (2 to kMax).foldLeft((firsts, Option.empty[Throwable])) { case ((seeds, failed), r) =>
       val (uN, uD) = fixedU(r)
       val drawn = inverseCdfDraws(points, sets zip seeds, uN, uD, weightScale).map(_.flatMap(_.toRight(
@@ -1685,16 +1653,16 @@ object KMeans {
     val bound = Long.MaxValue / math.max(uNum, math.max(uDen, 1L))
     // a draw waiting for the census of its query `q`, and what it does with it
     final case class Waiting(q: DrawQuery, next: DrawCensus => Either[Waiting, Option[Centroid]])
-    type Step = Either[Waiting, Option[Centroid]]
-    def tried(step: => Step): Either[Waiting, Try[Option[Centroid]]] =
+    type Progress = Either[Waiting, Option[Centroid]]
+    def tried(step: => Progress): Either[Waiting, Try[Option[Centroid]]] =
       Try(step).fold(e => Right(Failure(e)), _.map(Success(_)))
-    def start(set: Int, chosen: Seq[Centroid]): Step = {
+    def start(set: Int, chosen: Seq[Centroid]): Progress = {
       require(chosen.forall(_.c != null), "Y is null: a k-means point needs coordinates")
       val (lo, hi) = points.keyRangeOf(set).getOrElse((0L, -1L))
       def query(s: Double, lo: Long, hi: Long, nulls: Boolean, rows: Boolean) =
         DrawQuery(set, chosen, s, lo, hi, nulls, rows)
       // census `c` of the keys in [lo, hi] at scale s, after `cw` of weight in key order
-      def descend(c: DrawCensus, s: Double, total: Long, lo: Long, hi: Long, cw: Long): Step = {
+      def descend(c: DrawCensus, s: Double, total: Long, lo: Long, hi: Long, cw: Long): Progress = {
         val ends = c.sums.scanLeft(cw)(_ + _).tail // the weight to each bucket's end
         val b = ends.indices.indexWhere(b => c.ns(b) > 0 && ends(b) * uDen >= total * uNum)
         val width = java.lang.Long.divideUnsigned(hi - lo, DrawBuckets) + 1
@@ -1713,7 +1681,7 @@ object KMeans {
             .map(r => Centroid(chosen.map(_.j).max + 1, r._6.toSeq)))
         }))
       }
-      def census(c: DrawCensus, s: Double): Step = {
+      def census(c: DrawCensus, s: Double): Progress = {
         val total = c.total.longValueExact()
         require(total >= 0 && total <= bound,
           s"k-means++ draw would overflow Long: total weight $total × u=$uNum/$uDen; " +
@@ -1812,69 +1780,21 @@ object KMeans {
     c.length == p.n && c.indices.forall(d =>
       org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(c(d), p.y(p.yOff + d)) == 0)
 
-  /** Mini-batch k-means (Sculley 2010, "Web-scale k-means clustering"):
-    * each iteration assigns only a deterministic pseudo-random BATCH of
-    * points and nudges every touched centroid toward its batch mean with a
-    * per-centroid learning rate 1/n_j (n_j = points that centroid has ever
-    * absorbed). The scan per iteration is `batchFrac` of the data, so 20
-    * iterations cost ~2 full passes instead of 20 — the fit variant a
-    * 100 TB corpus actually runs when full Lloyd is too expensive.
-    *
-    * The batch is an LCG bucket over the point id (the transparent
-    * doc-split family): per-step salt `seed + step` re-draws membership
-    * each iteration, replayable on any engine. The update uses the
-    * AGGREGATED form of Sculley's per-point rule — for a centroid that
-    * absorbed `cnt` batch points summing to `s`:
-    * `c ← c + (s − cnt·c) / n_j_total` — one k-sized driver update per
-    * step off the SAME sufficient-stats scan as the fit loop's step (one
-    * kernel scan of the batch, ≤ P partial arrays to the driver, no
-    * shuffle).
-    *
-    * One loop, either placement, chosen by [[fitAuto]]'s one placement job
-    * ([[Points.place]]): while `rows·dim ≤ localMaxCells` (and
-    * `localMaxCells > 0`) the points are collected (saving ~20 jobs of fixed
-    * cost), past it they are resident blocks, and each step scans the rows
-    * the int64 LCG predicate keeps. The FitResult is bit-identical (pinned
-    * in KMeansSpec).
-    *
-    * Convergence is monitored with the same [[movement]] metric and `tol`;
-    * the log records each step's centroids so the WCR history stays
-    * replayable. Not oracle-hash-checkable (the learning-rate recursion is
-    * a per-step driver fold) — quality vs full Lloyd is pinned in
-    * KMeansSpec instead.
-    */
-  def fitMiniBatch(points: DataFrame, k: Int, dim: Int,
-      batchFrac: Double = 0.1, tol: Double = 0.01, maxIter: Int = 20,
-      seed: Long = 42L, localMaxCells: Long = LocalMaxCells): FitResult = {
-    require(batchFrac > 0 && batchFrac <= 1, s"batchFrac $batchFrac not in (0,1]")
-    Points.withPlaced(points, Nil, (dim, 1e6), k, if (localMaxCells > 0) localMaxCells else -1L)(
-      miniBatch(_, k, dim, batchFrac, tol, maxIter, seed))
-  }
-
-  /** [[fitMiniBatch]] at its defaults, and [[census]]'s rows of its
-    * centroids counted over the fit's own placement: collected, the census
-    * runs no job.
-    */
-  private[graft] def fitMiniBatchCensus(points: DataFrame, k: Int, dim: Int): (FitResult, Seq[(Long, Long)]) =
-    Points.withPlaced(points, Nil, (dim, 1e6), k, LocalMaxCells)(
-      withCensus(miniBatch(_, k, dim, batchFrac = 0.1, tol = 0.01, maxIter = 20, seed = 42L)))
-
-  /** [[fitMiniBatch]]'s loop over placed points. */
-  private def miniBatch(placed: Points, k: Int, dim: Int, batchFrac: Double, tol: Double,
-      maxIter: Int, seed: Long): FitResult = {
+  /** [[MiniBatch]]'s loop from `seeds`, steps numbered from `startStep`. */
+  private def miniBatch(placed: Points, seeds: Seq[Centroid], dim: Int, mb: MiniBatch,
+      fxScale: Double, startStep: Long): FitResult = {
     val mod = 2147483647L
-    val cut = (batchFrac * mod).toLong
-    var cs = placed.firstK(k)
-    var log = cs.map(c => LogEntry(0L, c.j, c.c))
-    val absorbed = scala.collection.mutable.Map.empty[Long, Long]
-      .withDefaultValue(0L)
-    var step = 0L
+    val cut = (mb.frac * mod).toLong
+    var cs = seeds
+    var log = if (startStep == 0L) cs.map(c => LogEntry(0L, c.j, c.c)) else Nil
+    val absorbed = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
+    var step = startStep
     var move = Double.MaxValue
-    while (move >= tol && step < maxIter) {
+    while (move >= mb.tol && step < startStep + mb.maxIter) {
       step += 1
-      val salt = 12345L + seed + step
+      val salt = 12345L + mb.seed + step
       val batch = placed.where(i => (i * 1103515245L + salt) % mod < cut)
-      val stats = kernelStats("KMeans.miniBatch", batch, Seq(cs), Nil, dim, fxScale = 1e6).head
+      val stats = kernelStats("KMeans.miniBatch", batch, Seq(cs), Nil, dim, fxScale).head
       val next = cs.map { c =>
         stats.get(c.j) match {
           case Some((sums, cnt)) =>
@@ -1882,7 +1802,7 @@ object KMeans {
             absorbed(c.j) = n
             // c + (batchSum − cnt·c)/n, batchSum exact off the fx longs
             Centroid(c.j, c.c.zipWithIndex.map { case (cc, d) =>
-              cc + (sums(d).toDouble / 1e6 - cnt.toDouble * cc) / n
+              cc + (sums(d).toDouble / fxScale - cnt.toDouble * cc) / n
             })
           case None => c // centroid untouched by this batch
         }
@@ -1894,16 +1814,15 @@ object KMeans {
     FitResult(cs, log, step, move)
   }
 
-  /** The fit loop — the ONE Lloyd loop of every fit ([[fit]], [[fitLocal]],
-    * [[fitFrom]], [[fitBounded]], the choose-K sweep and the fitted gap
-    * statistic), over either placement: every centroid set in `inits`
+  /** The fit loop — the ONE Lloyd loop of every fit ([[fit]]'s [[Lloyd]]
+    * step, the choose-K sweep and the gap statistics), over either placement: every centroid set in `inits`
     * iterates in LOCKSTEP over `points`, one [[kernelStats]] scan per step
     * serving all sets still moving. Each set keeps its own stop rule
     * (movement < `tol` or `maxIter` steps), log and emptied-cluster
     * warning, so its [[FitResult]] is bit-identical to fitting it alone,
     * partitioned or collected (pinned in KMeansSpec). Init `x` iterates
     * over point set `of(x)` (set 0 for every init where `of` is empty).
-    * Steps are numbered from `startStep` (see [[fitFrom]]).
+    * Steps are numbered from `startStep` (see [[Given]]).
     */
   private[graft] def iterate(points: Points, inits: Seq[Seq[Centroid]], dim: Int,
       tol: Double, maxIter: Int, fxScale: Double, startStep: Long, of: Seq[Int] = Nil): Seq[FitResult] = {

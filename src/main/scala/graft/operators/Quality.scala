@@ -105,11 +105,11 @@ object Quality {
   /** The reference's second entry point — the OptimalK sweep (reference
     * OptimalK.sql:3-21, README.md:39-43): one row (k, elbow_d1, elbow_d2,
     * silhouette) per candidate k, a null silhouette read as NaN. Each row is
-    * bit-identical to the reference's per-k loop `KMeans.fit(plusPlus =
-    * true)` + [[elbow]] + [[silhouetteSimplified]] (QualitySpec), but the
-    * points are placed once for the whole sweep, as `KMeans.fitAuto` places
-    * them (one job builds the blocks and, while `rows·dim` ≤ 4M cells,
-    * brings them to the driver; past it they stay resident until the end),
+    * bit-identical to the reference's per-k loop `KMeans.fit(PlusPlus)` +
+    * [[elbow]] + [[silhouetteSimplified]] (QualitySpec), but the points
+    * are placed once for the whole sweep, as `KMeans.fit` places them
+    * (one job builds the blocks and, while `rows·dim` ≤ 4M cells, brings
+    * them to the driver; past it they stay resident until the end),
     * and the ++ chain runs once, for `ks.max`: round r reads only the first
     * r seeds and `seed + r`, so `seeds.take(k)` is k's own seeding. Then
     * every k's fit runs in the one Lloyd loop's lockstep
@@ -126,7 +126,7 @@ object Quality {
     val spark = points.sparkSession
     import spark.implicits._
     (if (ks.isEmpty) Nil else KMeans.Points.withPlaced(points, Nil, (dim, 1e6), firstK = 1,
-        maxCells = 4000000L) { placed =>
+        maxCells = KMeans.LocalMaxCells) { placed =>
       val seeds = KMeans.plusPlusSeeds(placed, ks.max, seed)
       val fits = KMeans.iterate(placed, ks.map(seeds.take), dim, tol = 0.01, maxIter = maxIter,
         fxScale = 1e6, startStep = 0L)
@@ -562,12 +562,12 @@ object Quality {
     * the non-replayable fit internals with deterministic machinery the
     * oracle can unroll, keep the fit real):
     *  - seeding per set is NESTED exact inverse-CDF k-means++, the
-    *    reference's `centroidsInit` draw as [[KMeans.fitBounded]] runs it:
+    *    reference's `centroidsInit` draw as [[KMeans.InverseCdf]] runs it:
     *    first centroid = min-key point, then `ks.max − 1` D²-weighted draws
     *    with FIXED RATIONAL u's (integer-domain threshold compare —
     *    bit-reproducible in ANSI SQL); the k-fit starts from the first k
     *    seeds, so seeding cost is shared across the sweep;
-    *  - each (set, k) fit is `fitFrom`'s movement-gated Lloyd loop bounded
+    *  - each (set, k) fit is the movement-gated Lloyd loop bounded
     *    at `lloydSteps` iterations (fixed-point 1e4 re-averages, tol-gated
     *    stop — exactly the km_wcr_log unrolled-CTE contract);
     *  - reference sets are the SAME transparent-LCG uniforms as
@@ -582,7 +582,7 @@ object Quality {
     * Scale shape: ONE placement of `(i, Y)`, whose job also returns the
     * bounding box ([[KMeans.Points.place]]'s `box`), collected while
     * `rows ≤ localMaxRows` (−1: `(refSets + 1)·rows·dim` ≤ 4M cells, so
-    * the driver holds every set within [[KMeans.fitBounded]]'s budget; 0:
+    * the driver holds every set within [[KMeans.fit]]'s budget; 0:
     * resident blocks). The reference sets are derived from the placed rows
     * ([[KMeans.Points.withSets]]: on the driver, or in one job building
     * resident blocks of all four sets), and
@@ -597,7 +597,7 @@ object Quality {
       lloydSteps: Int = 3, fxScale: Double = 1e4,
       localMaxRows: Long = -1L): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
-    val maxCells = if (localMaxRows < 0) 4000000L / (refSets + 1)
+    val maxCells = if (localMaxRows < 0) KMeans.LocalMaxCells / (refSets + 1)
       else (BigInt(localMaxRows) * math.max(dim, 1)).min(Long.MaxValue).toLong
     val sets = 0 to refSets
     val ws = KMeans.Points.withPlaced(points, Nil, (dim, fxScale), firstK = 1, maxCells, box = true) { placed =>
@@ -661,7 +661,7 @@ object Quality {
     * never fires.
     *
     * Scale shape: ONE placement of the points with the k-means|| coins,
-    * collected while every set fits `KMeans.fitAuto`'s 4M-cell gate
+    * collected while every set fits `KMeans.fit`'s 4M-cell gate
     * together (`(refSets + 1)·rows·dim` ≤ 4M), whose job also returns the
     * bounding box; the reference sets are derived from it ([[KMeans.Points.withSets]])
     * as the rows `(i, Y)` of `spark.range(n)` keyed `1..n`, row `i` at the
@@ -669,7 +669,7 @@ object Quality {
     * the fixed-point Lloyd steps do not depend on the partitioning of
     * unique keys). Each (set, k) is seeded alone, all fits run in one
     * lockstep and one scan takes every dispersion: each k's fit is
-    * bit-identical to `fitAuto(parallelSeed = true)` alone and its W to
+    * bit-identical to `KMeans.fit` with `Parallel` seeding alone and its W to
     * `sumFx(nearest_sq_dist, scale)`. Reference coordinates are pure
     * xxhash64 functions of the row id (deterministic under ANY partitioning
     * — `rand()` is not).
@@ -679,8 +679,8 @@ object Quality {
       maxIter: Int = 20): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted, "need ascending ks")
     val sets = 0 to refSets
-    val ws = KMeans.Points.withPlaced(points, KMeans.coinCols(seed, 3), (dim, 1e6), firstK = 1,
-        maxCells = 4000000L / (refSets + 1), box = true) { placed =>
+    val ws = KMeans.Points.withPlaced(points, KMeans.coinCols(seed), (dim, 1e6), firstK = 1,
+        maxCells = KMeans.LocalMaxCells / (refSets + 1), box = true) { placed =>
       val (lo, hi) = boxBounds(placed.box, dim)
       KMeans.Points.withSets(placed, refSets, dim) { (s, _, pos, y, u) =>
         uniformRefRow(s - 1, dim, seed, pos, lo, hi, y)
@@ -692,7 +692,7 @@ object Quality {
         // gap), and rand()-based ++ draws depend on partitioning — k-means||
         // spreads seeds AND keeps the fit a pure function of the data
         val of = sets.flatMap(s => ks.map(_ => s))
-        val inits = sets.flatMap(s => ks.map(KMeans.parallelSeeds(all.only(s), _, seed, 3, 2.0)))
+        val inits = sets.flatMap(s => ks.map(KMeans.parallelSeeds(all.only(s), _, seed)))
         val fits = KMeans.iterate(all, inits, dim, tol = 0.01, maxIter, 1e6, startStep = 0L, of)
         elbowSums(all, fits.map(_.centroids), None, scale, of).map(_._2.get).grouped(ks.size).toSeq
       }

@@ -85,7 +85,7 @@ object QualityModel {
       var w = Seq.fill(4)(BigInt(0))
       if (localMaxRows > 0 && n <= localMaxRows) {
         // DRIVER-LOCAL GD TWIN under `localMaxRows` (r19, the
-        // fitAuto/fitBounded discipline applied to the training loop): the
+        // gated k-means fit's discipline applied to the training loop): the
         // distributed loop below pays one aggregate JOB plus one fresh
         // Catalyst plan + codegen compile PER ITERATION — profiled as the
         // bulk of doc_quality_lr's wall at bench scale (45 jobs, ~0.15 s of

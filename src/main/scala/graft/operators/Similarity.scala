@@ -572,7 +572,7 @@ object Similarity {
 
   /** ACT on [[rebalanceDecision]]: keep the quantizer if the worst cell
     * load is within bound, otherwise re-fit the same number of cells over
-    * the corpus ([[KMeans.fitBounded]] — deterministic seeds, bounded
+    * the corpus ([[KMeans.InverseCdf]] — deterministic seeds, bounded
     * steps) and return the new centroids. The collect is ONE decision row;
     * the re-fit is the engine's own bounded fit chain. ScaleSpec proves the
     * trigger on a skewed planted corpus: misaligned fixed cells trip the
@@ -587,7 +587,7 @@ object Similarity {
       val pts = emb2v(emb).select(col("vec_id").as("i"), col("v").as("Y"))
       val k = centroids.size
       // refit ENGINE by k (round 17, found pricing the trigger at 2M×353):
-      // fitBounded's exact sequential k-means++ seeding is k-1 corpus
+      // the inverse-CDF fit's exact sequential k-means++ seeding is k-1 corpus
       // scans — fine at quantizer-census k (≤ tens, the spec-pinned
       // suite path), quadratic-feeling at scale-grade k where it would
       // dwarf the probe tax it exists to remove. Past 64 cells the
@@ -595,11 +595,10 @@ object Similarity {
       // bounded movement-gated Lloyd budget, different (equally valid)
       // seeds; the decision bound, not seed identity, is the contract.
       if (k <= 64)
-        KMeans.fitBounded(pts, k = k, dim = dim,
-          lloydSteps = lloydSteps).centroids
+        KMeans.fit(pts, k = k, dim = dim, KMeans.InverseCdf(), KMeans.Lloyd(0.01, lloydSteps)).centroids
       else
-        KMeans.fit(pts, k = k, dim = dim, tol = 0.01, maxIter = lloydSteps,
-          parallelSeed = true).centroids
+        KMeans.fit(pts, k = k, dim = dim, KMeans.Parallel(seed = 42), KMeans.Lloyd(0.01, lloydSteps),
+          maxCells = -1).centroids
     }
   }
 
@@ -1877,7 +1876,7 @@ object Similarity {
   }
 
   /** [[assignTwoLevel]] with an EXPLICIT super set — the production form:
-    * supers from a coarse fit over the corpus (`KMeans.fitBounded`
+    * supers from a coarse fit over the corpus (`KMeans.fit`
     * composes), not an arbitrary prefix of the fine centroids. MEASURED
     * on sf0.001 (SimilaritySpec): on the near-uniform synthetic corpus
     * EVERY configuration lands at ~43–52% agreement (arb fine + prefix
@@ -2293,21 +2292,22 @@ object Similarity {
   }
 
   /** TRAINED PQ codebook — the production path: one k-means fit per
-    * subspace over that subspace's slices ([[graft.operators.KMeans.fitAuto]]
-    * — distributed Lloyd at scale, the bit-identical driver-local twin at
-    * these test sizes). Sub-centroid order follows centroid id so codes are
-    * deterministic. Same shapes as [[pqCodebook]] downstream; the seed
-    * variant stays as the oracle-replayable form.
+    * subspace over that subspace's slices ([[graft.operators.KMeans.fit]]
+    * with first-k seeds, the k smallest `vec_id`s — distributed Lloyd at
+    * scale, the bit-identical driver-local placement at these test sizes).
+    * Sub-centroid order follows centroid id so codes are deterministic.
+    * Same shapes as [[pqCodebook]] downstream; the seed variant stays as
+    * the oracle-replayable form.
     */
   def pqCodebookFitted(emb: DataFrame, m: Int = 8, k: Int = 16,
-      dim: Int = 64, seed: Long = 42L): Seq[Seq[Seq[Double]]] = {
+      dim: Int = 64): Seq[Seq[Seq[Double]]] = {
     require(dim % m == 0, s"dim $dim must split into $m equal subspaces")
     val sub = dim / m
     val e = emb2v(emb)
     (0 until m).map { s =>
       val yh = e.select(col("vec_id").as("i"),
         slice(col("v"), s * sub + 1, sub).as("Y"))
-      KMeans.fitAuto(yh, k, sub, seed = seed + s).centroids
+      KMeans.fit(yh, k, sub, KMeans.FirstK).centroids
         .sortBy(_.j).map(_.c.toSeq).toSeq
     }
   }
@@ -2317,8 +2317,9 @@ object Similarity {
     * refined by `iters` fixed-point Lloyd steps — the km_fit2_exact
     * discipline per subspace, so the whole training unrolls into chained
     * assign/re-average CTEs and `emb_pq_fitted` hash-matches a DuckDB
-    * oracle (the [[pqCodebookFitted]] k-means‖ form stays as the
-    * deeper-convergence alternative, spec-pinned). Lloyd monotonically
+    * oracle (the [[pqCodebookFitted]] form, first-k seeds run to
+    * convergence, stays as the deeper-convergence alternative,
+    * spec-pinned). Lloyd monotonically
     * cuts quantization error, so fitted-beats-seed still holds (pinned in
     * SimilaritySpec for both forms).
     */

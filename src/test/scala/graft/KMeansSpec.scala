@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.KMeans
-import graft.operators.KMeans.Centroid
+import graft.operators.KMeans.{Centroid, FirstK, Given, InverseCdf, Lloyd, MiniBatch, Parallel, PlusPlus}
 
 /** Unit + property coverage for the k-means operators (SURVEY.md §5 plan). */
 class KMeansSpec extends SparkSpec {
@@ -171,7 +171,7 @@ class KMeansSpec extends SparkSpec {
   /** One fit-loop step: the per-partition Lloyd kernel, run once. */
   private def kernelStep(p: DataFrame, cs: Seq[Centroid], dim: Int,
       fxScale: Double = 1e6): Seq[Centroid] =
-    KMeans.fitFrom(p, cs, dim, maxIter = 1, fxScale = fxScale).centroids
+    KMeans.fit(p, cs.size, dim, Given(cs), Lloyd(maxIter = 1), maxCells = -1, fxScale = fxScale).centroids
 
   private def withAnsi[A](on: Boolean)(body: => A): A = {
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
@@ -190,7 +190,7 @@ class KMeansSpec extends SparkSpec {
     val data = (1L to 600L).map(i => i -> Seq.fill(dim)(rnd.nextGaussian() * 10.0))
       .toDF("i", "Y").repartition(3).cache()
     val cs = KMeans.seedFirstK(data, 70) // 70·64 = 4480 coordinates
-    val fit = KMeans.fitFrom(data, cs, dim, tol = 0.0, maxIter = 3)
+    val fit = KMeans.fit(data, cs.size, dim, Given(cs), Lloyd(tol = 0.0, maxIter = 3), maxCells = -1)
     var ref = cs
     val refLog = (1L to 3L).flatMap { step =>
       ref = KMeans.lloydStep(KMeans.assign(data, ref), dim, fxScale = 1e6)
@@ -253,11 +253,12 @@ class KMeansSpec extends SparkSpec {
 
   test("fit, fitFrom, fitAuto and lloydStepDF reject fxScale = 0") {
     val cs = Seq(Centroid(1, Seq(0.0, 0.0)))
-    intercept[IllegalArgumentException](KMeans.fit(squareCorners, k = 1, dim = 2, fxScale = 0))
+    intercept[IllegalArgumentException](KMeans.fit(squareCorners, k = 1, dim = 2, FirstK, maxCells = -1,
+      fxScale = 0))
     intercept[IllegalArgumentException](kernelStep(squareCorners, cs, dim = 2, fxScale = 0))
     intercept[IllegalArgumentException](
       KMeans.lloydStepDF(KMeans.assign(squareCorners, cs), dim = 2, fxScale = 0))
-    intercept[IllegalArgumentException](KMeans.fitAuto(squareCorners, k = 1, dim = 2, fxScale = 0))
+    intercept[IllegalArgumentException](KMeans.fit(squareCorners, k = 1, dim = 2, FirstK, fxScale = 0))
   }
 
   test("movementRefLimit2ByStep replays the reference's limit-2-by-step bug (Q2)") {
@@ -281,28 +282,25 @@ class KMeansSpec extends SparkSpec {
   }
 
   test("fitLocal is bit-identical to the distributed fit (both seeding paths)") {
-    // the fitAuto size switch is only sound if the local twin reproduces the
+    // the fit's size switch is only sound if the local twin reproduces the
     // distributed FitResult exactly — full log equality, bitwise doubles
     def logBits(r: KMeans.FitResult): Seq[(Long, Long, Seq[Long])] =
       r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
     val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val dist = KMeans.fit(emb, k = 6, dim = 64, parallelSeed = true, seed = 42)
-    val local = KMeans.fitLocal(emb, k = 6, dim = 64, tol = 0.01,
-      maxIter = 50, seed = 42, fxScale = 1e6, parallelSeed = true)
+    val dist = KMeans.fit(emb, k = 6, dim = 64, Parallel(seed = 42), maxCells = -1)
+    val local = KMeans.fit(emb, k = 6, dim = 64, Parallel(seed = 42), maxCells = Long.MaxValue)
     assert(logBits(local) == logBits(dist))
     assert(local.steps == dist.steps && local.finalMovement == dist.finalMovement)
 
     val ord = Tables.yhOrders(spark, sf("0.001")).cache()
-    val dist2 = KMeans.fit(ord, k = 4, dim = 2, seed = 7)
-    val local2 = KMeans.fitLocal(ord, k = 4, dim = 2, tol = 0.01,
-      maxIter = 50, seed = 7, fxScale = 1e6, parallelSeed = false)
+    val dist2 = KMeans.fit(ord, k = 4, dim = 2, FirstK, maxCells = -1)
+    val local2 = KMeans.fit(ord, k = 4, dim = 2, FirstK, maxCells = Long.MaxValue)
     assert(logBits(local2) == logBits(dist2))
 
-    // and fitAuto picks the local path below the threshold / distributed above
-    val auto = KMeans.fitAuto(emb, k = 6, dim = 64, parallelSeed = true, seed = 42)
+    // and the default gate picks the local path below the threshold / distributed above
+    val auto = KMeans.fit(emb, k = 6, dim = 64, Parallel(seed = 42))
     assert(logBits(auto) == logBits(dist))
-    val forced = KMeans.fitAuto(emb, k = 6, dim = 64, parallelSeed = true,
-      seed = 42, localMaxCells = 1)
+    val forced = KMeans.fit(emb, k = 6, dim = 64, Parallel(seed = 42), maxCells = 1)
     assert(logBits(forced) == logBits(dist))
   }
 
@@ -311,11 +309,10 @@ class KMeansSpec extends SparkSpec {
     def logBits(r: KMeans.FitResult): Seq[(Long, Long, Seq[Long])] =
       r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
     val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    // localMaxCells = 0 forces the distributed chain on the same input
-    val dist = KMeans.fitBounded(emb, k = 5, dim = 64, tol = 0.01,
-      lloydSteps = 3, fxScale = 1e6, weightScale = 1e6, localMaxCells = 0)
-    val local = KMeans.fitBounded(emb, k = 5, dim = 64, tol = 0.01,
-      lloydSteps = 3, fxScale = 1e6, weightScale = 1e6)
+    // maxCells = 0 forces the distributed chain on the same input
+    val dist = KMeans.fit(emb, k = 5, dim = 64, InverseCdf(weightScale = 1e6), Lloyd(0.01, 3),
+      maxCells = 0)
+    val local = KMeans.fit(emb, k = 5, dim = 64, InverseCdf(weightScale = 1e6), Lloyd(0.01, 3))
     assert(logBits(local) == logBits(dist))
     assert(local.steps == dist.steps &&
       local.finalMovement == dist.finalMovement)
@@ -325,16 +322,14 @@ class KMeansSpec extends SparkSpec {
       "and extends the bounded prefix") {
     val yh = Tables.yhOrders(spark, sf("0.001")).cache()
     try {
-      val free = KMeans.fitBounded(yh, k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 64, fxScale = 1e4)
+      val free = KMeans.fit(yh, k = 4, dim = 2, InverseCdf(), Lloyd(0.01, 64), fxScale = 1e4)
       // the movement gate stopped the loop, not the cap — the recursive
       // oracle's WHERE pmv >= tol predicate is what decided on both engines
       assert(free.steps < 64, s"hit the safety cap at ${free.steps}")
       assert(free.finalMovement < 0.01)
       // the bounded fit is the same trajectory truncated: identical log
       // prefix bit-for-bit (same seeds, same per-step arithmetic)
-      val bounded = KMeans.fitBounded(yh, k = 4, dim = 2, tol = 0.01,
-        lloydSteps = 3, fxScale = 1e4)
+      val bounded = KMeans.fit(yh, k = 4, dim = 2, InverseCdf(), Lloyd(0.01, 3), fxScale = 1e4)
       def bits(r: KMeans.FitResult) =
         r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
       assert(bits(free).take(bits(bounded).length) == bits(bounded))
@@ -505,7 +500,8 @@ class KMeansSpec extends SparkSpec {
 
   test("the fit loop rejects a null Y with a named IllegalArgumentException") {
     val e = intercept[Exception](
-      KMeans.fitFrom(nullY, Seq(Centroid(1, Seq(0.0, 0.0))), dim = 2, maxIter = 1))
+      KMeans.fit(nullY, k = 1, dim = 2, Given(Seq(Centroid(1, Seq(0.0, 0.0)))), Lloyd(maxIter = 1),
+        maxCells = -1))
     assert(messages(e).contains("IllegalArgumentException") && messages(e).contains("Y is null"),
       messages(e))
   }
@@ -524,7 +520,7 @@ class KMeansSpec extends SparkSpec {
         KMeans.seedFirstK(p, 4) :+ far)
       val lock = KMeans.Points.withPartitioned(p)(KMeans.iterate(_, sets, dim = 2, tol = 0.01,
         maxIter = 30, fxScale = 1e6, startStep = 0L))
-      val alone = sets.map(cs => KMeans.fitFrom(p, cs, dim = 2, tol = 0.01, maxIter = 30))
+      val alone = sets.map(cs => KMeans.fit(p, cs.size, dim = 2, Given(cs), Lloyd(0.01, 30), maxCells = -1))
       assert(lock.map(fitBits) == alone.map(fitBits))
       // the collected placement runs the same loop over the same rows
       val held = KMeans.iterate(KMeans.Points.collected(p, dim = 2, fxScale = 1e6).head, sets,
@@ -551,7 +547,7 @@ class KMeansSpec extends SparkSpec {
   test("k-means++ seeding rejects k < 1 instead of returning one centroid") {
     intercept[IllegalArgumentException](KMeans.seedPlusPlus(squareCorners, 0, seed = 1L))
     intercept[IllegalArgumentException](
-      KMeans.fit(squareCorners, k = 0, dim = 2, plusPlus = true))
+      KMeans.fit(squareCorners, k = 0, dim = 2, PlusPlus(seed = 42), maxCells = -1))
   }
 
   /** One k-means|| round's DataFrame steps over the candidates riding as
@@ -594,14 +590,14 @@ class KMeansSpec extends SparkSpec {
     // a null Y mid-range has no distance: ϕ, the draw and the weights skip
     // it, as `sum` skips a null
     val withNull = emb.union(Seq((250L, null: Seq[Double])).toDF("i", "Y")).cache()
-    val (seed, rounds, k) = (7L, 3, 6)
+    val (seed, rounds, k) = (7L, KMeans.ParallelRounds, 6)
     val l = 2.0 * k
     for (base <- Seq(emb, withNull); n <- Seq(0, 3, 7); ansi <- Seq(true, false)) withAnsi(ansi) {
       val p = if (n == 0) base else base.repartition(n).cache()
       val where = s"${if (base eq emb) "no" else "a"} null Y, ${p.rdd.getNumPartitions} partitions, ANSI $ansi"
-      val resident = KMeans.Points.partitioned(p, KMeans.coinCols(seed, rounds))
+      val resident = KMeans.Points.partitioned(p, KMeans.coinCols(seed))
       val placements = Seq(resident,
-        KMeans.Points.collected(p, dim = 64, fxScale = 1e6, coins = KMeans.coinCols(seed, rounds)).head)
+        KMeans.Points.collected(p, dim = 64, fxScale = 1e6, coins = KMeans.coinCols(seed)).head)
       var cands = KMeans.seedFirstK(p, 1).map(_.c).toVector
       for (r <- 1 to rounds) {
         val phi = Try(dfPhi(p, cands))
@@ -645,8 +641,8 @@ class KMeansSpec extends SparkSpec {
     def logBits(r: KMeans.FitResult): Seq[(Long, Long, Seq[Long])] =
       r.log.map(e => (e.step, e.j, e.c.map(java.lang.Double.doubleToLongBits)))
     val p = wideSquare()
-    val local = KMeans.fitBounded(p, k = 4, dim = 2, lloydSteps = 3)
-    val dist = KMeans.fitBounded(p, k = 4, dim = 2, lloydSteps = 3, localMaxCells = 0)
+    val local = KMeans.fit(p, k = 4, dim = 2, InverseCdf(), Lloyd(maxIter = 3))
+    val dist = KMeans.fit(p, k = 4, dim = 2, InverseCdf(), Lloyd(maxIter = 3), maxCells = 0)
     assert(logBits(local) == logBits(dist))
     p.unpersist()
   }
@@ -670,7 +666,7 @@ class KMeansSpec extends SparkSpec {
       val c = centersTrue((i % 4).toInt)
       i -> Seq(c(0) + rnd.nextGaussian(), c(1) + rnd.nextGaussian())
     }: _*)
-    val fit = KMeans.fit(data, k = 4, dim = 2, parallelSeed = true, seed = 11)
+    val fit = KMeans.fit(data, k = 4, dim = 2, Parallel(seed = 11), maxCells = -1)
     assert(fit.centroids.size == 4)
     // every true center has a fitted centroid within 1.0
     centersTrue.foreach { t =>
@@ -694,7 +690,7 @@ class KMeansSpec extends SparkSpec {
           col("sx") + rand(42) * 15.0,
           col("sy") + rand(43) * 15.0).as("Y"))
       .cache()
-    val fit = KMeans.fit(data, k = 4, dim = 2, plusPlus = true, seed = 7)
+    val fit = KMeans.fit(data, k = 4, dim = 2, PlusPlus(seed = 7), maxCells = -1)
     assert(fit.centroids.size == 4, s"expected 4 surviving clusters, got ${fit.centroids}")
     assert(fit.finalMovement < 0.01)
     // each recovered centroid lies near one distinct plant site (+7.5 jitter mean)
@@ -749,9 +745,9 @@ class KMeansSpec extends SparkSpec {
 
   test("fitMiniBatch: cost within 15% of full Lloyd at a fraction of the scans") {
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val full = KMeans.fit(data, k = 8, dim = 64, seed = 42)
-    val mb = KMeans.fitMiniBatch(data, k = 8, dim = 64,
-      batchFrac = 0.2, maxIter = 20, seed = 42)
+    val full = KMeans.fit(data, k = 8, dim = 64, FirstK, maxCells = -1)
+    val mb = KMeans.fit(data, k = 8, dim = 64, FirstK,
+      MiniBatch(frac = 0.2, maxIter = 20, seed = 42))
     assert(mb.centroids.size == 8)
     def cost(cs: Seq[KMeans.Centroid]): Double =
       operators.Quality.elbow(data, cs).select("elbow_d2").as[Double].head()
@@ -759,16 +755,16 @@ class KMeansSpec extends SparkSpec {
     assert(cMb <= cFull * 1.15,
       s"mini-batch WCSS $cMb vs full $cFull — more than 15% worse")
     // deterministic: same seed, same result
-    val again = KMeans.fitMiniBatch(data, k = 8, dim = 64,
-      batchFrac = 0.2, maxIter = 20, seed = 42)
+    val again = KMeans.fit(data, k = 8, dim = 64, FirstK,
+      MiniBatch(frac = 0.2, maxIter = 20, seed = 42))
     assert(again.centroids == mb.centroids && again.steps == mb.steps)
     // the log carries every step (seeds at 0 plus k rows per step)
     assert(mb.log.size == ((mb.steps + 1) * 8).toInt)
     // r19: the driver-local twin (default gate) must be BIT-IDENTICAL to
-    // the distributed loop (localMaxCells=0 forces it) — centroids, step
+    // the distributed loop (maxCells=0 forces it) — centroids, step
     // count, movement, and the full WCR log
-    val dist = KMeans.fitMiniBatch(data, k = 8, dim = 64,
-      batchFrac = 0.2, maxIter = 20, seed = 42, localMaxCells = 0L)
+    val dist = KMeans.fit(data, k = 8, dim = 64, FirstK,
+      MiniBatch(frac = 0.2, maxIter = 20, seed = 42), maxCells = 0L)
     assert(dist.centroids == mb.centroids && dist.steps == mb.steps &&
       dist.finalMovement == mb.finalMovement && dist.log == mb.log)
   }
@@ -779,7 +775,7 @@ class KMeansSpec extends SparkSpec {
     // the meaningful oracle is cost parity with MLlib's native KMeans, not
     // label purity.
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val ours = KMeans.fit(data, k = 10, dim = 64, plusPlus = true, seed = 42)
+    val ours = KMeans.fit(data, k = 10, dim = 64, PlusPlus(seed = 42), maxCells = -1)
     val ourCost = operators.Quality.elbow(data, ours.centroids)
       .select("elbow_d2").as[Double].head()
     val ml = operators.KMeansML.fit(data, k = 10, seed = 42)
@@ -802,9 +798,8 @@ class KMeansSpec extends SparkSpec {
     val data = Tables.yhEmbeddings(spark, sf("0.01")).cache()
     def wcss(cs: Seq[KMeans.Centroid]): Double =
       operators.Quality.elbow(data, cs).select("elbow_d2").as[Double].head()
-    // km_fit's exact fit (SparkEntry.embFit): k-means|| seeded fitAuto
-    val ours = wcss(KMeans.fitAuto(data, k = 10, dim = 64,
-      parallelSeed = true, seed = 42).centroids)
+    // km_fit's exact fit (SparkEntry.embFit): k-means|| seeded, gated
+    val ours = wcss(KMeans.fit(data, k = 10, dim = 64, Parallel(seed = 42)).centroids)
     val ml = operators.KMeansML.fit(data, k = 10)
     val bi = operators.KMeansML.fitBisecting(data, k = 10)
     info(s"sf0.01 WCSS: ours=$ours mllib=${ml.cost} bisecting=${bi.cost}")
@@ -841,7 +836,7 @@ class KMeansSpec extends SparkSpec {
 
   test("assignment is idempotent at the fixpoint") {
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val fit = KMeans.fit(data, k = 5, dim = 64, tol = 1e-9, maxIter = 100)
+    val fit = KMeans.fit(data, k = 5, dim = 64, FirstK, Lloyd(tol = 1e-9, maxIter = 100), maxCells = -1)
     val again = KMeans.lloydStep(KMeans.assign(data, fit.centroids), dim = 64)
     val move = KMeans.movement(fit.centroids, again)
     assert(move < 1e-3, s"converged fit moved $move on an extra step")
@@ -849,7 +844,7 @@ class KMeansSpec extends SparkSpec {
 
   test("model save/load roundtrip is bit-exact and serves identical assignments") {
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val fit = KMeans.fit(data, k = 4, dim = 64, seed = 42)
+    val fit = KMeans.fit(data, k = 4, dim = 64, FirstK, maxCells = -1)
     val path = java.nio.file.Files.createTempDirectory("graft_model").toString
     KMeans.saveModel(spark, fit, path)
     val loaded = KMeans.loadModel(spark, path)
@@ -873,12 +868,13 @@ class KMeansSpec extends SparkSpec {
     // continue 2 more — centroids, step numbering, and the concatenated WCR
     // log must all equal the uninterrupted 4-step fit's
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
-    val full = KMeans.fit(data, k = 4, dim = 64, tol = 0.0, maxIter = 4, seed = 42)
-    val half = KMeans.fit(data, k = 4, dim = 64, tol = 0.0, maxIter = 2, seed = 42)
+    val full = KMeans.fit(data, k = 4, dim = 64, FirstK, Lloyd(tol = 0.0, maxIter = 4), maxCells = -1)
+    val half = KMeans.fit(data, k = 4, dim = 64, FirstK, Lloyd(tol = 0.0, maxIter = 2), maxCells = -1)
     val path = java.nio.file.Files.createTempDirectory("graft_resume").toString
     KMeans.saveModel(spark, half, path)
-    val resumed = KMeans.fitFrom(data, KMeans.loadModel(spark, path), dim = 64,
-      tol = 0.0, maxIter = 2, startStep = half.steps)
+    val loaded = KMeans.loadModel(spark, path)
+    val resumed = KMeans.fit(data, loaded.size, dim = 64, Given(loaded, startStep = half.steps),
+      Lloyd(tol = 0.0, maxIter = 2), maxCells = -1)
     assert(resumed.centroids == full.centroids,
       "resumed centroids diverge from the uninterrupted fit")
     assert(resumed.steps == full.steps)
@@ -903,7 +899,7 @@ class KMeansSpec extends SparkSpec {
     val fits = (0 until 8).map { i =>
       Future {
         Thread.sleep(i * 20L) // stagger entries/exits across fit lifetimes
-        KMeans.fit(data, k = 3, dim = 64, maxIter = 2 + i % 3, seed = 42 + i)
+        KMeans.fit(data, k = 3, dim = 64, FirstK, Lloyd(maxIter = 2 + i % 3), maxCells = -1)
       }
     }
     val results = Await.result(Future.sequence(fits), 5.minutes)
@@ -927,22 +923,23 @@ class KMeansSpec extends SparkSpec {
     Seq(emb, spread).foreach { p =>
       val where = s"${p.rdd.getNumPartitions} partitions"
       for (parallel <- Seq(false, true)) {
-        val held = KMeans.fitLocal(p, k = 6, dim = 64, tol = 0.01, maxIter = 50, seed = 42,
-          fxScale = 1e6, parallelSeed = parallel)
-        assert(resultBits(KMeans.fit(p, k = 6, dim = 64, seed = 42, parallelSeed = parallel)) ==
+        val seeding = if (parallel) Parallel(seed = 42) else FirstK
+        val held = KMeans.fit(p, k = 6, dim = 64, seeding, maxCells = Long.MaxValue)
+        assert(resultBits(KMeans.fit(p, k = 6, dim = 64, seeding, maxCells = -1)) ==
           resultBits(held), s"$where, k-means|| $parallel")
       }
       val seeds = KMeans.seedFirstK(p, 5)
       val held = KMeans.iterate(KMeans.Points.collected(p, dim = 64, fxScale = 1e6).head,
         Seq(seeds), dim = 64, tol = 0.0, maxIter = 4, fxScale = 1e6, startStep = 0L).head
-      assert(resultBits(KMeans.fitFrom(p, seeds, dim = 64, tol = 0.0, maxIter = 4)) ==
+      assert(resultBits(KMeans.fit(p, seeds.size, dim = 64, Given(seeds), Lloyd(tol = 0.0, maxIter = 4),
+          maxCells = -1)) ==
         resultBits(held), where)
-      def miniBatch(cells: Long) = KMeans.fitMiniBatch(p, k = 8, dim = 64, batchFrac = 0.2,
-        maxIter = 20, seed = 42, localMaxCells = cells)
+      def miniBatch(cells: Long) = KMeans.fit(p, k = 8, dim = 64, FirstK,
+        MiniBatch(frac = 0.2, maxIter = 20, seed = 42), maxCells = cells)
       assert(resultBits(miniBatch(0L)) == resultBits(miniBatch(4000000L)), where)
       // no Lloyd step: the collected chain's k-means|| seeds
-      val heldSeeds = KMeans.fitLocal(p, k = 6, dim = 64, tol = 0.01, maxIter = 0, seed = 7,
-        fxScale = 1e6, parallelSeed = true).centroids
+      val heldSeeds = KMeans.fit(p, k = 6, dim = 64, Parallel(seed = 7), Lloyd(maxIter = 0),
+        maxCells = Long.MaxValue).centroids
       assert(bits(KMeans.seedParallel(p, k = 6, seed = 7)) == bits(heldSeeds), where)
     }
   }
@@ -970,53 +967,55 @@ class KMeansSpec extends SparkSpec {
       fit
       assert(sc.getPersistentRDDs.keySet == before, what)
     }
-    unchanged("fit")(KMeans.fit(emb, k = 4, dim = 64, maxIter = 3))
-    unchanged("fit, ++")(KMeans.fit(emb, k = 4, dim = 64, maxIter = 3, plusPlus = true))
-    unchanged("fit, k-means||")(KMeans.fit(emb, k = 4, dim = 64, maxIter = 3, parallelSeed = true))
-    unchanged("fitFrom")(KMeans.fitFrom(emb, KMeans.seedFirstK(emb, 4), dim = 64, maxIter = 3))
-    unchanged("fitAuto")(KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3, localMaxCells = 0))
-    unchanged("fitBounded")(KMeans.fitBounded(emb, k = 3, dim = 64, localMaxCells = 0))
-    unchanged("fitMiniBatch")(KMeans.fitMiniBatch(emb, k = 4, dim = 64, maxIter = 3, localMaxCells = 0))
+    val three = Lloyd(maxIter = 3)
+    unchanged("fit")(KMeans.fit(emb, k = 4, dim = 64, FirstK, three, maxCells = -1))
+    unchanged("fit, ++")(KMeans.fit(emb, k = 4, dim = 64, PlusPlus(seed = 42), three, maxCells = -1))
+    unchanged("fit, k-means||")(KMeans.fit(emb, k = 4, dim = 64, Parallel(seed = 42), three, maxCells = -1))
+    unchanged("fitFrom")(KMeans.fit(emb, k = 4, dim = 64, Given(KMeans.seedFirstK(emb, 4)), three,
+      maxCells = -1))
+    unchanged("fitAuto")(KMeans.fit(emb, k = 4, dim = 64, FirstK, three, maxCells = 0))
+    unchanged("fitBounded")(KMeans.fit(emb, k = 3, dim = 64, InverseCdf(), three, maxCells = 0))
+    unchanged("fitMiniBatch")(KMeans.fit(emb, k = 4, dim = 64, FirstK, MiniBatch(maxIter = 3), maxCells = 0))
     unchanged("seedPlusPlus")(KMeans.seedPlusPlus(emb, 3, seed = 1L))
     unchanged("seedParallel")(KMeans.seedParallel(emb, k = 3, seed = 1L))
     unchanged("null Y") {
-      val e = intercept[Exception](KMeans.fitFrom(nullY, one, dim = 2, maxIter = 1))
+      val e = intercept[Exception](KMeans.fit(nullY, k = 1, dim = 2, Given(one), Lloyd(maxIter = 1),
+        maxCells = -1))
       assert(messages(e).contains("Y is null"), messages(e))
     }
     unchanged("CAST_OVERFLOW")(withAnsi(on = true) {
-      val e = intercept[Exception](KMeans.fit(huge, k = 1, dim = 2))
+      val e = intercept[Exception](KMeans.fit(huge, k = 1, dim = 2, FirstK, maxCells = -1))
       assert(messages(e).contains("CAST_OVERFLOW"), messages(e))
     })
     // the collected placement: its blocks live for the placement job only
-    unchanged("fitAuto, collected")(KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3))
+    unchanged("fitAuto, collected")(KMeans.fit(emb, k = 4, dim = 64, FirstK, three))
     unchanged("fitAuto, collected, k-means||")(
-      KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3, parallelSeed = true))
-    unchanged("fitLocal")(KMeans.fitLocal(emb, k = 4, dim = 64, tol = 0.01, maxIter = 3, seed = 1L,
-      fxScale = 1e6, parallelSeed = false))
-    unchanged("fitBounded, collected")(KMeans.fitBounded(emb, k = 3, dim = 64))
+      KMeans.fit(emb, k = 4, dim = 64, Parallel(seed = 42), three))
+    unchanged("fitLocal")(KMeans.fit(emb, k = 4, dim = 64, FirstK, three, maxCells = Long.MaxValue))
+    unchanged("fitBounded, collected")(KMeans.fit(emb, k = 3, dim = 64, InverseCdf(), three))
     for (cells <- Seq(0L, 4000000L)) unchanged(s"fitBounded over a null Y, localMaxCells $cells") {
-      val e = intercept[Exception](KMeans.fitBounded(nullY, k = 2, dim = 2, localMaxCells = cells))
+      val e = intercept[Exception](KMeans.fit(nullY, k = 2, dim = 2, InverseCdf(), three, maxCells = cells))
       assert(messages(e).contains("Y is null"), messages(e))
     }
-    unchanged("fitMiniBatch, collected")(KMeans.fitMiniBatch(emb, k = 4, dim = 64, maxIter = 3))
+    unchanged("fitMiniBatch, collected")(KMeans.fit(emb, k = 4, dim = 64, FirstK, MiniBatch(maxIter = 3)))
     unchanged("collected, null Y") {
-      val e = intercept[Exception](KMeans.fitAuto(nullY, k = 1, dim = 2, maxIter = 1))
+      val e = intercept[Exception](KMeans.fit(nullY, k = 1, dim = 2, FirstK, Lloyd(maxIter = 1)))
       assert(messages(e).contains("Y is null"), messages(e))
     }
     unchanged("fitAuto, collected, ++")(
-      KMeans.fitAuto(emb, k = 4, dim = 64, maxIter = 3, plusPlus = true))
+      KMeans.fit(emb, k = 4, dim = 64, PlusPlus(seed = 42), three))
     unchanged("collected ++, null Y") {
-      val e = intercept[Exception](KMeans.fitAuto(nullY, k = 2, dim = 2, maxIter = 1, plusPlus = true))
+      val e = intercept[Exception](KMeans.fit(nullY, k = 2, dim = 2, PlusPlus(seed = 42), Lloyd(maxIter = 1)))
       assert(messages(e).contains("Y is null"), messages(e))
     }
     unchanged("collected, CAST_OVERFLOW")(withAnsi(on = true) {
-      val e = intercept[Exception](KMeans.fitAuto(huge, k = 1, dim = 2))
+      val e = intercept[Exception](KMeans.fit(huge, k = 1, dim = 2, FirstK))
       assert(messages(e).contains("CAST_OVERFLOW"), messages(e))
     })
     val boom = udf((i: Long) => if (i == 2L) throw new IllegalStateException("boom") else Seq(i.toDouble, 0.0))
     val failing = pts(1L -> Nil, 2L -> Nil, 3L -> Nil).select(col("i"), boom(col("i")).as("Y"))
     for (cells <- Seq(0L, 4000000L)) unchanged(s"a placement job that throws, localMaxCells $cells") {
-      val e = intercept[Exception](KMeans.fitAuto(failing, k = 1, dim = 2, localMaxCells = cells))
+      val e = intercept[Exception](KMeans.fit(failing, k = 1, dim = 2, FirstK, maxCells = cells))
       assert(messages(e).contains("boom"), messages(e))
     }
   }
@@ -1034,7 +1033,10 @@ class KMeansSpec extends SparkSpec {
     }
     org.apache.spark.ListenerDrain(sc)
     sc.addSparkListener(l)
-    val fit = try { val f = KMeans.fit(emb, k = 4, dim = 64, maxIter = 3); org.apache.spark.ListenerDrain(sc); f }
+    val fit = try {
+      val f = KMeans.fit(emb, k = 4, dim = 64, FirstK, Lloyd(maxIter = 3), maxCells = -1)
+      org.apache.spark.ListenerDrain(sc); f
+    }
       finally sc.removeSparkListener(l)
     val names = lloyd.toArray.toSeq
     assert(names.size == fit.steps && names.forall(_ == "KMeans points"), names)
@@ -1058,7 +1060,7 @@ class KMeansSpec extends SparkSpec {
     val sc = spark.sparkContext
     val p = Tables.yhEmbeddings(spark, sf("0.001")).repartition(3).cache()
     val seeds = KMeans.seedFirstK(p, 5)
-    val whole = KMeans.fitFrom(p, seeds, dim = 64, tol = 0.0, maxIter = 4)
+    val whole = KMeans.fit(p, seeds.size, dim = 64, Given(seeds), Lloyd(tol = 0.0, maxIter = 4), maxCells = -1)
     def blocks = sc.getPersistentRDDs.values.filter(_.name == "KMeans points")
     // one step at a time over one placement, its blocks dropped after each:
     // every later step rebuilds them from the plan
@@ -1080,7 +1082,8 @@ class KMeansSpec extends SparkSpec {
   test("a null Y ahead of an overflowing row still fails with Y is null") {
     val one = Seq(Centroid(1, Seq(0.0, 0.0)))
     def fails(p: DataFrame, error: String): Unit = {
-      val e = intercept[Exception](KMeans.fitFrom(p.coalesce(1), one, dim = 2, maxIter = 1))
+      val e = intercept[Exception](KMeans.fit(p.coalesce(1), k = 1, dim = 2, Given(one), Lloyd(maxIter = 1),
+        maxCells = -1))
       assert(messages(e).contains(error), messages(e))
     }
     withAnsi(on = true) {
@@ -1128,8 +1131,8 @@ class KMeansSpec extends SparkSpec {
     val p = Tables.yhEmbeddings(spark, sf("0.001")).cache()
     p.count()
     for (parallel <- Seq(false, true)) {
-      val (fit, jobs, sqls, _) = observed(KMeans.fitAuto(p, k = 4, dim = 64, maxIter = 5,
-        parallelSeed = parallel, localMaxCells = 1))
+      val (fit, jobs, sqls, _) = observed(KMeans.fit(p, k = 4, dim = 64,
+        if (parallel) Parallel(seed = 42) else FirstK, Lloyd(maxIter = 5), maxCells = 1))
       // k-means|| adds its 3 rounds' phi and draw jobs and the weights job
       val seeding = if (parallel) 7 else 0
       assert(fit.steps > 0 && jobs == 1 + seeding + fit.steps && sqls == 1,
@@ -1147,13 +1150,13 @@ class KMeansSpec extends SparkSpec {
     skewed.count()
     val bound = n * 64
     val fits: Seq[(String, (DataFrame, Long) => KMeans.FitResult)] = Seq(
-      "fitAuto" -> ((p, cells) => KMeans.fitAuto(p, k = 6, dim = 64, localMaxCells = cells)),
+      "fitAuto" -> ((p, cells) => KMeans.fit(p, k = 6, dim = 64, FirstK, maxCells = cells)),
       "fitAuto, k-means||" -> ((p, cells) =>
-        KMeans.fitAuto(p, k = 6, dim = 64, parallelSeed = true, localMaxCells = cells)),
-      "fitBounded" -> ((p, cells) => KMeans.fitBounded(p, k = 5, dim = 64, weightScale = 1e6,
-        localMaxCells = cells)),
-      "fitMiniBatch" -> ((p, cells) => KMeans.fitMiniBatch(p, k = 8, dim = 64, batchFrac = 0.2,
-        seed = 42, localMaxCells = cells)))
+        KMeans.fit(p, k = 6, dim = 64, Parallel(seed = 42), maxCells = cells)),
+      "fitBounded" -> ((p, cells) => KMeans.fit(p, k = 5, dim = 64, InverseCdf(weightScale = 1e6),
+        Lloyd(maxIter = 3), maxCells = cells)),
+      "fitMiniBatch" -> ((p, cells) => KMeans.fit(p, k = 8, dim = 64, FirstK,
+        MiniBatch(frac = 0.2, seed = 42), maxCells = cells)))
     for ((what, fit) <- fits) {
       val (balanced, balancedJobs, _, _) = observed(fit(emb, 4000000L))
       val (outgrown, outgrownJobs, _, _) = observed(fit(skewed, bound))
@@ -1171,17 +1174,17 @@ class KMeansSpec extends SparkSpec {
     p.count()
     // 10 partitions of 100 rows, the bound 500 rows: a share is 50 rows
     val bound = 500L * dim
-    val (over, jobs, _, bytes) = observed(KMeans.fitAuto(p, k = 2, dim = dim, maxIter = 0,
-      localMaxCells = bound))
+    val (over, jobs, _, bytes) = observed(KMeans.fit(p, k = 2, dim = dim, FirstK, Lloyd(maxIter = 0),
+      maxCells = bound))
     assert(jobs == 1, s"$jobs jobs")
     assert(bytes < bound / 10 * 8, s"past the bound the driver received $bytes bytes")
     assert(over.centroids.map(_.c.head) == Seq(0.0, 1.0))
     // within it, every block fits its share and rides the same job
-    val (within, withinJobs, _, _) = observed(KMeans.fitAuto(p, k = 2, dim = dim, maxIter = 2,
-      localMaxCells = 2 * bound))
+    val (within, withinJobs, _, _) = observed(KMeans.fit(p, k = 2, dim = dim, FirstK, Lloyd(maxIter = 2),
+      maxCells = 2 * bound))
     assert(withinJobs == 1, s"within the bound: $withinJobs jobs")
-    assert(resultBits(within) == resultBits(KMeans.fitAuto(p, k = 2, dim = dim, maxIter = 2,
-      localMaxCells = 0L)))
+    assert(resultBits(within) == resultBits(KMeans.fit(p, k = 2, dim = dim, FirstK, Lloyd(maxIter = 2),
+      maxCells = 0L)))
     p.unpersist()
   }
 
@@ -1191,14 +1194,14 @@ class KMeansSpec extends SparkSpec {
     val withNullKey = emb.union(Seq[(Option[Long], Seq[Double])](None -> Seq.fill(64)(0.5))
       .toDF("i", "Y")).repartition(3).cache()
     for (parallel <- Seq(false, true)) {
-      def fit(cells: Long) = KMeans.fitAuto(withNullKey, k = 6, dim = 64, seed = 7,
-        parallelSeed = parallel, localMaxCells = cells)
+      def fit(cells: Long) = KMeans.fit(withNullKey, k = 6, dim = 64,
+        if (parallel) Parallel(seed = 7) else FirstK, maxCells = cells)
       val held = fit(4000000L)
       assert(resultBits(fit(0L)) == resultBits(held), s"k-means|| $parallel")
       if (!parallel) assert(held.log.head.c == Seq.fill(64)(0.5))
     }
-    def miniBatch(cells: Long) = KMeans.fitMiniBatch(withNullKey, k = 8, dim = 64,
-      batchFrac = 0.2, maxIter = 20, seed = 42, localMaxCells = cells)
+    def miniBatch(cells: Long) = KMeans.fit(withNullKey, k = 8, dim = 64, FirstK,
+      MiniBatch(frac = 0.2, maxIter = 20, seed = 42), maxCells = cells)
     assert(resultBits(miniBatch(0L)) == resultBits(miniBatch(4000000L)))
     withNullKey.unpersist()
   }
@@ -1228,9 +1231,9 @@ class KMeansSpec extends SparkSpec {
       for ((where, p0, cells) <- placings; ansi <- Seq(true, false)) withAnsi(ansi) {
         val p = p0.cache()
         for (seed <- Seq(0L, 7L)) {
-          val want = outcome(KMeans.fit(p, k = 4, dim = 2, maxIter = 10, seed = seed, plusPlus = true))
-          val got = outcome(KMeans.fitAuto(p, k = 4, dim = 2, maxIter = 10, seed = seed, plusPlus = true,
-            localMaxCells = cells))
+          val want = outcome(KMeans.fit(p, k = 4, dim = 2, PlusPlus(seed), Lloyd(maxIter = 10), maxCells = -1))
+          val got = outcome(KMeans.fit(p, k = 4, dim = 2, PlusPlus(seed), Lloyd(maxIter = 10),
+            maxCells = cells))
           assert(got == want, s"$name, $where, ANSI $ansi, seed $seed")
           assert(got.isLeft == (name == "null Y" || name == "all-NaN Y" && ansi),
             s"$name, $where, ANSI $ansi, seed $seed: $got")
@@ -1312,7 +1315,8 @@ class KMeansSpec extends SparkSpec {
       for (cells <- Seq(0L, 4000000L)) {
         assert(drawPairs(withNull, 2, 6, cells) == drawPairs(clean, 2, 6, cells),
           s"ANSI $ansi, localMaxCells $cells")
-        val e = intercept[Exception](KMeans.fitBounded(withNull, k = 4, dim = 2, localMaxCells = cells))
+        val e = intercept[Exception](KMeans.fit(withNull, k = 4, dim = 2, InverseCdf(), Lloyd(maxIter = 3),
+          maxCells = cells))
         assert(messages(e).contains("Y is null"), s"ANSI $ansi, localMaxCells $cells: ${messages(e)}")
       }
       for (rowsBound <- Seq(0L, -1L)) {
@@ -1332,7 +1336,7 @@ class KMeansSpec extends SparkSpec {
     val rows = (1 to 80).map(i => (i % 40).toLong -> Seq(i % 4 * 20.0 + i % 7 * 0.5, i % 5 * 13.0 + i % 3))
     for (n <- Seq(1, 3, 7); ansi <- Seq(true, false)) withAnsi(ansi) {
       val p = rows.toDF("i", "Y").repartition(n)
-      def fit(cells: Long) = KMeans.fitBounded(p, k = 5, dim = 2, lloydSteps = 3, localMaxCells = cells)
+      def fit(cells: Long) = KMeans.fit(p, k = 5, dim = 2, InverseCdf(), Lloyd(maxIter = 3), maxCells = cells)
       assert(resultBits(fit(0L)) == resultBits(fit(4000000L)), s"$n partitions, ANSI $ansi")
     }
   }
@@ -1341,8 +1345,8 @@ class KMeansSpec extends SparkSpec {
       "and 1 per Lloyd step, and no SQL execution per draw") {
     val p = Tables.yhOrders(spark, sf("0.001")).cache()
     p.count()
-    val (fit, jobs, sqls, _) = observed(KMeans.fitBounded(p, k = 4, dim = 2, lloydSteps = 3,
-      fxScale = 1e4, localMaxCells = 0))
+    val (fit, jobs, sqls, _) = observed(KMeans.fit(p, k = 4, dim = 2, InverseCdf(), Lloyd(maxIter = 3),
+      maxCells = 0, fxScale = 1e4))
     // the placement job's execution is the fit's only one
     assert(fit.steps > 0 && jobs <= 1 + 2 * 3 + fit.steps && sqls == 1,
       s"${fit.steps} steps, $jobs jobs, $sqls SQL executions")
@@ -1376,14 +1380,15 @@ class KMeansSpec extends SparkSpec {
     val orders = Tables.yhOrders(spark, sf("0.001")).cache()
     val emb = Tables.yhEmbeddings(spark, sf("0.001")).cache()
     def rows(df: DataFrame) = df.as[(Long, Long)].collect().toSeq
-    val (bounded, boundedJobs, _, _) = observed(KMeans.fitBounded(orders, k = 4, dim = 2,
-      lloydSteps = 64, fxScale = 1e4))
-    val ((fit, census), jobs, _, _) = observed(KMeans.fitBoundedCensus(orders, k = 4, dim = 2,
-      tol = 0.01, lloydSteps = 64, fxScale = 1e4))
+    val (bounded, boundedJobs, _, _) = observed(KMeans.fit(orders, k = 4, dim = 2, InverseCdf(),
+      Lloyd(maxIter = 64), fxScale = 1e4))
+    val ((fit, census), jobs, _, _) = observed(KMeans.fitThen(orders, k = 4, dim = 2, InverseCdf(),
+      Lloyd(tol = 0.01, maxIter = 64), fxScale = 1e4)((p, f) => (f, KMeans.censusOf(p, f.centroids))))
     assert(resultBits(fit) == resultBits(bounded) && census == rows(KMeans.census(orders, fit.centroids)))
     assert(jobs == boundedJobs, s"$jobs jobs, the fit alone $boundedJobs")
-    val (mb, mbJobs, _, _) = observed(KMeans.fitMiniBatch(emb, k = 8, dim = 64))
-    val ((fit2, census2), jobs2, _, _) = observed(KMeans.fitMiniBatchCensus(emb, k = 8, dim = 64))
+    val (mb, mbJobs, _, _) = observed(KMeans.fit(emb, k = 8, dim = 64, FirstK, MiniBatch()))
+    val ((fit2, census2), jobs2, _, _) = observed(KMeans.fitThen(emb, k = 8, dim = 64, FirstK, MiniBatch())(
+      (p, f) => (f, KMeans.censusOf(p, f.centroids))))
     assert(resultBits(fit2) == resultBits(mb) && census2 == rows(KMeans.census(emb, fit2.centroids)))
     assert(jobs2 == mbJobs, s"$jobs2 jobs, the fit alone $mbJobs")
     val (placed, placedJobs, _, _) = observed(KMeans.Points.withPlaced(emb, Nil, (64, 1e6), 1, 0L) { p =>
@@ -1411,5 +1416,35 @@ class KMeansSpec extends SparkSpec {
       assert(drawn == Some(Centroid(2, Seq(10.0, 0.0))), s"localMaxCells $cells")
     }
     p.unpersist()
+  }
+
+  test("fit gives every (seeding, step) pair a caller uses the bits, or the error class, " +
+      "of its maxCells = -1 cell at maxCells 0, 4M and Long.MaxValue") {
+    def rootClass(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq.last.getClass.getName
+    def outcome(fit: => KMeans.FitResult): Either[String, Any] =
+      try Right(resultBits(fit)) catch { case e: Exception => Left(rootClass(e)) }
+    val rows = (1 to 40).map(i => i.toLong -> Seq(i % 4 * 20.0 + i * 0.3, i % 3 * 15.0))
+    val fixtures = Seq(
+      ("embeddings, 3 partitions", Tables.yhEmbeddings(spark, sf("0.001")).repartition(3), 64),
+      ("a null Y", rows.map(r => if (r._1 == 21L) r._1 -> null else r).toDF("i", "Y").repartition(2), 2),
+      ("no rows", rows.take(0).toDF("i", "Y"), 2))
+    for ((name, df, dim) <- fixtures) {
+      val p = df.cache()
+      val pairs = Seq[(String, KMeans.Seeding, KMeans.Step)](
+        ("FirstK, Lloyd", FirstK, Lloyd(maxIter = 5)),
+        ("PlusPlus, Lloyd", PlusPlus(seed = 7), Lloyd(maxIter = 5)),
+        ("Parallel, Lloyd", Parallel(seed = 7), Lloyd(maxIter = 5)),
+        ("InverseCdf, Lloyd", InverseCdf(weightScale = 1e6), Lloyd(maxIter = 3)),
+        ("Given, Lloyd", Given(KMeans.seedFirstK(p, 5), startStep = 2), Lloyd(maxIter = 5)),
+        ("FirstK, MiniBatch", FirstK, MiniBatch(frac = 0.2, maxIter = 5)))
+      for ((pair, seeding, step) <- pairs) {
+        val want = outcome(KMeans.fit(p, k = 5, dim, seeding, step, maxCells = -1))
+        for (cells <- Seq(0L, 4000000L, Long.MaxValue))
+          assert(outcome(KMeans.fit(p, k = 5, dim, seeding, step, maxCells = cells)) == want,
+            s"$name, $pair, maxCells $cells")
+      }
+      p.unpersist()
+    }
   }
 }

@@ -346,7 +346,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("roundHalfUpLong matches Spark's round()::long exactly") {
-    // the ONE Spark scalar fitLocal reproduces itself (the k-means|| phi
+    // the ONE Spark scalar a collected fit reproduces itself (the k-means|| phi
     // rounding); everything else rides through real Spark expressions
     import org.apache.spark.sql.functions.{col, round => sparkRound}
     val tricky = Seq(0.5, 1.5, 2.5, -0.5, -1.5, -2.5, 0.49999999999999994,

@@ -72,12 +72,13 @@ class QualitySpec extends SparkSpec {
   }
 
   /** The reference's OptimalK loop, one full fit per k:
-    * `KMeans.fit(plusPlus = true)` + elbow + simplified silhouette, as raw
+    * `KMeans.fit(PlusPlus)` + elbow + simplified silhouette, as raw
     * bits (a null silhouette read as NaN, as optimalKSweep reports it).
     */
   private def perKSweep(points: DataFrame, sample: DataFrame, ks: Seq[Int],
       maxIter: Int): Seq[(Long, Long, Long, Long)] = ks.map { k =>
-    val fit = KMeans.fit(points, k = k, dim = 2, plusPlus = true, maxIter = maxIter)
+    val fit = KMeans.fit(points, k = k, dim = 2, KMeans.PlusPlus(seed = 42),
+      KMeans.Lloyd(maxIter = maxIter), maxCells = -1)
     val e = Quality.elbow(points, fit.centroids, d1Scale = 1e4, d2Scale = 0.01).head()
     val si = Quality.silhouetteSimplified(KMeans.assign(sample, fit.centroids))
       .select("si").head()
@@ -130,7 +131,8 @@ class QualitySpec extends SparkSpec {
     yh.count()
     val sample = yh.filter(col("i") % 29 === 0)
     val ks = 2 to 4
-    val steps = ks.map(k => KMeans.fit(yh, k = k, dim = 2, plusPlus = true, maxIter = 5).steps).max
+    val steps = ks.map(k => KMeans.fit(yh, k = k, dim = 2, KMeans.PlusPlus(seed = 42),
+      KMeans.Lloyd(maxIter = 5), maxCells = -1).steps).max
     // ++ chain for ks.max (one first-seed job, one per round), one lockstep
     // Lloyd job per step of the slowest k, one elbow scan, one sample
     // collect, one silhouette job
@@ -201,7 +203,7 @@ class QualitySpec extends SparkSpec {
       assert(messages(e).contains("Y is null"), messages(e))
     }
     unchanged("a collected gap")(Quality.gapStatistic(yh, dim = 2, ks = 2 to 3, maxIter = 3).collect())
-    // past fitAuto's 4M-cell gate: each set's placement stays resident blocks
+    // past the fit's 4M-cell gate: each set's placement stays resident blocks
     val wide = spark.range(2000001).select((col("id") + 1).as("i"),
       array((col("id") % 97).cast("double"), (col("id") % 89).cast("double")).as("Y"))
     unchanged("a partitioned gap")(Quality.gapStatistic(wide, dim = 2, ks = Seq(2), refSets = 1,
@@ -214,7 +216,8 @@ class QualitySpec extends SparkSpec {
     yh.count()
     val sample = yh.filter(col("i") % 29 === 0)
     // the placement job brings the blocks; the ++ rounds and Lloyd steps run on them
-    val (fit, fitJobs) = countJobs(KMeans.fitAuto(yh, k = 4, dim = 2, plusPlus = true, maxIter = 5))
+    val (fit, fitJobs) = countJobs(KMeans.fit(yh, k = 4, dim = 2, KMeans.PlusPlus(seed = 42),
+      KMeans.Lloyd(maxIter = 5)))
     assert(fit.steps > 0 && fitJobs == 1, s"${fit.steps} steps, $fitJobs jobs")
     // the placement, the sample collect and the silhouette job
     val (rows, sweepJobs) = countJobs(sweepBits(yh, sample, 2 to 4, maxIter = 5))
@@ -370,7 +373,7 @@ class QualitySpec extends SparkSpec {
   test("elbow decreases as k grows (on real embeddings)") {
     val data = Tables.yhEmbeddings(spark, sf("0.001")).cache()
     val wcss = Seq(2, 5, 10).map { k =>
-      val fit = KMeans.fit(data, k = k, dim = 64, maxIter = 10)
+      val fit = KMeans.fit(data, k = k, dim = 64, KMeans.FirstK, KMeans.Lloyd(maxIter = 10), maxCells = -1)
       Quality.elbow(data, fit.centroids).select("elbow_d2").as[Double].head()
     }
     assert(wcss(0) > wcss(1) && wcss(1) > wcss(2), s"wcss=$wcss")
@@ -393,7 +396,7 @@ class QualitySpec extends SparkSpec {
   }
 
   test("gapStatisticFitted: driver-local fast path is bit-identical to the distributed chain") {
-    // the fitAuto discipline pin: localMaxRows = 0 forces every stage
+    // the gated fit's discipline pin: localMaxRows = 0 forces every stage
     // (++ draws, movement-gated Lloyd, dispersion census) through the
     // distributed plan; the default runs the same arithmetic driver-local.
     // Exact integer equality of the full output is the contract.

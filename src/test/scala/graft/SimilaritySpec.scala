@@ -368,8 +368,8 @@ class SimilaritySpec extends SparkSpec {
       val n = df.count()
       df.agg(sum("agree")).head().getLong(0) * 1000000L / n
     }
-    def fitK(k: Int) = KMeans.fitBounded(pts, k = k, dim = 64, tol = 0.01,
-      lloydSteps = 5, fxScale = 1e6, weightScale = 1e6).centroids
+    def fitK(k: Int) = KMeans.fit(pts, k = k, dim = 64, KMeans.InverseCdf(weightScale = 1e6),
+      KMeans.Lloyd(tol = 0.01, maxIter = 5)).centroids
     val fineTrained = fitK(16)
     val supersTrained = fitK(4)
     // measured landscape (recorded in assignTwoLevel's scaladoc): on THIS
@@ -866,9 +866,9 @@ class SimilaritySpec extends SparkSpec {
     val embN = Similarity.normalize(planted)
     val pts = embN.select(col("vec_id").as("i"), col("embedding").as("Y")).cache()
     // the BOUNDED oracle-replayable fit sim_ivf_fitted actually ships
-    // (KMeans.fitBounded: exact ++ seeding + <=3 movement-gated Lloyd steps)
-    val cents = KMeans.fitBounded(pts, k = 10, dim = 16, tol = 0.01,
-      lloydSteps = 3, fxScale = 1e6, weightScale = 1e6).centroids
+    // (KMeans.InverseCdf: exact ++ seeding + <=3 movement-gated Lloyd steps)
+    val cents = KMeans.fit(pts, k = 10, dim = 16, KMeans.InverseCdf(weightScale = 1e6),
+      KMeans.Lloyd(tol = 0.01, maxIter = 3)).centroids
     val bf = Similarity.bruteForceTopK(planted, nQueries = 5, k = 10)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
     val ivf = Similarity.ivfTopK(embN, cents, nQueries = 5, nProbe = 3, k = 10)
@@ -877,8 +877,7 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.9, s"recall $recall (|bf|=${bf.size}, hit=${(bf & ivf).size})")
     // the free k-means|| fit remains at least as good on the same corpus —
     // the bounded form trades nothing essential for replayability here
-    val centsFree = KMeans.fitAuto(pts, k = 10, dim = 16,
-      parallelSeed = true, seed = 42).centroids
+    val centsFree = KMeans.fit(pts, k = 10, dim = 16, KMeans.Parallel(seed = 42)).centroids
     val ivfFree = Similarity.ivfTopK(embN, centsFree, nQueries = 5,
       nProbe = 3, k = 10)
       .select("q_id", "n_id").as[(Long, Long)].collect().toSet
